@@ -1,126 +1,75 @@
-"""Boolean and phrase queries over the compressed index (query surface the
-reference delegates to Elasticsearch — SURVEY.md §3.4).
+"""Boolean, phrase and prefix queries over the compressed index (the query
+surface the reference delegates to Elasticsearch — SURVEY.md §3.4).
 
-The reference's consumers query ES with ``bool`` (must / should / must_not)
-and ``match_phrase`` queries against the indexed documents
+The reference's consumers query ES with ``bool`` (must / should / must_not
+/ filter) and ``match_phrase`` queries against the indexed documents
 (osu.ElasticIndexer/SchemaSpecs/scores.json defines the searchable mapping;
-the query side lives in ES itself). This module re-expresses both Spark-first
-over our own index format:
+the query side lives in ES itself). This module re-expresses them
+Spark-first over our own index format.
 
-``bool_topk``
-    One Spark job for a batch of boolean queries. Same segment-scan plumbing
-    as ``wand.wand_topk`` (term_id IN -> row-group pruning, broadcast query
-    map), then per-query dense accumulators inside ``applyInPandas``:
+One kernel, thin drivers: scoring is wand.py's kernel (``decode_term`` ->
+``accumulate`` -> ``score_bool``). A spec compiles, via ``_plan_terms``, to
+sorted (term, idf·boost, role bits) triples plus the required-term count
+and minimum_should_match; the drivers here only fetch segment rows and
+pick the docID window:
 
-      * score:    float64 dense fold over the SCORED terms (must ∪ should),
-                  sorted-term order — the exact same left fold as
-                  ``wand.taat_topk`` / the oracle, so scores of the
-                  surviving docs are bit-identical to a plain BM25 query
-                  over the same terms;
-      * required: int16 dense count of distinct REQUIRED terms present
-                  (must ∪ filter); a doc is eligible iff the count equals
-                  the number of required clauses (ES semantics: every
-                  must AND every filter clause matches);
-      * must_not: boolean exclusion mask (any posting excludes the doc).
+* ``bool_topk`` — one Spark job per batch: segment rows for the batch
+  vocabulary (term_id IN -> row-group pruning) joined to a broadcast
+  (query_id, term_id) map, one ``applyInPandas`` group per query, window =
+  the query's observed docID range (min doc_min .. max doc_max over its
+  segment rows). Plain match queries (should-only, no filter) keep the
+  ``taat_topk`` / ``bmw_topk`` dispatch — ``wand_topk`` is exactly that.
+* ``bool_topk_docpart`` — the queries-to-data shape for large batches:
+  blobs shuffle once per (generation, salt) docID cell regardless of the
+  query count; window = the cell span.
+* ``LocalSearcher.search_bool`` (serve.py) — window = the corpus.
 
-    ``minimum_should_match``: eligibility additionally requires matching
-    at least N DISTINCT should terms (counted via a _SHOULD role bit in
-    the same dense pass; ES's parameter of the same name — integer form).
-    Defaults follow ES: 0 with required clauses present, and pure-should
-    queries already require >=1 scored match by construction. No
-    zero-score tail can exist under msm >= 1 (a should match always
-    contributes positive score).
+Bool semantics (ES): a doc is eligible when it holds every required term
+(must ∪ filter), at least minimum_should_match distinct should terms, no
+must_not term, and passes the structured filters; it scores the sorted-term
+fold over must ∪ should, so surviving docs score bit-identically to a
+plain BM25 query over the same terms (per-clause ``boost`` multiplies a
+term's idf). ``filter`` terms and the structured filters are filter
+context: unscored but required, and a doc that matches them with no scored
+term is a hit at 0.0, ranked after every positive doc, doc_id ascending —
+including, for specs whose only required clauses are structured filters,
+docs carrying none of the query's terms (enumerated from the intersected
+filter docIDs; indexed docs only, dl > 0). An explicit minimum_should_match
+>= 1 suppresses that tail, as in ES. ``filter_range`` restricts the docmap's
+structured (url, warc_ts) and declared numeric fields to an inclusive
+[lo, hi]; ``filter_term`` exact-matches them and the declared keyword
+fields; ``filter_exists`` keeps docs whose stored field is non-null — each
+a pushed pyarrow docmap scan cached per worker (operators/state.py).
 
-    ES filter context (all four bool clause types): ``filter`` terms are
-    required like must but contribute ZERO score — a doc that matches
-    every required clause yet no scored term matches with score 0.0
-    (exactly ES's filter-context scoring), ranked after every positive
-    doc, doc_id ascending. ``filter_range`` restricts by the STRUCTURED
-    fields the docmap carries (url — the document key, scores.json's
-    range-indexed ``id`` analog — and warc_ts): per field an inclusive
-    [lo, hi], evaluated executor-side via a pushed pyarrow range scan of
-    the docmap (operators/state.load_docids_in_range, cached per worker
-    per range). ``filter_term`` exact-matches the index's DECLARED
-    keyword fields (build_index(keyword_fields=...), e.g. lang) plus the
-    structured fields — the ES term/terms filter the reference's
-    consumers run on country_code / rank / ruleset_id
-    (scores.json:17-19,32-37); same pushed pyarrow scan discipline
-    (state.load_docids_eq), byte-budgeted worker cache.
+Edge semantics: a required term absent from the dictionary empties that
+query; absent should / must_not terms are ignored. A spec with no
+must/should/filter term raises ValueError — must_not-only would be ES
+match_all-minus-excluded and filter-only never touches the inverted index
+(both are corpus scans; express them as docmap DataFrame filters). One
+documented divergence: a spec whose every term clause is out-of-vocabulary
+returns empty even with filter context.
 
-    Filter context counts as "required clauses present" for the msm
-    default AND the zero-score tail (ES semantics): a should+filter spec
-    with msm 0 returns filter-matching docs at score 0.0 even when no
-    should term matches — including docs carrying NONE of the query's
-    terms, enumerated from the intersected filter docIDs (indexed docs
-    only, dl > 0). An explicit minimum_should_match >= 1 suppresses the
-    tail, as in ES. One documented divergence: a spec whose every term
-    clause is out-of-vocabulary returns empty even with filter context
-    (the all-zero result set never touches the inverted index — run a
-    docmap DataFrame filter instead).
+Phrases (``phrase_topk``): candidates are the phrase's ``must: unique
+terms`` bool over the kernel, then adjacency (or ES slop) is verified.
+Positional (v2) indexes (build_index(positions=True) —
+docs/positional-postings.md) verify index-side from the block-selected
+position sidecar (``_decode_positions_selected`` +
+``_verify_positions_cell``), per query or per docID cell
+(``PHRASE_DOCPART_DF_SUM`` routes head-term phrases to cells). v1 indexes
+carry no positions: candidates join docmap and the SOURCE table and each
+candidate's html is re-tokenized — verification IO ∝ the candidate count,
+which is bounded (``max_candidates``, the ES rewrite-guard analog) before
+it is broadcast-pinned into the joins.
 
-    ES edge semantics preserved: a required term absent from the dictionary
-    empties that query's result (no doc can match all required clauses);
-    absent should / must_not terms are ignored; with no required clauses a
-    doc is eligible when it matches >=1 scored term. A spec with no term
-    clause at all (must_not-only, filter_range-only, empty) raises
-    ValueError: must_not-only would be ES match_all-minus-excluded (a
-    corpus scan, not an index query — returning empty would silently lie),
-    and filter_range-only never touches the inverted index (express it as
-    a plain docmap/source DataFrame filter instead).
+``match_phrase_prefix_topk`` scores ``must: full tokens, should:
+expansions, msm 1`` through the kernel and verifies adjacency to any
+expansion positionally. ``prefix_topk`` expands the prefix by a dictionary
+range seek and runs the expansion as a match query.
 
-    Memory envelope (per-query path): the runner allocates dense per-query
-    accumulators sized to the query's OBSERVED docID range (min doc_min ..
-    max doc_max over its segment rows; float64 sums + int16 required-count
-    + bool exclusion ≈ 11 bytes/doc-in-range) per concurrently running
-    query group — a rare-term query allocates its term span, and only a
-    head-term query approaches the corpus span (the wand.py ``taat_topk``
-    note's envelope). LARGE batches still belong on ``bool_topk_docpart``,
-    whose accumulators are sized to the (generation, salt) CELL span and
-    whose shuffle volume is independent of the batch size.
-
-``phrase_topk``
-    Match-then-verify phrase search (the position-free-index form of
-    Lucene's ``match_phrase``). Positions are deliberately NOT in the index
-    (postings are (doc gaps, tf) only — operators/build.py); instead:
-
-      phase 1 (index): conjunctive candidates — docs containing ALL phrase
-        terms — scored by BM25 over the phrase's unique terms (dense
-        accumulators, same fold as above). Candidate volume is bounded by
-        the rarest term's df, exactly the selectivity a positional index
-        would exploit.
-      phase 2 (source): candidates join docmap (doc_id -> url) and then the
-        SOURCE table (url, text) — the reference's architecture keeps the
-        row source of truth outside the index and re-reads it by PK
-        constantly (IndexQueueProcessor.cs batch fetch) — and an
-        Arrow-batched pandas UDF re-tokenizes each candidate's text with
-        THE tokenizer (functions/textprep.tokenize) and keeps docs where
-        the phrase tokens appear consecutively. One tiny window finishes
-        the exact per-query top-k.
-
-    At 100-TB scale the verify join is candidates (BOUNDED by
-    ``max_candidates``, then broadcast-PINNED) against the source scan —
-    verification IO is ∝ candidate count, not corpus size, the source
-    never shuffles, and the adjacency check never touches the index
-    tables. Stopword phrases whose candidates exceed the bound are
-    refused (ES rewrite-guard analog) unless the caller explicitly opts
-    into a corpus-scan join.
-
-``bool_topk_docpart``
-    The queries-to-data batch shape for bool queries (see the function
-    docstring): blobs shuffle once per docID cell regardless of query
-    count, per-cell masks complete by the salted-grid construction.
-
-``prefix_topk``
-    ES ``prefix`` query (scoring_boolean rewrite): dictionary RANGE seek
-    expansion (term-asc, capped) -> the standard batched wand path.
-
-All paths honor tombstones and closed-index refusal exactly like
-``wand_topk``.
+All paths honor tombstones and closed-index refusal.
 """
 
 from __future__ import annotations
-
-import math
 
 import numpy as np
 import pandas as pd
@@ -130,22 +79,24 @@ from pyspark.sql import functions as F
 from ..functions import codec
 from ..functions.textprep import tokenize
 from .wand import (
-    B,
-    K1,
+    _MUST,
+    _MUST_NOT,
+    _SCORED,
+    _SHOULD,
     RESULT_SCHEMA,
+    TAAT_MAX_POSTINGS,
     _index_state,
-    _row_to_enc,
+    _segment_rows,
+    accumulate,
+    bmw_topk,
+    decode_term,
+    idf_of,
+    score_bool,
+    taat_topk,
     topk_from_dense,
 )
 
-# role bit flags carried on the broadcast query map: _MUST marks a REQUIRED
-# term (must ∪ filter — eligibility), _SCORED a scoring one (must ∪ should);
-# a filter term is _MUST without _SCORED
-_SCORED = 1
-_MUST = 2
-_MUST_NOT = 4
-_SHOULD = 8  # counted for minimum_should_match eligibility
-
+_CLAUSES = ("must", "should", "must_not", "filter")
 _SPEC_KEYS = {
     "must", "should", "must_not", "filter", "filter_range", "filter_term",
     "filter_exists", "minimum_should_match",
@@ -396,16 +347,14 @@ def _query_plumbing(
     if not with_positions:
         segs = segs.select(*V1_SEGMENT_COLS)
     segs = segs.filter(F.col("term_id").isin(tids))
-    idf = {
-        t: math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-        for t, (_tid, df) in term_info.items()
-    }
+    idf = {t: idf_of(n_docs, df) for t, (_tid, df) in term_info.items()}
     state = {
         "fwd_path": tuple(committed_gen_paths(index_dir, "fwd")),
         "tomb_path": tuple(committed_gen_paths(index_dir, "tombstones")),
         "docmap_path": tuple(committed_gen_paths(index_dir, "docmap")),
         "seq": int(commit_seq),
         "avgdl": float(avgdl),
+        "n_docs": int(n_docs),
     }
     return segs, term_info, idf, state
 
@@ -433,64 +382,104 @@ def _struct_arrays(
     return arrs
 
 
-def _struct_mask_range(
-    lo: int, span: int, fr: dict, ft: dict, fe: tuple, docmap_path, seq: int
-) -> np.ndarray:
-    """Dense boolean eligibility mask for the structured filters (AND over
-    range + term fields) over the docID window [lo, lo+span), built from
-    the per-worker-cached docmap scans — sized to the caller's
-    accumulator range, never the corpus."""
-    mask = None
-    for ids in _struct_arrays(fr, ft, fe, docmap_path, seq):
-        sel = ids[(ids >= lo) & (ids < lo + span)] - lo
-        m = np.zeros(span, dtype=bool)
-        m[sel] = True
-        mask = m if mask is None else (mask & m)
-    return mask
+def _plan_terms(s: dict, msm: int, info, n_docs: int):
+    """One normalized spec -> ``(terms, n_must, msm)`` for the kernel, or
+    None when no doc can match. ``terms``: [(term, term_id, idf·boost,
+    role bits)] in sorted-term order (the fold order); ``info``: term ->
+    (term_id, df), None/absent for out-of-vocabulary terms.
+
+    ES edge semantics: a required (must ∪ filter) term absent from the
+    dictionary empties the query; absent should / must_not terms are
+    ignored. A term shared by must and should scores once, with the
+    product of its clause boosts (``_normalize_spec``). ``n_must`` counts
+    the DISTINCT required terms."""
+    required = set(s["must"]) | set(s["filter"])
+    if any(info.get(t) is None for t in required):
+        return None
+    roles: dict[str, int] = {}
+    for clause, bits in (
+        ("must", _SCORED | _MUST), ("should", _SCORED | _SHOULD),
+        ("filter", _MUST), ("must_not", _MUST_NOT),
+    ):
+        for t in s[clause]:
+            if info.get(t) is not None:
+                roles[t] = roles.get(t, 0) | bits
+    if not roles:
+        return None
+    terms = [
+        (t, info[t][0], idf_of(n_docs, info[t][1]) * s["boosts"].get(t, 1.0),
+         roles[t])
+        for t in sorted(roles)
+    ]
+    return terms, len(required), msm
 
 
-def _struct_mask(
-    size: int, fr: dict, ft: dict, fe: tuple, docmap_path, seq: int
-) -> np.ndarray:
-    """Corpus-anchored variant (window [0, size)) of _struct_mask_range."""
-    return _struct_mask_range(0, size, fr, ft, fe, docmap_path, seq)
+def _bool_plans(index_dir: str, queries: list[tuple[int, dict]]):
+    """Validate a bool batch -> (normalized specs, msm by qid, structured
+    filter specs by qid). Raises ValueError for unusable specs."""
+    kw_fields = index_keyword_fields(index_dir)
+    num_fields = index_numeric_fields(index_dir)
+    specs, msms, structs = {}, {}, {}
+    for qid, raw in queries:
+        s = _normalize_spec(raw)
+        fr, ft, fe = _check_spec(raw, s, kw_fields, num_fields)
+        specs[qid] = s
+        msms[qid] = _get_msm(raw, s)
+        if fr or ft or fe:
+            structs[qid] = (fr, ft, fe)
+    return specs, msms, structs
 
 
-def _struct_docids(
-    fr: dict, ft: dict, fe: tuple, docmap_path, seq: int
-) -> np.ndarray:
-    """INTERSECTED sorted global docIDs matching every structured filter —
-    the zero-score-tail enumeration source for specs whose only required
-    clauses are filter context (ES: such docs are hits at score 0.0 even
-    when they contain none of the query's terms)."""
-    arrs = _struct_arrays(fr, ft, fe, docmap_path, seq)
-    out = arrs[0]
-    for a in arrs[1:]:
-        out = np.intersect1d(out, a, assume_unique=True)
-    return out
+def _plan_batch(spark, index_dir: str, specs: dict, msms: dict):
+    """Segment scan + per-query term plans for a validated batch ->
+    (segs, state, {qid: plan}), or None when no query can match."""
+    all_terms = sorted(
+        {t for s in specs.values() for c in _CLAUSES for t in s[c]}
+    )
+    plumb = _query_plumbing(spark, index_dir, all_terms) if all_terms else None
+    if plumb is None:
+        return None
+    segs, term_info, _idf, state = plumb
+    plans = {}
+    for qid, s in specs.items():
+        plan = _plan_terms(s, msms[qid], term_info, state["n_docs"])
+        if plan is not None:
+            plans[qid] = plan
+    return (segs, state, plans) if plans else None
 
 
-def _pad_zero_score(top: list, kk: int, eligible0: np.ndarray) -> list:
-    """ES filter-context scoring tail: docs matching every required clause
-    but no scored term rank with score 0.0 after all positive docs, doc_id
-    ascending (``eligible0`` must already exclude positively-scored,
-    excluded, out-of-range, and tombstoned docs)."""
-    if len(top) >= kk:
-        return top
-    zeros = np.flatnonzero(eligible0)[: kk - len(top)]
-    top.extend((0.0, int(d)) for d in zeros)
-    return top
+def _is_plain_match(plan, st_spec) -> bool:
+    """Should-only, no msm, no filter: the shape the TAAT/BMW cores score."""
+    terms, n_must, n_msm = plan
+    return (
+        not n_must and not n_msm and st_spec is None
+        and all(role == _SCORED | _SHOULD for _t, _tid, _w, role in terms)
+    )
 
 
-def _bool_runner(state: dict, k: int, structs: dict[int, tuple[dict, dict, tuple]]):
-    """applyInPandas body for one query's segment rows (term, idf, role,
-    n_must columns riding the broadcast qmap join; n_must counts REQUIRED
-    clauses = must ∪ filter). ``structs``: qid -> (filter_range,
-    filter_term, filter_exists) normalized filter-context restrictions."""
-    fwd_path = state["fwd_path"]
-    tomb_path = state["tomb_path"]
-    docmap_path = state["docmap_path"]
-    seq = state["seq"]
+def _frame(qids, docs, scores, ranked: bool) -> pd.DataFrame:
+    """Result rows in RESULT_SCHEMA order; docpart cells emit rank 0 (the
+    final window ranks the union of the cells' candidates)."""
+    return pd.DataFrame({
+        "query_id": qids,
+        "rank": list(range(1, len(qids) + 1)) if ranked else [0] * len(qids),
+        "doc_id": docs,
+        "score": scores,
+    })
+
+
+def _bool_runner(state: dict, k: int, plans: dict, structs: dict):
+    """applyInPandas body for one query's segment rows (joined to the
+    broadcast (query_id, term_id) map). ``plans``: qid -> ``_plan_terms``
+    output; ``structs``: qid -> (filter_range, filter_term, filter_exists).
+
+    Plain match queries keep the TAAT/BMW dispatch on posting volume (both
+    exact, same fold order); every other shape runs ``score_bool`` over a
+    window sized to the query's OBSERVED docID range (min doc_min .. max
+    doc_max over its segment rows), not the corpus: a rare-term query
+    allocates its term span, only a head-term query approaches O(n_docs)."""
+    fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
+    docmap_path, seq = state["docmap_path"], state["seq"]
     avgdl = state["avgdl"]
     kk = int(k)
 
@@ -500,126 +489,34 @@ def _bool_runner(state: dict, k: int, structs: dict[int, tuple[dict, dict, tuple
             load_tombstones,
         )
 
-        empty = pd.DataFrame(
-            {"query_id": [], "rank": [], "doc_id": [], "score": []}
-        )
         norms = load_norms(fwd_path, seq)
         tomb = load_tombstones(tomb_path, seq)
         qid = int(pdf["query_id"].iloc[0])
-        n_must = int(pdf["n_must"].iloc[0])
-        n_msm = int(pdf["n_msm"].iloc[0])
-        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-        # group this query's segment rows per term (rows ordered by doc_min
-        # before decode: disjoint ranges concatenate in docID order)
-        per_term: dict[str, dict] = {}
-        for i in range(len(pdf)):
-            t = cols["term"][i]
-            e = per_term.setdefault(
-                t,
-                {"idf": float(cols["idf"][i]), "role": int(cols["role"][i]),
-                 "rows": []},
+        plan, st_spec = plans[qid], structs.get(qid)
+        terms, n_must, n_msm = plan
+        rows = _segment_rows(pdf, "term_id")
+        if _is_plain_match(plan, st_spec):
+            entries = [(t, w, rows[tid]) for t, tid, w, _r in terms if tid in rows]
+            n_post = 128 * sum(
+                len(e["block_first"]) for _t, _w, rs in entries for e in rs
             )
-            e["rows"].append(
-                (int(cols["doc_min"][i]),
-                 _row_to_enc({c: cols[c][i] for c in pdf.columns}))
+            core = taat_topk if n_post <= TAAT_MAX_POSTINGS else bmw_topk
+            top = core(entries, kk, avgdl, norms, tomb)
+        else:
+            lo, span = _cell_bounds(pdf["doc_min"], pdf["doc_max"])
+            tl = []
+            for _t, tid, w, role in terms:
+                if tid in rows:
+                    d, tfn, _parts = decode_term(rows[tid], norms, avgdl)
+                    tl.append((d - lo, tfn, w, role))
+            struct = (
+                _struct_arrays(*st_spec, docmap_path, seq) if st_spec else None
             )
-        # per-query accumulators sized to the query's observed docID RANGE
-        # (min doc_min .. max doc_max over its segment rows), not the
-        # corpus: a rare-term query allocates its term span, only a
-        # head-term query approaches O(n_docs). (ADVICE r4: "size
-        # accumulators to the group's doc range like score_cell does".)
-        lo = int(cols["doc_min"].min())
-        span = int(cols["doc_max"].max()) - lo + 1
-        sums = np.zeros(span, dtype=np.float64)
-        must_cnt = np.zeros(span, dtype=np.int16)
-        should_cnt = np.zeros(span, dtype=np.int16) if n_msm else None
-        excluded = np.zeros(span, dtype=bool)
-        seen_must = 0
-        # sorted-term accumulation: same left fold as taat_topk/the oracle
-        for t in sorted(per_term):
-            e = per_term[t]
-            e["rows"].sort(key=lambda r: r[0])
-            parts = [codec.decode_postings(enc) for _dm, enc in e["rows"]]
-            d = np.concatenate([p[0] for p in parts])
-            role = e["role"]
-            dl_ = d - lo
-            if role & _SCORED:
-                tf = np.concatenate([p[1] for p in parts]).astype(np.float64)
-                dl = norms[d].astype(np.float64)
-                tfn = tf / (tf + K1 * ((1.0 - B) + (B * dl) / avgdl))
-                sums[dl_] += e["idf"] * tfn
-            if role & _MUST:
-                must_cnt[dl_] += 1
-                seen_must += 1
-            if role & _SHOULD and n_msm:
-                should_cnt[dl_] += 1
-            if role & _MUST_NOT:
-                excluded[dl_] = True
-        if seen_must < n_must:
-            # a required term had no segment rows (deleted-only
-            # generations): nothing can match all clauses
-            return empty
-        st_spec = structs.get(qid)
-        struct = (
-            _struct_mask_range(lo, span, *st_spec, docmap_path, seq)
-            if st_spec
-            else None
-        )
-        if n_must:
-            sums[must_cnt < n_must] = 0.0
-        if n_msm:
-            sums[should_cnt < n_msm] = 0.0
-        sums[excluded] = 0.0
-        if struct is not None:
-            sums[~struct] = 0.0
-        if tomb is not None and tomb.size:
-            tt = tomb[(tomb >= lo) & (tomb < lo + span)]
-            sums[tt - lo] = 0.0
-        top = topk_from_dense(sums, kk)
-        # zero-score tail is impossible under msm: matching a should term
-        # always contributes positive score, so should_cnt >= msm >= 1
-        # implies score > 0. ES treats filter CONTEXT (filter_range /
-        # filter_term) as "required clauses present" too: with them the
-        # msm default stays 0 and filter-matching docs are hits at 0.0
-        # even when no scored term matches (ADVICE r5).
-        top = [(s, d + lo) for s, d in top]  # span-relative -> global ids
-        if (n_must or st_spec) and not n_msm and len(top) < kk:
-            # filter-context zero-score tail (docs matching all required
-            # clauses but no scored term)
-            eligible0 = (must_cnt >= n_must) & ~excluded & (sums <= 0.0)
-            if struct is not None:
-                eligible0 &= struct
-            if tomb is not None and tomb.size:
-                tt = tomb[(tomb >= lo) & (tomb < lo + span)]
-                eligible0[tt - lo] = False
-            zeros = np.flatnonzero(eligible0) + lo
-            if st_spec and not n_must:
-                # no required TERM clause: the tail covers INDEXED
-                # (dl > 0) filter-matching docs with no query-term
-                # postings at all — both inside the span (dl guard) and
-                # beyond it (enumerated from the intersected filter
-                # docIDs; they carry no postings, so no must_not term
-                # can exclude them)
-                avail = max(0, min(norms.size - lo, span))
-                nm = np.zeros(span, dtype=np.int64)
-                if avail > 0:
-                    nm[:avail] = norms[lo : lo + avail]
-                zeros = zeros[nm[zeros - lo] > 0]
-                fd = _struct_docids(*st_spec, docmap_path, seq)
-                out = fd[(fd < lo) | (fd >= lo + span)]
-                out = out[out < norms.size]
-                out = out[norms[out] > 0]
-                if tomb is not None and tomb.size:
-                    out = out[~np.isin(out, tomb)]
-                zeros = np.union1d(zeros, out)
-            top.extend((0.0, int(d)) for d in zeros[: kk - len(top)])
-        return pd.DataFrame(
-            {
-                "query_id": [qid] * len(top),
-                "rank": list(range(1, len(top) + 1)),
-                "doc_id": [d for _s, d in top],
-                "score": [s for s, _d in top],
-            }
+            top = score_bool(
+                tl, lo, span, kk, n_must, n_msm, norms, tomb, struct
+            )
+        return _frame(
+            [qid] * len(top), [d for _s, d in top], [s for s, _d in top], True
         )
 
     return run_query
@@ -645,67 +542,19 @@ def bool_topk(
     query whose required clause cannot match produces no rows; an
     unusable spec raises ValueError (``_check_spec``).
     """
-    kw_fields = index_keyword_fields(index_dir)
-    num_fields = index_numeric_fields(index_dir)
-    specs = [(qid, _normalize_spec(s)) for qid, s in queries]
-    structs = {}
-    for (qid, s), (_qid2, raw) in zip(specs, queries):
-        fr, ft, fe = _check_spec(raw, s, kw_fields, num_fields)
-        if fr or ft or fe:
-            structs[qid] = (fr, ft, fe)
-    msms = {
-        qid: _get_msm(raw, s)
-        for (qid, s), (_qid2, raw) in zip(specs, queries)
-    }
-    all_terms = sorted(
-        {t for _qid, s in specs for r in s.values() for t in r}
-    )
-    if not all_terms:
+    specs, msms, structs = _bool_plans(index_dir, queries)
+    planned = _plan_batch(spark, index_dir, specs, msms)
+    if planned is None:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    plumb = _query_plumbing(spark, index_dir, all_terms)
-    if plumb is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    segs, term_info, idf, state = plumb
-
-    qmap_rows = []
-    for qid, s in specs:
-        required = sorted(set(s["must"]) | set(s["filter"]))
-        if any(t not in term_info for t in required):
-            continue  # ES semantics: unmatched required clause -> empty
-        scored = sorted(set(s["must"]) | set(s["should"]))
-        roles: dict[str, int] = {}
-        for t in scored:
-            if t in term_info:
-                roles[t] = roles.get(t, 0) | _SCORED
-        for t in s["should"]:
-            if t in term_info:
-                roles[t] = roles.get(t, 0) | _SHOULD
-        for t in required:
-            roles[t] = roles.get(t, 0) | _MUST
-        for t in s["must_not"]:
-            if t in term_info:
-                roles[t] = roles.get(t, 0) | _MUST_NOT
-        if not roles:
-            continue
-        n_required = len(required)
-        boosts = s["boosts"]
-        for t, role in roles.items():
-            # ES per-clause boost folds into the per-(query, term) idf the
-            # qmap already carries — the runner is boost-oblivious
-            qmap_rows.append(
-                (qid, t, term_info[t][0], idf[t] * boosts.get(t, 1.0),
-                 role, n_required, msms[qid])
-            )
-    if not qmap_rows:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+    segs, state, plans = planned
     qmap = spark.createDataFrame(
-        qmap_rows,
-        "query_id bigint, term string, term_id bigint, idf double, "
-        "role int, n_must int, n_msm int",
+        [(qid, tid) for qid, (terms, _n, _m) in plans.items()
+         for _t, tid, _w, _r in terms],
+        "query_id bigint, term_id bigint",
     )
     grouped = segs.join(F.broadcast(qmap), "term_id")
     return grouped.groupBy("query_id").applyInPandas(
-        _bool_runner(state, k, structs), RESULT_SCHEMA
+        _bool_runner(state, k, plans, structs), RESULT_SCHEMA
     )
 
 
@@ -715,18 +564,19 @@ def bool_topk_docpart(
     queries: list[tuple[int, dict]],
     k: int = 10,
 ) -> DataFrame:
-    """DOCUMENT-partitioned boolean batch top-k: the ``wand_topk_docpart``
-    shape for bool queries — segment rows for the union of the batch's
-    terms shuffle ONCE per (generation, salt) docID cell, independent of
-    the query count; the role-bit subscription map rides the closure.
+    """DOCUMENT-partitioned boolean batch top-k: segment rows for the union
+    of the batch's terms shuffle ONCE per (generation, salt) docID cell,
+    independent of the query count (a 10^4-query batch sharing Zipf head
+    terms would otherwise shuffle each term's blobs once per subscribing
+    query); the per-query term plans ride the closure.
 
     Correct per cell by construction: a doc's postings live wholly inside
     one cell (the salted grid partitions the docID space), so the cell-
     local required-count and exclusion masks are COMPLETE for every doc the
     cell owns — a doc eligible in its cell is eligible globally, and the
     union of per-cell top-ks contains the exact global top-k (cells cover
-    disjoint docs; one tiny window finishes). Scores fold sorted-term like
-    ``bool_topk``, so both paths are bit-identical — including the ES
+    disjoint docs; one tiny window finishes). Each cell runs ``score_bool``
+    over its own span, so both paths are bit-identical — including the ES
     filter context (``filter`` terms, ``filter_range``, zero-score tail):
     zero-score docs rank below every positive doc globally, so per-cell
     padding to k keeps the union argument exact.
@@ -739,17 +589,11 @@ def bool_topk_docpart(
     (from the intersected filter docIDs), and both paths are
     bit-identical on every other shape, so the union stays exact.
     """
-    kw_fields = index_keyword_fields(index_dir)
-    num_fields = index_numeric_fields(index_dir)
-    specs = [(qid, _normalize_spec(s)) for qid, s in queries]
-    structs = {}
-    tail_qids = set()
-    for (qid, s), (_qid2, raw) in zip(specs, queries):
-        fr, ft, fe = _check_spec(raw, s, kw_fields, num_fields)
-        if fr or ft or fe:
-            structs[qid] = (fr, ft, fe)
-            if not (s["must"] or s["filter"]) and not _get_msm(raw, s):
-                tail_qids.add(qid)
+    specs, msms, structs = _bool_plans(index_dir, queries)
+    tail_qids = {
+        qid for qid in structs
+        if not (specs[qid]["must"] or specs[qid]["filter"]) and not msms[qid]
+    }
     if tail_qids:
         routed = bool_topk(
             spark, index_dir,
@@ -761,57 +605,12 @@ def bool_topk_docpart(
         return routed.unionByName(
             bool_topk_docpart(spark, index_dir, rest, k)
         )
-    all_terms = sorted(
-        {t for _qid, s in specs for r in s.values() for t in r}
-    )
-    if not all_terms:
+    planned = _plan_batch(spark, index_dir, specs, msms)
+    if planned is None:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    plumb = _query_plumbing(spark, index_dir, all_terms)
-    if plumb is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    segs, term_info, idf, state = plumb
-
-    # tid -> [(qid, idf, role)] subscriptions + per-qid required-clause
-    # counts, closure-shipped (bounded by the batch vocabulary)
-    subs: dict[int, list[tuple[int, float, int]]] = {}
-    n_must_by_q: dict[int, int] = {}
-    n_msm_by_q: dict[int, int] = {}
-    msms = {
-        qid: _get_msm(raw, s)
-        for (qid, s), (_qid2, raw) in zip(specs, queries)
-    }
-    for qid, s in specs:
-        required = sorted(set(s["must"]) | set(s["filter"]))
-        if any(t not in term_info for t in required):
-            continue  # ES semantics: unmatched required clause -> empty
-        scored = set(s["must"]) | set(s["should"])
-        roles: dict[str, int] = {}
-        for t in scored:
-            if t in term_info:
-                roles[t] = roles.get(t, 0) | _SCORED
-        for t in s["should"]:
-            if t in term_info:
-                roles[t] = roles.get(t, 0) | _SHOULD
-        for t in required:
-            roles[t] = roles.get(t, 0) | _MUST
-        for t in s["must_not"]:
-            if t in term_info:
-                roles[t] = roles.get(t, 0) | _MUST_NOT
-        if not roles:
-            continue
-        n_must_by_q[qid] = len(required)
-        n_msm_by_q[qid] = msms[qid]
-        boosts = s["boosts"]
-        for t, role in roles.items():
-            # per-clause boost folds into the subscription idf (bool_topk)
-            subs.setdefault(term_info[t][0], []).append(
-                (qid, idf[t] * boosts.get(t, 1.0), role)
-            )
-    if not subs:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    tids = sorted(subs)
+    segs, state, plans = planned
+    tids = sorted({tid for terms, _n, _m in plans.values() for _t, tid, _w, _r in terms})
     segs = segs.filter(F.col("term_id").isin(tids))
-    _tid_term = {ti[0]: t for t, ti in term_info.items()}
     fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
     docmap_path = state["docmap_path"]
     seq, avgdl = state["seq"], state["avgdl"]
@@ -826,108 +625,52 @@ def bool_topk_docpart(
         norms = load_norms(fwd_path, seq)
         tomb = load_tombstones(tomb_path, seq)
         lo, span = _cell_bounds(pdf["doc_min"], pdf["doc_max"])
-        hi = lo + span - 1
-        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-        by_tid: dict[int, list[tuple[int, dict]]] = {}
-        for i in range(len(pdf)):
-            by_tid.setdefault(int(cols["term_id"][i]), []).append(
-                (int(cols["doc_min"][i]),
-                 _row_to_enc({c: cols[c][i] for c in pdf.columns}))
-            )
-        decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for tid, rows in by_tid.items():
-            rows.sort(key=lambda e: e[0])
-            parts = [codec.decode_postings(enc) for _dm, enc in rows]
-            d = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts]).astype(np.float64)
-            dl = norms[d].astype(np.float64)
-            tfn = tf / (tf + K1 * ((1.0 - B) + (B * dl) / avgdl))
+        # decode each term's cell postings ONCE (cell-local docIDs); every
+        # subscribed query scores against the decoded arrays
+        decoded = {}
+        for tid, rows in _segment_rows(pdf, "term_id").items():
+            d, tfn, _parts = decode_term(rows, norms, avgdl)
             decoded[tid] = (d - lo, tfn)
-        # per-query term lists present in this cell
-        q_terms: dict[int, list[tuple[float, int, int]]] = {}
-        for tid, qlist in subs.items():
-            if tid not in decoded:
-                continue
-            for qid, qidf, role in qlist:
-                q_terms.setdefault(qid, []).append((qidf, tid, role))
         out_q, out_d, out_s = [], [], []
-        for qid, tl in q_terms.items():
-            n_must = n_must_by_q[qid]
-            n_msm = n_msm_by_q[qid]
-            sums = np.zeros(span, dtype=np.float64)
-            must_cnt = np.zeros(span, dtype=np.int16) if n_must else None
-            should_cnt = np.zeros(span, dtype=np.int16) if n_msm else None
-            excluded = None
-            # sorted-TERM fold (same order as bool_topk/the oracle)
-            for qidf, tid, role in sorted(
-                tl, key=lambda e: _tid_term.get(e[1], "")
-            ):
-                d, tfn = decoded[tid]
-                if role & _SCORED:
-                    sums[d] += qidf * tfn
-                if role & _MUST:
-                    must_cnt[d] += 1
-                if role & _SHOULD and n_msm:
-                    should_cnt[d] += 1
-                if role & _MUST_NOT:
-                    if excluded is None:
-                        excluded = np.zeros(span, dtype=bool)
-                    excluded[d] = True
-            # struct mask sized to THIS cell's span: the worker-cached
-            # docID arrays are sliced to [lo, lo+span) — accumulator
-            # memory stays bounded by the cell (docpart contract)
+        for qid, (terms, n_must, n_msm) in plans.items():
+            tl = [
+                (*decoded[tid], w, role)
+                for _t, tid, w, role in terms if tid in decoded
+            ]
+            if not tl:
+                continue
             st_spec = structs.get(qid)
+            # struct masks are sliced to THIS cell's span — accumulator
+            # memory stays bounded by the cell (docpart contract)
             struct = (
-                _struct_mask_range(lo, span, *st_spec, docmap_path, seq)
-                if st_spec
-                else None
+                _struct_arrays(*st_spec, docmap_path, seq) if st_spec else None
             )
-            if n_must:
-                sums[must_cnt < n_must] = 0.0
-            if n_msm:
-                sums[should_cnt < n_msm] = 0.0
-            if excluded is not None:
-                sums[excluded] = 0.0
-            if struct is not None:
-                sums[~struct] = 0.0
-            if tomb is not None and tomb.size:
-                tt = tomb[(tomb >= lo) & (tomb <= hi)]
-                if tt.size:
-                    sums[tt - lo] = 0.0
-            top = topk_from_dense(sums, kk)
-            # (no zero-score tail under msm — a should match always scores)
-            if n_must and not n_msm and len(top) < kk:
-                # per-cell filter-context zero-score tail (see module doc:
-                # zero docs rank below every positive doc globally, so
-                # padding each cell to k keeps the union argument exact)
-                eligible0 = (must_cnt >= n_must) & (sums <= 0.0)
-                if excluded is not None:
-                    eligible0 &= ~excluded
-                if struct is not None:
-                    eligible0 &= struct
-                if tomb is not None and tomb.size:
-                    tt = tomb[(tomb >= lo) & (tomb <= hi)]
-                    if tt.size:
-                        eligible0[tt - lo] = False
-                top = _pad_zero_score(top, kk, eligible0)
-            for s, d in top:
+            for s, d in score_bool(
+                tl, lo, span, kk, n_must, n_msm, norms, tomb, struct
+            ):
                 out_q.append(qid)
-                out_d.append(d + lo)
+                out_d.append(d)
                 out_s.append(s)
-        return pd.DataFrame(
-            {"query_id": out_q, "rank": [0] * len(out_q),
-             "doc_id": out_d, "score": out_s}
-        )
+        return _frame(out_q, out_d, out_s, False)
 
-    cells = segs.groupBy("generation", "salt").applyInPandas(
-        score_cell, RESULT_SCHEMA
+    return _merge_cells(
+        segs.groupBy("generation", "salt").applyInPandas(
+            score_cell, RESULT_SCHEMA
+        ),
+        kk,
     )
+
+
+def _merge_cells(cells: DataFrame, k: int) -> DataFrame:
+    """Exact global top-k from per-cell candidates: cells cover disjoint
+    docs, so the union of per-cell top-ks contains the global top-k; one
+    tiny window (cells x queries x k rows) finishes it."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
         cells.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kk)
+        .filter(F.col("rank") <= k)
         .select("query_id", "rank", "doc_id", "score")
     )
 
@@ -1062,23 +805,16 @@ def _matches_phrase(tokens: list[str], phrase: list[str], slop: int = 0) -> bool
 
 
 def _cell_bounds(doc_min, doc_max) -> tuple[int, int]:
-    """(lo, span) of one docpart cell, from its segment rows' doc ranges.
-    This is THE size every per-query dense accumulator in ``score_cell``
-    allocates — the docpart memory contract is that it is bounded by the
-    (generation, salt) cell's docID span, never the corpus docID space
-    (the per-query paths allocate O(n_docs); see wand.py TAAT note).
-    Kept as a module-level helper so the layout test can measure peak
-    accumulator size over a real index through the same code path."""
+    """(lo, span) of the docID window a group of segment rows covers —
+    the kernel's accumulator size. For a docpart cell the memory contract
+    is that it is bounded by the (generation, salt) cell's docID span,
+    never the corpus docID space; the per-query runners use the same
+    helper over one query's rows (its observed docID range). Kept as a
+    module-level helper so the layout test can measure peak accumulator
+    size over a real index through the same code path."""
     lo = int(min(doc_min))
     hi = int(max(doc_max))
     return lo, hi - lo + 1
-
-
-def _row_to_enc_pos(row) -> dict:
-    enc = _row_to_enc(row)
-    enc["pos_blob"] = bytes(row["pos_blob"])
-    enc["pos_offs"] = np.asarray(row["pos_offs"], dtype=np.int64)
-    return enc
 
 
 def _decode_positions_selected(
@@ -1146,10 +882,8 @@ def _phrase_runner(state: dict, k: int, phrases_b: dict[int, list[str]],
     bool-runner envelope; only a head-term phrase approaches the corpus
     span) plus the decoded positions of the phrase's terms (∝ their
     posting volume)."""
-    fwd_path = state["fwd_path"]
-    tomb_path = state["tomb_path"]
-    seq = state["seq"]
-    avgdl = state["avgdl"]
+    fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
+    seq, avgdl = state["seq"], state["avgdl"]
     kk = int(k)
 
     def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -1158,9 +892,7 @@ def _phrase_runner(state: dict, k: int, phrases_b: dict[int, list[str]],
             load_tombstones,
         )
 
-        empty = pd.DataFrame(
-            {"query_id": [], "rank": [], "doc_id": [], "score": []}
-        )
+        empty = _frame([], [], [], True)
         norms = load_norms(fwd_path, seq)
         tomb = load_tombstones(tomb_path, seq)
         qid = int(pdf["query_id"].iloc[0])
@@ -1168,42 +900,19 @@ def _phrase_runner(state: dict, k: int, phrases_b: dict[int, list[str]],
         uniq = sorted(set(phrase))
         if not phrase:
             return empty
-        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-        rows_by_term: dict[str, list] = {}
-        for i in range(len(pdf)):
-            rows_by_term.setdefault(cols["term"][i], []).append(
-                (int(cols["doc_min"][i]),
-                 _row_to_enc_pos({c: cols[c][i] for c in pdf.columns}))
-            )
+        rows_by_term = _segment_rows(pdf, "term")
         if len(rows_by_term) < len(uniq):
             return empty  # a phrase term has no postings at all
         # pass 1: decode docs+tfs only, score + conjunction-count (positions
-        # stay encoded until the candidate set is known). Accumulators are
-        # sized to the query's observed docID RANGE, not the corpus (the
-        # bool-runner envelope).
-        lo = int(cols["doc_min"].min())
-        acc_span = int(cols["doc_max"].max()) - lo + 1
-        sums = np.zeros(acc_span, dtype=np.float64)
-        must_cnt = np.zeros(acc_span, dtype=np.int16)
-        term_rows: dict[str, list] = {}
-        for t in uniq:  # sorted-term fold (scores == bool/source path)
-            rows = rows_by_term[t]
-            rows.sort(key=lambda r: r[0])
-            decoded_rows = []
-            for _dm, enc in rows:
-                d_i, tf_i = codec.decode_postings(enc)
-                decoded_rows.append((enc, d_i, tf_i))
-                dl = norms[d_i].astype(np.float64)
-                tfn = tf_i.astype(np.float64) / (
-                    tf_i + K1 * ((1.0 - B) + (B * dl) / avgdl)
-                )
-                sums[d_i - lo] += idf_by_term[t] * tfn
-                must_cnt[d_i - lo] += 1
-            term_rows[t] = decoded_rows
-        sums[must_cnt < len(uniq)] = 0.0
-        if tomb is not None and tomb.size:
-            tt = tomb[(tomb >= lo) & (tomb < lo + acc_span)]
-            sums[tt - lo] = 0.0
+        # stay encoded until the candidate set is known): the phrase is
+        # ``must: its unique terms`` over the query's observed docID range
+        lo, acc_span = _cell_bounds(pdf["doc_min"], pdf["doc_max"])
+        dec = {t: decode_term(rows_by_term[t], norms, avgdl) for t in uniq}
+        sums, _elig = accumulate(
+            [(dec[t][0] - lo, dec[t][1], idf_by_term[t], _SCORED | _MUST)
+             for t in uniq],
+            lo, acc_span, len(uniq), 0, tomb,
+        )
         eligible = np.flatnonzero(sums > 0.0) + lo  # GLOBAL docIDs
         if eligible.size == 0:
             return empty
@@ -1211,7 +920,7 @@ def _phrase_runner(state: dict, k: int, phrases_b: dict[int, list[str]],
         # the docpart cell scorer's position pass)
         decoded: dict[str, tuple] = {}
         for t in uniq:
-            res = _decode_positions_selected(term_rows[t], eligible)
+            res = _decode_positions_selected(dec[t][2], eligible)
             if res is None:
                 return empty  # every candidate block vanished (can't happen
                 # for a true candidate, defensive for empty eligible overlap)
@@ -1231,13 +940,9 @@ def _phrase_runner(state: dict, k: int, phrases_b: dict[int, list[str]],
         mask[np.asarray(verified, dtype=np.int64) - lo] = True
         sums[~mask] = 0.0
         top = topk_from_dense(sums, kk)
-        return pd.DataFrame(
-            {
-                "query_id": [qid] * len(top),
-                "rank": list(range(1, len(top) + 1)),
-                "doc_id": [dd + lo for _s, dd in top],
-                "score": [s for s, _d in top],
-            }
+        return _frame(
+            [qid] * len(top), [d + lo for _s, d in top], [s for s, _d in top],
+            True,
         )
 
     return run_query
@@ -1436,17 +1141,15 @@ def phrase_topk_positional_docpart(
     if plumb is None:
         return spark.createDataFrame([], RESULT_SCHEMA)
     segs, term_info, idf, state = plumb
-    subs: dict[int, list[tuple[int, float]]] = {}
-    live_phrases: dict[int, list[str]] = {}
-    for qid, ph in phrases.items():
-        if not ph or any(t not in term_info for t in set(ph)):
-            continue
-        live_phrases[qid] = ph
-        for t in sorted(set(ph)):
-            subs.setdefault(term_info[t][0], []).append((qid, idf[t]))
-    if not subs:
+    live_phrases = {
+        qid: ph for qid, ph in phrases.items()
+        if ph and all(t in term_info for t in ph)
+    }
+    if not live_phrases:
         return spark.createDataFrame([], RESULT_SCHEMA)
-    tids = sorted(subs)
+    tids = sorted(
+        {term_info[t][0] for ph in live_phrases.values() for t in ph}
+    )
     segs = segs.filter(F.col("term_id").isin(tids))
     _tid_term = {ti[0]: t for t, ti in term_info.items()}
     fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
@@ -1463,55 +1166,29 @@ def phrase_topk_positional_docpart(
         norms = load_norms(fwd_path, seq)
         tomb = load_tombstones(tomb_path, seq)
         lo, span = _cell_bounds(pdf["doc_min"], pdf["doc_max"])
-        hi = lo + span - 1
-        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-        rows_by_tid: dict[int, list] = {}
-        for i in range(len(pdf)):
-            rows_by_tid.setdefault(int(cols["term_id"][i]), []).append(
-                (int(cols["doc_min"][i]),
-                 _row_to_enc_pos({c: cols[c][i] for c in pdf.columns}))
-            )
         # pass 1: POSTINGS only, once per term in this cell — CELL-LOCAL
-        # doc ids + tfn for scoring; the enc rows stay for the later
+        # doc ids + tfn for scoring; the decoded rows stay for the later
         # block-selected position pass (positions stay encoded until the
         # candidate set is known, same as the per-query runner)
-        term_rows: dict[str, list] = {}
         score_data: dict[str, tuple] = {}
-        for tid, rows in rows_by_tid.items():
-            rows.sort(key=lambda e: e[0])
-            parts = []
-            for _dm, enc in rows:
-                d_i, tf_i = codec.decode_postings(enc)
-                parts.append((enc, d_i, tf_i))
-            d = np.concatenate([p[1] for p in parts])
-            tf = np.concatenate([p[2] for p in parts])
-            dl = norms[d].astype(np.float64)
-            tfn = tf.astype(np.float64) / (
-                tf + K1 * ((1.0 - B) + (B * dl) / avgdl)
-            )
-            term_rows[_tid_term[tid]] = parts
-            score_data[_tid_term[tid]] = (d - lo, tfn)
+        for tid, rows in _segment_rows(pdf, "term_id").items():
+            d, tfn, parts = decode_term(rows, norms, avgdl)
+            score_data[_tid_term[tid]] = (d - lo, tfn, parts)
         # score every query first, keeping only SPARSE candidates (docIDs
         # + their scores), so the position pass below can decode each
         # term's candidate-bearing blocks ONCE for the union of all its
-        # queries' candidates. One dense accumulator pair lives at a time.
+        # queries' candidates. One dense accumulator lives at a time.
         cand: dict[int, tuple] = {}
         need: dict[str, list] = {}
         for qid, phrase in live_phrases.items():
             uniq = sorted(set(phrase))
             if any(t not in score_data for t in uniq):
                 continue  # term absent from this cell -> no cell matches
-            sums = np.zeros(span, dtype=np.float64)
-            cnt = np.zeros(span, dtype=np.int16)
-            for t in uniq:  # sorted-term fold (bit-identical scores)
-                d, tfn = score_data[t]
-                sums[d] += idf[t] * tfn
-                cnt[d] += 1
-            sums[cnt < len(uniq)] = 0.0
-            if tomb is not None and tomb.size:
-                tt = tomb[(tomb >= lo) & (tomb <= hi)]
-                if tt.size:
-                    sums[tt - lo] = 0.0
+            sums, _elig = accumulate(
+                [(score_data[t][0], score_data[t][1], idf[t], _SCORED | _MUST)
+                 for t in uniq],
+                lo, span, len(uniq), 0, tomb,
+            )
             eligible = np.flatnonzero(sums > 0.0)
             if eligible.size == 0:
                 continue
@@ -1526,7 +1203,7 @@ def phrase_topk_positional_docpart(
         max_pos = 0
         for t, parts_el in need.items():
             union_g = np.unique(np.concatenate(parts_el)) + lo
-            res = _decode_positions_selected(term_rows[t], union_g)
+            res = _decode_positions_selected(score_data[t][2], union_g)
             if res is None:
                 continue  # defensive: candidates always live in a block
             d, tf, poss, pstart = res
@@ -1549,21 +1226,13 @@ def phrase_topk_positional_docpart(
                 out_q.append(qid)
                 out_d.append(int(verified[j]) + lo)
                 out_s.append(float(vs[j]))
-        return pd.DataFrame(
-            {"query_id": out_q, "rank": [0] * len(out_q),
-             "doc_id": out_d, "score": out_s}
-        )
+        return _frame(out_q, out_d, out_s, False)
 
-    cells = segs.groupBy("generation", "salt").applyInPandas(
-        score_cell, RESULT_SCHEMA
-    )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        cells.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kk)
-        .select("query_id", "rank", "doc_id", "score")
+    return _merge_cells(
+        segs.groupBy("generation", "salt").applyInPandas(
+            score_cell, RESULT_SCHEMA
+        ),
+        kk,
     )
 
 
@@ -1702,59 +1371,32 @@ def _mpp_runner(state: dict, k: int,
             load_tombstones,
         )
 
-        empty = pd.DataFrame(
-            {"query_id": [], "rank": [], "doc_id": [], "score": []}
-        )
+        empty = _frame([], [], [], True)
         norms = load_norms(fwd_path, seq)
         tomb = load_tombstones(tomb_path, seq)
         qid = int(pdf["query_id"].iloc[0])
         full, exps = plans_b.get(qid, ([], []))
         exp_set = set(exps)
         uniq_full = sorted(set(full))
-        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-        rows_by_term: dict[str, list] = {}
-        for i in range(len(pdf)):
-            rows_by_term.setdefault(cols["term"][i], []).append(
-                (int(cols["doc_min"][i]),
-                 _row_to_enc_pos({c: cols[c][i] for c in pdf.columns}))
-            )
+        rows_by_term = _segment_rows(pdf, "term")
         if any(t not in rows_by_term for t in uniq_full):
             return empty
         present_exps = sorted(t for t in exp_set if t in rows_by_term)
         if not present_exps:
             return empty
-        lo = int(cols["doc_min"].min())
-        acc_span = int(cols["doc_max"].max()) - lo + 1
-        sums = np.zeros(acc_span, dtype=np.float64)
-        full_cnt = np.zeros(acc_span, dtype=np.int16)
-        exp_mask = np.zeros(acc_span, dtype=bool)
-        term_rows: dict[str, list] = {}
-        # sorted fold over ALL scored terms (full ∪ present expansions) —
+        # pass 1 is ``must: full tokens, should: expansions, msm 1`` — the
+        # sorted fold over ALL scored terms (full ∪ present expansions) is
         # the oracle's SUM(contrib ORDER BY term)
-        for t in sorted(set(uniq_full) | set(present_exps)):
-            rows = rows_by_term[t]
-            rows.sort(key=lambda r: r[0])
-            decoded_rows = []
-            for _dm, enc in rows:
-                d_i, tf_i = codec.decode_postings(enc)
-                decoded_rows.append((enc, d_i, tf_i))
-                dl = norms[d_i].astype(np.float64)
-                tfn = tf_i.astype(np.float64) / (
-                    tf_i + K1 * ((1.0 - B) + (B * dl) / avgdl)
-                )
-                sums[d_i - lo] += idf_by_term[t] * tfn
-                if t in exp_set:
-                    exp_mask[d_i - lo] = True
-                if t in uniq_full:
-                    full_cnt[d_i - lo] += 1
-            term_rows[t] = decoded_rows
-        elig = exp_mask
-        if uniq_full:
-            elig = elig & (full_cnt >= len(uniq_full))
-        sums[~elig] = 0.0
-        if tomb is not None and tomb.size:
-            tt = tomb[(tomb >= lo) & (tomb < lo + acc_span)]
-            sums[tt - lo] = 0.0
+        lo, acc_span = _cell_bounds(pdf["doc_min"], pdf["doc_max"])
+        scored = sorted(set(uniq_full) | set(present_exps))
+        dec = {t: decode_term(rows_by_term[t], norms, avgdl) for t in scored}
+        sums, _elig = accumulate(
+            [(dec[t][0] - lo, dec[t][1], idf_by_term[t],
+              _SCORED | (_MUST if t in uniq_full else 0)
+              | (_SHOULD if t in exp_set else 0))
+             for t in scored],
+            lo, acc_span, len(uniq_full), 1, tomb,
+        )
         eligible = np.flatnonzero(sums > 0.0) + lo  # GLOBAL docIDs
         if eligible.size == 0:
             return empty
@@ -1763,7 +1405,7 @@ def _mpp_runner(state: dict, k: int,
             # pass 2: block-selected positions; last slot pools expansions
             decoded: dict[str, tuple] = {}
             for t in sorted(set(full)) + present_exps:
-                res = _decode_positions_selected(term_rows[t], eligible)
+                res = _decode_positions_selected(dec[t][2], eligible)
                 if res is None:
                     if t in exp_set:
                         continue  # this expansion has no candidate blocks
@@ -1829,13 +1471,9 @@ def _mpp_runner(state: dict, k: int,
             verified = eligible  # prefix-only query: any occurrence
         vs = sums[verified - lo]
         order = np.argsort(-vs, kind="stable")[:kk]
-        return pd.DataFrame(
-            {
-                "query_id": [qid] * len(order),
-                "rank": list(range(1, len(order) + 1)),
-                "doc_id": [int(verified[i]) for i in order],
-                "score": [float(vs[i]) for i in order],
-            }
+        return _frame(
+            [qid] * len(order), [int(verified[i]) for i in order],
+            [float(vs[i]) for i in order], True,
         )
 
     return run_query
@@ -2031,11 +1669,4 @@ def phrase_topk(
     verified = joined.mapInPandas(
         verify, "query_id bigint, doc_id bigint, score double"
     )
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        verified.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= int(k))
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return _merge_cells(verified, int(k))

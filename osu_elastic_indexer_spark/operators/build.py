@@ -545,6 +545,12 @@ def _materialize_forward_direct(
         ).parquet(fwd_dir)
         fut.result()
     dmg = dict(dm_obs.get)
+    if int(dmg["n"] or 0) != acc - start_id:
+        raise RuntimeError(
+            f"direct docmap write saw {dmg['n']} rows but the count pass saw "
+            f"{acc - start_id} — scan was not reproducible across jobs, so "
+            "docmap and fwd doc_ids may disagree; rebuild with the staged path"
+        )
     return {
         "n_rows": acc - start_id,
         "fwd": dict(obs.get),
@@ -1424,7 +1430,9 @@ def build_index(
                 # both counters are known without another agg job
                 return int(dictionary.count())  # cached — metadata-cheap
 
-            dict_pool = ThreadPoolExecutor(max_workers=1)
+            dict_pool = ThreadPoolExecutor(
+                max_workers=1, thread_name_prefix="build-dictionary"
+            )
             dict_future = dict_pool.submit(_write_dictionary)
             # sort within the merge's hash partitions by term_id: each output
             # file then has narrow per-row-group term_id ranges, so query-time
@@ -1440,27 +1448,31 @@ def build_index(
             blob_bytes = F.length("docs_blob") + F.length("tfs_blob")
             if positions:
                 blob_bytes = blob_bytes + F.length("pos_blob")
-            with arrow_batch_rows(spark, GROUP_BATCH_ROWS):
-                (
-                    segments.observe(
-                        seg_obs,
-                        F.count(F.lit(1)).alias("rows"),
-                        F.coalesce(F.sum("n_docs"), F.lit(0)).alias("postings"),
-                        F.coalesce(F.sum(blob_bytes), F.lit(0)).alias("bytes"),
+            try:
+                with arrow_batch_rows(spark, GROUP_BATCH_ROWS):
+                    (
+                        segments.observe(
+                            seg_obs,
+                            F.count(F.lit(1)).alias("rows"),
+                            F.coalesce(F.sum("n_docs"), F.lit(0)).alias("postings"),
+                            F.coalesce(F.sum(blob_bytes), F.lit(0)).alias("bytes"),
+                        )
+                        .sortWithinPartitions("term_id", "salt")
+                        .write.mode("overwrite")
+                        # small row groups: files are term_id-sorted, so narrow
+                        # per-group [min,max] ranges turn a query's term_id IN
+                        # filter into real row-group pruning — both in Spark's
+                        # scan and the serving tier's footer-indexed seeks
+                        # (one 128 MB group per file spans the whole vocabulary
+                        # and prunes nothing)
+                        .option("parquet.block.size", str(SEGMENT_ROW_GROUP_BYTES))
+                        .parquet(f"{seg_path}/gen=0")
                     )
-                    .sortWithinPartitions("term_id", "salt")
-                    .write.mode("overwrite")
-                    # small row groups: files are term_id-sorted, so narrow
-                    # per-group [min,max] ranges turn a query's term_id IN
-                    # filter into real row-group pruning — both in Spark's
-                    # scan and the serving tier's footer-indexed seeks
-                    # (one 128 MB group per file spans the whole vocabulary
-                    # and prunes nothing)
-                    .option("parquet.block.size", str(SEGMENT_ROW_GROUP_BYTES))
-                    .parquet(f"{seg_path}/gen=0")
-                )
+            finally:
+                # reap the dictionary writer on every path: a failed
+                # segments write must not leave it running past the build
+                dict_pool.shutdown(wait=True)
         n_terms = dict_future.result()
-        dict_pool.shutdown()
         cat.mark_phase(
             schema_version, "dictionary", "done",
             terms=int(n_terms),

@@ -1,13 +1,22 @@
 """Single-node serving tier: millisecond BM25 top-k over a built index.
 
 The reference serves queries from Elasticsearch — a long-lived process with
-the index hot. The Spark jobs in operators/wand.py are the BATCH query path
-(thousands of queries per job); interactive p50 latency is a serving
-concern, so this module reads the SAME segment/dictionary/stats parquet
-directly with pyarrow (predicate pushdown -> row-group pruning — the layout
-was written term_id-sorted for exactly this) and runs the identical
-BMW/TAAT cores. No Spark session involved; results are rank-identical to
-the Spark path by construction (same files, same scoring code).
+the index hot. The Spark jobs in operators/wand.py and boolquery.py are the
+BATCH query path (thousands of queries per job); interactive p50 latency is
+a serving concern, so this module reads the SAME segment/dictionary/stats
+parquet directly with pyarrow (predicate pushdown -> row-group pruning — the
+layout was written term_id-sorted for exactly this). No Spark session
+involved.
+
+``LocalSearcher`` is the third thin driver around the one scoring kernel
+(wand.py): match queries run ``taat_topk``/``bmw_topk``, bool queries
+``score_bool`` over a corpus-anchored window, positional phrases the
+shared block-selected decode and ``_verify_positions_cell`` of
+boolquery.py. What is serve-specific is only where postings come from:
+footer-indexed row-group seeks and bounded decode caches of the kernel's
+query-independent (docs, tf-norm) and (docs, tfs, positions) arrays.
+Results are rank-identical to the Spark paths by construction (same files,
+same scoring code).
 
 At real scale this is the searcher fleet next to the object store; each
 query touches only the row groups covering its terms.
@@ -15,16 +24,22 @@ query touches only the row groups covering its terms.
 
 from __future__ import annotations
 
-import math
 import os
 
 import numpy as np
 import pyarrow.dataset as ds
 import pyarrow.parquet as pq
 
-from ..config import DEFAULT
+from ..functions import codec
 from ..functions.textprep import tokenize
-from .wand import TAAT_MAX_POSTINGS, bmw_topk, taat_topk
+from .wand import (
+    TAAT_MAX_POSTINGS,
+    bmw_topk,
+    decode_term,
+    idf_of,
+    score_bool,
+    taat_topk,
+)
 
 _SEG_COLS = [
     "term_id", "doc_min", "n_docs", "docs_blob", "tfs_blob",
@@ -124,6 +139,8 @@ class LocalSearcher:
         self.tombstones = load_tombstones(
             tuple(committed_gen_paths(index_dir, "tombstones")), seq
         )
+        # > every position + 1: the positional kernel's fused-key width
+        self._max_dl = int(self.norms.max()) if self.norms.size else 1
         # empty-corpus / all-deleted indexes commit with zero segment files
         # -> serve empty results. For non-empty indexes, build the ROW-GROUP
         # SEEK INDEX once: files are term_id-sorted with ~1 MB row groups
@@ -158,7 +175,7 @@ class LocalSearcher:
         # bounded decoded-postings cache for the TAAT path (see search())
         self._decoded: dict[str, tuple] = {}
         # bounded decoded-POSITIONS cache for the positional phrase path
-        # (term -> (docs, poss, pstart); same LRU discipline, own budget —
+        # (term -> (docs, tfs, poss, pstart); same LRU discipline, own budget —
         # positions volume ~= token volume, larger than postings)
         self._pos_decoded: dict[str, tuple] = {}
 
@@ -291,8 +308,7 @@ class LocalSearcher:
             rows = self._load_term_rows([tid for _t, (tid, _df) in infos])
         entries = []
         for t, (tid, df) in infos:
-            idf = math.log(1.0 + (self.n_docs - df + 0.5) / (df + 0.5))
-            entries.append((t, idf, rows.get(tid, [])))
+            entries.append((t, idf_of(self.n_docs, df), rows.get(tid, [])))
         if use_taat:
             res = taat_topk(
                 entries, k, self.avgdl, self.norms, self.tombstones,
@@ -324,118 +340,53 @@ class LocalSearcher:
         must_not (excluded), filter (required, UNSCORED — ES filter
         context), filter_range (structured docmap-field restriction) and
         filter_term (declared-keyword-field exact match — the
-        country_code/ruleset_id analog) — same dense masks, spec
-        validation, and zero-score tail as operators/boolquery.bool_topk,
-        same sorted-term score fold as search(), so a surviving doc's
-        score is bit-identical to a plain query over the same terms.
-        Always the dense/cache path: the eligibility masks need full
-        postings regardless of df."""
+        country_code/ruleset_id analog) — the same spec validation, term
+        plan and ``score_bool`` kernel call as operators/boolquery.bool_topk,
+        over the corpus-anchored window [0, len(norms)), so results are
+        bit-identical to the Spark paths. Always the dense/cache path: the
+        eligibility masks need full postings regardless of df."""
         from ..sources.catalog import committed_gen_paths
         from .boolquery import (
+            _CLAUSES,
             _check_spec,
             _get_msm,
             _normalize_spec,
-            _pad_zero_score,
-            _struct_mask,
+            _plan_terms,
+            _struct_arrays,
             index_keyword_fields,
             index_numeric_fields,
         )
-        from .wand import manifest_commit_seq, topk_from_dense
+        from .wand import manifest_commit_seq
 
         s = _normalize_spec(spec)
         fr, ft, fe = _check_spec(
             spec, s, index_keyword_fields(self.index_dir),
             index_numeric_fields(self.index_dir),
         )
-        msm = _get_msm(spec, s)
-        should_set = set(s["should"])
-        must, mnot = s["must"], s["must_not"]
-        scored = set(must) | set(s["should"])
-        required = sorted(set(must) | set(s["filter"]))
-        all_terms = sorted(scored | set(mnot) | set(required))
-        if not all_terms:
+        self._resolve_terms(sorted({t for c in _CLAUSES for t in s[c]}))
+        plan = _plan_terms(s, _get_msm(spec, s), self._dict, self.n_docs)
+        if plan is None:
             return []
-        self._resolve_terms(all_terms)
-        if any(self._dict.get(t) is None for t in required):
-            return []  # ES semantics: unmatched required clause -> empty
-        infos = [
-            (t, self._dict[t])
-            for t in all_terms
-            if self._dict.get(t) is not None
+        terms, n_must, n_msm = plan
+        self._decoded_for([(t, self._dict[t]) for t, _tid, _w, _r in terms])
+        # a dictionary row without live postings has no cache entry
+        tl = [
+            (*self._decoded[t], w, role)
+            for t, _tid, w, role in terms if t in self._decoded
         ]
-        if not infos:
-            return []
-        self._decoded_for(infos)
-        sums = np.zeros(self.norms.size, dtype=np.float64)
-        must_cnt = (
-            np.zeros(self.norms.size, dtype=np.int16) if required else None
-        )
-        should_cnt = (
-            np.zeros(self.norms.size, dtype=np.int16) if msm else None
-        )
-        excluded = None
-        seen_must = 0
-        for t, (tid, df) in infos:  # sorted-term order (all_terms sorted)
-            ent = self._decoded.get(t)
-            if ent is None:
-                continue  # dict row without live postings
-            d, tfn = ent
-            if t in scored:
-                idf = math.log(1.0 + (self.n_docs - df + 0.5) / (df + 0.5))
-                # ES per-clause boost (boolquery._normalize_spec product
-                # rule) — folds into idf exactly like the Spark paths
-                sums[d] += idf * s["boosts"].get(t, 1.0) * tfn
-            if t in required:
-                must_cnt[d] += 1
-                seen_must += 1
-            if t in should_set and msm:
-                should_cnt[d] += 1
-            if t in mnot:
-                if excluded is None:
-                    excluded = np.zeros(self.norms.size, dtype=bool)
-                excluded[d] = True
-        self._bound_decode_cache()
         struct = None
         if fr or ft or fe:
             # same worker-cached pushed docmap scans as the Spark path
-            struct = _struct_mask(
-                sums.size,
-                fr,
-                ft,
-                fe,
+            struct = _struct_arrays(
+                fr, ft, fe,
                 tuple(committed_gen_paths(self.index_dir, "docmap")),
                 manifest_commit_seq(self.index_dir),
             )
-        if required:
-            if seen_must < len(required):
-                return []
-            sums[must_cnt < len(required)] = 0.0
-        if msm:
-            sums[should_cnt < msm] = 0.0
-        if excluded is not None:
-            sums[excluded] = 0.0
-        if struct is not None:
-            sums[~struct] = 0.0
-        if self.tombstones is not None and self.tombstones.size:
-            tt = self.tombstones[self.tombstones < sums.size]
-            sums[tt] = 0.0
-        top = topk_from_dense(sums, k)
-        # (no zero-score tail under msm — a should match always scores).
-        # Filter CONTEXT counts as "required clauses present" for the tail
-        # (ES semantics, boolquery._bool_runner): with only filter_range/
-        # filter_term required, the tail base is every INDEXED doc (the
-        # accumulators here are corpus-anchored, so no out-of-span case).
-        if (required or struct is not None) and not msm and len(top) < k:
-            eligible0 = (
-                (must_cnt >= len(required)) if required else (self.norms > 0)
-            ) & (sums <= 0.0)
-            if excluded is not None:
-                eligible0 &= ~excluded
-            if struct is not None:
-                eligible0 &= struct
-            if self.tombstones is not None and self.tombstones.size:
-                eligible0[self.tombstones[self.tombstones < eligible0.size]] = False
-            top = _pad_zero_score(top, k, eligible0)
+        top = score_bool(
+            tl, 0, self.norms.size, k, n_must, n_msm, self.norms,
+            self.tombstones, struct,
+        )
+        self._bound_decode_cache()
         return [(doc, score) for score, doc in top]
 
     def search_sort(
@@ -711,21 +662,16 @@ class LocalSearcher:
         slop: int, k: int,
     ) -> list[tuple[int, float]]:
         """Positional serve verify (v2 index): one pruned segment read per
-        phrase term WITH the pos columns, per-candidate occurrence lists
-        through the SAME _matches_occ criterion as the Spark path — no
-        source IO at all.
-
-        First-touch decode is BLOCK-SELECTED (the per-query Spark runner's
-        Lucene-skip analog, boolquery._phrase_runner pass 2): only blocks
-        whose [first, last] docID range contains a candidate decode their
-        position bytes, so a rare+common phrase decodes ~df(rare) blocks
-        of the common term instead of its whole sidecar. Partial decodes
-        are NOT cached — the cache holds only COMPLETE term entries (a
-        later query's candidates could need postings a partial entry
-        dropped); a term whose candidate blocks exceed half its list
-        decodes fully and enters the bytes-budgeted LRU."""
-        from ..functions import codec as _codec
-        from .boolquery import _matches_occ
+        uncached phrase term WITH the pos columns, then the Spark paths'
+        block-selected decode (``_decode_positions_selected``: only blocks
+        whose [first, last] docID range holds a candidate decode their
+        position bytes) and positional kernel (``_verify_positions_cell``)
+        — no source IO at all. Partial decodes are NOT cached — the cache
+        holds only COMPLETE term entries (a later query's candidates could
+        need postings a partial entry dropped); a term whose candidate
+        blocks exceed half of every row decodes fully and enters the
+        bytes-budgeted LRU."""
+        from .boolquery import _decode_positions_selected, _verify_positions_cell
 
         self._resolve_terms(list(dict.fromkeys(ph)))
         infos = {t: self._dict.get(t) for t in set(ph)}
@@ -743,55 +689,17 @@ class LocalSearcher:
             else {}
         )
         decoded: dict[str, tuple] = {}
-        BLK = _codec.BLOCK
         for t in need:
-            rl = rows.get(int(infos[t][0])) or []
-            d_parts, tf_parts, pos_parts = [], [], []
-            full = True
-            for enc in rl:  # already doc_min-sorted by _load_term_rows
-                d_i, tf_i = _codec.decode_postings(enc)
-                bf = np.asarray(enc["block_first"], dtype=np.int64)
-                bl = np.asarray(enc["block_last"], dtype=np.int64)
-                nb = bf.size
-                i0 = np.searchsorted(eligible, bf)
-                needed = (i0 < eligible.size) & (
-                    eligible[np.minimum(i0, eligible.size - 1)] <= bl
-                )
-                n_need = int(needed.sum())
-                if n_need == 0:
-                    full = False
-                    continue
-                if n_need > nb // 2:
-                    # above half the blocks the single whole-row decode
-                    # wins (no per-block call overhead) — same crossover
-                    # as the Spark runner
-                    d_parts.append(d_i)
-                    tf_parts.append(tf_i)
-                    pos_parts.append(
-                        _codec.decode_positions(enc["pos_blob"], tf_i)
-                    )
-                else:
-                    full = False
-                    for b in np.flatnonzero(needed):
-                        sl = slice(
-                            int(b) * BLK, min((int(b) + 1) * BLK, d_i.size)
-                        )
-                        tfb = tf_i[sl]
-                        d_parts.append(d_i[sl])
-                        tf_parts.append(tfb)
-                        pos_parts.append(
-                            _codec.decode_positions_block(enc, tfb, int(b))
-                        )
-            if not d_parts:
+            term_rows = [
+                (enc, *codec.decode_postings(enc))
+                for enc in rows.get(int(infos[t][0])) or []
+            ]
+            res = _decode_positions_selected(term_rows, eligible)
+            if res is None:
                 return []
-            d = np.concatenate(d_parts)
-            tf = np.concatenate(tf_parts)
-            poss = np.concatenate(pos_parts)
-            pstart = np.zeros(d.size + 1, dtype=np.int64)
-            np.cumsum(tf, out=pstart[1:])
-            decoded[t] = (d, poss, pstart)
-            if full:
-                self._pos_decoded[t] = decoded[t]
+            decoded[t] = res
+            if res[0].size == sum(r[1].size for r in term_rows):
+                self._pos_decoded[t] = res  # every row decoded whole
         for t in infos:
             if t in decoded:
                 continue
@@ -799,51 +707,39 @@ class LocalSearcher:
             self._pos_decoded[t] = entry  # LRU move-to-end on hit
             decoded[t] = entry
         self._bound_pos_cache(keep=len(infos))
-        out = []
-        for doc, score in cands:
-            occ = []
-            for s, t in enumerate(ph):
-                d, poss, pstart = decoded[t]
-                j = int(np.searchsorted(d, doc))
-                if j >= d.size or d[j] != doc:
-                    occ = None
-                    break
-                occ.append(poss[pstart[j] : pstart[j + 1]])
-            if occ is not None and _matches_occ(occ, slop):
-                out.append((doc, score))
+        verified = _verify_positions_cell(
+            ph, decoded, eligible, self._max_dl, slop
+        )
+        ok = set(verified.tolist())
+        out = [(doc, score) for doc, score in cands if doc in ok]
         out.sort(key=lambda e: (-e[1], e[0]))
         return out[:k]
 
     def _bound_pos_cache(self, keep: int) -> None:
         """Evict least-recently-used POSITIONS entries until under the
         bytes budget (_POS_CACHE_MAX_BYTES). Accounting includes every
-        array the entry holds — docs + position values + pstart — not
+        array the entry holds — docs + tfs + position values + pstart — not
         just position counts (ADVICE r5: the old posting-count bound
         under-billed by several x). Never evicts the ``keep`` most recent
         entries (the query in flight)."""
         total = sum(
-            d.nbytes + p.nbytes + ps.nbytes
-            for d, p, ps in self._pos_decoded.values()
+            sum(a.nbytes for a in e) for e in self._pos_decoded.values()
         )
         while (
             total > _POS_CACHE_MAX_BYTES
             and len(self._pos_decoded) > keep
         ):
-            _t, (d, p, ps) = next(iter(self._pos_decoded.items()))
+            _t, e = next(iter(self._pos_decoded.items()))
             del self._pos_decoded[_t]
-            total -= d.nbytes + p.nbytes + ps.nbytes
+            total -= sum(a.nbytes for a in e)
 
     def _decode_terms_parallel(self, need: list, rows: dict) -> None:
         """Decode uncached terms into the cache, MULTI-TERM queries in a
         small thread pool: the varbyte decode kernels are numpy (GIL
         released for the array ops), so a 3-head-term conjunction decodes
         ~Nx faster — this was the serve-tier p90 tail. Entries are stored
-        exactly as taat_topk would build them (doc_min-ordered concat,
-        float64 tfs), so the cache-hit path is bit-identical."""
-        from ..functions import codec as _codec
-        from .wand import B as _B
-        from .wand import K1 as _K1
-
+        exactly as taat_topk would build them (``decode_term``), so the
+        cache-hit path is bit-identical."""
         norms, avgdl = self.norms, self.avgdl
 
         def dec(item):
@@ -851,12 +747,7 @@ class LocalSearcher:
             encs = rows.get(tid, [])
             if not encs:
                 return None
-            parts = [_codec.decode_postings(e) for e in encs]
-            d = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts]).astype(np.float64)
-            dl = norms[d].astype(np.float64)
-            tfn = tf / (tf + _K1 * ((1.0 - _B) + (_B * dl) / avgdl))
-            return t, (d, tfn)
+            return t, decode_term(encs, norms, avgdl)[:2]
 
         if len(need) > 1:
             from concurrent.futures import ThreadPoolExecutor

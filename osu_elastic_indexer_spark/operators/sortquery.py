@@ -21,6 +21,11 @@ hand-built index would emulate.
 
 The serving tier mirrors it JVM-free (``LocalSearcher.search_sort``):
 one pushed pyarrow scan of the docmap columns + tombstone mask + lexsort.
+
+Output schema: (doc_id, url, <sort_field>) — except that sorting BY url
+yields two columns, (doc_id, url): the sort column is not repeated. Code
+that reads url-sorted pages positionally, or expects a third column, must
+use the two-column shape (older releases returned url twice).
 """
 
 from __future__ import annotations

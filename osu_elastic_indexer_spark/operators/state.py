@@ -45,11 +45,6 @@ _CACHE: dict[tuple, tuple[int, object]] = {}
 # per worker across all concurrently-hot filters.
 _FILTER_CACHE: OrderedDict[tuple, tuple[int, object, int]] = OrderedDict()
 _FILTER_CACHE_MAX_BYTES = 128 << 20
-# running byte total of _FILTER_CACHE, updated on insert/evict: re-summing
-# the whole cache per insert walked every entry's _entry_nbytes — for a
-# cached object-dtype sort column that is an O(corpus) Python loop over
-# all cached strings on EVERY subsequent insert (ADVICE r6)
-_FILTER_CACHE_BYTES = 0
 
 
 def _entry_nbytes(val) -> int:
@@ -72,10 +67,10 @@ def _filter_cached(
     value the sorted docID array (or the sort-column array tuple). A
     version bump (new commit) eagerly drops the index's stale entries;
     beyond that, least-recently-used entries evict until the byte budget
-    holds."""
-    global _FILTER_CACHE_BYTES
-    if not _FILTER_CACHE:
-        _FILTER_CACHE_BYTES = 0  # resync after an external clear() (tests)
+    holds. Each entry is sized ONCE, at insert (``_entry_nbytes`` walks
+    every string of an object-dtype sort column); eviction sums the stored
+    sizes, so there is no running total to drift when an entry leaves the
+    cache some other way."""
     key = (paths, field, spec)
     hit = _FILTER_CACHE.get(key)
     if hit is not None and hit[0] == version:
@@ -90,16 +85,14 @@ def _filter_cached(
         and (_index_root(k[0][0]) if k[0] else "") == root
     ]
     for k in stale:
-        _FILTER_CACHE_BYTES -= _FILTER_CACHE.pop(k)[2]
-    if key in _FILTER_CACHE:  # stale same-key entry not caught above
-        _FILTER_CACHE_BYTES -= _FILTER_CACHE.pop(key)[2]
-    nbytes = _entry_nbytes(val)  # sized ONCE per entry, at insert
-    _FILTER_CACHE[key] = (version, val, nbytes)
-    _FILTER_CACHE_BYTES += nbytes
-    while _FILTER_CACHE_BYTES > _FILTER_CACHE_MAX_BYTES and len(_FILTER_CACHE) > 1:
+        del _FILTER_CACHE[k]
+    _FILTER_CACHE.pop(key, None)  # stale same-key entry not caught above
+    _FILTER_CACHE[key] = (version, val, _entry_nbytes(val))
+    total = sum(n for _v, _a, n in _FILTER_CACHE.values())
+    while total > _FILTER_CACHE_MAX_BYTES and len(_FILTER_CACHE) > 1:
         _k, (_v, _a, n) = next(iter(_FILTER_CACHE.items()))
         del _FILTER_CACHE[_k]
-        _FILTER_CACHE_BYTES -= n
+        total -= n
     return val
 
 

@@ -1,11 +1,23 @@
-"""Block-max WAND top-k over the compressed segments table (O3 [ours]).
+"""BM25 scoring kernel over the compressed segments table (O3 [ours]).
 
 The query half the reference delegates to Elasticsearch/Lucene
-(SURVEY.md §3.4). Batched: a whole query set runs as ONE Spark job —
-segment rows for the union of query terms are scanned once (term_id IN
-(...) -> parquet row-group pruning), joined to the per-query term lists, and
-each query's top-k is computed by an exact block-max WAND inside
-applyInPandas (numpy + lazy per-block decode).
+(SURVEY.md §3.4). Every exhaustive scorer in the engine is a thin driver
+around the pure-numpy kernel in this module:
+
+* ``decode_term`` — one term's segment rows -> (docs, tf-norm); the only
+  vectorized BM25 tf-norm in the query path;
+* ``accumulate`` — the role-bit fold of (docs, tfn, idf·boost, role) terms
+  into a docID window, with the must / minimum_should_match / must_not /
+  structured-filter / tombstone masks;
+* ``score_bool`` — accumulate + exact top-k + the ES filter-context
+  zero-score tail, the one bool scorer.
+
+The drivers differ only in where postings come from and how big the window
+is: the per-query ``applyInPandas`` runner and the docpart cell scorer in
+boolquery.py, and ``LocalSearcher`` in serve.py. ``taat_topk`` is the
+should-only driver (decode cache, single-term shortcut); ``bmw_topk`` the
+block-max WAND cursor that replaces it above ``TAAT_MAX_POSTINGS``.
+``wand_topk``/``wand_topk_docpart`` are should-only bool queries.
 
 Exactness discipline (SURVEY.md §4 #5): upper bounds are used ONLY for
 skipping (skip iff bound < current kth score, strictly); final scores are
@@ -27,7 +39,6 @@ import os
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from ..config import DEFAULT
 from ..functions import codec
@@ -166,6 +177,165 @@ class _Box:  # tiny mutable holder so _TermCursor.contribution sees avgdl
 _AVGDL = _Box()
 
 
+# role bits of one term in one query: _SCORED terms add BM25 (must ∪
+# should), _MUST terms are required (must ∪ filter — a filter term is _MUST
+# without _SCORED), _SHOULD terms count toward minimum_should_match and
+# _MUST_NOT terms exclude every doc they occur in
+_SCORED = 1
+_MUST = 2
+_MUST_NOT = 4
+_SHOULD = 8
+
+
+def idf_of(n_docs: int, df: int) -> float:
+    return math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
+
+
+def decode_term(
+    rows: list[dict], norms: np.ndarray, avgdl: float
+) -> tuple[np.ndarray, np.ndarray, list[tuple]]:
+    """One term's segment rows, ordered by doc_min (disjoint docID ranges,
+    so they concatenate in docID order) -> ``(docs, tfn, parts)``.
+
+    ``tfn`` is the QUERY-INDEPENDENT tf-norm tf/(tf+K1(...)) — a function of
+    the index's norms/avgdl only, so long-lived callers may cache it; a
+    query multiplies it by its idf·boost weight. ``parts`` keeps each row's
+    ``(enc, docs, tfs)`` for the positional pass of the phrase drivers."""
+    parts = []
+    for enc in rows:
+        d, tf = codec.decode_postings(enc)
+        parts.append((enc, d, tf))
+    d = np.concatenate([p[1] for p in parts])
+    tf = np.concatenate([p[2] for p in parts]).astype(np.float64)
+    dl = norms[d].astype(np.float64)
+    # elementwise twin of _tf_norm's scalar expression tree
+    tfn = tf / (tf + K1 * ((1.0 - B) + (B * dl) / avgdl))
+    return d, tfn, parts
+
+
+def accumulate(
+    terms: list[tuple],
+    lo: int,
+    span: int,
+    n_must: int = 0,
+    n_msm: int = 0,
+    tomb: np.ndarray | None = None,
+    struct: list[np.ndarray] | None = None,
+) -> tuple[np.ndarray, np.ndarray | None]:
+    """The role-bit fold over the docID window [lo, lo+span).
+
+    ``terms``: ``(docs, tfn, weight, role)`` in SORTED-TERM order, docs
+    relative to ``lo``. Each posting contributes via exactly one ``+=``, so
+    every doc's score is the same left fold as the oracle/BMW paths
+    (bit-identical). NOTE: np.add.reduceat/np.sum are NOT usable here —
+    numpy reductions are pairwise, which reorders float addition. docIDs are
+    unique within a term, so fancy-index ``+=`` is exact.
+
+    A doc is eligible when it holds all ``n_must`` required terms, at least
+    ``n_msm`` distinct should terms, no must_not term, is in every
+    ``struct`` array (sorted GLOBAL docIDs, one per structured filter) and
+    is not tombstoned. Returns ``(sums, elig)``: sums zeroed outside
+    eligibility, and the eligibility mask the zero-score tail reads (None
+    when only tombstones mask — should-only queries)."""
+    sums = np.zeros(span, dtype=np.float64)
+    must_cnt = np.zeros(span, dtype=np.int16) if n_must else None
+    should_cnt = np.zeros(span, dtype=np.int16) if n_msm else None
+    excluded = None
+    for d, tfn, w, role in terms:
+        if role & _SCORED:
+            sums[d] += w * tfn
+        if role & _MUST and must_cnt is not None:
+            must_cnt[d] += 1
+        if role & _SHOULD and should_cnt is not None:
+            should_cnt[d] += 1
+        if role & _MUST_NOT:
+            if excluded is None:
+                excluded = np.zeros(span, dtype=bool)
+            excluded[d] = True
+    masks = []
+    if must_cnt is not None:
+        masks.append(must_cnt >= n_must)
+    if should_cnt is not None:
+        masks.append(should_cnt >= n_msm)
+    if excluded is not None:
+        masks.append(~excluded)
+    for ids in struct or ():
+        m = np.zeros(span, dtype=bool)
+        m[ids[(ids >= lo) & (ids < lo + span)] - lo] = True
+        masks.append(m)
+    elig = masks[0] if masks else None
+    for m in masks[1:]:
+        elig &= m
+    if tomb is not None and tomb.size:
+        tt = tomb[(tomb >= lo) & (tomb < lo + span)] - lo
+        if elig is None:
+            sums[tt] = 0.0
+        else:
+            elig[tt] = False
+    if elig is not None:
+        sums *= elig  # x * 1.0 is exact; ineligible docs become +0.0
+    return sums, elig
+
+
+def _zero_score_tail(
+    top: list,
+    k: int,
+    elig: np.ndarray,
+    sums: np.ndarray,
+    lo: int,
+    norms: np.ndarray,
+    tomb: np.ndarray | None,
+    struct: list[np.ndarray] | None,
+) -> list:
+    """ES filter-context scoring tail: eligible docs with no scored term
+    rank at 0.0 after every positive doc, doc_id ascending. ``struct``
+    (passed only for specs with NO required term — filter context alone):
+    the tail then covers every INDEXED (dl > 0) live doc matching all the
+    structured filters, including docs holding none of the query's terms —
+    inside the window and beyond it (enumerated from the intersected filter
+    docIDs; they carry no postings, so no must_not term can exclude them)."""
+    if len(top) >= k:
+        return top
+    zeros = np.flatnonzero(elig & (sums <= 0.0)) + lo
+    if struct is not None:
+        zeros = zeros[zeros < norms.size]
+        zeros = zeros[norms[zeros] > 0]
+        fd = struct[0]
+        for a in struct[1:]:
+            fd = np.intersect1d(fd, a, assume_unique=True)
+        out = fd[((fd < lo) | (fd >= lo + sums.size)) & (fd < norms.size)]
+        out = out[norms[out] > 0]
+        if tomb is not None and tomb.size:
+            out = out[~np.isin(out, tomb)]
+        zeros = np.union1d(zeros, out)
+    top.extend((0.0, int(d)) for d in zeros[: k - len(top)])
+    return top
+
+
+def score_bool(
+    terms: list[tuple],
+    lo: int,
+    span: int,
+    k: int,
+    n_must: int,
+    n_msm: int,
+    norms: np.ndarray,
+    tomb: np.ndarray | None,
+    struct: list[np.ndarray] | None,
+) -> list[tuple[float, int]]:
+    """Exact bool top-k over one window: ``accumulate`` + ``topk_from_dense``
+    + the zero-score tail -> [(score, GLOBAL doc_id)]. Filter context (a
+    required term or a structured filter) makes zero-score docs hits; under
+    msm >= 1 no tail can exist (a should match always scores > 0)."""
+    sums, elig = accumulate(terms, lo, span, n_must, n_msm, tomb, struct)
+    top = [(s, d + lo) for s, d in topk_from_dense(sums, k)]
+    if (n_must or struct is not None) and not n_msm:
+        top = _zero_score_tail(
+            top, k, elig, sums, lo, norms, tomb, None if n_must else struct
+        )
+    return top
+
+
 def taat_topk(
     term_lists: list[tuple[str, float, list[dict]]],
     k: int,
@@ -174,88 +344,56 @@ def taat_topk(
     tombstones: np.ndarray | None = None,
     decode_cache: dict | None = None,
 ) -> list[tuple[int, float]]:
-    """Exact exhaustive term-at-a-time top-k, fully numpy-vectorized.
+    """Exact exhaustive term-at-a-time top-k of a should-only query: the
+    kernel over the corpus-anchored window [0, len(norms)).
 
-    ``norms``: doc-indexed dl array (state.load_norms). ``tombstones``:
-    sorted deleted-docID array or None — filtered with a vectorized isin
-    mask, never a python per-element loop.
-
-    Per-doc sums are accumulated one TERM at a time (sorted term order) into
-    a dense candidate array — each posting contributes via exactly one
-    `+=`, so the accumulation is the same left fold as the oracle/BMW paths
-    (bit-identical scores). NOTE: np.add.reduceat/np.sum are NOT usable here
-    — numpy reductions are pairwise, which reorders float addition.
+    ``term_lists``: [(term, idf, segment rows ordered by doc_min)];
+    ``norms``: doc-indexed dl array (state.load_norms); ``tombstones``:
+    sorted deleted-docID array or None.
 
     This is the fast path for small candidate sets: BMW's per-posting python
     loop costs ~5-10us/doc, which loses to vectorized decode below ~10^6
-    candidates. The dispatcher in run_query() picks per query; at 10^12-doc
-    scale selective queries route to BMW, where skipping wins.
+    candidates (``TAAT_MAX_POSTINGS``).
 
     ``decode_cache``: optional {term: (docs, tfn)} map a long-lived caller
     (the serving tier) passes in — head terms' varbyte decode dominates the
     dense-query latency, and reference query sets share head terms heavily.
-    Cached entries hold the QUERY-INDEPENDENT tf-norm (tf/(tf+K1(...)),
-    a function of the index's avgdl/norms only), so a warm query pays one
-    idf multiply + scatter per term — no norms gather, no division. The
-    contrib arithmetic (idf x tfnorm) is the same expression shape as the
-    uncached path and the oracle, so scores stay bit-identical. Entries
-    are the caller's to bound/evict (LocalSearcher keys a searcher to one
-    pinned snapshot, so entries can never go stale within its lifetime).
+    Entries hold ``decode_term``'s query-independent tf-norm, so a warm
+    query pays one idf multiply + scatter per term. Entries are the
+    caller's to bound/evict (LocalSearcher keys a searcher to one pinned
+    snapshot, so entries can never go stale within its lifetime).
     """
-    per_term: list[tuple[np.ndarray, np.ndarray]] = []
+    terms = []
     for t, idf, rows in sorted(term_lists, key=lambda e: e[0]):
-        cached = decode_cache.get(t) if decode_cache is not None else None
-        if cached is not None:
-            d, tfn = cached
-        else:
-            ds, tfs = [], []
-            for enc in rows:  # caller orders rows by doc_min
-                dd, tt = codec.decode_postings(enc)
-                ds.append(dd)
-                tfs.append(tt)
-            if not ds:
+        ent = decode_cache.get(t) if decode_cache is not None else None
+        if ent is None:
+            if not rows:
                 continue
-            d = np.concatenate(ds)
-            tf = np.concatenate(tfs).astype(np.float64)
-            dl = norms[d].astype(np.float64)
-            # elementwise twin of _tf_norm's scalar expression tree
-            tfn = tf / (tf + K1 * ((1.0 - B) + (B * dl) / avgdl))
+            ent = decode_term(rows, norms, avgdl)[:2]
             if decode_cache is not None:
-                decode_cache[t] = (d, tfn)
-        per_term.append((d, idf * tfn))
-    if not per_term:
+                decode_cache[t] = ent
+        terms.append((ent[0], ent[1], idf, _SCORED))
+    if not terms:
         return []
-    # dense accumulator sized like the norms array (already O(n_docs)
-    # per-shard state this worker holds — SURVEY §7.4 #5's sharding note):
-    # per-doc sums land by direct index, one += per term in sorted-term
-    # order — the SAME left fold per doc as before, without the
-    # np.unique/searchsorted sort of the concatenated posting lists that
-    # dominated dense-query latency (docIDs are unique within a term, so
-    # fancy-index += is exact)
-    if len(per_term) == 1:
+    if len(terms) == 1:
         # single-term queries (a large share of real search traffic) never
         # need the dense accumulator: the per-doc score IS the one term's
-        # contrib array (docIDs unique within a term, nothing to fold), so
-        # top-k runs straight over (docs, contribs) — no O(n_docs) zeros,
-        # no scatter, no dense finalize. Tombstones mask by sorted-array
-        # probe. Shares _topk_pairs with topk_from_dense, so ties and
-        # ordering are bit-identical to the accumulated path.
-        d, contrib = per_term[0]
+        # contrib array (nothing to fold), so top-k runs straight over
+        # (docs, contribs) — no O(n_docs) zeros, no scatter. Tombstones mask
+        # by sorted-array probe. Shares _topk_pairs with topk_from_dense, so
+        # ties and ordering are bit-identical to the accumulated path.
+        d, tfn, idf, _role = terms[0]
+        contrib = idf * tfn
         if tombstones is not None and tombstones.size:
             pos = np.searchsorted(tombstones, d)
             pos[pos == tombstones.size] = tombstones.size - 1
             alive = tombstones[pos] != d
             d, contrib = d[alive], contrib[alive]
         return _topk_pairs(d, contrib, k)
-    sums = np.zeros(norms.size, dtype=np.float64)
-    est = 0
-    for d, contrib in per_term:
-        sums[d] += contrib
-        est += d.size
-    if tombstones is not None and tombstones.size:
-        t = tombstones[tombstones < sums.size]
-        sums[t] = 0.0
-    return topk_from_dense(sums, k, est_matches=est)
+    sums, _elig = accumulate(terms, 0, norms.size, tomb=tombstones)
+    return topk_from_dense(
+        sums, k, est_matches=sum(e[0].size for e in terms)
+    )
 
 
 def _topk_pairs(
@@ -332,7 +470,7 @@ def topk_from_dense(
 # holds. Beyond the cap, per-term decode volume makes block-max skipping
 # the only sub-linear option.
 #
-# The bool/phrase per-query runners (boolquery._bool_runner /
+# Masked queries on the per-query runners (boolquery._bool_runner /
 # _phrase_runner) tighten this envelope to the query's OBSERVED docID
 # range (min doc_min .. max doc_max over its segment rows ~ 11 bytes per
 # doc-in-range): only head-term queries approach O(n_docs). Large batches
@@ -445,18 +583,36 @@ def bmw_topk(
 # ---------------------------------------------------------------------------
 
 
-def _row_to_enc(row) -> dict:
-    return {
-        "docs_blob": bytes(row["docs_blob"]),
-        "tfs_blob": bytes(row["tfs_blob"]),
-        "doc_offs": np.asarray(row["doc_offs"], dtype=np.int64),
-        "tf_offs": np.asarray(row["tf_offs"], dtype=np.int64),
-        "block_first": np.asarray(row["block_first"], dtype=np.int64),
-        "block_last": np.asarray(row["block_last"], dtype=np.int64),
-        "block_max_tf": np.asarray(row["block_max_tf"], dtype=np.int64),
-        "block_min_dl": np.asarray(row["block_min_dl"], dtype=np.int64),
-        "doc_min": int(row["doc_min"]),
+def _row_to_enc(cols: dict, i: int) -> dict:
+    """Row ``i`` of an applyInPandas batch's column arrays -> the codec's
+    encoded-row dict (plus the positional sidecar when the scan kept it)."""
+    enc = {
+        "docs_blob": bytes(cols["docs_blob"][i]),
+        "tfs_blob": bytes(cols["tfs_blob"][i]),
+        "doc_min": int(cols["doc_min"][i]),
     }
+    for c in ("doc_offs", "tf_offs", "block_first", "block_last",
+              "block_max_tf", "block_min_dl"):
+        enc[c] = np.asarray(cols[c][i], dtype=np.int64)
+    if "pos_blob" in cols:
+        enc["pos_blob"] = bytes(cols["pos_blob"][i])
+        enc["pos_offs"] = np.asarray(cols["pos_offs"][i], dtype=np.int64)
+    return enc
+
+
+def _segment_rows(pdf: pd.DataFrame, key: str) -> dict:
+    """Group one applyInPandas batch's segment rows by ``key`` (``term`` or
+    ``term_id``) -> {key: encoded rows ordered by doc_min}, the order
+    ``decode_term`` concatenates in. Column-array access, not iterrows
+    (row-at-a-time pandas is the slow path even for small groups)."""
+    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
+    keys = pdf[key].tolist()  # python str/int keys, not numpy scalars
+    out: dict = {}
+    for i in range(len(pdf)):
+        out.setdefault(keys[i], []).append(_row_to_enc(cols, i))
+    for encs in out.values():
+        encs.sort(key=lambda e: e["doc_min"])
+    return out
 
 
 # driver-side cache of small per-index state (stats row + tombstone set),
@@ -497,6 +653,12 @@ def _index_state(spark: SparkSession, index_dir: str):
     return state
 
 
+def _should_specs(queries: list[tuple[int, str]]) -> list[tuple[int, dict]]:
+    """Match queries as should-only bool specs; token-less texts are
+    dropped (they can match nothing — an empty result, like the oracle)."""
+    return [(qid, {"should": text}) for qid, text in queries if tokenize(text)]
+
+
 def wand_topk(
     spark: SparkSession,
     index_dir: str,
@@ -505,119 +667,20 @@ def wand_topk(
 ) -> DataFrame:
     """Batched top-k over a built index: one Spark job for all queries.
 
-    -> DataFrame (query_id, rank, doc_id, score). Queries whose terms are all
-    absent produce no rows (empty result — matches the oracle).
+    -> DataFrame (query_id, rank, doc_id, score). A match query is a
+    should-only bool query (``boolquery.bool_topk``): segment rows for the
+    batch vocabulary are scanned once and joined to the per-query term map,
+    and each query runs ``taat_topk`` — or ``bmw_topk`` above
+    ``TAAT_MAX_POSTINGS`` — in one applyInPandas group. Queries whose terms
+    are all absent produce no rows (empty result — matches the oracle).
     """
-    from ..session import ship_package
-    from ..sources.catalog import (
-        assert_index_readable,
-        committed_gen_paths,
-        resolve_table_dir,
-    )
+    from ..sources.catalog import assert_index_readable
+    from .boolquery import bool_topk
 
-    ship_package(spark)
     # closed-index parity: a closed ES index rejects searches too
     # (CloseIndexCommand.cs) — refuse before planning anything
     assert_index_readable(index_dir)
-    n_docs, avgdl, commit_seq = _index_state(spark, index_dir)
-
-    # per-query sorted unique terms (scoring dedups terms — oracle parity)
-    qterms = [(qid, t) for qid, text in queries for t in sorted(set(tokenize(text)))]
-    if not qterms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    all_terms = sorted({t for _, t in qterms})
-
-    # term -> (term_id, df) via the term-SORTED projection's committed
-    # generations: the IN filter is pushed to each gen's scan and parquet
-    # min/max stats prune to the row groups covering the query terms (the
-    # Lucene term-seek analog); per-gen delta rows fold driver-side
-    # (<= |terms| x gens rows — operators/dictionary.lookup_term_info)
-    from .dictionary import lookup_term_info
-
-    term_info = lookup_term_info(spark, index_dir, all_terms)
-    tids = [ti[0] for ti in term_info.values()]
-    if not tids:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-
-    # idf per term (driver-side, tiny)
-    idf = {
-        t: math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-        for t, (_tid, df) in term_info.items()
-    }
-
-    # (query_id, term, term_id, idf) for terms present in the dictionary
-    qmap_rows = [
-        (qid, t, term_info[t][0], idf[t]) for qid, t in qterms if t in term_info
-    ]
-    if not qmap_rows:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qmap = spark.createDataFrame(
-        qmap_rows, "query_id bigint, term string, term_id bigint, idf double"
-    )
-
-    seg_paths = committed_gen_paths(index_dir, "segments")
-    if not seg_paths:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    from .build import V1_SEGMENT_COLS
-
-    # positions-free path: prune the v2 positional sidecar (if any) before
-    # the blobs ride the group shuffle
-    segs = (
-        spark.read.parquet(*seg_paths)
-        .select(*V1_SEGMENT_COLS)
-        .filter(F.col("term_id").isin(tids))
-    )
-    grouped = segs.join(F.broadcast(qmap), "term_id")
-
-    kk = int(k)
-    avgdl_b = avgdl
-    # executor-side state handles: workers load norms/tombstones themselves
-    # from these committed snapshot paths (cached per worker per commit_seq)
-    # — only strings cross the closure, never data
-    fwd_path = tuple(committed_gen_paths(index_dir, "fwd"))
-    tomb_path = tuple(committed_gen_paths(index_dir, "tombstones"))
-    seq = int(commit_seq)
-
-    def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
-        from osu_elastic_indexer_spark.operators.state import (
-            load_norms,
-            load_tombstones,
-        )
-
-        norms = load_norms(fwd_path, seq)
-        tomb = load_tombstones(tomb_path, seq)
-        qid = int(pdf["query_id"].iloc[0])
-        term_lists: dict[str, tuple[float, list]] = {}
-        # column-array access, not iterrows (row-at-a-time pandas is the
-        # slow path even for small segment-row groups)
-        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-        for i in range(len(pdf)):
-            t = cols["term"][i]
-            term_lists.setdefault(t, (float(cols["idf"][i]), []))[1].append(
-                _row_to_enc({c: cols[c][i] for c in pdf.columns})
-            )
-        entries = []
-        total_postings = 0
-        for t, (tidf, rows) in sorted(term_lists.items()):
-            rows.sort(key=lambda e: e["doc_min"])  # disjoint ranges, ordered
-            total_postings += sum(len(e["block_first"]) for e in rows) * 128
-            entries.append((t, tidf, rows))
-        # dispatch: vectorized exhaustive TAAT for small candidate sets,
-        # block-max WAND when skipping pays (both exact, same fold order)
-        if total_postings <= TAAT_MAX_POSTINGS:
-            top = taat_topk(entries, kk, avgdl_b, norms, tomb)
-        else:
-            top = bmw_topk(entries, kk, avgdl_b, norms, tomb)
-        return pd.DataFrame(
-            {
-                "query_id": [qid] * len(top),
-                "rank": list(range(1, len(top) + 1)),
-                "doc_id": [d for _s, d in [(s, d) for s, d in top]],
-                "score": [s for s, _d in top],
-            }
-        )
-
-    return grouped.groupBy("query_id").applyInPandas(run_query, RESULT_SCHEMA)
+    return bool_topk(spark, index_dir, _should_specs(queries), k)
 
 
 def wand_topk_docpart(
@@ -631,138 +694,18 @@ def wand_topk_docpart(
     ``wand_topk`` joins segment rows to the query map, so each term's
     compressed blobs are shuffled once PER SUBSCRIBING QUERY — fine for a
     handful of queries, but a 10^4-query batch sharing Zipf head terms
-    multiplies the shuffle by the subscription count. This operator is the
-    scale shape for large batches (the sharded-Lucene form): segment rows
-    for the union of query terms shuffle ONCE, grouped by their
-    (generation, salt) docID cell — every doc's postings live wholly inside
-    one cell by construction of the salted grid, so per-cell exhaustive
-    scoring of ALL queries is exact — then the global top-k per query is
-    the top-k of the per-cell winners (disjoint docs, union of candidates).
-    Shuffle volume is independent of the query count; the query map rides
-    the closure (tiny). Scores fold in sorted-term order per doc, so
-    results are rank-identical (bit-identical scores) to wand_topk and the
-    oracle; ties break by doc_id via the final exact window.
+    multiplies the shuffle by the subscription count. This is the scale
+    shape for large batches (the sharded-Lucene form): a should-only
+    ``boolquery.bool_topk_docpart`` — segment rows shuffle ONCE per
+    (generation, salt) docID cell, each cell scores every query, and one
+    tiny window merges the per-cell winners. Rank-identical (bit-identical
+    scores) to wand_topk and the oracle.
     """
-    from ..session import ship_package
-    from ..sources.catalog import assert_index_readable, committed_gen_paths
+    from ..sources.catalog import assert_index_readable
+    from .boolquery import bool_topk_docpart
 
-    ship_package(spark)
     assert_index_readable(index_dir)  # closed-index parity (see wand_topk)
-    n_docs, avgdl, commit_seq = _index_state(spark, index_dir)
-    qterms = [(qid, t) for qid, text in queries for t in sorted(set(tokenize(text)))]
-    if not qterms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    all_terms = sorted({t for _, t in qterms})
-    from .dictionary import lookup_term_info
-
-    term_info = lookup_term_info(spark, index_dir, all_terms)
-    tids = [ti[0] for ti in term_info.values()]
-    if not tids:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    idf = {
-        t: math.log(1.0 + (n_docs - df + 0.5) / (df + 0.5))
-        for t, (_tid, df) in term_info.items()
-    }
-    # tid -> [(query_id, idf)] subscription map — closure-shipped (per-term
-    # scalars only, bounded by the query batch's vocabulary)
-    subs: dict[int, list[tuple[int, float]]] = {}
-    for qid, t in qterms:
-        if t in term_info:
-            tid = term_info[t][0]
-            subs.setdefault(tid, []).append((qid, idf[t]))
-    seg_paths = committed_gen_paths(index_dir, "segments")
-    if not seg_paths or not subs:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    from .build import V1_SEGMENT_COLS
-
-    segs = (
-        spark.read.parquet(*seg_paths)
-        .select(*V1_SEGMENT_COLS)
-        .filter(F.col("term_id").isin(tids))
-    )
-
-    kk = int(k)
-    avgdl_b = avgdl
-    fwd_path = tuple(committed_gen_paths(index_dir, "fwd"))
-    tomb_path = tuple(committed_gen_paths(index_dir, "tombstones"))
-    seq = int(commit_seq)
-    _tid_term = {ti[0]: t for t, ti in term_info.items()}
-
-    def score_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        from osu_elastic_indexer_spark.operators.state import (
-            load_norms,
-            load_tombstones,
-        )
-
-        norms = load_norms(fwd_path, seq)
-        tomb = load_tombstones(tomb_path, seq)
-        # decode each term's cell postings ONCE; score every subscribed
-        # query against the decoded arrays (cell-local dense accumulator)
-        lo = int(pdf["doc_min"].min())
-        hi = int(pdf["doc_max"].max())
-        span = hi - lo + 1
-        cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-        # per-term decoded postings within this cell, ordered by doc_min
-        by_tid: dict[int, list[tuple[int, dict]]] = {}
-        for i in range(len(pdf)):
-            by_tid.setdefault(int(cols["term_id"][i]), []).append(
-                (int(cols["doc_min"][i]), _row_to_enc({c: cols[c][i] for c in pdf.columns}))
-            )
-        decoded: dict[int, tuple[np.ndarray, np.ndarray]] = {}
-        for tid, rows in by_tid.items():
-            rows.sort(key=lambda e: e[0])
-            parts = [codec.decode_postings(enc) for _dm, enc in rows]
-            d = np.concatenate([p[0] for p in parts])
-            tf = np.concatenate([p[1] for p in parts]).astype(np.float64)
-            dl = norms[d].astype(np.float64)
-            tfn = tf / (tf + K1 * ((1.0 - B) + (B * dl) / avgdl_b))
-            decoded[tid] = (d, tfn)
-        # per-query accumulation in sorted-term order (same fold as TAAT)
-        q_terms: dict[int, list[tuple[float, int]]] = {}
-        for tid, qlist in subs.items():
-            if tid not in decoded:
-                continue
-            for qid, qidf in qlist:
-                q_terms.setdefault(qid, []).append((qidf, tid))
-        out_q, out_d, out_s = [], [], []
-        for qid, tl in q_terms.items():
-            sums = np.zeros(span, dtype=np.float64)
-            # deterministic order: terms of a query accumulate by tid asc —
-            # NOTE tid order == (df desc, term asc) assignment order; the
-            # per-doc float fold must match the oracle's sorted-TERM order,
-            # so sort by the term string recovered from tid
-            for qidf, tid in sorted(tl, key=lambda e: _tid_term.get(e[1], "")):
-                d, tfn = decoded[tid]
-                sums[d - lo] += qidf * tfn
-            if tomb is not None and tomb.size:
-                tt = tomb[(tomb >= lo) & (tomb <= hi)]
-                if tt.size:
-                    sums[tt - lo] = 0.0
-            for s, d in topk_from_dense(sums, kk):
-                out_q.append(qid)
-                out_d.append(d + lo)
-                out_s.append(s)
-        return pd.DataFrame(
-            {"query_id": out_q, "rank": [0] * len(out_q),
-             "doc_id": out_d, "score": out_s}
-        )
-
-    cells = segs.groupBy("generation", "salt").applyInPandas(
-        score_cell, RESULT_SCHEMA
-    )
-    # exact global top-k: per-cell candidates cover disjoint docs, so the
-    # union of per-cell top-ks contains the global top-k; one tiny window
-    # (cells x queries x k rows) finishes it
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc("doc_id")
-    )
-    return (
-        cells.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= kk)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    return bool_topk_docpart(spark, index_dir, _should_specs(queries), k)
 
 
 def wand_topk_with_urls(

@@ -88,14 +88,29 @@ def search_corpus(
     return search(build_index(docs), query_text, k)
 
 
-def _clause_terms(v) -> list[str]:
+def _clause_items(v) -> list[tuple[str, float]]:
+    """One clause -> [(text, boost)]: a text, or a list of texts,
+    (text, boost) pairs and {"query"/"term": text, "boost": b} dicts."""
     if v is None:
         return []
-    if isinstance(v, str):
-        return sorted(set(tokenize(v)))
-    out: set[str] = set()
+    if isinstance(v, (str, dict, tuple)):
+        v = [v]
+    out = []
     for item in v:
-        out.update(tokenize(item))
+        if isinstance(item, dict):
+            out.append((item.get("query", item.get("term")),
+                        float(item.get("boost", 1.0))))
+        elif isinstance(item, tuple):
+            out.append((item[0], float(item[1])))
+        else:
+            out.append((item, 1.0))
+    return out
+
+
+def _clause_terms(v) -> list[str]:
+    out: set[str] = set()
+    for text, _b in _clause_items(v):
+        out.update(tokenize(text))
     return sorted(out)
 
 
@@ -116,7 +131,14 @@ def search_bool(
     all positive docs, doc_id ascending — ES filter-context scoring; a
     structured filter counts as a required clause for that tail, so a
     should+filter spec (msm 0) also returns filter-matching INDEXED docs
-    carrying none of the query's terms at score 0.0."""
+    carrying none of the query's terms at score 0.0. A boosted must/should
+    item multiplies its terms' weight by the boost; a term in several
+    boosted items takes the product (must items first, then should)."""
+    boost: dict[str, float] = {}
+    for clause in ("must", "should"):
+        for text, b in _clause_items(spec.get(clause)):
+            for t in set(tokenize(text)):
+                boost[t] = boost.get(t, 1.0) * b
     must = _clause_terms(spec.get("must"))
     should = _clause_terms(spec.get("should"))
     mnot = _clause_terms(spec.get("must_not"))
@@ -131,7 +153,7 @@ def search_bool(
         plist = index.postings.get(t)
         if not plist:
             continue
-        w = idf(index.n_docs, len(plist))
+        w = idf(index.n_docs, len(plist)) * boost.get(t, 1.0)
         for doc_id, tf in plist.items():
             scores[doc_id] = scores.get(doc_id, 0.0) + w * tf_norm(
                 tf, index.dl[doc_id], index.avgdl

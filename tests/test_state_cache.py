@@ -91,16 +91,42 @@ def test_docfilter_cache_bounded_across_distinct_ranges(tmp_path):
             a.nbytes for _v, a, _n in state._FILTER_CACHE.values()
         )
         assert total <= 40_000, total
-        # the running byte total matches a from-scratch re-sum (the
-        # insert-time accounting never drifts from the entries' true sizes)
-        assert state._FILTER_CACHE_BYTES == sum(
-            n for _v, _a, n in state._FILTER_CACHE.values()
-        )
+        # the insert-time sizes eviction sums are the entries' true sizes
+        assert [n for _v, _a, n in state._FILTER_CACHE.values()] == [
+            a.nbytes for _v, a, _n in state._FILTER_CACHE.values()
+        ]
         assert len(state._FILTER_CACHE) < 5
         # hits still serve from cache (most recent range is resident)
         before = len(state._FILTER_CACHE)
         state.load_docids_in_range((g,), 1, "url", "%012d" % 39, None)
         assert len(state._FILTER_CACHE) == before
+    finally:
+        state._FILTER_CACHE_MAX_BYTES = old
+        state._FILTER_CACHE.clear()
+
+
+def test_docfilter_cache_budget_survives_outside_removal(tmp_path):
+    """An entry removed from outside the cache helper (a test, or future
+    code popping one key) must not skew the byte budget — the helper keeps
+    no running total, it sums the stored entry sizes."""
+    g = str(tmp_path / "idx" / "docmap" / "gen=0")
+    _write_docmap(g, 2000)
+    state._FILTER_CACHE.clear()
+    old = state._FILTER_CACHE_MAX_BYTES
+    state._FILTER_CACHE_MAX_BYTES = 40_000  # ~2.5 full-range entries
+    try:
+        for i in range(3):
+            state.load_docids_in_range((g,), 1, "url", "%012d" % i, None)
+        # drop the newest entry behind the helper's back
+        state._FILTER_CACHE.popitem(last=True)
+        for i in range(3, 20):
+            state.load_docids_in_range((g,), 1, "url", "%012d" % i, None)
+            total = sum(
+                a.nbytes for _v, a, _n in state._FILTER_CACHE.values()
+            )
+            assert total <= 40_000, (i, total)
+        # and it did not over-evict: more than one entry fits the budget
+        assert len(state._FILTER_CACHE) == 2
     finally:
         state._FILTER_CACHE_MAX_BYTES = old
         state._FILTER_CACHE.clear()
