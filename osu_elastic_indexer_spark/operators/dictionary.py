@@ -240,6 +240,7 @@ def lookup_terms_by_prefix(
     prefix: str,
     max_expansions: int | None = None,
     spark=None,
+    files: list[str] | None = None,
 ) -> list[str]:
     """ES prefix-query term expansion: LIVE terms starting with ``prefix``,
     term-asc, capped at ``max_expansions`` (the deterministic analog of
@@ -249,7 +250,11 @@ def lookup_terms_by_prefix(
     fold first, so a fully-deleted term (df summed to 0) never expands.
     On a non-driver-visible (Hadoop-FS URI) index the expansion falls back
     to a Spark scan with the same startswith predicate (pushed to parquet)
-    when ``spark`` is supplied, else raises (module doc)."""
+    when ``spark`` is supplied, else raises (module doc).
+
+    ``files``: the dictionary parquet files to expand over instead of the
+    index's currently committed ones — a searcher passes the files of the
+    snapshot it pinned at open, so a later commit never leaks in."""
     import pyarrow as pa
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
@@ -259,27 +264,29 @@ def lookup_terms_by_prefix(
 
     if not prefix:
         return []
-    paths = committed_gen_paths(index_dir, "dict_by_term") or committed_gen_paths(
-        index_dir, "dictionary"
-    )
-    if not paths:
-        return []
-    if not _driver_visible(paths):
-        if spark is None:
-            raise RuntimeError(
-                f"index at {index_dir} is not driver-visible (Hadoop-FS "
-                "URI) and no SparkSession was supplied for the scan "
-                "fallback — mount the index or pass spark"
+    if files is None:
+        paths = committed_gen_paths(
+            index_dir, "dict_by_term"
+        ) or committed_gen_paths(index_dir, "dictionary")
+        if not paths:
+            return []
+        if not _driver_visible(paths):
+            if spark is None:
+                raise RuntimeError(
+                    f"index at {index_dir} is not driver-visible (Hadoop-FS "
+                    "URI) and no SparkSession was supplied for the scan "
+                    "fallback — mount the index or pass spark"
+                )
+            rows = (
+                spark.read.parquet(*paths)
+                .filter(F.col("term").startswith(prefix))
+                .select("term", "term_id", "df")
+                .collect()
             )
-        rows = (
-            spark.read.parquet(*paths)
-            .filter(F.col("term").startswith(prefix))
-            .select("term", "term_id", "df")
-            .collect()
-        )
-        folded = fold_delta_rows((r.term, r.term_id, r.df) for r in rows)
-        live = sorted(t for t, (_tid, df) in folded.items() if df > 0)
-        return live[:max_expansions] if max_expansions is not None else live
+            folded = fold_delta_rows((r.term, r.term_id, r.df) for r in rows)
+            live = sorted(t for t, (_tid, df) in folded.items() if df > 0)
+            return live[:max_expansions] if max_expansions is not None else live
+        files = _parquet_files(tuple(paths))
     # successor string: smallest string greater than every prefix-match
     hi = prefix[:-1] + chr(ord(prefix[-1]) + 1) if ord(prefix[-1]) < 0x10FFFF else None
 
@@ -287,7 +294,7 @@ def lookup_terms_by_prefix(
         return v.decode("utf-8", "replace") if isinstance(v, bytes) else v
 
     parts = []
-    for f in _parquet_files(tuple(paths)):
+    for f in files:
         pf = pq.ParquetFile(f)
         md = pf.metadata
         if md.num_rows == 0 or md.num_row_groups == 0:

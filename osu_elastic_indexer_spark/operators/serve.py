@@ -4,27 +4,44 @@ The reference serves queries from Elasticsearch — a long-lived process with
 the index hot. The Spark jobs in operators/wand.py and boolquery.py are the
 BATCH query path (thousands of queries per job); interactive p50 latency is
 a serving concern, so this module reads the SAME segment/dictionary/stats
-parquet directly with pyarrow (predicate pushdown -> row-group pruning — the
-layout was written term_id-sorted for exactly this). No Spark session
-involved.
+parquet directly with pyarrow. No Spark session involved.
 
 ``LocalSearcher`` is the third thin driver around the one scoring kernel
 (wand.py): match queries run ``taat_topk``/``bmw_topk``, bool queries
 ``score_bool`` over a corpus-anchored window, positional phrases the
 shared block-selected decode and ``_verify_positions_cell`` of
-boolquery.py. What is serve-specific is only where postings come from:
-footer-indexed row-group seeks and bounded decode caches of the kernel's
-query-independent (docs, tf-norm) and (docs, tfs, positions) arrays.
-Results are rank-identical to the Spark paths by construction (same files,
-same scoring code).
+boolquery.py. Results are rank-identical to the Spark paths by
+construction (same files, same scoring code). What is serve-specific is
+where postings come from and what stays hot:
 
-At real scale this is the searcher fleet next to the object store; each
-query touches only the row groups covering its terms.
+* **One snapshot, pinned at open.** The manifest is read once; the
+  searcher keeps that snapshot's committed file lists (segments,
+  dictionary, docmap, norms, tombstones), its ``commit_seq`` and its
+  keyword/numeric field lists, and answers every query from them. A later
+  commit is invisible until the caller opens a new searcher, so no cache
+  entry can ever go stale.
+* **Three hot caches**, each a ``_SizedLRU`` (least-recently-used order,
+  running size total kept on every insert and removal, so bounding one is
+  O(evictions), never a re-sum):
+  decoded postings (term -> the kernel's query-independent
+  ``(docs, tf-norm)``, billed in postings), positional rows (term -> its
+  segment rows with the position blob and block metadata, docs and tfs
+  decoded, billed in bytes — a phrase query runs only the block-selected
+  position decode and the verify kernel over them), and prefix expansions
+  (``(token, max_expansions)`` -> expanded terms). After one pass over a
+  query mix, repeating it reads no parquet at all.
+* **Cold reads** seek by row group: segment files are term_id-sorted, so
+  one footer pass at open maps each group to its term_id range and a term
+  reads only its covering groups (the Lucene term-index seek).
+
+At real scale this is the searcher fleet next to the object store.
 """
 
 from __future__ import annotations
 
 import os
+from collections import OrderedDict
+from collections.abc import MutableMapping
 
 import numpy as np
 import pyarrow.dataset as ds
@@ -54,12 +71,95 @@ _SEG_COLS = [
 # EVERY query, the exact workload the cache exists for.
 _DECODE_CACHE_MAX_POSTINGS = TAAT_MAX_POSTINGS
 
-# positions cache budget — BYTES, not posting counts: positions volume ~=
-# token volume (an order beyond docs/tfs), and each entry also carries its
-# docs + pstart arrays, so counting position values against the postings
-# constant under-billed by several x (ADVICE r5). 32 B/posting * the TAAT
+# positional-row cache budget — BYTES, not posting counts: a row entry
+# holds the position blob (~ token volume, an order beyond docs/tfs), its
+# block metadata and the decoded docs + tfs. 32 B/posting * the TAAT
 # envelope = 2x the postings cache's ~16 B/posting worst case.
 _POS_CACHE_MAX_BYTES = 32 * TAAT_MAX_POSTINGS
+
+# prefix-expansion memo budget, in expanded terms held (each entry is
+# billed its term count + 1): ~1k prefixes at the default 50 expansions
+_PREFIX_MEMO_MAX_TERMS = 1 << 16
+
+
+class _SizedLRU(MutableMapping):
+    """A mapping in least- to most-recently-used order that keeps the
+    running total of its entries' sizes.
+
+    ``sizer(value)`` runs once per insert and its result is stored beside
+    the entry; every way an entry leaves — ``del``, ``pop``, ``popitem``,
+    ``clear``, ``evict`` — subtracts that stored size, so ``total`` is
+    exact without ever re-summing. Assignment (also of an existing key)
+    and ``hit`` make an entry the most recently used."""
+
+    def __init__(self, sizer) -> None:
+        self.sizer = sizer
+        self._data: OrderedDict = OrderedDict()  # key -> (value, size)
+        self.total = 0
+
+    def __getitem__(self, key):
+        return self._data[key][0]
+
+    def __setitem__(self, key, value) -> None:
+        size = self.sizer(value)
+        old = self._data.pop(key, None)
+        if old is not None:
+            self.total -= old[1]
+        self._data[key] = (value, size)
+        self.total += size
+
+    def __delitem__(self, key) -> None:
+        self.total -= self._data.pop(key)[1]
+
+    def __iter__(self):
+        return iter(self._data)
+
+    def __len__(self) -> int:
+        return len(self._data)
+
+    def clear(self) -> None:
+        self._data.clear()
+        self.total = 0
+
+    def hit(self, key):
+        """The value of ``key``, now the most recently used; None if
+        absent."""
+        e = self._data.get(key)
+        if e is None:
+            return None
+        self._data.move_to_end(key)
+        return e[0]
+
+    def evict(self, budget: int, keep: int) -> None:
+        """Drop least-recently-used entries while ``total`` exceeds
+        ``budget``, never the ``keep`` most recent ones."""
+        while self.total > budget and len(self._data) > keep:
+            self.total -= self._data.popitem(last=False)[1][1]
+
+
+def _row_bytes(term_rows: list[tuple]) -> int:
+    """Size of a positional-row entry ``[(enc, docs, tfs), ...]`` in bytes:
+    every blob, metadata array and decoded array it keeps alive."""
+    n = 0
+    for enc, d, tf in term_rows:
+        n += d.nbytes + tf.nbytes
+        for v in enc.values():
+            if isinstance(v, np.ndarray):
+                n += v.nbytes
+            elif isinstance(v, bytes):
+                n += len(v)
+    return n
+
+
+def _own_row(enc: dict) -> dict:
+    """A positional-row cache copy of one segment row: the docs/tfs blobs
+    are dropped (their decode is cached beside it) and the metadata arrays
+    copied out of the read's shared buffers, so an entry keeps alive
+    exactly the bytes ``_row_bytes`` bills it for."""
+    return {
+        c: v.copy() if isinstance(v, np.ndarray) else v
+        for c, v in enc.items() if c not in ("docs_blob", "tfs_blob")
+    }
 
 
 def _member_mask(farr: np.ndarray, ids: np.ndarray) -> np.ndarray:
@@ -72,32 +172,44 @@ def _member_mask(farr: np.ndarray, ids: np.ndarray) -> np.ndarray:
 
 
 class LocalSearcher:
-    """Loads small index state once; serves top-k queries in milliseconds."""
+    """Pins one committed snapshot at open; serves top-k queries from it in
+    milliseconds (module doc)."""
 
     def __init__(self, index_dir: str):
         from ..sources.catalog import (
             FORMAT_VERSION,
+            assert_index_readable,
             committed_gen_paths,
             read_index_manifest,
             resolve_table_dir,
         )
-
-        from ..sources.catalog import assert_index_readable
+        from .state import _parquet_files, load_norms, load_tombstones
 
         self.index_dir = index_dir
         # closed-index parity: a closed ES index rejects searches too
         # (CloseIndexCommand.cs) — a searcher must refuse to open it
         assert_index_readable(index_dir)
+        # THE snapshot: every path, counter and field list below comes
+        # from this one manifest read, never from a later one
         m = read_index_manifest(index_dir)
         if m is not None and m.get("format") != FORMAT_VERSION:
             raise RuntimeError(
                 f"index at {index_dir} has on-disk format {m.get('format')}, "
                 f"searcher expects {FORMAT_VERSION} — rebuild the index"
             )
+        m = m or {}
+
+        def gen_paths(table: str) -> tuple[str, ...]:
+            return tuple(committed_gen_paths(index_dir, table, m))
+
         # v2 positional layout flag (build_index(positions=True)) — lets
         # search_phrase answer from the index alone, no source parquet
-        self.positions = bool(m and m.get("positions"))
-        st = pq.read_table(resolve_table_dir(index_dir, "stats")).to_pylist()[0]
+        self.positions = bool(m.get("positions"))
+        self._seq = int(m.get("commit_seq", 0))
+        self._keyword_fields = tuple(m.get("keyword_fields") or ())
+        self._numeric_fields = tuple(m.get("numeric_fields") or ())
+        self._docmap_paths = gen_paths("docmap")
+        st = pq.read_table(resolve_table_dir(index_dir, "stats", m)).to_pylist()[0]
         self.n_docs = int(st["n_docs"])
         self.avgdl = float(st["avgdl"])
         # term -> (term_id, df): lazy row-group-pruned lookups on the
@@ -107,17 +219,15 @@ class LocalSearcher:
         # (term_id = max, df = sum — operators/dictionary.py). Resolved
         # terms are memoized. Indexes without the projection fall back to
         # one eager merged load of the primary dictionary gens.
-        from .state import _parquet_files as _pfiles
-
-        bt_files = _pfiles(tuple(committed_gen_paths(index_dir, "dict_by_term")))
         self._dict: dict[str, tuple[int, int]] = {}
-        self._dict_ds = ds.dataset(bt_files) if bt_files else None
+        self._dict_files = _parquet_files(gen_paths("dict_by_term"))
+        self._dict_ds = ds.dataset(self._dict_files) if self._dict_files else None
         if self._dict_ds is None:
-            d_files = _pfiles(tuple(committed_gen_paths(index_dir, "dictionary")))
-            if d_files:
+            self._dict_files = _parquet_files(gen_paths("dictionary"))
+            if self._dict_files:
                 from .dictionary import fold_delta_rows
 
-                d = ds.dataset(d_files).to_table(
+                d = ds.dataset(self._dict_files).to_table(
                     columns=["term", "term_id", "df"]
                 )
                 self._dict = fold_delta_rows(
@@ -129,16 +239,9 @@ class LocalSearcher:
                 )
         # norms + tombstones via the shared executor-side loaders (sorted
         # int64 arrays; the Lucene live-docs/norms analog a searcher keeps
-        # hot) — committed snapshot paths, keyed by the manifest's monotonic
-        # commit_seq
-        from .state import _parquet_files, load_norms, load_tombstones
-        from .wand import manifest_commit_seq
-
-        seq = manifest_commit_seq(index_dir)
-        self.norms = load_norms(tuple(committed_gen_paths(index_dir, "fwd")), seq)
-        self.tombstones = load_tombstones(
-            tuple(committed_gen_paths(index_dir, "tombstones")), seq
-        )
+        # hot), keyed by the snapshot's monotonic commit_seq
+        self.norms = load_norms(gen_paths("fwd"), self._seq)
+        self.tombstones = load_tombstones(gen_paths("tombstones"), self._seq)
         # > every position + 1: the positional kernel's fused-key width
         self._max_dl = int(self.norms.max()) if self.norms.size else 1
         # empty-corpus / all-deleted indexes commit with zero segment files
@@ -148,10 +251,9 @@ class LocalSearcher:
         # (term_id_min, term_id_max) per group and a term lookup reads ONLY
         # its covering groups — the Lucene term-index seek, not a dataset
         # scan whose stats evaluation re-reads every footer per query.
-        seg_files = _parquet_files(tuple(committed_gen_paths(index_dir, "segments")))
         self._seg_pfs: list[pq.ParquetFile] = []
         rg_mins, rg_maxs, rg_file, rg_idx = [], [], [], []
-        for fi, f in enumerate(seg_files):
+        for fi, f in enumerate(_parquet_files(gen_paths("segments"))):
             pf = pq.ParquetFile(f)
             self._seg_pfs.append(pf)
             md = pf.metadata
@@ -172,12 +274,12 @@ class LocalSearcher:
         self._rg_max = np.asarray(rg_maxs, dtype=np.int64)
         self._rg_file = np.asarray(rg_file, dtype=np.int64)
         self._rg_idx = np.asarray(rg_idx, dtype=np.int64)
-        # bounded decoded-postings cache for the TAAT path (see search())
-        self._decoded: dict[str, tuple] = {}
-        # bounded decoded-POSITIONS cache for the positional phrase path
-        # (term -> (docs, tfs, poss, pstart); same LRU discipline, own budget —
-        # positions volume ~= token volume, larger than postings)
-        self._pos_decoded: dict[str, tuple] = {}
+        # the hot caches (module doc): decoded postings (docs, tfn) for
+        # match/bool billed per posting, positional segment rows for
+        # phrases billed in bytes, prefix expansions billed per term
+        self._decoded = _SizedLRU(lambda e: e[0].size)
+        self._pos_decoded = _SizedLRU(_row_bytes)
+        self._prefix_terms = _SizedLRU(lambda terms: len(terms) + 1)
 
     def _load_term_rows(
         self, term_ids: list[int], with_positions: bool = False
@@ -284,13 +386,16 @@ class LocalSearcher:
         """-> [(doc_id, score)] — rank-identical to oracle and Spark paths.
 
         Head-term latency: the TAAT path keeps a BOUNDED decoded-postings
-        cache (term -> (docs, tfs) arrays, _DECODE_CACHE_MAX_POSTINGS) —
+        cache (term -> (docs, tfn) arrays, _DECODE_CACHE_MAX_POSTINGS) —
         reference query sets share head terms heavily, and the varbyte
         decode of a dense term dominated the old dense-query p50. A cached
-        term also skips the segments parquet read entirely. The cache is
-        safe by construction: a searcher pins ONE committed snapshot at
-        init, so entries can never go stale within its lifetime."""
-        terms = sorted(set(tokenize(query_text)))
+        term also skips the segments parquet read entirely."""
+        return self._search_terms(sorted(set(tokenize(query_text))), k)
+
+    def _search_terms(
+        self, terms: list[str], k: int
+    ) -> list[tuple[int, float]]:
+        """``search`` over already-tokenized, sorted, unique terms."""
         self._resolve_terms(terms)
         infos = [
             (t, self._dict[t]) for t in terms if self._dict.get(t) is not None
@@ -322,16 +427,13 @@ class LocalSearcher:
         return [(doc, score) for score, doc in res]
 
     def _decoded_for(self, infos: list[tuple[str, tuple[int, int]]]) -> None:
-        """Ensure every term in ``infos`` is decoded into the cache.
-        LRU: move-to-end on hit, so eviction (which pops from the dict
-        head) removes the least-recently-USED term, not the oldest-inserted
-        (often the hottest head term)."""
-        need = []
-        for t, (tid, _df) in infos:
-            if t in self._decoded:
-                self._decoded[t] = self._decoded.pop(t)
-            else:
-                need.append((t, tid))
+        """Ensure every term in ``infos`` is decoded into the cache, as the
+        most recently used entries (eviction drops the least-recently-USED
+        term, not the oldest-inserted — often the hottest head term)."""
+        need = [
+            (t, tid) for t, (tid, _df) in infos
+            if self._decoded.hit(t) is None
+        ]
         rows = self._load_term_rows([tid for _t, tid in need]) if need else {}
         self._decode_terms_parallel(need, rows)
 
@@ -345,7 +447,6 @@ class LocalSearcher:
         over the corpus-anchored window [0, len(norms)), so results are
         bit-identical to the Spark paths. Always the dense/cache path: the
         eligibility masks need full postings regardless of df."""
-        from ..sources.catalog import committed_gen_paths
         from .boolquery import (
             _CLAUSES,
             _check_spec,
@@ -353,15 +454,11 @@ class LocalSearcher:
             _normalize_spec,
             _plan_terms,
             _struct_arrays,
-            index_keyword_fields,
-            index_numeric_fields,
         )
-        from .wand import manifest_commit_seq
 
         s = _normalize_spec(spec)
         fr, ft, fe = _check_spec(
-            spec, s, index_keyword_fields(self.index_dir),
-            index_numeric_fields(self.index_dir),
+            spec, s, self._keyword_fields, self._numeric_fields
         )
         self._resolve_terms(sorted({t for c in _CLAUSES for t in s[c]}))
         plan = _plan_terms(s, _get_msm(spec, s), self._dict, self.n_docs)
@@ -377,11 +474,7 @@ class LocalSearcher:
         struct = None
         if fr or ft or fe:
             # same worker-cached pushed docmap scans as the Spark path
-            struct = _struct_arrays(
-                fr, ft, fe,
-                tuple(committed_gen_paths(self.index_dir, "docmap")),
-                manifest_commit_seq(self.index_dir),
-            )
+            struct = _struct_arrays(fr, ft, fe, self._docmap_paths, self._seq)
         top = score_bool(
             tl, 0, self.norms.size, k, n_must, n_msm, self.norms,
             self.tombstones, struct,
@@ -409,34 +502,12 @@ class LocalSearcher:
         row-identical to the Spark path. ``after`` = ES ``search_after``
         deep paging: the previous page's last (sort value, doc_id) key.
         Returns [(doc_id, sort_value)]."""
-        from ..sources.catalog import committed_gen_paths
-        from .boolquery import _struct_arrays
-        from .sortquery import _validated_filters, sortable_fields
-        from .state import load_sort_column
-        from .wand import manifest_commit_seq
-
-        if sort_field not in sortable_fields(self.index_dir):
-            raise ValueError(
-                f"sort field {sort_field!r} not a stored docmap field of "
-                f"this index; it carries: "
-                f"{list(sortable_fields(self.index_dir))}"
-            )
-        fr, ft = _validated_filters(self.index_dir, filter_term, filter_range)
-        fe: tuple = ()
-        dm_paths = tuple(committed_gen_paths(self.index_dir, "docmap"))
-        seq = manifest_commit_seq(self.index_dir)
-        ids, vals, valid = load_sort_column(dm_paths, seq, sort_field)
+        self._check_doc_value_field("sort field", sort_field)
+        ids, vals, keep, valid = self._doc_values(
+            sort_field, filter_term, filter_range
+        )
         if ids.size == 0:
             return []
-        keep = np.ones(ids.size, dtype=bool)
-        # filter context: cached sorted docID arrays (one per field), the
-        # exact arrays bool filter_term/filter_range queries already keep
-        # hot on this worker — membership via searchsorted on doc_id-
-        # sorted ids
-        for farr in _struct_arrays(fr, ft, fe, dm_paths, seq):
-            keep &= _member_mask(farr, ids)
-        if self.tombstones is not None and self.tombstones.size:
-            keep &= ~np.isin(ids, self.tombstones)
         if after is not None:
             av, ad = after
             if av is None:
@@ -468,26 +539,41 @@ class LocalSearcher:
             out.extend((int(d), None) for d in rest)
         return out
 
-    def _agg_base(self, field: str, filter_term, filter_range):
-        """Shared serving base for the aggs: cached doc-value column +
-        cached filter docID arrays + tombstone mask -> (values, valid)
-        restricted to the matching live docs."""
-        from ..sources.catalog import committed_gen_paths
+    def _check_doc_value_field(self, what: str, field: str) -> None:
+        from .sortquery import sortable_fields
+
+        fields = sortable_fields(
+            self.index_dir, self._keyword_fields, self._numeric_fields
+        )
+        if field not in fields:
+            raise ValueError(
+                f"{what} {field!r} not a stored docmap field of this "
+                f"index; it carries: {list(fields)}"
+            )
+
+    def _doc_values(self, field: str, filter_term, filter_range):
+        """Shared serving base for sort and the aggs: the snapshot's
+        cached doc-value column plus the keep mask of its live docs that
+        pass the filters -> (ids, values, keep, valid). The filters resolve
+        to the SAME cached sorted docID arrays the bool filter context
+        uses (membership via searchsorted on the doc_id-sorted ids)."""
         from .boolquery import _struct_arrays
         from .sortquery import _validated_filters
         from .state import load_sort_column
-        from .wand import manifest_commit_seq
 
-        fr, ft = _validated_filters(self.index_dir, filter_term, filter_range)
-        dm_paths = tuple(committed_gen_paths(self.index_dir, "docmap"))
-        seq = manifest_commit_seq(self.index_dir)
-        ids, vals, valid = load_sort_column(dm_paths, seq, field)
+        fr, ft = _validated_filters(
+            self.index_dir, filter_term, filter_range,
+            self._keyword_fields, self._numeric_fields,
+        )
+        ids, vals, valid = load_sort_column(
+            self._docmap_paths, self._seq, field
+        )
         keep = np.ones(ids.size, dtype=bool)
-        for farr in _struct_arrays(fr, ft, (), dm_paths, seq):
+        for farr in _struct_arrays(fr, ft, (), self._docmap_paths, self._seq):
             keep &= _member_mask(farr, ids)
         if self.tombstones is not None and self.tombstones.size:
             keep &= ~np.isin(ids, self.tombstones)
-        return vals[keep], valid[keep]
+        return ids, vals, keep, valid
 
     def agg_terms(
         self,
@@ -500,16 +586,11 @@ class LocalSearcher:
         JVM-free): np.unique bucket counts over the cached doc-value
         column, top-k by (count desc, value asc). Returns
         [(value, doc_count)]."""
-        from .sortquery import sortable_fields
-
-        if field not in sortable_fields(self.index_dir):
-            raise ValueError(
-                f"terms_agg field {field!r} not a stored docmap field of "
-                f"this index; it carries: "
-                f"{list(sortable_fields(self.index_dir))}"
-            )
-        vals, valid = self._agg_base(field, filter_term, filter_range)
-        vv = vals[valid]
+        self._check_doc_value_field("terms_agg field", field)
+        _ids, vals, keep, valid = self._doc_values(
+            field, filter_term, filter_range
+        )
+        vv = vals[keep & valid]
         if vv.size == 0:
             return []
         uniq, counts = np.unique(vv, return_counts=True)
@@ -527,16 +608,16 @@ class LocalSearcher:
         over the cached numeric doc-value column. Returns {cnt, min_v,
         max_v, avg_v, sum_v} (None-valued beyond cnt when no doc has a
         value, matching the Spark row)."""
-        from .boolquery import index_numeric_fields
-
-        if field not in index_numeric_fields(self.index_dir):
+        if field not in self._numeric_fields:
             raise ValueError(
                 f"stats_agg field {field!r} not a declared numeric "
                 f"doc-value field; this index carries: "
-                f"{list(index_numeric_fields(self.index_dir))}"
+                f"{list(self._numeric_fields)}"
             )
-        vals, valid = self._agg_base(field, filter_term, filter_range)
-        vv = vals[valid].astype(np.float64)
+        _ids, vals, keep, valid = self._doc_values(
+            field, filter_term, filter_range
+        )
+        vv = vals[keep & valid].astype(np.float64)
         if vv.size == 0:
             return {"cnt": 0, "min_v": None, "max_v": None,
                     "avg_v": None, "sum_v": None}
@@ -552,14 +633,16 @@ class LocalSearcher:
         self, prefix: str, k: int = 10, max_expansions: int = 50
     ) -> list[tuple[int, float]]:
         """ES prefix-query serving: expand via the dictionary range seek
-        (term-asc, capped — dictionary.lookup_terms_by_prefix) and score
-        the expansion through the normal search path, so results equal a
-        plain query on the expanded terms. Multi-token input is rejected
-        (ES prefix matches one term; see boolquery.prefix_topk)."""
-        from ..functions.textprep import tokenize as _tok
-        from .dictionary import lookup_terms_by_prefix
+        (term-asc, capped — dictionary.lookup_terms_by_prefix) over the
+        snapshot's own dictionary files and score the expansion through the
+        normal search path, so results equal a plain query on the expanded
+        terms. Expansions are memoized per ``(token, max_expansions)``: the
+        snapshot never changes under a searcher, so neither do they.
+        Multi-token input is rejected (ES prefix matches one term; see
+        boolquery.prefix_topk)."""
+        from . import dictionary
 
-        toks = _tok(prefix)
+        toks = tokenize(prefix)
         if not toks:
             return []
         if len(toks) > 1:
@@ -567,10 +650,20 @@ class LocalSearcher:
                 f"prefix query {prefix!r} tokenizes to {len(toks)} tokens "
                 f"({toks}); ES prefix queries match a single term"
             )
-        terms = lookup_terms_by_prefix(self.index_dir, toks[0], max_expansions)
+        key = (toks[0], max_expansions)
+        terms = self._prefix_terms.hit(key)
+        if terms is None:
+            expanded = dictionary.lookup_terms_by_prefix(
+                self.index_dir, toks[0], max_expansions,
+                files=self._dict_files,
+            )
+            # as search() would tokenize the joined expansion
+            terms = sorted(set(tokenize(" ".join(expanded))))
+            self._prefix_terms[key] = terms
+            self._prefix_terms.evict(_PREFIX_MEMO_MAX_TERMS, keep=1)
         if not terms:
             return []
-        return self.search(" ".join(terms), k)
+        return self._search_terms(terms, k)
 
     def search_phrase(
         self, phrase: str, source_path: str | None = None, k: int = 10,
@@ -592,11 +685,7 @@ class LocalSearcher:
         ``match_phrase`` slop semantics as the Spark path
         (boolquery._matches_phrase: span of slot-adjusted positions,
         transposition costs 2)."""
-        import pyarrow.dataset as pads
-
         from ..functions.textprep import extract_text
-        from ..functions.textprep import tokenize as _tok
-        from ..sources.catalog import committed_gen_paths
         from .boolquery import PHRASE_MAX_CANDIDATES, _matches_phrase
         from .state import _parquet_files
 
@@ -604,7 +693,7 @@ class LocalSearcher:
             max_candidates = PHRASE_MAX_CANDIDATES
         if slop < 0:
             raise ValueError("slop must be >= 0")
-        ph = _tok(phrase)
+        ph = tokenize(phrase)
         if not ph:
             return []
         cands = self.search_bool(
@@ -628,29 +717,27 @@ class LocalSearcher:
                 "on_overflow='scan', or index positions"
             )
         score_by_doc = dict((d, s) for d, s in cands)
-        dm_files = _parquet_files(
-            tuple(committed_gen_paths(self.index_dir, "docmap"))
-        )
+        dm_files = _parquet_files(self._docmap_paths)
         import pyarrow as pa
 
-        dm = pads.dataset(dm_files).to_table(
+        dm = ds.dataset(dm_files).to_table(
             columns=["doc_id", "url"],
-            filter=pads.field("doc_id").isin(
+            filter=ds.field("doc_id").isin(
                 pa.array(sorted(score_by_doc), pa.int64())
             ),
         )
         doc_by_url = dict(
             zip(dm.column("url").to_pylist(), dm.column("doc_id").to_pylist())
         )
-        src = pads.dataset(source_path).to_table(
+        src = ds.dataset(source_path).to_table(
             columns=["url", "html"],
-            filter=pads.field("url").isin(
+            filter=ds.field("url").isin(
                 pa.array(sorted(doc_by_url), pa.string())
             ),
         )
         out = []
         for u, h in zip(src.column("url").to_pylist(), src.column("html").to_pylist()):
-            toks = _tok(extract_text(h))
+            toks = tokenize(extract_text(h))
             if _matches_phrase(toks, ph, slop):
                 d = doc_by_url[u]
                 out.append((d, score_by_doc[d]))
@@ -661,52 +748,42 @@ class LocalSearcher:
         self, cands: list[tuple[int, float]], ph: list[str],
         slop: int, k: int,
     ) -> list[tuple[int, float]]:
-        """Positional serve verify (v2 index): one pruned segment read per
-        uncached phrase term WITH the pos columns, then the Spark paths'
-        block-selected decode (``_decode_positions_selected``: only blocks
-        whose [first, last] docID range holds a candidate decode their
-        position bytes) and positional kernel (``_verify_positions_cell``)
-        — no source IO at all. Partial decodes are NOT cached — the cache
-        holds only COMPLETE term entries (a later query's candidates could
-        need postings a partial entry dropped); a term whose candidate
-        blocks exceed half of every row decodes fully and enters the
-        bytes-budgeted LRU."""
+        """Positional serve verify (v2 index) over the positional-row
+        cache: a phrase term's segment rows are read WITH the pos columns
+        once, their docs and tfs decoded once, and the entry (blobs, block
+        metadata, docs, tfs) kept in the bytes-budgeted LRU. Each query
+        then runs only the Spark paths' block-selected decode
+        (``_decode_positions_selected``: only blocks whose [first, last]
+        docID range holds a candidate decode their position bytes) and
+        positional kernel (``_verify_positions_cell``) over the cached rows
+        — no parquet read, no postings decode, no source IO."""
         from .boolquery import _decode_positions_selected, _verify_positions_cell
 
         self._resolve_terms(list(dict.fromkeys(ph)))
         infos = {t: self._dict.get(t) for t in set(ph)}
         if any(v is None for v in infos.values()):
             return []
+        need = [t for t in infos if t not in self._pos_decoded]
+        if need:
+            rows = self._load_term_rows(
+                [int(infos[t][0]) for t in need], with_positions=True
+            )
+            for t in need:
+                self._pos_decoded[t] = [
+                    (_own_row(enc), *codec.decode_postings(enc))
+                    for enc in rows.get(int(infos[t][0])) or []
+                ]
+        term_rows = {t: self._pos_decoded.hit(t) for t in infos}
+        self._bound_pos_cache(keep=len(infos))
         eligible = np.sort(
             np.asarray([d for d, _s in cands], dtype=np.int64)
         )
-        need = [t for t in infos if t not in self._pos_decoded]
-        rows = (
-            self._load_term_rows(
-                [int(infos[t][0]) for t in need], with_positions=True
-            )
-            if need
-            else {}
-        )
         decoded: dict[str, tuple] = {}
-        for t in need:
-            term_rows = [
-                (enc, *codec.decode_postings(enc))
-                for enc in rows.get(int(infos[t][0])) or []
-            ]
-            res = _decode_positions_selected(term_rows, eligible)
+        for t, rows_t in term_rows.items():
+            res = _decode_positions_selected(rows_t, eligible)
             if res is None:
                 return []
             decoded[t] = res
-            if res[0].size == sum(r[1].size for r in term_rows):
-                self._pos_decoded[t] = res  # every row decoded whole
-        for t in infos:
-            if t in decoded:
-                continue
-            entry = self._pos_decoded.pop(t)
-            self._pos_decoded[t] = entry  # LRU move-to-end on hit
-            decoded[t] = entry
-        self._bound_pos_cache(keep=len(infos))
         verified = _verify_positions_cell(
             ph, decoded, eligible, self._max_dl, slop
         )
@@ -716,22 +793,10 @@ class LocalSearcher:
         return out[:k]
 
     def _bound_pos_cache(self, keep: int) -> None:
-        """Evict least-recently-used POSITIONS entries until under the
-        bytes budget (_POS_CACHE_MAX_BYTES). Accounting includes every
-        array the entry holds — docs + tfs + position values + pstart — not
-        just position counts (ADVICE r5: the old posting-count bound
-        under-billed by several x). Never evicts the ``keep`` most recent
-        entries (the query in flight)."""
-        total = sum(
-            sum(a.nbytes for a in e) for e in self._pos_decoded.values()
-        )
-        while (
-            total > _POS_CACHE_MAX_BYTES
-            and len(self._pos_decoded) > keep
-        ):
-            _t, e = next(iter(self._pos_decoded.items()))
-            del self._pos_decoded[_t]
-            total -= sum(a.nbytes for a in e)
+        """Evict least-recently-used positional-row entries until under
+        the bytes budget (_POS_CACHE_MAX_BYTES). Never evicts the ``keep``
+        most recent entries (the query in flight)."""
+        self._pos_decoded.evict(_POS_CACHE_MAX_BYTES, keep)
 
     def _decode_terms_parallel(self, need: list, rows: dict) -> None:
         """Decode uncached terms into the cache, MULTI-TERM queries in a
@@ -761,17 +826,12 @@ class LocalSearcher:
                 self._decoded[r[0]] = r[1]
 
     def _bound_decode_cache(self) -> None:
-        """Evict least-recently-used decoded terms (dict head — hits are
-        moved to the tail in search()) until under the postings budget
-        (~16 bytes/posting: int64 docs + float64 tfs). Always keeps at
-        least the most recent entry: evicting the term just decoded would
-        guarantee a re-decode on its next appearance while buying nothing
-        for the terms that remain."""
-        total = sum(d.size for d, _tf in self._decoded.values())
-        while total > _DECODE_CACHE_MAX_POSTINGS and len(self._decoded) > 1:
-            _t, (d, _tf) = next(iter(self._decoded.items()))
-            del self._decoded[_t]
-            total -= d.size
+        """Evict least-recently-used decoded terms until under the postings
+        budget (~16 bytes/posting: int64 docs + float64 tfs). Always keeps
+        at least the most recent entry: evicting the term just decoded
+        would guarantee a re-decode on its next appearance while buying
+        nothing for the terms that remain."""
+        self._decoded.evict(_DECODE_CACHE_MAX_POSTINGS, keep=1)
 
 
 def searcher_for_catalog(root: str, alias: str = "documents") -> LocalSearcher:

@@ -46,14 +46,18 @@ from .boolquery import (
 _SORT_SPEC_STUB = {"must": ["_"], "should": [], "must_not": [], "filter": []}
 
 
-def sortable_fields(index_dir: str) -> tuple[str, ...]:
+def sortable_fields(
+    index_dir: str, keyword_fields=None, numeric_fields=None
+) -> tuple[str, ...]:
     """Fields ``sort_topk`` may order by: the structured columns every
     docmap carries (url, warc_ts) plus this index's declared keyword and
-    numeric doc-value columns."""
+    numeric doc-value columns (read from the manifest unless given)."""
+    if keyword_fields is None:
+        keyword_fields = index_keyword_fields(index_dir)
+    if numeric_fields is None:
+        numeric_fields = index_numeric_fields(index_dir)
     return tuple(sorted(
-        _RANGE_FIELDS
-        | set(index_keyword_fields(index_dir))
-        | set(index_numeric_fields(index_dir))
+        _RANGE_FIELDS | set(keyword_fields) | set(numeric_fields)
     ))
 
 
@@ -69,18 +73,23 @@ def _sort_field_sql_type(index_dir: str, field: str) -> str:
 
 
 def _validated_filters(
-    index_dir: str, filter_term, filter_range
+    index_dir: str, filter_term, filter_range,
+    keyword_fields=None, numeric_fields=None,
 ) -> tuple[dict, dict]:
     """Normalize + validate filter_term/filter_range against THIS index's
-    declared fields (same rules and error messages as the bool surface)."""
+    declared fields (same rules and error messages as the bool surface;
+    fields read from the manifest unless given)."""
     spec = {"must": "placeholder"}
     if filter_term:
         spec["filter_term"] = filter_term
     if filter_range:
         spec["filter_range"] = filter_range
+    if keyword_fields is None:
+        keyword_fields = index_keyword_fields(index_dir)
+    if numeric_fields is None:
+        numeric_fields = index_numeric_fields(index_dir)
     fr, ft, _fe = _check_spec(
-        spec, dict(_SORT_SPEC_STUB),
-        index_keyword_fields(index_dir), index_numeric_fields(index_dir),
+        spec, dict(_SORT_SPEC_STUB), keyword_fields, numeric_fields
     )
     return fr, ft
 

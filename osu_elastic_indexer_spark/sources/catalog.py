@@ -67,29 +67,36 @@ def assert_index_readable(index_dir: str) -> None:
         )
 
 
-def resolve_table_dir(index_dir: str, table: str) -> str:
+def resolve_table_dir(
+    index_dir: str, table: str, manifest: dict | None = None
+) -> str:
     """Current physical directory of a logical table: the manifest's
     ``tables`` map names rewritten (versioned) tables; unmapped tables live
     under their plain name. Readers resolve through this so a half-written
     replacement (dictionary_v3 while the manifest still points at _v2) is
-    invisible until the atomic manifest swap commits it."""
-    m = read_index_manifest(index_dir) or {}
+    invisible until the atomic manifest swap commits it. ``manifest``: an
+    already-read manifest to resolve against (a reader pinning one
+    snapshot); default the one on disk now."""
+    m = manifest if manifest is not None else read_index_manifest(index_dir) or {}
     name = (m.get("tables") or {}).get(table, table)
     return os.path.join(index_dir, name)
 
 
-def committed_gen_paths(index_dir: str, table: str) -> list[str]:
+def committed_gen_paths(
+    index_dir: str, table: str, manifest: dict | None = None
+) -> list[str]:
     """The COMMITTED generation directories of an append table (gen=K for
     K < manifest.generations). Data written by an in-flight or crashed
     generation (gen >= generations) is excluded — this is what makes the
     multi-table incremental commit atomic: every reader pins its snapshot
     to the manifest, and the manifest moves in one os.replace.
+    ``manifest`` as in ``resolve_table_dir``.
 
     Falls back to [dir] for a legacy flat layout (files, no gen= subdirs)."""
-    root = resolve_table_dir(index_dir, table)
+    m = manifest if manifest is not None else read_index_manifest(index_dir) or {}
+    root = resolve_table_dir(index_dir, table, m)
     if not os.path.isdir(root):
         return []
-    m = read_index_manifest(index_dir) or {}
     gens = int(m.get("generations", 0))
     out = []
     has_gen_dirs = False
