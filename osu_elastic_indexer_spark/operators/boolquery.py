@@ -49,22 +49,26 @@ match_all-minus-excluded and filter-only never touches the inverted index
 documented divergence: a spec whose every term clause is out-of-vocabulary
 returns empty even with filter context.
 
-Phrases (``phrase_topk``): candidates are the phrase's ``must: unique
-terms`` bool over the kernel, then adjacency (or ES slop) is verified.
-Positional (v2) indexes (build_index(positions=True) —
-docs/positional-postings.md) verify index-side from the block-selected
-position sidecar (``_decode_positions_selected`` +
-``_verify_positions_cell``), per query or per docID cell
-(``PHRASE_DOCPART_DF_SUM`` routes head-term phrases to cells). v1 indexes
-carry no positions: candidates join docmap and the SOURCE table and each
-candidate's html is re-tokenized — verification IO ∝ the candidate count,
-which is bounded (``max_candidates``, the ES rewrite-guard analog) before
-it is broadcast-pinned into the joins.
-
-``match_phrase_prefix_topk`` scores ``must: full tokens, should:
-expansions, msm 1`` through the kernel and verifies adjacency to any
-expansion positionally. ``prefix_topk`` expands the prefix by a dictionary
-range seek and runs the expansion as a match query.
+Positional queries compile to a bool plan plus POSITION SLOTS
+(``_positional_spec``): one tuple of terms per phrase position, whose
+occurrences in a doc are the pooled positions of its terms. A phrase is
+``must: its unique tokens`` with one single-term slot per token;
+``match_phrase_prefix_topk`` is ``must: full tokens, should: the prefix's
+live expansions, msm 1`` with the full-token slots plus one last slot
+pooling the expansions. On positional (v2) indexes
+(build_index(positions=True) — docs/positional-postings.md) one kernel,
+``_positional_topk``, answers both: accumulate -> candidates ->
+block-selected position decode (``_decode_positions_selected``) ->
+``_verify_positions_cell`` (adjacency or ES slop) -> top-k. Its drivers are
+the per-query and docpart Spark shapes of ``_positional_runner``
+(``PHRASE_DOCPART_DF_SUM`` routes head-term phrases to cells) and
+``LocalSearcher.search_phrase``. A one-slot query needs no positions. v1
+indexes carry no positions: ``phrase_topk`` then joins the conjunctive
+candidates to docmap and the SOURCE table and re-tokenizes each
+candidate's html — verification IO ∝ the candidate count, which is bounded
+(``max_candidates``, the ES rewrite-guard analog) before it is
+broadcast-pinned into the joins. ``prefix_topk`` expands the prefix by a
+dictionary range seek and runs the expansion as a match query.
 
 All paths honor tombstones and closed-index refusal.
 """
@@ -78,6 +82,7 @@ from pyspark.sql import functions as F
 
 from ..functions import codec
 from ..functions.textprep import tokenize
+from . import wand
 from .wand import (
     _MUST,
     _MUST_NOT,
@@ -93,7 +98,6 @@ from .wand import (
     idf_of,
     score_bool,
     taat_topk,
-    topk_from_dense,
 )
 
 _CLAUSES = ("must", "should", "must_not", "filter")
@@ -347,7 +351,6 @@ def _query_plumbing(
     if not with_positions:
         segs = segs.select(*V1_SEGMENT_COLS)
     segs = segs.filter(F.col("term_id").isin(tids))
-    idf = {t: idf_of(n_docs, df) for t, (_tid, df) in term_info.items()}
     state = {
         "fwd_path": tuple(committed_gen_paths(index_dir, "fwd")),
         "tomb_path": tuple(committed_gen_paths(index_dir, "tombstones")),
@@ -356,7 +359,7 @@ def _query_plumbing(
         "avgdl": float(avgdl),
         "n_docs": int(n_docs),
     }
-    return segs, term_info, idf, state
+    return segs, term_info, state
 
 
 def _struct_arrays(
@@ -390,9 +393,10 @@ def _plan_terms(s: dict, msm: int, info, n_docs: int):
 
     ES edge semantics: a required (must ∪ filter) term absent from the
     dictionary empties the query; absent should / must_not terms are
-    ignored. A term shared by must and should scores once, with the
-    product of its clause boosts (``_normalize_spec``). ``n_must`` counts
-    the DISTINCT required terms."""
+    ignored, so an msm above the live should count empties the query. A
+    term shared by must and should scores once, with the product of its
+    clause boosts (``_normalize_spec``). ``n_must`` counts the DISTINCT
+    required terms."""
     required = set(s["must"]) | set(s["filter"])
     if any(info.get(t) is None for t in required):
         return None
@@ -404,7 +408,7 @@ def _plan_terms(s: dict, msm: int, info, n_docs: int):
         for t in s[clause]:
             if info.get(t) is not None:
                 roles[t] = roles.get(t, 0) | bits
-    if not roles:
+    if not roles or msm > sum(1 for r in roles.values() if r & _SHOULD):
         return None
     terms = [
         (t, info[t][0], idf_of(n_docs, info[t][1]) * s["boosts"].get(t, 1.0),
@@ -430,22 +434,53 @@ def _bool_plans(index_dir: str, queries: list[tuple[int, dict]]):
     return specs, msms, structs
 
 
-def _plan_batch(spark, index_dir: str, specs: dict, msms: dict):
+def _plan_batch(
+    spark, index_dir: str, specs: dict, msms: dict,
+    with_positions: bool = False,
+):
     """Segment scan + per-query term plans for a validated batch ->
     (segs, state, {qid: plan}), or None when no query can match."""
     all_terms = sorted(
         {t for s in specs.values() for c in _CLAUSES for t in s[c]}
     )
-    plumb = _query_plumbing(spark, index_dir, all_terms) if all_terms else None
+    plumb = (
+        _query_plumbing(spark, index_dir, all_terms, with_positions)
+        if all_terms else None
+    )
     if plumb is None:
         return None
-    segs, term_info, _idf, state = plumb
+    segs, term_info, state = plumb
     plans = {}
     for qid, s in specs.items():
         plan = _plan_terms(s, msms[qid], term_info, state["n_docs"])
         if plan is not None:
             plans[qid] = plan
     return (segs, state, plans) if plans else None
+
+
+def _grouped(spark, segs, plans: dict, run, k: int, docpart: bool):
+    """The two Spark shapes of a planned batch: per query (segment rows
+    joined to a broadcast (query_id, term_id) map, one ``applyInPandas``
+    group per query) or per docpart cell (rows shuffle once per
+    (generation, salt) docID cell; ``_merge_cells`` finishes the top-k)."""
+    pairs = [
+        (qid, tid) for qid, (terms, _n, _m) in plans.items()
+        for _t, tid, _w, _r in terms
+    ]
+    if docpart:
+        segs = segs.filter(
+            F.col("term_id").isin(sorted({tid for _q, tid in pairs}))
+        )
+        return _merge_cells(
+            segs.groupBy("generation", "salt").applyInPandas(
+                run, RESULT_SCHEMA
+            ),
+            int(k),
+        )
+    qmap = spark.createDataFrame(pairs, "query_id bigint, term_id bigint")
+    return segs.join(F.broadcast(qmap), "term_id").groupBy(
+        "query_id"
+    ).applyInPandas(run, RESULT_SCHEMA)
 
 
 def _is_plain_match(plan, st_spec) -> bool:
@@ -547,14 +582,8 @@ def bool_topk(
     if planned is None:
         return spark.createDataFrame([], RESULT_SCHEMA)
     segs, state, plans = planned
-    qmap = spark.createDataFrame(
-        [(qid, tid) for qid, (terms, _n, _m) in plans.items()
-         for _t, tid, _w, _r in terms],
-        "query_id bigint, term_id bigint",
-    )
-    grouped = segs.join(F.broadcast(qmap), "term_id")
-    return grouped.groupBy("query_id").applyInPandas(
-        _bool_runner(state, k, plans, structs), RESULT_SCHEMA
+    return _grouped(
+        spark, segs, plans, _bool_runner(state, k, plans, structs), k, False
     )
 
 
@@ -609,8 +638,6 @@ def bool_topk_docpart(
     if planned is None:
         return spark.createDataFrame([], RESULT_SCHEMA)
     segs, state, plans = planned
-    tids = sorted({tid for terms, _n, _m in plans.values() for _t, tid, _w, _r in terms})
-    segs = segs.filter(F.col("term_id").isin(tids))
     fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
     docmap_path = state["docmap_path"]
     seq, avgdl = state["seq"], state["avgdl"]
@@ -653,12 +680,7 @@ def bool_topk_docpart(
                 out_s.append(s)
         return _frame(out_q, out_d, out_s, False)
 
-    return _merge_cells(
-        segs.groupBy("generation", "salt").applyInPandas(
-            score_cell, RESULT_SCHEMA
-        ),
-        kk,
-    )
+    return _grouped(spark, segs, plans, score_cell, kk, True)
 
 
 def _merge_cells(cells: DataFrame, k: int) -> DataFrame:
@@ -867,105 +889,172 @@ def _decode_positions_selected(
     return d, tf, poss, pstart
 
 
-def _phrase_runner(state: dict, k: int, phrases_b: dict[int, list[str]],
-                   slop: int, idf_by_term: dict[str, float]):
-    """applyInPandas body for one phrase query's POSITIONAL segment rows:
-    decode docs+tfs+positions per term, score BM25 over the unique terms
-    (sorted-term fold — bit-identical to bool_topk/the source-verify
-    path), keep docs containing every term, then verify the phrase on the
-    decoded position arrays: a vectorized adjusted-intersection for
-    slop=0, the shared ``_matches_occ`` criterion per candidate for
-    slop>0. No source scan, no tokenizer — the index answers alone.
+def _positional_spec(full: list[str], pooled: list[str] = ()) -> tuple:
+    """A positional query -> ``(spec, msm, slots)``: a phrase (``full``
+    tokens) is ``must: its unique tokens`` with one single-term slot per
+    token; match_phrase_prefix (``pooled`` = the prefix's expansions) adds
+    ``should: expansions, msm 1`` and one last slot pooling them. The spec
+    is built already normalized, so dictionary terms are never
+    re-tokenized."""
+    spec = {
+        "must": sorted(set(full)), "should": sorted(set(pooled)),
+        "must_not": [], "filter": [], "boosts": {},
+    }
+    slots = [(t,) for t in full] + ([tuple(pooled)] if pooled else [])
+    return spec, (1 if pooled else 0), slots
 
-    Memory: per-query dense accumulators sized to the query's OBSERVED
-    docID range (min doc_min .. max doc_max over its segment rows — the
-    bool-runner envelope; only a head-term phrase approaches the corpus
-    span) plus the decoded positions of the phrase's terms (∝ their
-    posting volume)."""
+
+def _positional_topk(
+    plans: dict, slots: dict, dec: dict, rows_of: dict,
+    lo: int, span: int, k: int, slop: int, tomb,
+) -> dict:
+    """The positional kernel every phrase / match_phrase_prefix driver
+    calls, over the docID window [lo, lo+span): accumulate -> candidates ->
+    block-selected position decode -> ``_verify_positions_cell`` -> top-k.
+
+    ``plans``: qid -> ``_plan_terms`` plan; ``slots``: qid -> its position
+    slots; ``dec``: term -> (docs relative to ``lo``, tf-norm); ``rows_of``:
+    term -> its ``[(enc, docs, tfs)]`` segment rows (GLOBAL docIDs).
+    Candidates stay sparse, so one dense accumulator lives at a time, and
+    each term's candidate-bearing blocks decode ONCE for the union of its
+    queries' candidates; one-slot queries decode no positions. Every plan
+    term is scored, so candidates are exactly the nonzero sums and the
+    finalize runs over (candidate, score) pairs. Returns qid ->
+    [(score, GLOBAL doc_id)] for the queries with a verified doc."""
+    cands, need = {}, {}
+    for qid, (terms, n_must, n_msm) in plans.items():
+        tl = [(*dec[t], w, role) for t, _tid, w, role in terms if t in dec]
+        if not tl:
+            continue
+        sums, _elig = accumulate(tl, lo, span, n_must, n_msm, tomb)
+        ids = np.flatnonzero(sums)
+        if ids.size == 0:
+            continue
+        cands[qid] = (ids, sums[ids])
+        if len(slots[qid]) > 1:
+            for t in {t for slot in slots[qid] for t in slot if t in dec}:
+                need.setdefault(t, []).append(ids)
+    decoded = {}
+    for t, parts in need.items():
+        ids = parts[0] if len(parts) == 1 else np.unique(np.concatenate(parts))
+        res = _decode_positions_selected(rows_of[t], ids + lo)
+        if res is not None:
+            d, tf, poss, pstart = res
+            decoded[t] = (d - lo, tf, poss, pstart)
+    out = {}
+    for qid, (ids, vals) in cands.items():
+        ok = _verify_positions_cell(slots[qid], decoded, ids, slop)
+        if ok.size < ids.size:  # ok is a sorted subset of ids
+            vals = vals[np.searchsorted(ids, ok)]
+        top = wand._topk_pairs(ok, vals, k)
+        if top:
+            out[qid] = [(s, d + lo) for s, d in top]
+    return out
+
+
+def _positional_runner(
+    state: dict, k: int, plans: dict, slots: dict, slop: int,
+    per_query: bool,
+):
+    """applyInPandas body of both Spark shapes of a positional batch
+    (segment rows WITH the position sidecar): per query, one query's rows
+    joined to the broadcast qmap over its OBSERVED docID range (min
+    doc_min .. max doc_max; only a head-term phrase approaches the corpus
+    span); docpart, one (generation, salt) cell's rows for every query of
+    the batch over the cell span. Cell-local verification is complete — a
+    doc's postings AND positions for every term live wholly inside its
+    cell — so the union of per-cell top-ks holds the global top-k, and
+    both shapes are bit-identical (sorted-term fold, one kernel)."""
     fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
     seq, avgdl = state["seq"], state["avgdl"]
+    term_of = {
+        tid: t for terms, _n, _m in plans.values() for t, tid, _w, _r in terms
+    }
     kk = int(k)
 
-    def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
+    def run(pdf: pd.DataFrame) -> pd.DataFrame:
         from osu_elastic_indexer_spark.operators.state import (
             load_norms,
             load_tombstones,
         )
 
-        empty = _frame([], [], [], True)
         norms = load_norms(fwd_path, seq)
-        tomb = load_tombstones(tomb_path, seq)
-        qid = int(pdf["query_id"].iloc[0])
-        phrase = phrases_b.get(qid, [])
-        uniq = sorted(set(phrase))
-        if not phrase:
-            return empty
-        rows_by_term = _segment_rows(pdf, "term")
-        if len(rows_by_term) < len(uniq):
-            return empty  # a phrase term has no postings at all
-        # pass 1: decode docs+tfs only, score + conjunction-count (positions
-        # stay encoded until the candidate set is known): the phrase is
-        # ``must: its unique terms`` over the query's observed docID range
-        lo, acc_span = _cell_bounds(pdf["doc_min"], pdf["doc_max"])
-        dec = {t: decode_term(rows_by_term[t], norms, avgdl) for t in uniq}
-        sums, _elig = accumulate(
-            [(dec[t][0] - lo, dec[t][1], idf_by_term[t], _SCORED | _MUST)
-             for t in uniq],
-            lo, acc_span, len(uniq), 0, tomb,
+        lo, span = _cell_bounds(pdf["doc_min"], pdf["doc_max"])
+        dec, rows_of = {}, {}
+        for tid, rows in _segment_rows(pdf, "term_id").items():
+            t = term_of[tid]
+            d, tfn, rows_of[t] = decode_term(rows, norms, avgdl)
+            dec[t] = (d - lo, tfn)
+        mine = plans
+        if per_query:
+            qid = int(pdf["query_id"].iloc[0])
+            mine = {qid: plans[qid]}
+        top = _positional_topk(
+            mine, slots, dec, rows_of, lo, span, kk, slop,
+            load_tombstones(tomb_path, seq),
         )
-        eligible = np.flatnonzero(sums > 0.0) + lo  # GLOBAL docIDs
-        if eligible.size == 0:
-            return empty
-        # pass 2: positions, block-selected via the shared helper (also
-        # the docpart cell scorer's position pass)
-        decoded: dict[str, tuple] = {}
-        for t in uniq:
-            res = _decode_positions_selected(dec[t][2], eligible)
-            if res is None:
-                return empty  # every candidate block vanished (can't happen
-                # for a true candidate, defensive for empty eligible overlap)
-            decoded[t] = res
-        # positional verification through the SAME vectorized kernel the
-        # docpart cell scorer uses (_verify_positions_cell: fused-key
-        # intersection for slop=0, origin-segmented anchor sweep for
-        # repeat-free slop, per-doc _matches_occ fallback) — one shared
-        # code path, bit-identical results on both physical shapes
-        verified = _verify_positions_cell(
-            phrase, decoded, eligible,
-            span_hint=(int(norms.max()) if norms.size else 1), slop=slop,
-        )
-        if len(verified) == 0:
-            return empty
-        mask = np.zeros(acc_span, dtype=bool)
-        mask[np.asarray(verified, dtype=np.int64) - lo] = True
-        sums[~mask] = 0.0
-        top = topk_from_dense(sums, kk)
+        hits = [(q, s, d) for q, pairs in top.items() for s, d in pairs]
         return _frame(
-            [qid] * len(top), [d + lo for _s, d in top], [s for s, _d in top],
-            True,
+            [q for q, _s, _d in hits], [d for _q, _s, d in hits],
+            [s for _q, s, _d in hits], per_query,
         )
 
-    return run_query
+    return run
 
 
-def _keep_mask(d: np.ndarray, eligible: np.ndarray) -> np.ndarray:
-    """Membership of ``d`` (posting docIDs) in ``eligible`` (sorted
-    candidate docIDs) as a boolean mask — an O(range) table lookup instead
-    of np.isin's sort-based path. Candidates here are dense in their own
-    range (for a head-term phrase eligible ≈ every doc; in a docpart cell
-    the range is cell-bounded), so the table is small and the lookup is
-    one gather; np.isin re-sorted both arrays per slot."""
+def _positional_batch(
+    spark, index_dir: str, queries: dict, k: int, slop: int, docpart: bool,
+) -> DataFrame:
+    """The prelude every positional Spark path shares: ``queries`` (qid ->
+    ``_positional_spec`` output) -> one segment scan WITH the position
+    sidecar -> per-query plans -> ``_positional_runner`` per query or per
+    docpart cell."""
+    planned = _plan_batch(
+        spark, index_dir, {q: e[0] for q, e in queries.items()},
+        {q: e[1] for q, e in queries.items()}, with_positions=True,
+    )
+    if planned is None:
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    segs, state, plans = planned
+    run = _positional_runner(
+        state, k, plans, {q: e[2] for q, e in queries.items()}, slop,
+        per_query=not docpart,
+    )
+    return _grouped(spark, segs, plans, run, k, docpart)
+
+
+def _phrase_queries(queries: list[tuple[int, str]]) -> dict:
+    """A phrase batch -> qid -> ``_positional_spec`` (token-less texts
+    can match nothing and are dropped)."""
+    return {
+        int(qid): _positional_spec(ph)
+        for qid, text in queries if (ph := tokenize(text))
+    }
+
+
+def _keep_mask(eligible: np.ndarray):
+    """Membership in ``eligible`` (sorted candidate docIDs) as a function
+    of a posting docID array -> boolean mask: an O(range) table lookup
+    instead of np.isin's sort-based path. The table is built ONCE per call
+    and reused for every slot and pooled term. Candidates are dense in
+    their own range (for a head-term phrase eligible ≈ every doc; in a
+    docpart cell the range is cell-bounded), so the table is small and
+    each lookup is one gather."""
     if eligible.size == 0:
-        return np.zeros(d.size, dtype=bool)
+        return lambda d: np.zeros(d.size, dtype=bool)
     lo = int(eligible[0])
     width = int(eligible[-1]) - lo + 1
     table = np.zeros(width, dtype=bool)
     table[eligible - lo] = True
-    dd = d - lo
-    inside = (dd >= 0) & (dd < width)
-    out = np.zeros(d.size, dtype=bool)
-    out[inside] = table[dd[inside]]
-    return out
+
+    def mask(d: np.ndarray) -> np.ndarray:
+        dd = d - lo
+        inside = (dd >= 0) & (dd < width)
+        out = np.zeros(d.size, dtype=bool)
+        out[inside] = table[dd[inside]]
+        return out
+
+    return mask
 
 
 def _sorted_or_sort(a: np.ndarray) -> np.ndarray:
@@ -1016,100 +1105,128 @@ def _gather_runs_np(
     return flat[idx]
 
 
-def _verify_per_doc(
-    eligible: np.ndarray, phrase: list[str], decoded: dict, slop: int
-) -> list[int]:
-    """Per-candidate positional check through the shared ``_matches_occ``
-    criterion — the slop path and the fused-key-overflow fallback."""
-    out = []
-    for doc in eligible:
-        occ = []
-        for s, t in enumerate(phrase):
+def _slot_occurrences(slot: tuple, decoded: dict, doc: int) -> np.ndarray:
+    """A slot's pooled positions in ``doc``: the occurrence runs of every
+    slot term holding the doc."""
+    runs = []
+    for t in slot:
+        if t in decoded:
             d, _tf, poss, pstart = decoded[t]
             j = int(np.searchsorted(d, doc))
-            occ.append(poss[pstart[j] : pstart[j + 1]])
-        if _matches_occ(occ, slop):
-            out.append(int(doc))
-    return out
+            if j < d.size and d[j] == doc:
+                runs.append(poss[pstart[j] : pstart[j + 1]])
+    return np.concatenate(runs) if runs else np.empty(0, dtype=np.int64)
+
+
+def _verify_per_doc(
+    eligible: np.ndarray, slots: list[tuple], decoded: dict, slop: int
+) -> list[int]:
+    """Per-candidate positional check through the shared ``_matches_occ``
+    criterion over pooled slot occurrences — the repeated-term slop path
+    and the fused-key-overflow fallback."""
+    return [
+        int(doc) for doc in eligible
+        if _matches_occ(
+            [_slot_occurrences(slot, decoded, doc) for slot in slots], slop
+        )
+    ]
 
 
 def _verify_positions_cell(
-    phrase: list[str],
+    slots: list[tuple],
     decoded: dict,
     eligible: np.ndarray,
-    span_hint: int,
     slop: int,
 ) -> np.ndarray:
-    """Positional verification over CELL-LOCAL doc ids: the same fused-key
-    vectorizations as the per-query runner (exact intersection for slop=0,
-    anchor-window sweep for repeat-free slop), with the per-doc _matches_occ
-    fallback. ``decoded``: term -> (docs, tfs, poss, pstart); ``eligible``:
-    sorted candidate doc ids (cell-local); ``span_hint``: > max position +
-    len(phrase) + slop. Returns the verified doc ids (sorted)."""
-    m = len(phrase)
-    span = int(span_hint) + m + slop + 2
+    """Positional verification over any docID space (global, or window-
+    or cell-relative): exact fused-key intersection for slop=0, an
+    anchor-window sweep for slop>0 when no term repeats across slots, and
+    the per-doc ``_matches_occ`` fallback otherwise or on fused-key
+    overflow.
+
+    ``slots``: one tuple of terms per phrase position, in order; a slot's
+    occurrences in a doc are the POOLED positions of its terms (one term
+    for a phrase slot, the expansions for match_phrase_prefix's last one).
+    ``decoded``: term -> (docs, tfs, poss, pstart) in ``eligible``'s docID
+    space (a term absent from it occurs nowhere); ``eligible``: sorted
+    candidate doc ids. Returns the verified doc ids, sorted; a one-slot
+    query verifies as ``eligible``. The fused key of a position ``pos`` in
+    slot ``s`` of doc ``doc`` is ``doc*span + (pos - s + m)``."""
+    m = len(slots)
+    if m <= 1:
+        return eligible
+    terms = {t for slot in slots for t in slot if t in decoded}
+    max_pos = max(
+        (int(decoded[t][2].max()) for t in terms if decoded[t][2].size),
+        default=0,
+    )
+    span = max_pos + m + slop + 3
     max_doc = int(eligible[-1]) if eligible.size else 0
-    fits = (max_doc + 1) * span < 2**62
-    no_repeats = len(set(phrase)) == m
+    if (max_doc + 1) * span >= 2**62 or (
+        slop > 0 and sum(map(len, slots)) != len(set().union(*slots))
+    ):
+        return np.asarray(
+            _verify_per_doc(eligible, slots, decoded, slop), dtype=np.int64
+        )
+    keep_of = _keep_mask(eligible)
 
-    def slot_fused(s: int, t: str) -> np.ndarray:
-        d, tf, poss, pstart = decoded[t]
-        keep = _keep_mask(d, eligible)
-        if keep.all():
-            # head-term phrases: every posting doc is a candidate — the
-            # runs tile ``poss`` in order, so the gather is the identity
-            dpp = np.repeat(d, tf)
-            pp = poss
-        else:
-            dpp = np.repeat(d[keep], tf[keep])
-            pp = _gather_runs_np(poss, pstart[:-1][keep], tf[keep])
-        return _sorted_or_sort(dpp * np.int64(span) + (pp - s + m))
+    def slot_keys(s: int, slot: tuple) -> np.ndarray:
+        parts = []
+        for t in slot:
+            if t not in decoded:
+                continue
+            d, tf, poss, pstart = decoded[t]
+            keep = keep_of(d)
+            if keep.all():
+                # head-term phrases: every posting doc is a candidate — the
+                # runs tile ``poss`` in order, so the gather is the identity
+                dpp = np.repeat(d, tf)
+                pp = poss
+            else:
+                dpp = np.repeat(d[keep], tf[keep])
+                pp = _gather_runs_np(poss, pstart[:-1][keep], tf[keep])
+            parts.append(dpp * np.int64(span) + (pp - s + m))
+        if not parts:
+            return np.empty(0, dtype=np.int64)
+        # distinct terms never share a position, so pooled keys stay unique
+        return _sorted_or_sort(np.concatenate(parts))
 
-    if fits and slop <= 0:
+    if slop <= 0:
         common = None
-        for s, t in enumerate(phrase):
-            fused = slot_fused(s, t)
+        for s, slot in enumerate(slots):
+            keys = slot_keys(s, slot)
             common = (
-                fused
-                if common is None
-                else _intersect_sorted_unique(common, fused)
+                keys if common is None
+                else _intersect_sorted_unique(common, keys)
             )
             if common.size == 0:
                 return np.empty(0, dtype=np.int64)
         return _unique_of_sorted(common // np.int64(span))
-    if fits and no_repeats:
-        slot_keys = [slot_fused(s, t) for s, t in enumerate(phrase)]
-        # anchor sweep, segmented by the anchor's ORIGIN slot: an anchor
-        # trivially covers its own slot (the key itself is in the window),
-        # so each origin segment probes only the OTHER slots — and no
-        # global anchor sort/dedupe is needed (a duplicated anchor only
-        # repeats a check; survivors are deduped at the end)
-        good_parts = []
-        for s2, anchors in enumerate(slot_keys):
-            if anchors.size == 0:
+    keys_by_slot = [slot_keys(s, slot) for s, slot in enumerate(slots)]
+    # anchor sweep, segmented by the anchor's ORIGIN slot: an anchor
+    # trivially covers its own slot (the key itself is in the window), so
+    # each origin segment probes only the OTHER slots — and no global
+    # anchor sort/dedupe is needed (a duplicated anchor only repeats a
+    # check; survivors are deduped at the end)
+    good_parts = []
+    for s2, anchors in enumerate(keys_by_slot):
+        if anchors.size == 0:
+            continue
+        ok = np.ones(anchors.size, dtype=bool)
+        for s, keys in enumerate(keys_by_slot):
+            if s == s2:
                 continue
-            ok = np.ones(anchors.size, dtype=bool)
-            for s, fused in enumerate(slot_keys):
-                if s == s2:
-                    continue
-                idx = np.searchsorted(fused, anchors, side="left")
-                hit = idx < fused.size
-                val = np.empty(anchors.size, dtype=np.int64)
-                val[hit] = fused[idx[hit]]
-                ok &= hit & (val <= anchors + slop)
-                if not ok.any():
-                    break
-            else:
-                good_parts.append(anchors[ok])
-        if not good_parts:
-            return np.empty(0, dtype=np.int64)
-        good = np.concatenate(good_parts)
-        if good.size == 0:
-            return np.empty(0, dtype=np.int64)
-        return np.unique(good // np.int64(span))
-    return np.asarray(
-        _verify_per_doc(eligible, phrase, decoded, slop), dtype=np.int64
-    )
+            idx = np.searchsorted(keys, anchors, side="left")
+            hit = idx < keys.size
+            val = np.empty(anchors.size, dtype=np.int64)
+            val[hit] = keys[idx[hit]]
+            ok &= hit & (val <= anchors + slop)
+            if not ok.any():
+                break
+        else:
+            good_parts.append(anchors[ok])
+    good = np.concatenate(good_parts) if good_parts else np.empty(0, np.int64)
+    return np.unique(good // np.int64(span))
 
 
 def phrase_topk_positional_docpart(
@@ -1122,117 +1239,15 @@ def phrase_topk_positional_docpart(
     """DOCUMENT-partitioned positional phrase batch: the bool_topk_docpart
     shape — segment rows (WITH the pos sidecar) shuffle once per
     (generation, salt) docID cell regardless of the query count, and each
-    cell scores + position-verifies its own docs. Correct per cell by the
-    salted-grid construction: a doc's postings AND positions for every
-    term live wholly inside its cell, so cell-local verification is
-    complete, every verified doc scores positive (all phrase terms are
-    scored), and the union of per-cell top-ks contains the global top-k.
-    Scores keep the sorted-term fold — bit-identical to the per-query
-    positional path and the source-verify path.
+    cell scores + position-verifies its own docs (``_positional_runner``).
+    Bit-identical to the per-query positional path and the source-verify
+    path.
 
     This is also how head-term slop phrases parallelize: the per-query
     runner verifies one query in one task, while each cell here verifies
     its own docID range concurrently."""
-    phrases = {int(qid): tokenize(text) for qid, text in queries}
-    all_terms = sorted({t for ph in phrases.values() for t in ph})
-    if not all_terms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    plumb = _query_plumbing(spark, index_dir, all_terms, with_positions=True)
-    if plumb is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    segs, term_info, idf, state = plumb
-    live_phrases = {
-        qid: ph for qid, ph in phrases.items()
-        if ph and all(t in term_info for t in ph)
-    }
-    if not live_phrases:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    tids = sorted(
-        {term_info[t][0] for ph in live_phrases.values() for t in ph}
-    )
-    segs = segs.filter(F.col("term_id").isin(tids))
-    _tid_term = {ti[0]: t for t, ti in term_info.items()}
-    fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
-    seq, avgdl = state["seq"], state["avgdl"]
-    kk = int(k)
-    slop_b = int(slop)
-
-    def score_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        from osu_elastic_indexer_spark.operators.state import (
-            load_norms,
-            load_tombstones,
-        )
-
-        norms = load_norms(fwd_path, seq)
-        tomb = load_tombstones(tomb_path, seq)
-        lo, span = _cell_bounds(pdf["doc_min"], pdf["doc_max"])
-        # pass 1: POSTINGS only, once per term in this cell — CELL-LOCAL
-        # doc ids + tfn for scoring; the decoded rows stay for the later
-        # block-selected position pass (positions stay encoded until the
-        # candidate set is known, same as the per-query runner)
-        score_data: dict[str, tuple] = {}
-        for tid, rows in _segment_rows(pdf, "term_id").items():
-            d, tfn, parts = decode_term(rows, norms, avgdl)
-            score_data[_tid_term[tid]] = (d - lo, tfn, parts)
-        # score every query first, keeping only SPARSE candidates (docIDs
-        # + their scores), so the position pass below can decode each
-        # term's candidate-bearing blocks ONCE for the union of all its
-        # queries' candidates. One dense accumulator lives at a time.
-        cand: dict[int, tuple] = {}
-        need: dict[str, list] = {}
-        for qid, phrase in live_phrases.items():
-            uniq = sorted(set(phrase))
-            if any(t not in score_data for t in uniq):
-                continue  # term absent from this cell -> no cell matches
-            sums, _elig = accumulate(
-                [(score_data[t][0], score_data[t][1], idf[t], _SCORED | _MUST)
-                 for t in uniq],
-                lo, span, len(uniq), 0, tomb,
-            )
-            eligible = np.flatnonzero(sums > 0.0)
-            if eligible.size == 0:
-                continue
-            cand[qid] = (eligible, sums[eligible])
-            for t in uniq:
-                need.setdefault(t, []).append(eligible)
-        # pass 2: positions, BLOCK-SELECTED per term over the union of its
-        # queries' candidates (the Lucene-skipping analog — a head-term
-        # batch still decodes most blocks, but a cell serving only rare
-        # phrases touches ~candidate-count blocks of a head term's sidecar)
-        decoded_pos: dict[str, tuple] = {}
-        max_pos = 0
-        for t, parts_el in need.items():
-            union_g = np.unique(np.concatenate(parts_el)) + lo
-            res = _decode_positions_selected(score_data[t][2], union_g)
-            if res is None:
-                continue  # defensive: candidates always live in a block
-            d, tf, poss, pstart = res
-            if poss.size:
-                max_pos = max(max_pos, int(poss.max()))
-            decoded_pos[t] = (d - lo, tf, poss, pstart)
-        out_q, out_d, out_s = [], [], []
-        for qid, (eligible, scores) in cand.items():
-            phrase = live_phrases[qid]
-            if any(t not in decoded_pos for t in set(phrase)):
-                continue
-            verified = _verify_positions_cell(
-                phrase, decoded_pos, eligible, max_pos + 1, slop_b
-            )
-            if verified.size == 0:
-                continue
-            # scores for the verified docs, from the sparse candidate set
-            vs = scores[np.searchsorted(eligible, verified)]
-            for j in np.argsort(-vs, kind="stable")[:kk]:
-                out_q.append(qid)
-                out_d.append(int(verified[j]) + lo)
-                out_s.append(float(vs[j]))
-        return _frame(out_q, out_d, out_s, False)
-
-    return _merge_cells(
-        segs.groupBy("generation", "salt").applyInPandas(
-            score_cell, RESULT_SCHEMA
-        ),
-        kk,
+    return _positional_batch(
+        spark, index_dir, _phrase_queries(queries), k, slop, docpart=True
     )
 
 
@@ -1244,31 +1259,12 @@ def _phrase_topk_positional(
     slop: int,
 ) -> DataFrame:
     """Index-side phrase top-k over a POSITIONAL (v2) index: one
-    applyInPandas pass per query group decodes postings+positions, scores,
-    and verifies — no source table, no rewrite guard needed (work is
-    ∝ the phrase terms' posting volume, the same bound Lucene pays)."""
-    phrases = {int(qid): tokenize(text) for qid, text in queries}
-    all_terms = sorted({t for ph in phrases.values() for t in ph})
-    if not all_terms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    plumb = _query_plumbing(spark, index_dir, all_terms, with_positions=True)
-    if plumb is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    segs, term_info, idf, state = plumb
-    qmap_rows = []
-    for qid, ph in phrases.items():
-        if not ph or any(t not in term_info for t in set(ph)):
-            continue  # a missing term can never match the conjunction
-        for t in sorted(set(ph)):
-            qmap_rows.append((qid, t, term_info[t][0]))
-    if not qmap_rows:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qmap = spark.createDataFrame(
-        qmap_rows, "query_id bigint, term string, term_id bigint"
-    )
-    grouped = segs.join(F.broadcast(qmap), "term_id")
-    return grouped.groupBy("query_id").applyInPandas(
-        _phrase_runner(state, k, phrases, slop, idf), RESULT_SCHEMA
+    applyInPandas group per query decodes postings, scores, decodes the
+    candidates' position blocks and verifies — no source table, no rewrite
+    guard needed (work is ∝ the phrase terms' posting volume, the same
+    bound Lucene pays)."""
+    return _positional_batch(
+        spark, index_dir, _phrase_queries(queries), k, slop, docpart=False
     )
 
 
@@ -1296,8 +1292,9 @@ def match_phrase_prefix_topk(
     the ES prefix query with an any-occurrence match, scored the same
     scoring_boolean way.
 
-    Per-query one-task execution like ``_phrase_topk_positional``;
-    positions decode BLOCK-SELECTED for candidates only."""
+    Per-query one-task execution like ``_phrase_topk_positional``: the
+    same plan + slots kernel, with the expansions pooled in the last
+    slot."""
     from ..sources.catalog import assert_index_readable
     from .dictionary import lookup_terms_by_prefix
 
@@ -1308,175 +1305,17 @@ def match_phrase_prefix_topk(
             "(build_index(positions=True)) — the v1 layout cannot verify "
             "adjacency index-side"
         )
-    plans: dict[int, tuple[list[str], list[str]]] = {}
+    compiled = {}
     for qid, text in queries:
         toks = tokenize(text)
         if not toks:
             continue
-        full, prefix = toks[:-1], toks[-1]
         exps = lookup_terms_by_prefix(
-            index_dir, prefix, max_expansions, spark=spark
+            index_dir, toks[-1], max_expansions, spark=spark
         )
-        if not exps:
-            continue  # no live expansion -> no match (ES: empty)
-        plans[int(qid)] = (full, exps)
-    if not plans:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    all_terms = sorted(
-        {t for full, exps in plans.values() for t in full}
-        | {t for _full, exps in plans.values() for t in exps}
-    )
-    plumb = _query_plumbing(spark, index_dir, all_terms, with_positions=True)
-    if plumb is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    segs, term_info, idf, state = plumb
-    qmap_rows = []
-    live: dict[int, tuple[list[str], list[str]]] = {}
-    for qid, (full, exps) in plans.items():
-        if any(t not in term_info for t in set(full)):
-            continue  # a full slot term absent -> adjacency impossible
-        exps_live = [t for t in exps if t in term_info]
-        if not exps_live:
-            continue
-        live[qid] = (full, exps_live)
-        for t in sorted(set(full) | set(exps_live)):
-            qmap_rows.append((qid, t, term_info[t][0]))
-    if not qmap_rows:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    qmap = spark.createDataFrame(
-        qmap_rows, "query_id bigint, term string, term_id bigint"
-    )
-    grouped = segs.join(F.broadcast(qmap), "term_id")
-    return grouped.groupBy("query_id").applyInPandas(
-        _mpp_runner(state, k, live, idf), RESULT_SCHEMA
-    )
-
-
-def _mpp_runner(state: dict, k: int,
-                plans_b: dict[int, tuple[list[str], list[str]]],
-                idf_by_term: dict[str, float]):
-    """applyInPandas body for one match_phrase_prefix query's POSITIONAL
-    segment rows. Pass 1 scores on postings only (full tokens ∪ present
-    expansions, sorted-term fold) and masks eligibility = every full slot
-    present AND >=1 expansion; pass 2 block-select-decodes positions for
-    candidates and verifies exact adjacency with the LAST slot's
-    positions pooled over the expansions (MultiPhrasePrefix semantics)."""
-    fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
-    seq, avgdl = state["seq"], state["avgdl"]
-    kk = int(k)
-
-    def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
-        from osu_elastic_indexer_spark.operators.state import (
-            load_norms,
-            load_tombstones,
-        )
-
-        empty = _frame([], [], [], True)
-        norms = load_norms(fwd_path, seq)
-        tomb = load_tombstones(tomb_path, seq)
-        qid = int(pdf["query_id"].iloc[0])
-        full, exps = plans_b.get(qid, ([], []))
-        exp_set = set(exps)
-        uniq_full = sorted(set(full))
-        rows_by_term = _segment_rows(pdf, "term")
-        if any(t not in rows_by_term for t in uniq_full):
-            return empty
-        present_exps = sorted(t for t in exp_set if t in rows_by_term)
-        if not present_exps:
-            return empty
-        # pass 1 is ``must: full tokens, should: expansions, msm 1`` — the
-        # sorted fold over ALL scored terms (full ∪ present expansions) is
-        # the oracle's SUM(contrib ORDER BY term)
-        lo, acc_span = _cell_bounds(pdf["doc_min"], pdf["doc_max"])
-        scored = sorted(set(uniq_full) | set(present_exps))
-        dec = {t: decode_term(rows_by_term[t], norms, avgdl) for t in scored}
-        sums, _elig = accumulate(
-            [(dec[t][0] - lo, dec[t][1], idf_by_term[t],
-              _SCORED | (_MUST if t in uniq_full else 0)
-              | (_SHOULD if t in exp_set else 0))
-             for t in scored],
-            lo, acc_span, len(uniq_full), 1, tomb,
-        )
-        eligible = np.flatnonzero(sums > 0.0) + lo  # GLOBAL docIDs
-        if eligible.size == 0:
-            return empty
-        m = len(full) + 1
-        if full:
-            # pass 2: block-selected positions; last slot pools expansions
-            decoded: dict[str, tuple] = {}
-            for t in sorted(set(full)) + present_exps:
-                res = _decode_positions_selected(dec[t][2], eligible)
-                if res is None:
-                    if t in exp_set:
-                        continue  # this expansion has no candidate blocks
-                    return empty
-                decoded[t] = res
-            span = (int(norms.max()) if norms.size else 1) + m + 2
-            if int(norms.size) * span < 2**62:
-                common = None
-                for s, t in enumerate(full):
-                    d, tf, poss, pstart = decoded[t]
-                    keep = np.isin(d, eligible)
-                    dpp = np.repeat(d[keep], tf[keep])
-                    pp = _gather_runs_np(poss, pstart[:-1][keep], tf[keep])
-                    fused = dpp * np.int64(span) + (pp - s + m)
-                    common = (
-                        fused if common is None
-                        else np.intersect1d(common, fused)
-                    )
-                    if common.size == 0:
-                        return empty
-                last_parts = []
-                for t in present_exps:
-                    if t not in decoded:
-                        continue
-                    d, tf, poss, pstart = decoded[t]
-                    keep = np.isin(d, eligible)
-                    dpp = np.repeat(d[keep], tf[keep])
-                    pp = _gather_runs_np(poss, pstart[:-1][keep], tf[keep])
-                    last_parts.append(
-                        dpp * np.int64(span) + (pp - (m - 1) + m)
-                    )
-                if not last_parts:
-                    return empty
-                fused_last = np.unique(np.concatenate(last_parts))
-                common = np.intersect1d(common, fused_last)
-                if common.size == 0:
-                    return empty
-                verified = np.unique(common // np.int64(span))
-            else:  # fused-key overflow: per-doc pooled-occurrence check
-                verified = []
-                for doc in eligible:
-                    occ = []
-                    ok = True
-                    for s, t in enumerate(full):
-                        d, _tf, poss, pstart = decoded[t]
-                        j = int(np.searchsorted(d, doc))
-                        occ.append(poss[pstart[j]:pstart[j + 1]])
-                    pool: list[int] = []
-                    for t in present_exps:
-                        if t not in decoded:
-                            continue
-                        d, _tf, poss, pstart = decoded[t]
-                        j = int(np.searchsorted(d, doc))
-                        if j < d.size and d[j] == doc:
-                            pool.extend(poss[pstart[j]:pstart[j + 1]])
-                    occ.append(np.asarray(sorted(pool), dtype=np.int64))
-                    if _matches_occ(occ, 0):
-                        verified.append(int(doc))
-                verified = np.asarray(verified, dtype=np.int64)
-            if verified.size == 0:
-                return empty
-        else:
-            verified = eligible  # prefix-only query: any occurrence
-        vs = sums[verified - lo]
-        order = np.argsort(-vs, kind="stable")[:kk]
-        return _frame(
-            [qid] * len(order), [int(verified[i]) for i in order],
-            [float(vs[i]) for i in order], True,
-        )
-
-    return run_query
+        if exps:  # no live expansion -> no match (ES: empty)
+            compiled[int(qid)] = _positional_spec(toks[:-1], exps)
+    return _positional_batch(spark, index_dir, compiled, k, 0, docpart=False)
 
 
 PHRASE_MAX_CANDIDATES = 1_000_000

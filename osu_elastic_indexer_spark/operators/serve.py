@@ -6,13 +6,13 @@ BATCH query path (thousands of queries per job); interactive p50 latency is
 a serving concern, so this module reads the SAME segment/dictionary/stats
 parquet directly with pyarrow. No Spark session involved.
 
-``LocalSearcher`` is the third thin driver around the one scoring kernel
-(wand.py): match queries run ``taat_topk``/``bmw_topk``, bool queries
-``score_bool`` over a corpus-anchored window, positional phrases the
-shared block-selected decode and ``_verify_positions_cell`` of
-boolquery.py. Results are rank-identical to the Spark paths by
-construction (same files, same scoring code). What is serve-specific is
-where postings come from and what stays hot:
+``LocalSearcher`` is the third thin driver around the scoring kernels:
+match queries run ``taat_topk``/``bmw_topk`` (wand.py), bool queries
+``score_bool`` and positional phrases boolquery.py's plan + slots kernel
+``_positional_topk``, both over the corpus window [0, len(norms)).
+Results are rank-identical to the Spark paths by construction (same
+files, same scoring code). What is serve-specific is where postings come
+from and what stays hot:
 
 * **One snapshot, pinned at open.** The manifest is read once; the
   searcher keeps that snapshot's committed file lists (segments,
@@ -242,8 +242,6 @@ class LocalSearcher:
         # hot), keyed by the snapshot's monotonic commit_seq
         self.norms = load_norms(gen_paths("fwd"), self._seq)
         self.tombstones = load_tombstones(gen_paths("tombstones"), self._seq)
-        # > every position + 1: the positional kernel's fused-key width
-        self._max_dl = int(self.norms.max()) if self.norms.size else 1
         # empty-corpus / all-deleted indexes commit with zero segment files
         # -> serve empty results. For non-empty indexes, build the ROW-GROUP
         # SEEK INDEX once: files are term_id-sorted with ~1 MB row groups
@@ -670,21 +668,28 @@ class LocalSearcher:
         max_candidates: int | None = None,
         slop: int = 0,
     ) -> list[tuple[int, float]]:
-        """match_phrase serving (match-then-verify, the same design as
-        operators/boolquery.phrase_topk): conjunctive candidates + scores
-        from the index via search_bool, then adjacency verified against
-        the SOURCE parquet at ``source_path`` (url, html) — candidate urls
-        resolve through the docmap, source rows load via one pyarrow
-        is_in-filtered read, and each candidate re-tokenizes with the
-        build's own extract+tokenize. Verification IO is ∝ candidates
-        (bounded by the rarest term's df), never corpus size — and the
-        candidate count is GUARDED (``max_candidates``, default the
-        Spark path's PHRASE_MAX_CANDIDATES): a stopword phrase would
-        otherwise pull a corpus-sized url dict + source read through one
-        searcher process. ``slop`` relaxes the verify with the same ES
-        ``match_phrase`` slop semantics as the Spark path
-        (boolquery._matches_phrase: span of slot-adjusted positions,
-        transposition costs 2)."""
+        """match_phrase serving, with the same ES ``match_phrase`` slop
+        semantics as operators/boolquery.phrase_topk (span of slot-adjusted
+        positions, transposition costs 2).
+
+        On a positional (v2) index, with no ``source_path``, the phrase runs
+        the Spark paths' positional kernel (``_positional_topk``) over the
+        corpus window: postings from the decoded-postings cache, positions
+        block-selected from the positional-row cache (a term's segment rows
+        with the position blob and block metadata, docs and tfs decoded,
+        read once and kept in a bytes-budgeted LRU) — no source IO, and no
+        parquet read once hot.
+
+        Otherwise it is match-then-verify against the SOURCE parquet at
+        ``source_path`` (url, html): conjunctive candidates + scores from
+        search_bool, candidate urls resolved through the docmap, source rows
+        loaded by one pyarrow is_in-filtered read, and each candidate
+        re-tokenized with the build's own extract+tokenize. Verification IO
+        is ∝ candidates, never corpus size — and the candidate count is
+        GUARDED (``max_candidates``, default the Spark path's
+        PHRASE_MAX_CANDIDATES): a stopword phrase would otherwise pull a
+        corpus-sized url dict + source read through one searcher
+        process."""
         from ..functions.textprep import extract_text
         from .boolquery import PHRASE_MAX_CANDIDATES, _matches_phrase
         from .state import _parquet_files
@@ -696,18 +701,18 @@ class LocalSearcher:
         ph = tokenize(phrase)
         if not ph:
             return []
-        cands = self.search_bool(
-            {"must": " ".join(dict.fromkeys(ph))}, k=2**31 - 1
-        )
-        if not cands:
-            return []
         if source_path is None:
             if not self.positions:
                 raise ValueError(
                     "search_phrase needs source_path on a positions-free "
                     "index (or build with positions=True)"
                 )
-            return self._verify_phrase_positional(cands, ph, slop, k)
+            return self._search_positional(ph, k, slop)
+        cands = self.search_bool(
+            {"must": " ".join(dict.fromkeys(ph))}, k=2**31 - 1
+        )
+        if not cands:
+            return []
         if len(cands) > max_candidates:
             raise ValueError(
                 f"phrase verify would check {len(cands)} candidate docs "
@@ -744,59 +749,44 @@ class LocalSearcher:
         out.sort(key=lambda e: (-e[1], e[0]))
         return out[:k]
 
-    def _verify_phrase_positional(
-        self, cands: list[tuple[int, float]], ph: list[str],
-        slop: int, k: int,
+    def _search_positional(
+        self, ph: list[str], k: int, slop: int
     ) -> list[tuple[int, float]]:
-        """Positional serve verify (v2 index) over the positional-row
-        cache: a phrase term's segment rows are read WITH the pos columns
-        once, their docs and tfs decoded once, and the entry (blobs, block
-        metadata, docs, tfs) kept in the bytes-budgeted LRU. Each query
-        then runs only the Spark paths' block-selected decode
-        (``_decode_positions_selected``: only blocks whose [first, last]
-        docID range holds a candidate decode their position bytes) and
-        positional kernel (``_verify_positions_cell``) over the cached rows
-        — no parquet read, no postings decode, no source IO."""
-        from .boolquery import _decode_positions_selected, _verify_positions_cell
+        """A phrase on the positional index: its plan + slots
+        (boolquery._positional_spec) through ``_positional_topk`` over the
+        window [0, len(norms)), fed by the two hot caches."""
+        from .boolquery import _plan_terms, _positional_spec, _positional_topk
 
-        self._resolve_terms(list(dict.fromkeys(ph)))
-        infos = {t: self._dict.get(t) for t in set(ph)}
-        if any(v is None for v in infos.values()):
+        spec, msm, slots = _positional_spec(ph)
+        self._resolve_terms(spec["must"])
+        plan = _plan_terms(spec, msm, self._dict, self.n_docs)
+        if plan is None:
             return []
-        need = [t for t in infos if t not in self._pos_decoded]
+        infos = [(t, self._dict[t]) for t, _tid, _w, _r in plan[0]]
+        self._decoded_for(infos)
+        # a dictionary row without live postings has no cache entry
+        dec = {t: self._decoded[t] for t, _i in infos if t in self._decoded}
+        need = [
+            (t, tid) for t, (tid, _df) in infos if t not in self._pos_decoded
+        ]
         if need:
             rows = self._load_term_rows(
-                [int(infos[t][0]) for t in need], with_positions=True
+                [tid for _t, tid in need], with_positions=True
             )
-            for t in need:
+            for t, tid in need:
                 self._pos_decoded[t] = [
                     (_own_row(enc), *codec.decode_postings(enc))
-                    for enc in rows.get(int(infos[t][0])) or []
+                    for enc in rows.get(tid) or []
                 ]
-        term_rows = {t: self._pos_decoded.hit(t) for t in infos}
-        self._bound_pos_cache(keep=len(infos))
-        eligible = np.sort(
-            np.asarray([d for d, _s in cands], dtype=np.int64)
+        rows_of = {t: self._pos_decoded.hit(t) for t, _i in infos}
+        # never evicts the entries of the query in flight
+        self._pos_decoded.evict(_POS_CACHE_MAX_BYTES, keep=len(infos))
+        top = _positional_topk(
+            {0: plan}, {0: slots}, dec, rows_of, 0, self.norms.size, k, slop,
+            self.tombstones,
         )
-        decoded: dict[str, tuple] = {}
-        for t, rows_t in term_rows.items():
-            res = _decode_positions_selected(rows_t, eligible)
-            if res is None:
-                return []
-            decoded[t] = res
-        verified = _verify_positions_cell(
-            ph, decoded, eligible, self._max_dl, slop
-        )
-        ok = set(verified.tolist())
-        out = [(doc, score) for doc, score in cands if doc in ok]
-        out.sort(key=lambda e: (-e[1], e[0]))
-        return out[:k]
-
-    def _bound_pos_cache(self, keep: int) -> None:
-        """Evict least-recently-used positional-row entries until under
-        the bytes budget (_POS_CACHE_MAX_BYTES). Never evicts the ``keep``
-        most recent entries (the query in flight)."""
-        self._pos_decoded.evict(_POS_CACHE_MAX_BYTES, keep)
+        self._bound_decode_cache()
+        return [(doc, score) for score, doc in top.get(0, [])]
 
     def _decode_terms_parallel(self, need: list, rows: dict) -> None:
         """Decode uncached terms into the cache, MULTI-TERM queries in a

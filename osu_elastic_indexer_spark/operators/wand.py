@@ -471,7 +471,7 @@ def topk_from_dense(
 # the only sub-linear option.
 #
 # Masked queries on the per-query runners (boolquery._bool_runner /
-# _phrase_runner) tighten this envelope to the query's OBSERVED docID
+# _positional_runner) tighten this envelope to the query's OBSERVED docID
 # range (min doc_min .. max doc_max over its segment rows ~ 11 bytes per
 # doc-in-range): only head-term queries approach O(n_docs). Large batches
 # on any path belong on the docpart variants, whose accumulators are

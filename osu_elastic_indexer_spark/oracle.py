@@ -207,23 +207,33 @@ def search_prefix(
 
 
 def _slop_match_bruteforce(toks: list[str], ph: list[str], slop: int) -> bool:
-    """Exponential ground truth for sloppy matching (test-only): enumerate
+    """Exhaustive ground truth for sloppy matching (test-only): search
     EVERY per-slot occurrence choice and accept when some choice uses
     pairwise-distinct positions whose slot-adjusted values span <= slop.
-    Deliberately a different algorithm from the engine's windowed matching
-    (operators/boolquery._matches_phrase) so the two cross-check."""
-    import itertools
+    A partial choice is pruned once its adjusted values span more than
+    slop (extending a choice never narrows the span), so head-term
+    phrases stay cheap. Deliberately a different algorithm from the
+    engine's windowed matching (operators/boolquery._matches_phrase) so
+    the two cross-check."""
+    import bisect
 
     occ = [[i for i, t in enumerate(toks) if t == p] for p in ph]
     if any(not o for o in occ):
         return False
-    for pick in itertools.product(*occ):
-        if len(set(pick)) != len(pick):
-            continue
-        adj = [p - s for s, p in enumerate(pick)]
-        if max(adj) - min(adj) <= slop:
+
+    def extend(s: int, lo: int, hi: int, used: set[int]) -> bool:
+        if s == len(occ):
             return True
-    return False
+        # the positions of slot s whose adjusted value keeps span <= slop
+        a = bisect.bisect_left(occ[s], hi - slop + s)
+        b = bisect.bisect_right(occ[s], lo + slop + s)
+        return any(
+            p not in used
+            and extend(s + 1, min(lo, p - s), max(hi, p - s), used | {p})
+            for p in occ[s][a:b]
+        )
+
+    return any(extend(1, p, p, {p}) for p in occ[0])
 
 
 def search_phrase(
@@ -252,6 +262,47 @@ def search_phrase(
                 toks[i : i + m] == ph for i in range(len(toks) - m + 1)
             )
         if hit:
+            out.append((d, s))
+            if len(out) == k:
+                break
+    return out
+
+
+def search_match_phrase_prefix(
+    index: OracleIndex,
+    texts: dict[int, str],
+    query_text: str,
+    k: int = 10,
+    max_expansions: int = 50,
+) -> list[tuple[int, float]]:
+    """match_phrase_prefix truth: the last token is a prefix expanded to
+    the live terms starting with it (term-asc, capped at
+    ``max_expansions``); candidates and scores are ``search_bool`` over
+    must: the full tokens, should: the expansions, minimum_should_match 1,
+    and a candidate matches when its token stream holds the full tokens
+    consecutively followed by any expansion (a prefix-only query matches
+    any occurrence, which the should clause already demands)."""
+    toks = tokenize(query_text)
+    if not toks:
+        return []
+    full, prefix = toks[:-1], toks[-1]
+    exps = sorted(
+        t for t, pl in index.postings.items() if t.startswith(prefix) and pl
+    )[:max_expansions]
+    if not exps:
+        return []
+    base = search_bool(
+        index, {"must": full, "should": exps, "minimum_should_match": 1},
+        k=len(index.dl) + 1,
+    )
+    m, pooled = len(full), set(exps)
+    out = []
+    for d, s in base:
+        dt = tokenize(texts.get(d, ""))
+        if not full or any(
+            dt[i : i + m] == full and dt[i + m] in pooled
+            for i in range(len(dt) - m)
+        ):
             out.append((d, s))
             if len(out) == k:
                 break

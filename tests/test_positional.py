@@ -454,6 +454,95 @@ def test_decode_positions_selected_unit(monkeypatch):
     assert calls == {"full": 0, "block": []}
 
 
+def _decoded_from_streams(streams: dict[int, list[str]], shift: int = 0):
+    """term -> (docs, tfs, poss, pstart) over hand-built token streams, the
+    shape ``_decode_positions_selected`` returns (docIDs + ``shift``)."""
+    occ: dict[str, dict[int, list[int]]] = {}
+    for d, toks in sorted(streams.items()):
+        for j, t in enumerate(toks):
+            occ.setdefault(t, {}).setdefault(d, []).append(j)
+    out = {}
+    for t, by_doc in occ.items():
+        docs = np.asarray(sorted(by_doc), dtype=np.int64)
+        tfs = np.asarray([len(by_doc[d]) for d in sorted(by_doc)], dtype=np.int64)
+        poss = np.asarray(
+            [p for d in sorted(by_doc) for p in by_doc[d]], dtype=np.int64
+        )
+        pstart = np.zeros(docs.size + 1, dtype=np.int64)
+        np.cumsum(tfs, out=pstart[1:])
+        out[t] = (docs + shift, tfs, poss, pstart)
+    return out
+
+
+def test_pooled_slot_verify_per_doc_unit(monkeypatch):
+    """Pooled position slots (match_phrase_prefix's last slot pools the
+    prefix's expansions): the per-doc fallback, the vectorized
+    ``_verify_positions_cell`` paths and a brute-force token scan agree on
+    hand-built inputs, slop 0 and 1, with and without a term repeated
+    across slots — and docIDs large enough to overflow the fused key route
+    the kernel itself to the fallback with the same answer."""
+    import itertools
+
+    from osu_elastic_indexer_spark.operators import boolquery as bq
+    from osu_elastic_indexer_spark.operators.boolquery import (
+        _verify_per_doc,
+        _verify_positions_cell,
+    )
+
+    fallbacks = []
+    monkeypatch.setattr(
+        bq, "_verify_per_doc",
+        lambda *a: fallbacks.append(a[2]) or _verify_per_doc(*a),
+    )
+    rng = np.random.default_rng(3)
+    streams = {
+        int(d): [str(t) for t in rng.choice(list("abcde"), rng.integers(1, 14))]
+        for d in np.sort(rng.choice(400, size=120, replace=False))
+    }
+    decoded = _decoded_from_streams(streams)
+    eligible = np.asarray(
+        sorted(d for d in streams if rng.random() < 0.8), dtype=np.int64
+    )
+    huge = 2**58
+    decoded_huge = _decoded_from_streams(streams, shift=huge)
+    cases = [
+        [("a",), ("b",), ("c", "d")],  # pooled last slot, no repeats
+        [("c", "d", "e")],  # prefix-only: one slot, no verify
+        [("a",), ("a", "b")],  # an expansion equal to a full token
+        [("b",), ("a",), ("b",)],  # repeated single-term slots
+        [("a", "b"), ("c",), ("d", "e")],  # pooled first and last slots
+        [("a",), ("zz", "b")],  # a pooled term with no postings
+    ]
+    for slots in cases:
+        for slop in (0, 1):
+            per_doc = _verify_per_doc(eligible, slots, decoded, slop)
+            truth = [
+                d for d in eligible
+                if any(
+                    oracle._slop_match_bruteforce(streams[d], list(c), slop)
+                    for c in itertools.product(*slots)
+                )
+            ]
+            assert per_doc == truth, (slots, slop)
+            if len(slots) > 1:
+                assert per_doc, (slots, slop)  # the case exercises matches
+            del fallbacks[:]
+            cell = _verify_positions_cell(slots, decoded, eligible, slop)
+            if len(slots) == 1:
+                # one slot verifies as eligible (candidates already hold it)
+                assert cell is eligible
+                continue
+            assert cell.tolist() == per_doc, (slots, slop)
+            # only slop with a repeated term takes the fallback at small ids
+            repeats = sum(map(len, slots)) > len(set().union(*slots))
+            assert bool(fallbacks) == (slop > 0 and repeats), (slots, slop)
+            over = _verify_positions_cell(
+                slots, decoded_huge, eligible + huge, slop
+            )
+            assert fallbacks[-1] is decoded_huge  # fused-key overflow
+            assert (over - huge).tolist() == per_doc, (slots, slop)
+
+
 def test_match_phrase_prefix(spark, pos_index, corpus_path, v1_index):
     """ES match_phrase_prefix (autocomplete): full tokens adjacent to ANY
     capped expansion of the last-token prefix, verified on the positional

@@ -1,9 +1,10 @@
 """Differential fuzz across the three physical query shapes: per-query
-``applyInPandas`` (``bool_topk`` / ``wand_topk``), document-partitioned
-cells (``*_docpart``) and the no-Spark ``LocalSearcher`` are drivers around
-one scoring kernel, so on random specs they must agree with each other and
-with the pure-python oracle EXACTLY — same docs, same order, same float
-scores — over a multi-generation index with tombstones.
+``applyInPandas`` (``bool_topk`` / ``wand_topk`` / ``phrase_topk``),
+document-partitioned cells (``*_docpart``) and the no-Spark
+``LocalSearcher`` are drivers around one scoring kernel, so on random specs
+they must agree with each other and with the pure-python oracle EXACTLY —
+same docs, same order, same float scores — over a multi-generation index
+with tombstones (positional for the phrase and match_phrase_prefix fuzz).
 
 Each drawn example is a BATCH of queries: every Spark driver runs once per
 batch, which keeps the Spark job count (and the file's runtime) small."""
@@ -16,10 +17,12 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
 from osu_elastic_indexer_spark import oracle
-from osu_elastic_indexer_spark.functions.textprep import extract_text
+from osu_elastic_indexer_spark.functions.textprep import extract_text, tokenize
 from osu_elastic_indexer_spark.operators.boolquery import (
     bool_topk,
     bool_topk_docpart,
+    match_phrase_prefix_topk,
+    phrase_topk,
 )
 from osu_elastic_indexer_spark.operators.build import build_index
 from osu_elastic_indexer_spark.operators.serve import LocalSearcher
@@ -47,12 +50,10 @@ FUZZ = settings(
 )
 
 
-@pytest.fixture(scope="module")
-def world(spark, tmp_path_factory):
+def _build_world(spark, root: str, **build_kw) -> dict:
     """Base build + one incremental generation (adds, re-crawl updates and
     lang flips, i.e. tombstones) over an all-langs index; the oracle is
     built over the LIVE docs in the engine's docID space."""
-    root = str(tmp_path_factory.mktemp("equiv"))
     base = generate_documents(500)
     final = evolve_corpus(base, n_new=80, n_update=20, n_flip=10)
     bp, fp = os.path.join(root, "b.parquet"), os.path.join(root, "f.parquet")
@@ -60,7 +61,8 @@ def world(spark, tmp_path_factory):
     pq.write_table(final, fp)
     cat = Catalog(root)
     build_index(
-        spark, spark.read.parquet(bp), cat, "v1", include_all_langs=True
+        spark, spark.read.parquet(bp), cat, "v1", include_all_langs=True,
+        **build_kw,
     )
     m = incremental_update(spark, spark.read.parquet(fp), cat, "v1")
     assert m["generations"] == 2 and m["counters"]["deletes_total"] > 0
@@ -91,6 +93,8 @@ def world(spark, tmp_path_factory):
     return {
         "idx": idx_dir,
         "oracle": oidx,
+        "texts": dict(texts),
+        "doc_tokens": [toks for _d, t in sorted(texts) if (toks := tokenize(t))],
         "searcher": LocalSearcher(idx_dir),
         "vocab": sorted(set(vocab)),
         "langs": sorted(lang for lang in by_lang if lang is not None),
@@ -98,6 +102,19 @@ def world(spark, tmp_path_factory):
         "urls": sorted(by_url),
         "by_url": by_url,
     }
+
+
+@pytest.fixture(scope="module")
+def world(spark, tmp_path_factory):
+    return _build_world(spark, str(tmp_path_factory.mktemp("equiv")))
+
+
+@pytest.fixture(scope="module")
+def pos_world(spark, tmp_path_factory):
+    """The same two-generation index with tombstones, built positional."""
+    return _build_world(
+        spark, str(tmp_path_factory.mktemp("equiv_pos")), positions=True
+    )
 
 
 def _by_query(rows) -> dict:
@@ -201,5 +218,115 @@ def test_match_drivers_agree_with_oracle(spark, world):
             assert per_query.get(qid, []) == want, (qid, q)
             assert docpart.get(qid, []) == want, (qid, q)
             assert w["searcher"].search(q, k) == want, (qid, q)
+
+    check()
+
+
+def _window_strategy(w: dict, max_len: int):
+    """Token windows of live docs (so most drawn phrases match), as token
+    lists of 1..max_len tokens."""
+
+    @st.composite
+    def window(draw):
+        toks = draw(st.sampled_from(w["doc_tokens"]))
+        n = draw(st.integers(1, max_len))
+        i = draw(st.integers(0, max(0, len(toks) - n)))
+        return toks[i : i + n]
+
+    return window()
+
+
+def _phrase_strategy(w: dict):
+    """Phrases of 1-4 tokens: doc windows, some edited (a repeated token,
+    an adjacent swap, an out-of-vocabulary token), and random vocab
+    draws."""
+
+    @st.composite
+    def phrase(draw):
+        if draw(st.integers(0, 4)) == 0:
+            return " ".join(draw(st.lists(
+                st.one_of(st.sampled_from(w["vocab"]), st.just(OOV)),
+                min_size=1, max_size=4,
+            )))
+        ph = draw(_window_strategy(w, 4))
+        j = draw(st.integers(0, len(ph) - 1))
+        edit = draw(st.sampled_from(["none", "none", "repeat", "swap", "oov"]))
+        if edit == "repeat" and len(ph) < 4:
+            ph.insert(j, ph[j])
+        elif edit == "swap" and j + 1 < len(ph):
+            ph[j], ph[j + 1] = ph[j + 1], ph[j]
+        elif edit == "oov":
+            ph[j] = OOV
+        return " ".join(ph)
+
+    return phrase()
+
+
+def _mpp_strategy(w: dict):
+    """match_phrase_prefix texts: doc windows whose last token is cut to a
+    prefix — sometimes a prefix of an earlier full token (so an expansion
+    equals a full token), sometimes prefix-only input, sometimes a prefix
+    with no expansion."""
+
+    @st.composite
+    def text(draw):
+        ph = draw(_window_strategy(w, 3))
+        full, last = ph[:-1], ph[-1]
+        pick = draw(st.sampled_from(["last", "last", "full", "oov"]))
+        if pick == "full" and full:
+            last = draw(st.sampled_from(full))
+        elif pick == "oov":
+            last = OOV
+        return " ".join(full + [last[: draw(st.integers(1, len(last)))]])
+
+    return text()
+
+
+def test_phrase_drivers_agree_with_oracle(spark, pos_world):
+    w = pos_world
+
+    @FUZZ
+    @given(
+        phrases=st.lists(_phrase_strategy(w), min_size=1, max_size=6),
+        k=st.sampled_from([3, 10]),
+        slop=st.integers(0, 2),
+    )
+    def check(phrases, k, slop):
+        batch = list(enumerate(phrases))
+        per_query = _by_query(phrase_topk(
+            spark, w["idx"], None, batch, k, docpart=False, slop=slop
+        ).collect())
+        docpart = _by_query(phrase_topk(
+            spark, w["idx"], None, batch, k, docpart=True, slop=slop
+        ).collect())
+        for qid, q in batch:
+            want = oracle.search_phrase(w["oracle"], w["texts"], q, k, slop)
+            assert per_query.get(qid, []) == want, (qid, q, slop)
+            assert docpart.get(qid, []) == want, (qid, q, slop)
+            got = w["searcher"].search_phrase(q, None, k, slop=slop)
+            assert got == want, (qid, q, slop)
+
+    check()
+
+
+def test_match_phrase_prefix_agrees_with_oracle(spark, pos_world):
+    w = pos_world
+
+    @FUZZ
+    @given(
+        texts=st.lists(_mpp_strategy(w), min_size=1, max_size=6),
+        k=st.sampled_from([3, 10]),
+        max_expansions=st.sampled_from([3, 50]),
+    )
+    def check(texts, k, max_expansions):
+        batch = list(enumerate(texts))
+        got = _by_query(match_phrase_prefix_topk(
+            spark, w["idx"], batch, k, max_expansions
+        ).collect())
+        for qid, q in batch:
+            want = oracle.search_match_phrase_prefix(
+                w["oracle"], w["texts"], q, k, max_expansions
+            )
+            assert got.get(qid, []) == want, (qid, q, max_expansions)
 
     check()
