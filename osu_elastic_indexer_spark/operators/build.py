@@ -470,6 +470,7 @@ def _materialize_forward_direct(
     from concurrent.futures import ThreadPoolExecutor
 
     from pyspark.sql import Observation
+    from pyspark.util import inheritable_thread_target
 
     # ---- pass 0 (cheap, JVM): rows per scan partition — lang/text columns
     # only, the html blobs are never decoded here
@@ -535,10 +536,13 @@ def _materialize_forward_direct(
     )
 
     # overlap the two independent writes (guide §2.6): the docmap job is
-    # JVM-only and back-fills cores the python-heavy fwd job leaves idle
+    # JVM-only and back-fills cores the python-heavy fwd job leaves idle;
+    # it inherits this thread's job group and description
     with ThreadPoolExecutor(max_workers=1) as pool:
         fut = pool.submit(
-            lambda: dm.write.mode("overwrite").parquet(docmap_dir)
+            inheritable_thread_target(spark)(
+                lambda: dm.write.mode("overwrite").parquet(docmap_dir)
+            )
         )
         fwd_out.write.mode("overwrite").option(
             "parquet.block.size", str(FWD_ROW_GROUP_BYTES)
@@ -1501,6 +1505,10 @@ def build_index(
         # terms; ids are dense so max advances by the same amount)
         "terms": (m["phases"].get("dictionary") or {}).get("terms"),
         "max_term_id": (m["phases"].get("dictionary") or {}).get("max_term_id"),
+        # docIDs are dense from 0, so the first unused id is the docmap row
+        # count; incremental commits extend it and compaction keeps it, so
+        # a dead id is never handed out again
+        "next_doc_id": m["phases"]["postings"].get("docmap_rows"),
     }
     m["cursor"] = m["phases"]["postings"].get("cursor")
     m["generations"] = 1

@@ -1,6 +1,8 @@
 """M5: incremental semantics parity (SURVEY.md §5.2 #4) — cursor-driven
 updates, add/delete routing, idempotence, cutover catch-up, compaction."""
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -89,40 +91,66 @@ def _check_all_queries(spark, idx_dir, oracle_idx, oracle_urls, tag):
         )
 
 
-def test_crash_mid_generation_replays_cleanly(spark, evolved, tmp_path_factory):
-    """Atomicity (T7): kill the update AT the commit point — every table dir
-    is already written but the manifest swap never happens. The index must
-    keep serving the OLD state, and a replay (the foreachBatch retry path)
-    must clean the orphan generation and land on the same final state as a
-    crash-free run: no double-appended docID ranges, no lost delete deltas,
-    no stats drift."""
+def test_crash_mid_generation_replays_cleanly(
+    spark, evolved, incr_index, tmp_path_factory, monkeypatch
+):
+    """Atomicity (T7): kill the update mid-generation twice — right after
+    the tombstone generation is written (before any segment), then AT the
+    commit point (every table dir is already written but the manifest swap
+    never happens). After each crash the index must keep serving the OLD
+    state, and a replay (the foreachBatch retry path) must clean the orphan
+    generation and land on the same final state as a crash-free run: no
+    double-appended docID ranges, no lost delete deltas, no stats drift."""
+    import os
+
+    import osu_elastic_indexer_spark.streaming.incremental as inc
+
     base_p, final_p, base, final = evolved
     root = str(tmp_path_factory.mktemp("idx_crash"))
     cat = Catalog(root)
     build_index(spark, spark.read.parquet(base_p), cat, "v1")
     m_before = cat.read_manifest("v1")
     oidx_base, ourls_base = _oracle_for(base)
+    gen = m_before["generations"]
+
+    real_gen_file = inc._write_gen_file
+
+    def crash_after_tombstones(path, table, **kw):
+        real_gen_file(path, table, **kw)
+        if os.path.basename(os.path.dirname(path)).startswith("tombstones"):
+            raise RuntimeError("injected crash after the tombstone write")
 
     real_write = Catalog.write_manifest
 
-    def exploding_write(self, schema, manifest):
+    def crash_at_commit(self, schema, manifest):
         if manifest.get("generations", 0) > m_before["generations"]:
             raise RuntimeError("injected crash at commit")
         return real_write(self, schema, manifest)
 
-    Catalog.write_manifest = exploding_write
-    try:
-        with pytest.raises(RuntimeError, match="injected crash"):
-            incremental_update(spark, spark.read.parquet(final_p), cat, "v1")
-    finally:
-        Catalog.write_manifest = real_write
+    for target, name, fake in (
+        (inc, "_write_gen_file", crash_after_tombstones),
+        (Catalog, "write_manifest", crash_at_commit),
+    ):
+        with monkeypatch.context() as mp:
+            mp.setattr(target, name, fake)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                incremental_update(spark, spark.read.parquet(final_p), cat, "v1")
+        if fake is crash_after_tombstones:
+            # the crash hit between the tombstone write and the segments
+            tomb_gen = os.path.join(cat.table_path("v1", "tombstones"), f"gen={gen}")
+            seg_gen = os.path.join(cat.table_path("v1", "segments"), f"gen={gen}")
+            assert pq.read_table(tomb_gen).num_rows > 0
+            assert not os.path.exists(seg_gen)
 
-    # uncommitted generation is invisible: queries still serve the base state
-    m_crashed = cat.read_manifest("v1")
-    assert m_crashed["generations"] == m_before["generations"]
-    st = spark.read.parquet(cat.table_path("v1", "stats")).collect()[0]
-    assert st.n_docs == oidx_base.n_docs
-    _check_all_queries(spark, cat.index_dir("v1"), oidx_base, ourls_base, "crashed")
+        # uncommitted generation is invisible: queries still serve the base state
+        m_crashed = cat.read_manifest("v1")
+        assert m_crashed["generations"] == m_before["generations"]
+        assert m_crashed["counters"] == m_before["counters"]
+        st = spark.read.parquet(cat.table_path("v1", "stats")).collect()[0]
+        assert st.n_docs == oidx_base.n_docs
+        _check_all_queries(
+            spark, cat.index_dir("v1"), oidx_base, ourls_base, f"crashed in {name}"
+        )
 
     # replay: orphans cleaned, update applied once, final state == oracle
     m2 = incremental_update(spark, spark.read.parquet(final_p), cat, "v1")
@@ -131,6 +159,11 @@ def test_crash_mid_generation_replays_cleanly(spark, evolved, tmp_path_factory):
     st2 = spark.read.parquet(cat.table_path("v1", "stats")).collect()[0]
     assert st2.n_docs == oidx.n_docs
     assert abs(st2.avgdl - oidx.avgdl) < 1e-9
+    # the crash-free run of the same batch: same counters and stats
+    cat_ok, m_ok = incr_index
+    assert m2["counters"] == m_ok["counters"]
+    st_ok = spark.read.parquet(cat_ok.table_path("v1", "stats")).collect()[0]
+    assert st2.asDict() == st_ok.asDict()
     _check_all_queries(spark, cat.index_dir("v1"), oidx, ourls, "replayed")
 
 
@@ -651,3 +684,196 @@ def test_incremental_known_id_lookup_is_pruned(
     plan = dfp._jdf.queryExecution().toString()
     assert "PushedFilters" in plan
     assert "term" in plan.split("PushedFilters")[-1]
+
+
+def _committed_docmap(spark, cat) -> dict:
+    """url -> doc_id over every committed docmap row (dead ones included)."""
+    from osu_elastic_indexer_spark.sources.catalog import committed_gen_paths
+
+    rows = spark.read.parquet(
+        *committed_gen_paths(cat.index_dir("v1"), "docmap")
+    ).select("url", "doc_id").collect()
+    return {r.url: r.doc_id for r in rows}
+
+
+def _gen_rows(cat, table: str, gen: int) -> list:
+    """The rows of one committed generation of ``table``, sorted."""
+    t = pq.read_table(f"{cat.table_path('v1', table)}/gen={gen}")
+    return sorted(zip(*(t.column(c).to_pylist() for c in sorted(t.column_names))))
+
+
+def test_docids_never_reused_after_compaction(spark, evolved, tmp_path_factory):
+    """Dead docIDs are never handed out again: compaction drops the dead
+    docmap rows, but the manifest's next_doc_id survives it, so a doc added
+    after compacting away the highest-id doc gets an id above every id the
+    index ever held."""
+    base_p, _fp, base, _f = evolved
+    root = str(tmp_path_factory.mktemp("idx_noreuse"))
+    cat = Catalog(root)
+    docs = spark.read.parquet(base_p)
+    build_index(spark, docs, cat, "v1")
+    ids = _committed_docmap(spark, cat)
+    old_max = max(ids.values())
+    top_url = next(u for u, d in ids.items() if d == old_max)
+
+    queue = spark.createDataFrame([(top_url,)], "url string")
+    m = incremental_update(
+        spark, docs.filter(F.col("url") != top_url), cat, "v1", queue_urls=queue
+    )
+    assert m["counters"]["deletes_total"] == 1
+    compact_index(spark, cat, "v1")
+    assert top_url not in _committed_docmap(spark, cat)
+
+    # the url comes back: its fresh id must not be the compacted-away one
+    m = incremental_update(spark, docs, cat, "v1", queue_urls=queue)
+    assert _committed_docmap(spark, cat)[top_url] == old_max + 1
+    assert m["counters"]["next_doc_id"] == old_max + 2
+    oidx, ourls = _oracle_for(base)
+    _check_all_queries(spark, cat.index_dir("v1"), oidx, ourls, "re-added")
+
+
+def test_wide_vocabulary_branch_matches_fast_path(
+    spark, evolved, tmp_path_factory, monkeypatch
+):
+    """A batch vocabulary wider than KNOWN_ID_IN_MAX takes the distributed
+    dictionary branch; it must commit exactly what the driver-resolved
+    branch commits — manifest counters, dictionary generation rows, served
+    answers — on an update+delete batch and on a delete-only batch."""
+    import os
+    import shutil
+
+    import osu_elastic_indexer_spark.streaming.incremental as inc
+
+    base_p, final_p, _base, final = evolved
+    root = str(tmp_path_factory.mktemp("idx_wide"))
+    fast_cat = Catalog(os.path.join(root, "fast"))
+    build_index(spark, spark.read.parquet(base_p), fast_cat, "v1")
+    shutil.copytree(os.path.join(root, "fast"), os.path.join(root, "wide"))
+    wide_cat = Catalog(os.path.join(root, "wide"))
+
+    # delete-only batch: queued live urls that are gone from the source
+    live = [
+        u for u, lang, txt in zip(
+            final["url"].to_pylist(), final["lang"].to_pylist(),
+            final["text"].to_pylist(),
+        )
+        if lang == "en" and txt
+    ]
+    gone = live[:3]
+    rest = final.filter(
+        pc.invert(pc.is_in(final["url"], value_set=pa.array(gone)))
+    )
+    rest_p = os.path.join(root, "rest.parquet")
+    pq.write_table(rest, rest_p)
+
+    def run(cat):
+        return [
+            incremental_update(spark, spark.read.parquet(final_p), cat, "v1"),
+            incremental_update(
+                spark, spark.read.parquet(rest_p), cat, "v1",
+                queue_urls=spark.createDataFrame([(u,) for u in gone], "url string"),
+            ),
+        ]
+
+    fast = run(fast_cat)
+    monkeypatch.setattr(inc, "KNOWN_ID_IN_MAX", 5)
+    wide = run(wide_cat)
+    for gen, (mf, mw) in enumerate(zip(fast, wide), start=1):
+        assert mw["counters"] == mf["counters"], gen
+        pf, pw = (x["phases"][f"incremental_gen{gen}"] for x in (mf, mw))
+        assert pw["batch_terms"] == pf["batch_terms"] > 5
+        assert (pw["adds"], pw["deletes"]) == (pf["adds"], pf["deletes"])
+        for table in ("dictionary", "dict_by_term"):
+            assert _gen_rows(wide_cat, table, gen) == _gen_rows(fast_cat, table, gen)
+    assert (pw["adds"], pw["deletes"]) == (0, 3)
+    oidx, ourls = _oracle_for(rest)
+    _check_all_queries(spark, wide_cat.index_dir("v1"), oidx, ourls, "wide")
+
+
+def test_legacy_manifest_and_cursor_edge_cases(spark, evolved, tmp_path_factory):
+    """(1) A manifest without next_doc_id (an index from before the counter)
+    assigns the same docIDs through the fallback scan and gains the counter
+    at its next commit. (2) A batch of purely non-indexable rows commits no
+    generation but still advances the cursor. (3) A queued url missing from
+    the source is tombstoned."""
+    import os
+    import shutil
+
+    base_p, final_p, _base, final = evolved
+    root = str(tmp_path_factory.mktemp("idx_legacy"))
+    cat = Catalog(os.path.join(root, "new"))
+    build_index(spark, spark.read.parquet(base_p), cat, "v1")
+    shutil.copytree(os.path.join(root, "new"), os.path.join(root, "legacy"))
+    legacy = Catalog(os.path.join(root, "legacy"))
+    m = legacy.read_manifest("v1")
+    del m["counters"]["next_doc_id"]
+    legacy.write_manifest("v1", m)
+
+    m_new = incremental_update(spark, spark.read.parquet(final_p), cat, "v1")
+    m_old = incremental_update(spark, spark.read.parquet(final_p), legacy, "v1")
+    assert _committed_docmap(spark, legacy) == _committed_docmap(spark, cat)
+    assert m_old["counters"] == m_new["counters"]
+
+    # (2) brand-new urls, all non-English: nothing to add, nothing to delete
+    extra = evolve_corpus(final, n_new=5, n_update=0, n_flip=0)
+    langs = extra["lang"].to_pylist()
+    langs[final.num_rows:] = ["de"] * 5
+    extra = extra.set_column(
+        extra.column_names.index("lang"), "lang", pa.array(langs, pa.string())
+    )
+    extra_p = os.path.join(root, "extra.parquet")
+    pq.write_table(extra, extra_p)
+    m1 = incremental_update(spark, spark.read.parquet(extra_p), cat, "v1")
+    assert m1["generations"] == m_new["generations"]
+    assert m1["counters"] == m_new["counters"]
+    assert m1["cursor"] > m_new["cursor"]
+
+    # (3) queue a live url the source no longer has
+    ids = _committed_docmap(spark, cat)
+    url = next(u for u in sorted(ids) if u.startswith("https://example-new"))
+    rest = spark.read.parquet(extra_p).filter(F.col("url") != url)
+    m3 = incremental_update(
+        spark, rest, cat, "v1",
+        queue_urls=spark.createDataFrame([(url,)], "url string"),
+    )
+    gen = m1["generations"]
+    assert m3["generations"] == gen + 1
+    assert m3["counters"]["deletes_total"] == m1["counters"]["deletes_total"] + 1
+    assert m3["counters"]["docs"] == m1["counters"]["docs"] - 1
+    assert _gen_rows(cat, "tombstones", gen) == [(ids[url],)]
+
+
+def test_commit_jobs_named_by_phase(spark, evolved, tmp_path_factory):
+    """Every Spark job of a commit carries a job description naming its
+    phase, the manifest's generation phase records per-phase seconds next
+    to wall_sec, and the caller's job description is restored."""
+    base_p, final_p, _b, _f = evolved
+    root = str(tmp_path_factory.mktemp("idx_phases"))
+    cat = Catalog(root)
+    build_index(spark, spark.read.parquet(base_p), cat, "v1")
+    sc = spark.sparkContext
+    docs = spark.read.parquet(final_p)
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobDescription("caller")
+    try:
+        m = incremental_update(spark, docs, cat, "v1")
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    finally:
+        sc.setJobDescription(None)
+    store = sc._jsc.sc().statusStore()
+    names = {}
+    for j in set(tracker.getJobIdsForGroup(None)) - before:
+        d = store.job(j).description()
+        names[j] = d.get() if d.isDefined() else None
+    phases = {"tombstones", "forward", "dictionary", "segments"}
+    assert names and all(
+        d is not None and d.startswith("incremental gen=1: ")
+        and d.split(": ", 1)[1] in phases
+        for d in names.values()
+    ), names
+    assert {d.split(": ", 1)[1] for d in names.values()} == phases
+    rec = m["phases"]["incremental_gen1"]
+    assert rec["wall_sec"] >= 0
+    for p in phases:
+        assert rec[f"{p}_s"] >= 0
