@@ -10,19 +10,23 @@ Spark-first over our own index format.
 One kernel, thin drivers: scoring is wand.py's kernel (``decode_term`` ->
 ``accumulate`` -> ``score_bool``). A spec compiles, via ``_plan_terms``, to
 sorted (term, idf·boost, role bits) triples plus the required-term count
-and minimum_should_match; the drivers here only fetch segment rows and
-pick the docID window:
+and minimum_should_match; the drivers only fetch postings and pick the
+docID window:
 
-* ``bool_topk`` — one Spark job per batch: segment rows for the batch
-  vocabulary (term_id IN -> row-group pruning) joined to a broadcast
-  (query_id, term_id) map, one ``applyInPandas`` group per query, window =
-  the query's observed docID range (min doc_min .. max doc_max over its
-  segment rows). Plain match queries (should-only, no filter) keep the
-  ``taat_topk`` / ``bmw_topk`` dispatch — ``wand_topk`` is exactly that.
+* ``LocalSearcher.search_bool`` (serve.py) — window = the corpus.
+* ``bool_topk`` — the per-query Spark shape, which ships queries, not
+  index data (``_searcher_batch``): one ``mapInArrow`` over the batch's
+  query rows, each Python worker answering its share with
+  ``LocalSearcher`` methods on a searcher pinned to the manifest the
+  driver planned from. ``wand_topk``, ``prefix_topk``, positional
+  ``phrase_topk`` and ``match_phrase_prefix_topk`` run the same way.
 * ``bool_topk_docpart`` — the queries-to-data shape for large batches:
   blobs shuffle once per (generation, salt) docID cell regardless of the
   query count; window = the cell span.
-* ``LocalSearcher.search_bool`` (serve.py) — window = the corpus.
+
+Every Spark batch plans from ONE manifest read (``_snapshot``): its
+statistics, dictionary lookups, segment files and worker searchers all
+come from that snapshot, so a commit landing mid-batch is invisible to it.
 
 Bool semantics (ES): a doc is eligible when it holds every required term
 (must ∪ filter), at least minimum_should_match distinct should terms, no
@@ -60,15 +64,16 @@ pooling the expansions. On positional (v2) indexes
 ``_positional_topk``, answers both: accumulate -> candidates ->
 block-selected position decode (``_decode_positions_selected``) ->
 ``_verify_positions_cell`` (adjacency or ES slop) -> top-k. Its drivers are
-the per-query and docpart Spark shapes of ``_positional_runner``
-(``PHRASE_DOCPART_DF_SUM`` routes head-term phrases to cells) and
-``LocalSearcher.search_phrase``. A one-slot query needs no positions. v1
-indexes carry no positions: ``phrase_topk`` then joins the conjunctive
-candidates to docmap and the SOURCE table and re-tokenizes each
-candidate's html — verification IO ∝ the candidate count, which is bounded
-(``max_candidates``, the ES rewrite-guard analog) before it is
-broadcast-pinned into the joins. ``prefix_topk`` expands the prefix by a
-dictionary range seek and runs the expansion as a match query.
+``LocalSearcher.search_phrase`` / ``search_phrase_prefix`` (also the
+per-query Spark shape) and the docpart cells of ``_positional_cell``
+(``PHRASE_DOCPART_DF_SUM`` routes head-term phrases to cells). A one-slot
+query needs no positions. v1 indexes carry no positions: ``phrase_topk``
+then joins the conjunctive candidates to docmap and the SOURCE table and
+re-tokenizes each candidate's html — verification IO ∝ the candidate
+count, which is bounded (``max_candidates``, the ES rewrite-guard analog)
+before it is broadcast-pinned into the joins. ``prefix_topk`` expands the prefix by a
+dictionary range seek over the pinned snapshot and runs the expansion as a
+match query.
 
 All paths honor tombstones and closed-index refusal.
 """
@@ -89,15 +94,12 @@ from .wand import (
     _SCORED,
     _SHOULD,
     RESULT_SCHEMA,
-    TAAT_MAX_POSTINGS,
     _index_state,
     _segment_rows,
     accumulate,
-    bmw_topk,
     decode_term,
     idf_of,
     score_bool,
-    taat_topk,
 )
 
 _CLAUSES = ("must", "should", "must_not", "filter")
@@ -324,42 +326,17 @@ def index_has_positions(index_dir: str) -> bool:
     return bool(m and m.get("positions"))
 
 
-def _query_plumbing(
-    spark, index_dir: str, all_terms: list[str], with_positions: bool = False
-):
-    """Shared driver-side setup: index state + dictionary lookup + segment
-    scan pruned to the batch vocabulary. Returns None when nothing can
-    match (no dictionary hits / no committed segments).
+def _snapshot(index_dir: str) -> dict:
+    """The manifest a query batch plans from, read ONCE: the closed-index
+    check, statistics, field lists, dictionary lookups and every file list
+    of the batch come from it, so a commit landing while the batch is
+    planned (or before it is collected) can never pair one generation's
+    n_docs/avgdl/df with another generation's segments."""
+    from ..sources.catalog import assert_index_readable, read_index_manifest
 
-    ``with_positions=False`` prunes the v2 positional sidecar columns (if
-    the index has them) so positions-free queries never ship position
-    bytes through the scan/shuffle; True keeps them (positional phrase)."""
-    from ..session import ship_package
-    from ..sources.catalog import assert_index_readable, committed_gen_paths
-    from .build import V1_SEGMENT_COLS
-    from .dictionary import lookup_term_info
-
-    ship_package(spark)
-    assert_index_readable(index_dir)  # closed-index parity (wand_topk)
-    n_docs, avgdl, commit_seq = _index_state(spark, index_dir)
-    term_info = lookup_term_info(spark, index_dir, all_terms)
-    tids = [ti[0] for ti in term_info.values()]
-    seg_paths = committed_gen_paths(index_dir, "segments")
-    if not tids or not seg_paths:
-        return None
-    segs = spark.read.parquet(*seg_paths)
-    if not with_positions:
-        segs = segs.select(*V1_SEGMENT_COLS)
-    segs = segs.filter(F.col("term_id").isin(tids))
-    state = {
-        "fwd_path": tuple(committed_gen_paths(index_dir, "fwd")),
-        "tomb_path": tuple(committed_gen_paths(index_dir, "tombstones")),
-        "docmap_path": tuple(committed_gen_paths(index_dir, "docmap")),
-        "seq": int(commit_seq),
-        "avgdl": float(avgdl),
-        "n_docs": int(n_docs),
-    }
-    return segs, term_info, state
+    m = read_index_manifest(index_dir) or {}
+    assert_index_readable(index_dir, m)
+    return m
 
 
 def _struct_arrays(
@@ -418,11 +395,12 @@ def _plan_terms(s: dict, msm: int, info, n_docs: int):
     return terms, len(required), msm
 
 
-def _bool_plans(index_dir: str, queries: list[tuple[int, dict]]):
-    """Validate a bool batch -> (normalized specs, msm by qid, structured
-    filter specs by qid). Raises ValueError for unusable specs."""
-    kw_fields = index_keyword_fields(index_dir)
-    num_fields = index_numeric_fields(index_dir)
+def _bool_plans(m: dict, queries: list[tuple[int, dict]]):
+    """Validate a bool batch against the snapshot ``m``'s keyword/numeric
+    fields -> (normalized specs, msm by qid, structured filter specs by
+    qid). Raises ValueError for unusable specs."""
+    kw_fields = tuple(m.get("keyword_fields") or ())
+    num_fields = tuple(m.get("numeric_fields") or ())
     specs, msms, structs = {}, {}, {}
     for qid, raw in queries:
         s = _normalize_spec(raw)
@@ -435,126 +413,176 @@ def _bool_plans(index_dir: str, queries: list[tuple[int, dict]]):
 
 
 def _plan_batch(
-    spark, index_dir: str, specs: dict, msms: dict,
+    spark, index_dir: str, m: dict, specs: dict, msms: dict,
     with_positions: bool = False,
 ):
-    """Segment scan + per-query term plans for a validated batch ->
-    (segs, state, {qid: plan}), or None when no query can match."""
+    """Driver-side setup of a validated docpart batch on the snapshot
+    ``m``: index state + dictionary lookup -> per-query term plans + a
+    segment scan pruned to their terms -> (segs, state, {qid: plan}), or
+    None when no query can match (no dictionary hits / no committed
+    segments).
+
+    ``with_positions=False`` prunes the v2 positional sidecar columns (if
+    the index has them) so positions-free queries never ship position
+    bytes through the scan/shuffle; True keeps them (positional phrase)."""
+    from ..session import ship_package
+    from ..sources.catalog import committed_gen_paths
+    from .build import V1_SEGMENT_COLS
+    from .dictionary import lookup_term_info
+
+    n_docs, avgdl, seq = _index_state(index_dir, m)
     all_terms = sorted(
         {t for s in specs.values() for c in _CLAUSES for t in s[c]}
     )
-    plumb = (
-        _query_plumbing(spark, index_dir, all_terms, with_positions)
-        if all_terms else None
-    )
-    if plumb is None:
-        return None
-    segs, term_info, state = plumb
+    term_info = lookup_term_info(spark, index_dir, all_terms, m)
     plans = {}
     for qid, s in specs.items():
-        plan = _plan_terms(s, msms[qid], term_info, state["n_docs"])
+        plan = _plan_terms(s, msms[qid], term_info, n_docs)
         if plan is not None:
             plans[qid] = plan
-    return (segs, state, plans) if plans else None
+    seg_paths = committed_gen_paths(index_dir, "segments", m)
+    if not plans or not seg_paths:
+        return None
+    ship_package(spark)
+    segs = spark.read.parquet(*seg_paths)
+    if not with_positions:
+        segs = segs.select(*V1_SEGMENT_COLS)
+    tids = sorted({
+        tid for terms, _n, _m in plans.values() for _t, tid, _w, _r in terms
+    })
+    state = {
+        "fwd_path": tuple(committed_gen_paths(index_dir, "fwd", m)),
+        "tomb_path": tuple(committed_gen_paths(index_dir, "tombstones", m)),
+        "docmap_path": tuple(committed_gen_paths(index_dir, "docmap", m)),
+        "seq": seq,
+        "avgdl": avgdl,
+        "n_docs": n_docs,
+    }
+    return segs.filter(F.col("term_id").isin(tids)), state, plans
 
 
-def _grouped(spark, segs, plans: dict, run, k: int, docpart: bool):
-    """The two Spark shapes of a planned batch: per query (segment rows
-    joined to a broadcast (query_id, term_id) map, one ``applyInPandas``
-    group per query) or per docpart cell (rows shuffle once per
-    (generation, salt) docID cell; ``_merge_cells`` finishes the top-k)."""
-    pairs = [
-        (qid, tid) for qid, (terms, _n, _m) in plans.items()
-        for _t, tid, _w, _r in terms
-    ]
-    if docpart:
-        segs = segs.filter(
-            F.col("term_id").isin(sorted({tid for _q, tid in pairs}))
-        )
-        return _merge_cells(
-            segs.groupBy("generation", "salt").applyInPandas(
-                run, RESULT_SCHEMA
-            ),
-            int(k),
-        )
-    qmap = spark.createDataFrame(pairs, "query_id bigint, term_id bigint")
-    return segs.join(F.broadcast(qmap), "term_id").groupBy(
-        "query_id"
-    ).applyInPandas(run, RESULT_SCHEMA)
-
-
-def _is_plain_match(plan, st_spec) -> bool:
-    """Should-only, no msm, no filter: the shape the TAAT/BMW cores score."""
-    terms, n_must, n_msm = plan
-    return (
-        not n_must and not n_msm and st_spec is None
-        and all(role == _SCORED | _SHOULD for _t, _tid, _w, role in terms)
+def _cells(segs, run, k: int) -> DataFrame:
+    """The docpart shape of a planned batch: segment rows shuffle once per
+    (generation, salt) docID cell, ``run`` scores every query of the batch
+    in each cell, and ``_merge_cells`` finishes the top-k."""
+    return _merge_cells(
+        segs.groupBy("generation", "salt").applyInPandas(run, RESULT_SCHEMA),
+        int(k),
     )
 
 
-def _frame(qids, docs, scores, ranked: bool) -> pd.DataFrame:
-    """Result rows in RESULT_SCHEMA order; docpart cells emit rank 0 (the
+def _frame(qids, docs, scores) -> pd.DataFrame:
+    """A docpart cell's candidates in RESULT_SCHEMA order, at rank 0 (the
     final window ranks the union of the cells' candidates)."""
     return pd.DataFrame({
-        "query_id": qids,
-        "rank": list(range(1, len(qids) + 1)) if ranked else [0] * len(qids),
-        "doc_id": docs,
+        "query_id": qids, "rank": [0] * len(qids), "doc_id": docs,
         "score": scores,
     })
 
 
-def _bool_runner(state: dict, k: int, plans: dict, structs: dict):
-    """applyInPandas body for one query's segment rows (joined to the
-    broadcast (query_id, term_id) map). ``plans``: qid -> ``_plan_terms``
-    output; ``structs``: qid -> (filter_range, filter_term, filter_exists).
+# the per-query shape's worker-side searcher: ONE entry per Python worker
+# process, keyed by the snapshot it pins (a new commit_seq replaces it, as
+# in state._cached; the creation stamp tells a deleted and re-created index
+# apart), so the batches between two commits share its hot caches
+_WORKER_SEARCHER: dict[tuple, object] = {}
 
-    Plain match queries keep the TAAT/BMW dispatch on posting volume (both
-    exact, same fold order); every other shape runs ``score_bool`` over a
-    window sized to the query's OBSERVED docID range (min doc_min .. max
-    doc_max over its segment rows), not the corpus: a rare-term query
-    allocates its term span, only a head-term query approaches O(n_docs)."""
-    fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
-    docmap_path, seq = state["docmap_path"], state["seq"]
-    avgdl = state["avgdl"]
-    kk = int(k)
 
-    def run_query(pdf: pd.DataFrame) -> pd.DataFrame:
-        from osu_elastic_indexer_spark.operators.state import (
-            load_norms,
-            load_tombstones,
+def _worker_searcher(index_dir: str, m: dict, parallelism: int):
+    """This worker's ``LocalSearcher`` on the driver's snapshot ``m`` —
+    never on the manifest committed now — holding a 1/``parallelism``
+    share of the serve cache budgets."""
+    from .serve import LocalSearcher
+
+    key = (
+        index_dir, int(m.get("commit_seq", 0)), m.get("created_utc"),
+        parallelism,
+    )
+    searcher = _WORKER_SEARCHER.get(key)
+    if searcher is None:
+        _WORKER_SEARCHER.clear()
+        searcher = LocalSearcher(
+            index_dir, manifest=m, cache_share=1.0 / parallelism
+        )
+        _WORKER_SEARCHER[key] = searcher
+    return searcher
+
+
+def _batch_terms(searcher, method: str, payloads: list, params: dict):
+    """The vocabulary of one partition's queries, prefix expansions
+    included (from the searcher's pinned dictionary)."""
+    out: set[str] = set()
+    for p in payloads:
+        if method == "search_bool":
+            s = _normalize_spec(p)
+            out.update(t for c in _CLAUSES for t in s[c])
+            continue
+        toks = tokenize(p)
+        if toks and method in ("search_prefix", "search_phrase_prefix"):
+            toks = toks[:-1] + searcher._expansions(
+                toks[-1], params["max_expansions"]
+            )
+        out.update(toks)
+    return sorted(out)
+
+
+def _searcher_body(
+    index_dir: str, m: dict, method: str, items: list, k: int,
+    params: dict, parallelism: int,
+):
+    """``mapInArrow`` body of the per-query shape: a partition's query rows
+    (``id`` = index into ``items``, ``[(query_id, payload)]``) -> their
+    ranked results, answered by ``LocalSearcher.<method>(payload, k=k,
+    **params)`` on the worker's cached searcher. The partition's whole
+    vocabulary is resolved and decoded up front (``prefetch``), and the
+    decode cache is bounded to the worker's share before it returns."""
+
+    def run(batches):
+        import pyarrow as pa
+
+        searcher = _worker_searcher(index_dir, m, parallelism)
+        mine = [items[i] for b in batches for i in b.column(0).to_pylist()]
+        searcher.prefetch(
+            _batch_terms(searcher, method, [p for _q, p in mine], params)
+        )
+        ask = getattr(searcher, method)
+        hits = [
+            (int(qid), rank, doc, score)
+            for qid, payload in mine
+            for rank, (doc, score) in enumerate(ask(payload, k=k, **params), 1)
+        ]
+        searcher._bound_decode_cache()
+        types = (pa.int64(), pa.int32(), pa.int64(), pa.float64())
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, t) for c, t in zip(list(zip(*hits)) or [()] * 4, types)],
+            names=["query_id", "rank", "doc_id", "score"],
         )
 
-        norms = load_norms(fwd_path, seq)
-        tomb = load_tombstones(tomb_path, seq)
-        qid = int(pdf["query_id"].iloc[0])
-        plan, st_spec = plans[qid], structs.get(qid)
-        terms, n_must, n_msm = plan
-        rows = _segment_rows(pdf, "term_id")
-        if _is_plain_match(plan, st_spec):
-            entries = [(t, w, rows[tid]) for t, tid, w, _r in terms if tid in rows]
-            n_post = 128 * sum(
-                len(e["block_first"]) for _t, _w, rs in entries for e in rs
-            )
-            core = taat_topk if n_post <= TAAT_MAX_POSTINGS else bmw_topk
-            top = core(entries, kk, avgdl, norms, tomb)
-        else:
-            lo, span = _cell_bounds(pdf["doc_min"], pdf["doc_max"])
-            tl = []
-            for _t, tid, w, role in terms:
-                if tid in rows:
-                    d, tfn, _parts = decode_term(rows[tid], norms, avgdl)
-                    tl.append((d - lo, tfn, w, role))
-            struct = (
-                _struct_arrays(*st_spec, docmap_path, seq) if st_spec else None
-            )
-            top = score_bool(
-                tl, lo, span, kk, n_must, n_msm, norms, tomb, struct
-            )
-        return _frame(
-            [qid] * len(top), [d for _s, d in top], [s for s, _d in top], True
-        )
+    return run
 
-    return run_query
+
+def _searcher_batch(
+    spark, index_dir: str, m: dict, method: str, items: list, k: int,
+    **params,
+) -> DataFrame:
+    """The per-query Spark shape: ships queries, not index data. The
+    query texts/specs ``items`` travel in the task closure with the
+    driver's manifest ``m``; one ``mapInArrow`` over ``len(items)`` query
+    rows in min(n_queries, defaultParallelism) partitions answers them
+    (``_searcher_body``) -> RESULT_SCHEMA with ranks 1..k. Each worker's
+    searcher holds 1/defaultParallelism of the serve cache budgets — the
+    session runs at most that many Python workers at once."""
+    from ..session import ship_package
+
+    if not items:
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    ship_package(spark)
+    par = max(1, int(spark.sparkContext.defaultParallelism))
+    run = _searcher_body(
+        index_dir, m, method, list(items), int(k), params, par
+    )
+    return spark.range(0, len(items), 1, min(len(items), par)).mapInArrow(
+        run, RESULT_SCHEMA
+    )
 
 
 def bool_topk(
@@ -575,16 +603,15 @@ def bool_topk(
     term/terms filter — the country_code/ruleset_id restriction,
     scores.json:17-19,32-37). Returns (query_id, rank, doc_id, score); a
     query whose required clause cannot match produces no rows; an
-    unusable spec raises ValueError (``_check_spec``).
+    unusable spec raises ValueError (``_check_spec``) at call time.
+
+    Runs the per-query shape (``_searcher_batch``): each worker answers
+    its share with ``LocalSearcher.search_bool`` on the snapshot read
+    here.
     """
-    specs, msms, structs = _bool_plans(index_dir, queries)
-    planned = _plan_batch(spark, index_dir, specs, msms)
-    if planned is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    segs, state, plans = planned
-    return _grouped(
-        spark, segs, plans, _bool_runner(state, k, plans, structs), k, False
-    )
+    m = _snapshot(index_dir)
+    _bool_plans(m, queries)  # raise on an unusable spec before any job
+    return _searcher_batch(spark, index_dir, m, "search_bool", queries, k)
 
 
 def bool_topk_docpart(
@@ -595,9 +622,9 @@ def bool_topk_docpart(
 ) -> DataFrame:
     """DOCUMENT-partitioned boolean batch top-k: segment rows for the union
     of the batch's terms shuffle ONCE per (generation, salt) docID cell,
-    independent of the query count (a 10^4-query batch sharing Zipf head
-    terms would otherwise shuffle each term's blobs once per subscribing
-    query); the per-query term plans ride the closure.
+    independent of the query count (the per-query shape instead decodes
+    each term's whole posting list on every worker whose queries use it);
+    the per-query term plans ride the closure.
 
     Correct per cell by construction: a doc's postings live wholly inside
     one cell (the salted grid partitions the docID space), so the cell-
@@ -610,7 +637,7 @@ def bool_topk_docpart(
     zero-score docs rank below every positive doc globally, so per-cell
     padding to k keeps the union argument exact.
 
-    One shape routes to the per-query path: a spec whose ONLY required
+    One shape routes to the per-query shape: a spec whose ONLY required
     clauses are filter context (no must/filter term, msm 0). Its ES
     zero-score tail covers filter-matching docs with NO query-term
     postings at all — docs living in cells no segment row reaches, which
@@ -618,24 +645,23 @@ def bool_topk_docpart(
     (from the intersected filter docIDs), and both paths are
     bit-identical on every other shape, so the union stays exact.
     """
-    specs, msms, structs = _bool_plans(index_dir, queries)
-    tail_qids = {
+    m = _snapshot(index_dir)
+    specs, msms, structs = _bool_plans(m, queries)
+    tail = {
         qid for qid in structs
         if not (specs[qid]["must"] or specs[qid]["filter"]) and not msms[qid]
     }
-    if tail_qids:
-        routed = bool_topk(
-            spark, index_dir,
-            [(q, r) for q, r in queries if q in tail_qids], k,
-        )
-        rest = [(q, r) for q, r in queries if q not in tail_qids]
-        if not rest:
-            return routed
-        return routed.unionByName(
-            bool_topk_docpart(spark, index_dir, rest, k)
-        )
-    planned = _plan_batch(spark, index_dir, specs, msms)
+    routed = _searcher_batch(
+        spark, index_dir, m, "search_bool",
+        [(q, r) for q, r in queries if q in tail], k,
+    ) if tail else None
+    planned = _plan_batch(
+        spark, index_dir, m,
+        {q: s for q, s in specs.items() if q not in tail}, msms,
+    )
     if planned is None:
+        if routed is not None:
+            return routed
         return spark.createDataFrame([], RESULT_SCHEMA)
     segs, state, plans = planned
     fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
@@ -678,9 +704,10 @@ def bool_topk_docpart(
                 out_q.append(qid)
                 out_d.append(d)
                 out_s.append(s)
-        return _frame(out_q, out_d, out_s, False)
+        return _frame(out_q, out_d, out_s)
 
-    return _grouped(spark, segs, plans, score_cell, kk, True)
+    cells = _cells(segs, score_cell, k)
+    return routed.unionByName(cells) if routed is not None else cells
 
 
 def _merge_cells(cells: DataFrame, k: int) -> DataFrame:
@@ -705,23 +732,21 @@ def prefix_topk(
     max_expansions: int = 50,
 ) -> DataFrame:
     """ES prefix query (scoring_boolean rewrite): expand each prefix
-    against the LIVE dictionary via a footer-stats range seek
-    (dictionary.lookup_terms_by_prefix — term-asc, capped at
-    ``max_expansions``, ES's rewrite-cap analog), then run the standard
-    batched BM25 path over the expanded terms: per-term idf over the
-    union, sorted-term fold, so scores are exactly what a plain query on
-    the expanded terms would produce. A prefix with no live expansion
-    yields no rows for that query.
+    against the LIVE dictionary of the batch's snapshot via a footer-stats
+    range seek (dictionary.lookup_terms_by_prefix — term-asc, capped at
+    ``max_expansions``, ES's rewrite-cap analog), then score the expanded
+    terms as a match query: per-term idf over the union, sorted-term fold,
+    so scores are exactly what a plain query on the expanded terms would
+    produce. A prefix with no live expansion yields no rows for that
+    query. Both steps run in the per-query shape
+    (``LocalSearcher.search_prefix`` on each worker's pinned searcher).
 
-    A prefix that tokenizes to MORE than one token is rejected: ES's
-    ``prefix`` query matches a single term, and silently using only the
-    first token would drop the rest of the input without warning."""
-    from ..sources.catalog import assert_index_readable
-    from .dictionary import lookup_terms_by_prefix
-    from .wand import wand_topk
-
-    assert_index_readable(index_dir)  # refuse closed indexes before seeks
-    expanded = []
+    A prefix that tokenizes to MORE than one token is rejected at call
+    time: ES's ``prefix`` query matches a single term, and silently using
+    only the first token would drop the rest of the input without
+    warning."""
+    m = _snapshot(index_dir)  # refuse closed indexes before anything else
+    items = []
     for qid, prefix in queries:
         toks = tokenize(prefix)
         if not toks:
@@ -732,14 +757,11 @@ def prefix_topk(
                 f"({toks}); ES prefix queries match a single term — pass "
                 "one token (use a bool/phrase query for multi-term input)"
             )
-        terms = lookup_terms_by_prefix(
-            index_dir, toks[0], max_expansions, spark=spark
-        )
-        if terms:
-            expanded.append((qid, " ".join(terms)))
-    if not expanded:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    return wand_topk(spark, index_dir, expanded, k)
+        items.append((qid, prefix))
+    return _searcher_batch(
+        spark, index_dir, m, "search_prefix", items, k,
+        max_expansions=max_expansions,
+    )
 
 
 def _contains_phrase(tokens: list[str], phrase: list[str]) -> bool:
@@ -830,10 +852,9 @@ def _cell_bounds(doc_min, doc_max) -> tuple[int, int]:
     """(lo, span) of the docID window a group of segment rows covers —
     the kernel's accumulator size. For a docpart cell the memory contract
     is that it is bounded by the (generation, salt) cell's docID span,
-    never the corpus docID space; the per-query runners use the same
-    helper over one query's rows (its observed docID range). Kept as a
-    module-level helper so the layout test can measure peak accumulator
-    size over a real index through the same code path."""
+    never the corpus docID space. Kept as a module-level helper so the
+    layout test can measure peak accumulator size over a real index
+    through the same code path."""
     lo = int(min(doc_min))
     hi = int(max(doc_max))
     return lo, hi - lo + 1
@@ -952,19 +973,13 @@ def _positional_topk(
     return out
 
 
-def _positional_runner(
-    state: dict, k: int, plans: dict, slots: dict, slop: int,
-    per_query: bool,
-):
-    """applyInPandas body of both Spark shapes of a positional batch
-    (segment rows WITH the position sidecar): per query, one query's rows
-    joined to the broadcast qmap over its OBSERVED docID range (min
-    doc_min .. max doc_max; only a head-term phrase approaches the corpus
-    span); docpart, one (generation, salt) cell's rows for every query of
+def _positional_cell(state: dict, k: int, plans: dict, slots: dict, slop: int):
+    """applyInPandas body of the docpart positional shape: one (generation,
+    salt) cell's segment rows WITH the position sidecar, every query of
     the batch over the cell span. Cell-local verification is complete — a
     doc's postings AND positions for every term live wholly inside its
-    cell — so the union of per-cell top-ks holds the global top-k, and
-    both shapes are bit-identical (sorted-term fold, one kernel)."""
+    cell — so the union of per-cell top-ks holds the global top-k,
+    bit-identical to the searcher (sorted-term fold, one kernel)."""
     fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
     seq, avgdl = state["seq"], state["avgdl"]
     term_of = {
@@ -985,51 +1000,17 @@ def _positional_runner(
             t = term_of[tid]
             d, tfn, rows_of[t] = decode_term(rows, norms, avgdl)
             dec[t] = (d - lo, tfn)
-        mine = plans
-        if per_query:
-            qid = int(pdf["query_id"].iloc[0])
-            mine = {qid: plans[qid]}
         top = _positional_topk(
-            mine, slots, dec, rows_of, lo, span, kk, slop,
+            plans, slots, dec, rows_of, lo, span, kk, slop,
             load_tombstones(tomb_path, seq),
         )
         hits = [(q, s, d) for q, pairs in top.items() for s, d in pairs]
         return _frame(
             [q for q, _s, _d in hits], [d for _q, _s, d in hits],
-            [s for _q, s, _d in hits], per_query,
+            [s for _q, s, _d in hits],
         )
 
     return run
-
-
-def _positional_batch(
-    spark, index_dir: str, queries: dict, k: int, slop: int, docpart: bool,
-) -> DataFrame:
-    """The prelude every positional Spark path shares: ``queries`` (qid ->
-    ``_positional_spec`` output) -> one segment scan WITH the position
-    sidecar -> per-query plans -> ``_positional_runner`` per query or per
-    docpart cell."""
-    planned = _plan_batch(
-        spark, index_dir, {q: e[0] for q, e in queries.items()},
-        {q: e[1] for q, e in queries.items()}, with_positions=True,
-    )
-    if planned is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    segs, state, plans = planned
-    run = _positional_runner(
-        state, k, plans, {q: e[2] for q, e in queries.items()}, slop,
-        per_query=not docpart,
-    )
-    return _grouped(spark, segs, plans, run, k, docpart)
-
-
-def _phrase_queries(queries: list[tuple[int, str]]) -> dict:
-    """A phrase batch -> qid -> ``_positional_spec`` (token-less texts
-    can match nothing and are dropped)."""
-    return {
-        int(qid): _positional_spec(ph)
-        for qid, text in queries if (ph := tokenize(text))
-    }
 
 
 def _keep_mask(eligible: np.ndarray):
@@ -1239,16 +1220,28 @@ def phrase_topk_positional_docpart(
     """DOCUMENT-partitioned positional phrase batch: the bool_topk_docpart
     shape — segment rows (WITH the pos sidecar) shuffle once per
     (generation, salt) docID cell regardless of the query count, and each
-    cell scores + position-verifies its own docs (``_positional_runner``).
+    cell scores + position-verifies its own docs (``_positional_cell``).
     Bit-identical to the per-query positional path and the source-verify
     path.
 
     This is also how head-term slop phrases parallelize: the per-query
-    runner verifies one query in one task, while each cell here verifies
+    shape verifies one query in one task, while each cell here verifies
     its own docID range concurrently."""
-    return _positional_batch(
-        spark, index_dir, _phrase_queries(queries), k, slop, docpart=True
+    m = _snapshot(index_dir)
+    # token-less texts can match nothing and are dropped
+    compiled = {
+        int(qid): _positional_spec(ph)
+        for qid, text in queries if (ph := tokenize(text))
+    }
+    planned = _plan_batch(
+        spark, index_dir, m, {q: e[0] for q, e in compiled.items()},
+        {q: e[1] for q, e in compiled.items()}, with_positions=True,
     )
+    if planned is None:
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    segs, state, plans = planned
+    slots = {q: e[2] for q, e in compiled.items()}
+    return _cells(segs, _positional_cell(state, k, plans, slots, slop), k)
 
 
 def _phrase_topk_positional(
@@ -1258,13 +1251,16 @@ def _phrase_topk_positional(
     k: int,
     slop: int,
 ) -> DataFrame:
-    """Index-side phrase top-k over a POSITIONAL (v2) index: one
-    applyInPandas group per query decodes postings, scores, decodes the
-    candidates' position blocks and verifies — no source table, no rewrite
-    guard needed (work is ∝ the phrase terms' posting volume, the same
-    bound Lucene pays)."""
-    return _positional_batch(
-        spark, index_dir, _phrase_queries(queries), k, slop, docpart=False
+    """Index-side phrase top-k over a POSITIONAL (v2) index in the
+    per-query shape: each worker answers its share with
+    ``LocalSearcher.search_phrase`` (postings, candidates, block-selected
+    position decode, verify) — no source table, no rewrite guard needed
+    (work is ∝ the phrase terms' posting volume, the same bound Lucene
+    pays)."""
+    m = _snapshot(index_dir)
+    items = [(qid, text) for qid, text in queries if tokenize(text)]
+    return _searcher_batch(
+        spark, index_dir, m, "search_phrase", items, k, slop=slop
     )
 
 
@@ -1292,36 +1288,29 @@ def match_phrase_prefix_topk(
     the ES prefix query with an any-occurrence match, scored the same
     scoring_boolean way.
 
-    Per-query one-task execution like ``_phrase_topk_positional``: the
-    same plan + slots kernel, with the expansions pooled in the last
+    Runs in the per-query shape like ``_phrase_topk_positional``: each
+    worker answers with ``LocalSearcher.search_phrase_prefix``, which
+    expands the prefix over its pinned snapshot's dictionary and runs the
+    same plan + slots kernel with the expansions pooled in the last
     slot."""
-    from ..sources.catalog import assert_index_readable
-    from .dictionary import lookup_terms_by_prefix
-
-    assert_index_readable(index_dir)
-    if not index_has_positions(index_dir):
+    m = _snapshot(index_dir)
+    if not m.get("positions"):
         raise ValueError(
             "match_phrase_prefix needs a POSITIONAL index "
             "(build_index(positions=True)) — the v1 layout cannot verify "
             "adjacency index-side"
         )
-    compiled = {}
-    for qid, text in queries:
-        toks = tokenize(text)
-        if not toks:
-            continue
-        exps = lookup_terms_by_prefix(
-            index_dir, toks[-1], max_expansions, spark=spark
-        )
-        if exps:  # no live expansion -> no match (ES: empty)
-            compiled[int(qid)] = _positional_spec(toks[:-1], exps)
-    return _positional_batch(spark, index_dir, compiled, k, 0, docpart=False)
+    items = [(qid, text) for qid, text in queries if tokenize(text)]
+    return _searcher_batch(
+        spark, index_dir, m, "search_phrase_prefix", items, k,
+        max_expansions=max_expansions,
+    )
 
 
 PHRASE_MAX_CANDIDATES = 1_000_000
 # auto-routing (docpart='auto'): a positional phrase whose terms' summed
 # document frequency exceeds this runs on the cell-parallel docpart path —
-# the per-query runner decodes ALL of those terms' postings+positions in
+# the per-query shape decodes ALL of those terms' postings+positions in
 # ONE task, so head-term phrases ("the and") serialize there while docpart
 # splits the same work across (generation, salt) cells, whose count grows
 # with the corpus. Both paths are bit-identical, so routing is purely a

@@ -150,7 +150,7 @@ def _lookup_term_info_spark(
 
 
 def lookup_term_info(
-    spark, index_dir: str, terms: list[str]
+    spark, index_dir: str, terms: list[str], manifest: dict | None = None
 ) -> dict[str, tuple[int, int]]:
     """Driver-side point lookups for a query's terms -> {term: (tid, df)}.
 
@@ -165,7 +165,9 @@ def lookup_term_info(
     Falls back to the primary dictionary when the sorted projection is
     absent (legacy layout; no pruning there, the stats never match), and
     to a broadcast-probe Spark scan when the index lives on a
-    Hadoop-filesystem URI the driver's pyarrow can't open (module doc)."""
+    Hadoop-filesystem URI the driver's pyarrow can't open (module doc).
+    ``manifest``: the snapshot to look up in (a query batch passes the one
+    it plans from); default the one committed now."""
     import bisect
 
     import pyarrow as pa
@@ -177,9 +179,9 @@ def lookup_term_info(
 
     if not terms:
         return {}
-    paths = committed_gen_paths(index_dir, "dict_by_term") or committed_gen_paths(
-        index_dir, "dictionary"
-    )
+    paths = committed_gen_paths(
+        index_dir, "dict_by_term", manifest
+    ) or committed_gen_paths(index_dir, "dictionary", manifest)
     if not paths:
         return {}
     want = sorted(set(terms))

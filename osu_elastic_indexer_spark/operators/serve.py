@@ -6,13 +6,17 @@ BATCH query path (thousands of queries per job); interactive p50 latency is
 a serving concern, so this module reads the SAME segment/dictionary/stats
 parquet directly with pyarrow. No Spark session involved.
 
-``LocalSearcher`` is the third thin driver around the scoring kernels:
-match queries run ``taat_topk``/``bmw_topk`` (wand.py), bool queries
-``score_bool`` and positional phrases boolquery.py's plan + slots kernel
-``_positional_topk``, both over the corpus window [0, len(norms)).
-Results are rank-identical to the Spark paths by construction (same
-files, same scoring code). What is serve-specific is where postings come
-from and what stays hot:
+``LocalSearcher`` is a thin driver around the scoring kernels: match
+queries run ``taat_topk``/``bmw_topk`` (wand.py), bool queries
+``score_bool`` and positional phrases and match_phrase_prefix
+boolquery.py's plan + slots kernel ``_positional_topk``, both over the
+corpus window [0, len(norms)). It is also the body of the per-query Spark
+shape: ``boolquery._searcher_batch`` ships a batch's queries to the Python
+workers, each of which answers its share on a searcher opened from the
+driver's manifest snapshot (``manifest=``) with a share of the cache
+budgets (``cache_share=``). Results are rank-identical to the docpart
+Spark shape by construction (same files, same scoring code). What is
+searcher-specific is where postings come from and what stays hot:
 
 * **One snapshot, pinned at open.** The manifest is read once; the
   searcher keeps that snapshot's committed file lists (segments,
@@ -64,7 +68,8 @@ _SEG_COLS = [
     "block_max_tf", "block_min_dl",
 ]
 
-# Decoded-postings cache budget per searcher (~16 bytes/posting). Aligned
+# Decoded-postings cache budget of a serving searcher (~16 bytes/posting;
+# the worker searchers of a per-query Spark batch split it). Aligned
 # with TAAT_MAX_POSTINGS: df-based dispatch routes terms with up to that
 # many postings to the TAAT/cache path, so a smaller budget could never
 # retain the densest head term — it would be re-read and re-decoded on
@@ -173,9 +178,18 @@ def _member_mask(farr: np.ndarray, ids: np.ndarray) -> np.ndarray:
 
 class LocalSearcher:
     """Pins one committed snapshot at open; serves top-k queries from it in
-    milliseconds (module doc)."""
+    milliseconds (module doc).
 
-    def __init__(self, index_dir: str):
+    ``manifest``: the snapshot to pin, as read by the caller; default the
+    one committed now. ``cache_share``: the fraction of the decoded-postings
+    and positional-row budgets this searcher may hold — 1.0 for a serving
+    process; a per-query Spark batch gives each worker's searcher an equal
+    share, so the workers together hold one searcher's budget."""
+
+    def __init__(
+        self, index_dir: str, manifest: dict | None = None,
+        cache_share: float = 1.0,
+    ):
         from ..sources.catalog import (
             FORMAT_VERSION,
             assert_index_readable,
@@ -186,12 +200,13 @@ class LocalSearcher:
         from .state import _parquet_files, load_norms, load_tombstones
 
         self.index_dir = index_dir
+        self._cache_share = float(cache_share)
+        # THE snapshot: every path, counter and field list below comes
+        # from this one manifest, never from a later one
+        m = manifest if manifest is not None else read_index_manifest(index_dir)
         # closed-index parity: a closed ES index rejects searches too
         # (CloseIndexCommand.cs) — a searcher must refuse to open it
-        assert_index_readable(index_dir)
-        # THE snapshot: every path, counter and field list below comes
-        # from this one manifest read, never from a later one
-        m = read_index_manifest(index_dir)
+        assert_index_readable(index_dir, m)
         if m is not None and m.get("format") != FORMAT_VERSION:
             raise RuntimeError(
                 f"index at {index_dir} has on-disk format {m.get('format')}, "
@@ -638,8 +653,6 @@ class LocalSearcher:
         snapshot never changes under a searcher, so neither do they.
         Multi-token input is rejected (ES prefix matches one term; see
         boolquery.prefix_topk)."""
-        from . import dictionary
-
         toks = tokenize(prefix)
         if not toks:
             return []
@@ -648,20 +661,50 @@ class LocalSearcher:
                 f"prefix query {prefix!r} tokenizes to {len(toks)} tokens "
                 f"({toks}); ES prefix queries match a single term"
             )
-        key = (toks[0], max_expansions)
+        terms = self._expansions(toks[0], max_expansions)
+        if not terms:
+            return []
+        return self._search_terms(terms, k)
+
+    def _expansions(self, token: str, max_expansions: int) -> list[str]:
+        """The live dictionary terms starting with ``token`` in this
+        snapshot, term-asc and capped (dictionary.lookup_terms_by_prefix
+        over the pinned dictionary files), memoized per
+        ``(token, max_expansions)``."""
+        from . import dictionary
+
+        key = (token, max_expansions)
         terms = self._prefix_terms.hit(key)
         if terms is None:
             expanded = dictionary.lookup_terms_by_prefix(
-                self.index_dir, toks[0], max_expansions,
-                files=self._dict_files,
+                self.index_dir, token, max_expansions, files=self._dict_files,
             )
             # as search() would tokenize the joined expansion
             terms = sorted(set(tokenize(" ".join(expanded))))
             self._prefix_terms[key] = terms
             self._prefix_terms.evict(_PREFIX_MEMO_MAX_TERMS, keep=1)
-        if not terms:
+        return terms
+
+    def search_phrase_prefix(
+        self, text: str, k: int = 10, max_expansions: int = 50
+    ) -> list[tuple[int, float]]:
+        """ES ``match_phrase_prefix`` serving (boolquery.
+        match_phrase_prefix_topk's semantics): the full tokens as exact
+        phrase slots followed by one last slot pooling the prefix's capped
+        expansions from this snapshot's dictionary, through the positional
+        kernel. Needs a positional index."""
+        if not self.positions:
+            raise ValueError(
+                "match_phrase_prefix needs a POSITIONAL index "
+                "(build_index(positions=True))"
+            )
+        toks = tokenize(text)
+        if not toks:
             return []
-        return self._search_terms(terms, k)
+        exps = self._expansions(toks[-1], max_expansions)
+        if not exps:  # no live expansion -> no match (ES: empty)
+            return []
+        return self._search_positional(toks[:-1], k, 0, exps)
 
     def search_phrase(
         self, phrase: str, source_path: str | None = None, k: int = 10,
@@ -750,15 +793,16 @@ class LocalSearcher:
         return out[:k]
 
     def _search_positional(
-        self, ph: list[str], k: int, slop: int
+        self, full: list[str], k: int, slop: int, pooled: list[str] = ()
     ) -> list[tuple[int, float]]:
-        """A phrase on the positional index: its plan + slots
+        """A phrase (``full`` tokens) or match_phrase_prefix (``pooled``
+        expansions) on the positional index: its plan + slots
         (boolquery._positional_spec) through ``_positional_topk`` over the
         window [0, len(norms)), fed by the two hot caches."""
         from .boolquery import _plan_terms, _positional_spec, _positional_topk
 
-        spec, msm, slots = _positional_spec(ph)
-        self._resolve_terms(spec["must"])
+        spec, msm, slots = _positional_spec(full, pooled)
+        self._resolve_terms(spec["must"] + spec["should"])
         plan = _plan_terms(spec, msm, self._dict, self.n_docs)
         if plan is None:
             return []
@@ -780,7 +824,9 @@ class LocalSearcher:
                 ]
         rows_of = {t: self._pos_decoded.hit(t) for t, _i in infos}
         # never evicts the entries of the query in flight
-        self._pos_decoded.evict(_POS_CACHE_MAX_BYTES, keep=len(infos))
+        self._pos_decoded.evict(
+            int(_POS_CACHE_MAX_BYTES * self._cache_share), keep=len(infos)
+        )
         top = _positional_topk(
             {0: plan}, {0: slots}, dec, rows_of, 0, self.norms.size, k, slop,
             self.tombstones,
@@ -821,7 +867,24 @@ class LocalSearcher:
         at least the most recent entry: evicting the term just decoded
         would guarantee a re-decode on its next appearance while buying
         nothing for the terms that remain."""
-        self._decoded.evict(_DECODE_CACHE_MAX_POSTINGS, keep=1)
+        self._decoded.evict(self._decode_budget(), keep=1)
+
+    def _decode_budget(self) -> int:
+        """This searcher's share of the decoded-postings budget."""
+        return int(_DECODE_CACHE_MAX_POSTINGS * self._cache_share)
+
+    def prefetch(self, terms: list[str]) -> None:
+        """Resolve ``terms`` and decode the uncached ones ahead of a batch
+        of queries over them: one dictionary read and one segment read for
+        the batch instead of one per query. Decoding is skipped (each query
+        then decodes its own terms) when the terms' postings exceed this
+        searcher's decode budget."""
+        self._resolve_terms(terms)
+        infos = [
+            (t, self._dict[t]) for t in terms if self._dict.get(t) is not None
+        ]
+        if sum(df for _t, (_tid, df) in infos) <= self._decode_budget():
+            self._decoded_for(infos)
 
 
 def searcher_for_catalog(root: str, alias: str = "documents") -> LocalSearcher:

@@ -13,11 +13,13 @@ around the pure-numpy kernel in this module:
   zero-score tail, the one bool scorer.
 
 The drivers differ only in where postings come from and how big the window
-is: the per-query ``applyInPandas`` runner and the docpart cell scorer in
-boolquery.py, and ``LocalSearcher`` in serve.py. ``taat_topk`` is the
-should-only driver (decode cache, single-term shortcut); ``bmw_topk`` the
-block-max WAND cursor that replaces it above ``TAAT_MAX_POSTINGS``.
-``wand_topk``/``wand_topk_docpart`` are should-only bool queries.
+is: the docpart cell scorer in boolquery.py (window = the cell span) and
+``LocalSearcher`` in serve.py (window = the corpus), which is also the body
+of the per-query Spark shape (``boolquery._searcher_batch``). ``taat_topk``
+is the searcher's should-only driver (decode cache, single-term shortcut);
+``bmw_topk`` the block-max WAND cursor that replaces it above
+``TAAT_MAX_POSTINGS``. ``wand_topk`` runs ``LocalSearcher.search`` per
+query; ``wand_topk_docpart`` is a should-only bool query.
 
 Exactness discipline (SURVEY.md §4 #5): upper bounds are used ONLY for
 skipping (skip iff bound < current kth score, strictly); final scores are
@@ -470,13 +472,12 @@ def topk_from_dense(
 # holds. Beyond the cap, per-term decode volume makes block-max skipping
 # the only sub-linear option.
 #
-# Masked queries on the per-query runners (boolquery._bool_runner /
-# _positional_runner) tighten this envelope to the query's OBSERVED docID
-# range (min doc_min .. max doc_max over its segment rows ~ 11 bytes per
-# doc-in-range): only head-term queries approach O(n_docs). Large batches
-# on any path belong on the docpart variants, whose accumulators are
-# sized to the (generation, salt) CELL span only (boolquery._cell_bounds;
-# pinned by tests/test_boolquery.py::test_docpart_accumulators_are_cell_sized).
+# The dispatch lives in LocalSearcher.search, which also answers the
+# per-query Spark shape (wand_topk): there, as for bool and phrase queries,
+# a query's accumulators span the corpus window (~11 bytes per doc). Large
+# batches belong on the docpart variants, whose accumulators are sized to
+# the (generation, salt) CELL span only (boolquery._cell_bounds; pinned by
+# tests/test_boolquery.py::test_docpart_accumulators_are_cell_sized).
 TAAT_MAX_POSTINGS = 10_000_000
 
 
@@ -615,14 +616,6 @@ def _segment_rows(pdf: pd.DataFrame, key: str) -> dict:
     return out
 
 
-# driver-side cache of small per-index state (stats row + tombstone set),
-# keyed by the manifest's monotonic commit_seq so any committed change
-# invalidates it (mtime is unreliable: coarse-granularity filesystems would
-# serve stale state for two commits in the same second) — repeated queries
-# skip two Spark jobs each (the p50-latency win)
-_INDEX_STATE_CACHE: dict[tuple, tuple] = {}
-
-
 def manifest_commit_seq(index_dir: str) -> int:
     """The index's monotonic commit counter (0 if no manifest)."""
     import json
@@ -635,22 +628,25 @@ def manifest_commit_seq(index_dir: str) -> int:
         return int(json.load(f).get("commit_seq", 0))
 
 
-def _index_state(spark: SparkSession, index_dir: str):
-    """Driver-side state is SCALARS ONLY (n_docs, avgdl, commit_seq) — the
-    tombstone set and the norms array are loaded executor-side from the
-    index tables (operators/state.py), never collected to the driver: at
-    100 TB with churn a driver collect proportional to delete volume is
-    exactly what SURVEY §7.4 #5 forbids."""
+def _index_state(index_dir: str, manifest: dict):
+    """(n_docs, avgdl, commit_seq) of the snapshot ``manifest`` commits:
+    the one-row stats table read with pyarrow, as ``LocalSearcher`` reads
+    it — no Spark job. Driver-side state is SCALARS ONLY — the tombstone
+    set and the norms array are loaded executor-side from the index tables
+    (operators/state.py), never collected to the driver: at 100 TB with
+    churn a driver collect proportional to delete volume is exactly what
+    SURVEY §7.4 #5 forbids."""
+    import pyarrow.parquet as pq
+
     from ..sources.catalog import resolve_table_dir
 
-    key = (index_dir, manifest_commit_seq(index_dir))
-    if key in _INDEX_STATE_CACHE:
-        return _INDEX_STATE_CACHE[key]
-    stats = spark.read.parquet(resolve_table_dir(index_dir, "stats")).collect()[0]
-    state = (int(stats.n_docs), float(stats.avgdl), key[1])
-    _INDEX_STATE_CACHE.clear()  # keep at most a handful of indexes
-    _INDEX_STATE_CACHE[key] = state
-    return state
+    st = pq.read_table(
+        resolve_table_dir(index_dir, "stats", manifest)
+    ).to_pylist()[0]
+    return (
+        int(st["n_docs"]), float(st["avgdl"]),
+        int(manifest.get("commit_seq", 0)),
+    )
 
 
 def _should_specs(queries: list[tuple[int, str]]) -> list[tuple[int, dict]]:
@@ -667,20 +663,20 @@ def wand_topk(
 ) -> DataFrame:
     """Batched top-k over a built index: one Spark job for all queries.
 
-    -> DataFrame (query_id, rank, doc_id, score). A match query is a
-    should-only bool query (``boolquery.bool_topk``): segment rows for the
-    batch vocabulary are scanned once and joined to the per-query term map,
-    and each query runs ``taat_topk`` — or ``bmw_topk`` above
-    ``TAAT_MAX_POSTINGS`` — in one applyInPandas group. Queries whose terms
-    are all absent produce no rows (empty result — matches the oracle).
+    -> DataFrame (query_id, rank, doc_id, score). The batch ships queries,
+    not index data (``boolquery._searcher_batch``): each Python worker
+    answers its share with ``LocalSearcher.search`` — ``taat_topk``, or
+    ``bmw_topk`` above ``TAAT_MAX_POSTINGS`` — on a searcher pinned to the
+    snapshot read here, at call time. Queries whose terms are all absent
+    produce no rows (empty result — matches the oracle).
     """
-    from ..sources.catalog import assert_index_readable
-    from .boolquery import bool_topk
+    from .boolquery import _searcher_batch, _snapshot
 
     # closed-index parity: a closed ES index rejects searches too
-    # (CloseIndexCommand.cs) — refuse before planning anything
-    assert_index_readable(index_dir)
-    return bool_topk(spark, index_dir, _should_specs(queries), k)
+    # (CloseIndexCommand.cs) — _snapshot refuses before planning anything
+    m = _snapshot(index_dir)
+    items = [(qid, text) for qid, text in queries if tokenize(text)]
+    return _searcher_batch(spark, index_dir, m, "search", items, k)
 
 
 def wand_topk_docpart(
@@ -691,20 +687,18 @@ def wand_topk_docpart(
 ) -> DataFrame:
     """DOCUMENT-partitioned batch top-k: queries go to the data.
 
-    ``wand_topk`` joins segment rows to the query map, so each term's
-    compressed blobs are shuffled once PER SUBSCRIBING QUERY — fine for a
-    handful of queries, but a 10^4-query batch sharing Zipf head terms
-    multiplies the shuffle by the subscription count. This is the scale
-    shape for large batches (the sharded-Lucene form): a should-only
-    ``boolquery.bool_topk_docpart`` — segment rows shuffle ONCE per
-    (generation, salt) docID cell, each cell scores every query, and one
-    tiny window merges the per-cell winners. Rank-identical (bit-identical
-    scores) to wand_topk and the oracle.
+    ``wand_topk`` sends queries to worker-side searchers, each of which
+    decodes the whole posting list of every term its queries use into a
+    corpus-wide accumulator — right for serving-sized batches, but a
+    10^4-query batch sharing Zipf head terms repeats that decode on every
+    worker. This is the scale shape for large batches (the sharded-Lucene
+    form): a should-only ``boolquery.bool_topk_docpart`` — segment rows
+    shuffle ONCE per (generation, salt) docID cell, each cell scores every
+    query, and one tiny window merges the per-cell winners.
+    Rank-identical (bit-identical scores) to wand_topk and the oracle.
     """
-    from ..sources.catalog import assert_index_readable
     from .boolquery import bool_topk_docpart
 
-    assert_index_readable(index_dir)  # closed-index parity (see wand_topk)
     return bool_topk_docpart(spark, index_dir, _should_specs(queries), k)
 
 

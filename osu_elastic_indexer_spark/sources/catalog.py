@@ -52,14 +52,17 @@ def read_index_manifest(index_dir: str) -> dict | None:
     return _read_json(os.path.join(index_dir, "manifest.json"), None)
 
 
-def assert_index_readable(index_dir: str) -> None:
+def assert_index_readable(
+    index_dir: str, manifest: dict | None = None
+) -> None:
     """Closed-index READ refusal: in the reference, a closed ES index
     rejects searches as well as writes (CloseIndexCommand.cs; the alias
     cutover closes retired indices, OsuElasticClient.cs:70-86) — an
     operator draining an old version must notice, not silently keep
     serving it. Readers resolve their snapshot through the manifest
-    anyway, so the status check costs nothing extra."""
-    m = read_index_manifest(index_dir)
+    anyway, so the status check costs nothing extra. ``manifest``: the
+    snapshot a reader already pinned; default the one on disk now."""
+    m = manifest if manifest is not None else read_index_manifest(index_dir)
     if m is not None and m.get("status") == "closed":
         raise IndexClosedError(
             f"index at {index_dir} is closed — reopen it (open_index / "

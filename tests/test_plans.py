@@ -251,12 +251,27 @@ def test_phrase_verify_joins_are_broadcast_pinned(spark, tmp_path):
     assert "ShuffledHashJoin" not in plan, plan
 
 
+def _assert_ships_queries(df) -> None:
+    """The per-query shape ships queries, not index data: one Python
+    map-in-Arrow over local query rows (a Range), no segments scan and no
+    exchange of anything."""
+    plan = _plan(df)
+    assert plan.count("MapInArrow") == 1, plan
+    assert "Range" in plan, plan
+    assert "FileScan" not in plan, plan
+    assert "Exchange" not in plan, plan
+    assert "FlatMapGroupsInPandas" not in plan, plan
+
+
 def test_bool_query_plan_prunes_and_broadcasts(spark, tmp_path):
-    """bool_topk must keep the wand scan discipline: term_id IN pushed to
-    the segments scan (row-group pruning), the role-bit query map joined by
-    BROADCAST (never a shuffle of segment blobs against a 10-row map), and
-    per-query scoring in one FlatMapGroupsInPandas."""
-    from osu_elastic_indexer_spark.operators.boolquery import bool_topk
+    """bool_topk runs the per-query shape (``_assert_ships_queries``);
+    bool_topk_docpart keeps the scan discipline: term_id IN pushed to the
+    segments scan (row-group pruning) and per-cell scoring in one
+    FlatMapGroupsInPandas."""
+    from osu_elastic_indexer_spark.operators.boolquery import (
+        bool_topk,
+        bool_topk_docpart,
+    )
     from osu_elastic_indexer_spark.operators.build import build_index
     from osu_elastic_indexer_spark.sources.catalog import Catalog
     from osu_elastic_indexer_spark.sources.fixtures import write_corpus
@@ -264,54 +279,53 @@ def test_bool_query_plan_prunes_and_broadcasts(spark, tmp_path):
     p = write_corpus(str(tmp_path / "c.parquet"), 300)
     cat = Catalog(str(tmp_path / "idx"))
     build_index(spark, spark.read.parquet(p), cat, "v1")
-    df = bool_topk(
-        spark, cat.index_dir("v1"),
-        [(0, {"must": "the", "should": "w00100", "must_not": "w00200"})],
-        k=5,
-    )
-    full = df._jdf.queryExecution().toString()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    spec = [(0, {"must": "the", "should": "w00100", "must_not": "w00200"})]
+    df = bool_topk(spark, cat.index_dir("v1"), spec, k=5)
+    _assert_ships_queries(df)
+    assert df.collect()
+    dfd = bool_topk_docpart(spark, cat.index_dir("v1"), spec, k=5)
+    full = dfd._jdf.queryExecution().toString()
     assert "PushedFilters" in full and "term_id" in full.split("PushedFilters")[-1]
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "FlatMapGroupsInPandas" in plan
+    assert "FlatMapGroupsInPandas" in _plan(dfd)
 
 
 def test_positional_phrase_plan_prunes_and_broadcasts(spark, tmp_path):
-    """The positional phrase runner keeps the same scan discipline as
-    bool/wand: term_id IN pushed to the segments scan, qmap broadcast,
-    one FlatMapGroupsInPandas per shape — and the positions-FREE paths on
-    the same index must NOT read the sidecar (ReadSchema pruning)."""
-    from osu_elastic_indexer_spark.operators.boolquery import phrase_topk
+    """The positional phrase keeps the per-query discipline of bool/wand
+    (``_assert_ships_queries``, match_phrase_prefix and prefix too); its
+    docpart shape reads the position sidecar in one FlatMapGroupsInPandas,
+    and a positions-FREE docpart query on the same index must NOT read
+    the sidecar (ReadSchema pruning)."""
+    from osu_elastic_indexer_spark.operators.boolquery import (
+        match_phrase_prefix_topk,
+        phrase_topk,
+        prefix_topk,
+    )
     from osu_elastic_indexer_spark.operators.build import build_index
-    from osu_elastic_indexer_spark.operators.wand import wand_topk
+    from osu_elastic_indexer_spark.operators.wand import (
+        wand_topk,
+        wand_topk_docpart,
+    )
     from osu_elastic_indexer_spark.sources.catalog import Catalog
     from osu_elastic_indexer_spark.sources.fixtures import write_corpus
 
     p = write_corpus(str(tmp_path / "c.parquet"), 300)
     cat = Catalog(str(tmp_path / "idx"))
     build_index(spark, spark.read.parquet(p), cat, "v1", positions=True)
-    df = phrase_topk(
-        spark, cat.index_dir("v1"), None, [(0, "the and")], k=5
-    )
-    full = df._jdf.queryExecution().toString()
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "PushedFilters" in full and "term_id" in full.split("PushedFilters")[-1]
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-    assert "FlatMapGroupsInPandas" in plan
-    assert "pos_blob" in plan  # the positional runner DOES read the sidecar
-    dfd = phrase_topk(
-        spark, cat.index_dir("v1"), None, [(0, "the and")], k=5, docpart=True
-    )
-    pland = dfd._jdf.queryExecution().executedPlan().toString()
+    idx = cat.index_dir("v1")
+    for df in (
+        phrase_topk(spark, idx, None, [(0, "the and")], k=5),
+        match_phrase_prefix_topk(spark, idx, [(0, "the a")], k=5),
+        prefix_topk(spark, idx, [(0, "w001")], k=5),
+        wand_topk(spark, idx, [(0, "the and")], 5),
+    ):
+        _assert_ships_queries(df)
+        assert df.collect()
+    dfd = phrase_topk(spark, idx, None, [(0, "the and")], k=5, docpart=True)
+    pland = _plan(dfd)
     assert "FlatMapGroupsInPandas" in pland and "pos_blob" in pland
     # positions-free query on the SAME index: sidecar pruned from the scan
-    wplan = (
-        wand_topk(spark, cat.index_dir("v1"), [(0, "the and")], 5)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "pos_blob" not in wplan
+    wplan = _plan(wand_topk_docpart(spark, idx, [(0, "the and")], 5))
+    assert "FileScan" in wplan and "pos_blob" not in wplan
 
 
 def test_terms_agg_plan_partial_agg_single_exchange(spark, tmp_path):

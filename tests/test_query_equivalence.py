@@ -1,6 +1,7 @@
 """Differential fuzz across the three physical query shapes: per-query
-``applyInPandas`` (``bool_topk`` / ``wand_topk`` / ``phrase_topk``),
-document-partitioned cells (``*_docpart``) and the no-Spark
+Spark batches (``bool_topk`` / ``wand_topk`` / ``phrase_topk`` /
+``match_phrase_prefix_topk``, each a ``mapInArrow`` over worker-side
+searchers), document-partitioned cells (``*_docpart``) and the no-Spark
 ``LocalSearcher`` are drivers around one scoring kernel, so on random specs
 they must agree with each other and with the pure-python oracle EXACTLY —
 same docs, same order, same float scores — over a multi-generation index
@@ -328,5 +329,7 @@ def test_match_phrase_prefix_agrees_with_oracle(spark, pos_world):
                 w["oracle"], w["texts"], q, k, max_expansions
             )
             assert got.get(qid, []) == want, (qid, q, max_expansions)
+            served = w["searcher"].search_phrase_prefix(q, k, max_expansions)
+            assert served == want, (qid, q, max_expansions)
 
     check()
