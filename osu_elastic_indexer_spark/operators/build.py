@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import codec
+from ..session import driver_frame
 from ..sources.catalog import Catalog
 
 SEGMENT_SCHEMA = (
@@ -505,8 +506,8 @@ def _materialize_forward_direct(
     kw_sel = [F.col(c).cast("string").alias(c) for c in keyword_cols]
     num_sel = [F.col(c).cast("double").alias(c) for c in numeric_cols]
     if offsets:
-        off_df = spark.createDataFrame(
-            sorted(offsets.items()), "pid int, off bigint"
+        off_df = driver_frame(
+            spark, sorted(offsets.items()), "pid int, off bigint"
         )
         dm = (
             adds.select("url", "warc_ts", *kw_sel, *num_sel)
@@ -637,7 +638,7 @@ def materialize_forward(
         offsets.append((pid, acc))
         acc += counts[pid]
     if offsets:
-        off_df = spark.createDataFrame(offsets, "pid int, off bigint")
+        off_df = driver_frame(spark, offsets, "pid int, off bigint")
         with_ids = stage.join(F.broadcast(off_df), "pid").withColumn(
             "doc_id", F.col("off") + F.col("pos")
         )

@@ -103,6 +103,7 @@ from ..operators.build import (
 from ..operators.docmap import assign_dense_ids
 from ..operators.routing import should_index_expr, with_should_index
 from ..operators.state import _parquet_files
+from ..session import driver_frame
 from ..sources.catalog import (
     Catalog,
     clean_orphan_generations,
@@ -136,7 +137,7 @@ def _read_committed(
     inferring the table's, which costs a footer-reading Spark job."""
     paths = committed_gen_paths(index_dir, table)
     if not paths:
-        return spark.createDataFrame([], schema)
+        return driver_frame(spark, [], schema)
     reader = spark.read.schema(schema) if pinned else spark.read
     return reader.parquet(*paths)
 
@@ -472,15 +473,15 @@ def _apply_batch(
                 (int(max_tid) + 1 + i, t, delta[t])
                 for i, t in enumerate(fresh)
             ]
-            dict_delta = spark.createDataFrame(
-                dict_rows, "term_id bigint, term string, df bigint"
+            dict_delta = driver_frame(
+                spark, dict_rows, "term_id bigint, term string, df bigint"
             )
         else:
             # degenerate giant-vocab batch (approaching rebuild volume): a
             # probe this wide costs more than the scan it prunes — fall
             # back to the distributed semi-join + dense-rank assignment
-            dels = spark.createDataFrame(
-                sorted(deleted["df"].items()), "term string, dels bigint"
+            dels = driver_frame(
+                spark, sorted(deleted["df"].items()), "term string, dels bigint"
             )
             deltas = add_df.join(dels, "term", "full").select(
                 "term",

@@ -11,6 +11,7 @@ from osu_elastic_indexer_spark import oracle
 from osu_elastic_indexer_spark.functions.textprep import extract_text
 from osu_elastic_indexer_spark.operators.build import build_index
 from osu_elastic_indexer_spark.operators.wand import wand_topk_with_urls
+from osu_elastic_indexer_spark.session import driver_frame
 from osu_elastic_indexer_spark.sources.catalog import Catalog
 from osu_elastic_indexer_spark.sources.fixtures import (
     evolve_corpus,
@@ -18,6 +19,8 @@ from osu_elastic_indexer_spark.sources.fixtures import (
     reference_queries,
 )
 from osu_elastic_indexer_spark.streaming.incremental import (
+    TOMB_SCHEMA,
+    _read_committed,
     backfill_with_switch,
     compact_index,
     incremental_update,
@@ -877,3 +880,26 @@ def test_commit_jobs_named_by_phase(spark, evolved, tmp_path_factory):
     assert rec["wall_sec"] >= 0
     for p in phases:
         assert rec[f"{p}_s"] >= 0
+
+
+def test_driver_tables_run_no_python_tasks(spark, tmp_path):
+    """A commit's driver-held tables — an absent table read as empty (the
+    first commit's tombstones), the dictionary delta, the staging offsets —
+    ship to the JVM as Arrow batches: scanning them runs no Python worker.
+    A ``createDataFrame`` of a Python list is a Python RDD, one Python
+    task per core on every scan."""
+
+    def lineage(df):
+        return df._jdf.queryExecution().toRdd().toDebugString()
+
+    schema = "term_id bigint, term string, df bigint"
+    rows = [(3, "b", 2), (1, "a", -1)]
+    assert "PythonRDD" in lineage(spark.createDataFrame(rows, schema))
+    df = driver_frame(spark, rows, schema)
+    assert df.schema.simpleString() == "struct<term_id:bigint,term:string,df:bigint>"
+    assert sorted(tuple(r) for r in df.collect()) == sorted(rows)
+    empty = _read_committed(spark, str(tmp_path), "tombstones", TOMB_SCHEMA, pinned=True)
+    assert empty.columns == ["doc_id"] and empty.count() == 0
+    assert driver_frame(spark, [], "pid int, off bigint").count() == 0
+    for d in (df, empty):
+        assert "PythonRDD" not in lineage(d), lineage(d)
