@@ -123,6 +123,47 @@ def delta_decode(gaps: np.ndarray) -> np.ndarray:
 
 
 # ---------------------------------------------------------------------------
+# run-grained kernels shared by the encoders and the build's Arrow passes
+# ---------------------------------------------------------------------------
+
+
+def run_delta_gaps(values: np.ndarray, run_starts: np.ndarray) -> np.ndarray:
+    """Delta gaps of many runs stored back to back, each run restarting
+    with its first value stored +1 (``delta_encode`` per run, in one diff
+    + one scatter). ``run_starts`` must include 0 when ``values`` is
+    non-empty. Runs are blocks for the docs blob and postings for the
+    positions sidecar."""
+    n = values.size
+    gaps = np.empty(n, dtype=np.uint64)
+    if n == 0:
+        return gaps
+    gaps[0] = np.uint64(values[0] + 1)
+    if n > 1:
+        gaps[1:] = np.diff(values).astype(np.uint64)
+    gaps[run_starts] = (values[run_starts] + 1).astype(np.uint64)
+    return gaps
+
+
+def gather_runs(
+    flat: np.ndarray, run_starts: np.ndarray, run_lens: np.ndarray
+) -> np.ndarray:
+    """Gather variable-length runs out of ``flat`` in a NEW run order:
+    run i of the output is flat[run_starts[i] : run_starts[i]+run_lens[i]].
+    One np.repeat + one arange — the per-posting permutation of position
+    runs that the build's invert and merge sorts and the query-side
+    position verify need."""
+    total = int(run_lens.sum())
+    if total == 0:
+        return np.empty(0, dtype=flat.dtype)
+    new_prefix = np.zeros(run_lens.size, dtype=np.int64)
+    np.cumsum(run_lens[:-1], out=new_prefix[1:])
+    idx = np.repeat(run_starts, run_lens) + (
+        np.arange(total, dtype=np.int64) - np.repeat(new_prefix, run_lens)
+    )
+    return flat[idx]
+
+
+# ---------------------------------------------------------------------------
 # block-addressable posting-list encode/decode
 # ---------------------------------------------------------------------------
 
@@ -159,15 +200,9 @@ def encode_postings(
     starts = np.arange(0, n, BLOCK, dtype=np.int64)
     ends = np.minimum(starts + BLOCK, n)
 
-    # block-local delta gaps computed in ONE vectorized pass: ordinary diff,
-    # then every block's first entry reset to doc_id+1 (encode/decode are
+    # block-local delta gaps in ONE vectorized pass (encode/decode are
     # O(list) with no per-block python loop — this is the build hot path)
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = np.uint64(doc_ids[0] + 1)
-    if n > 1:
-        gaps[1:] = np.diff(doc_ids).astype(np.uint64)
-    gaps[starts] = (doc_ids[starts] + 1).astype(np.uint64)
-
+    gaps = run_delta_gaps(doc_ids, starts)
     tfs_u = tfs.astype(np.uint64)
 
     def offs_for(vals: np.ndarray) -> np.ndarray:
@@ -298,11 +333,7 @@ def encode_positions(positions: np.ndarray, tfs: np.ndarray) -> dict:
         }
     p_starts = np.zeros(n_post, dtype=np.int64)
     np.cumsum(tfs[:-1], out=p_starts[1:])
-    gaps = np.empty(n, dtype=np.uint64)
-    gaps[0] = np.uint64(positions[0] + 1)
-    if n > 1:
-        gaps[1:] = np.diff(positions).astype(np.uint64)
-    gaps[p_starts] = (positions[p_starts] + 1).astype(np.uint64)
+    gaps = run_delta_gaps(positions, p_starts)
 
     n_blocks = (n_post + BLOCK - 1) // BLOCK
     block_post_starts = np.arange(0, n_post, BLOCK, dtype=np.int64)

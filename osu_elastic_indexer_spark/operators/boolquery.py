@@ -609,7 +609,11 @@ def bool_topk(
     its share with ``LocalSearcher.search_bool`` on the snapshot read
     here.
     """
-    m = _snapshot(index_dir)
+    return _bool_topk(spark, index_dir, _snapshot(index_dir), queries, k)
+
+
+def _bool_topk(spark, index_dir: str, m: dict, queries, k: int) -> DataFrame:
+    """``bool_topk`` on the snapshot ``m`` the caller read."""
     _bool_plans(m, queries)  # raise on an unusable spec before any job
     return _searcher_batch(spark, index_dir, m, "search_bool", queries, k)
 
@@ -645,7 +649,13 @@ def bool_topk_docpart(
     (from the intersected filter docIDs), and both paths are
     bit-identical on every other shape, so the union stays exact.
     """
-    m = _snapshot(index_dir)
+    return _bool_topk_docpart(spark, index_dir, _snapshot(index_dir), queries, k)
+
+
+def _bool_topk_docpart(
+    spark, index_dir: str, m: dict, queries, k: int
+) -> DataFrame:
+    """``bool_topk_docpart`` on the snapshot ``m`` the caller read."""
     specs, msms, structs = _bool_plans(m, queries)
     tail = {
         qid for qid in structs
@@ -1070,22 +1080,6 @@ def _unique_of_sorted(a: np.ndarray) -> np.ndarray:
     return a[np.r_[True, a[1:] != a[:-1]]]
 
 
-def _gather_runs_np(
-    flat: np.ndarray, run_starts: np.ndarray, run_lens: np.ndarray
-) -> np.ndarray:
-    """Variable-length run gather (same as build._gather_runs; local copy
-    keeps the query path free of the build module on executors)."""
-    total = int(run_lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=flat.dtype)
-    new_prefix = np.zeros(run_lens.size, dtype=np.int64)
-    np.cumsum(run_lens[:-1], out=new_prefix[1:])
-    idx = np.repeat(run_starts, run_lens) + (
-        np.arange(total, dtype=np.int64) - np.repeat(new_prefix, run_lens)
-    )
-    return flat[idx]
-
-
 def _slot_occurrences(slot: tuple, decoded: dict, doc: int) -> np.ndarray:
     """A slot's pooled positions in ``doc``: the occurrence runs of every
     slot term holding the doc."""
@@ -1165,7 +1159,7 @@ def _verify_positions_cell(
                 pp = poss
             else:
                 dpp = np.repeat(d[keep], tf[keep])
-                pp = _gather_runs_np(poss, pstart[:-1][keep], tf[keep])
+                pp = codec.gather_runs(poss, pstart[:-1][keep], tf[keep])
             parts.append(dpp * np.int64(span) + (pp - s + m))
         if not parts:
             return np.empty(0, dtype=np.int64)
@@ -1227,7 +1221,15 @@ def phrase_topk_positional_docpart(
     This is also how head-term slop phrases parallelize: the per-query
     shape verifies one query in one task, while each cell here verifies
     its own docID range concurrently."""
-    m = _snapshot(index_dir)
+    return _phrase_docpart(
+        spark, index_dir, _snapshot(index_dir), queries, k, slop
+    )
+
+
+def _phrase_docpart(
+    spark, index_dir: str, m: dict, queries, k: int, slop: int
+) -> DataFrame:
+    """``phrase_topk_positional_docpart`` on the snapshot ``m``."""
     # token-less texts can match nothing and are dropped
     compiled = {
         int(qid): _positional_spec(ph)
@@ -1247,6 +1249,7 @@ def phrase_topk_positional_docpart(
 def _phrase_topk_positional(
     spark: SparkSession,
     index_dir: str,
+    m: dict,
     queries: list[tuple[int, str]],
     k: int,
     slop: int,
@@ -1256,8 +1259,7 @@ def _phrase_topk_positional(
     ``LocalSearcher.search_phrase`` (postings, candidates, block-selected
     position decode, verify) — no source table, no rewrite guard needed
     (work is ∝ the phrase terms' posting volume, the same bound Lucene
-    pays)."""
-    m = _snapshot(index_dir)
+    pays). ``m``: the snapshot the caller planned from."""
     items = [(qid, text) for qid, text in queries if tokenize(text)]
     return _searcher_batch(
         spark, index_dir, m, "search_phrase", items, k, slop=slop
@@ -1373,19 +1375,26 @@ def phrase_topk(
         raise ValueError("use_positions must be 'auto', 'never', or 'require'")
     if docpart not in (True, False, "auto"):
         raise ValueError("docpart must be True, False, or 'auto'")
+    # ONE manifest read plans the whole call: the route, the 'auto' df
+    # split and both halves of the batch (or the candidates and the
+    # docmap of the source-verify route) come from it, so a commit
+    # landing mid-call cannot answer part of the batch from a newer
+    # generation
+    m = _snapshot(index_dir)
     # positional (v2) route: the index answers phrases alone — no source
     # scan, no candidate guard (work ∝ the phrase terms' posting volume);
     # docpart routes to the cell-parallel shape. 'auto' (default) splits
     # the batch by the terms' summed df — a driver-side pyarrow dictionary
     # seek, no Spark job — so head-term phrases land on docpart without
     # the caller knowing the corpus statistics (PHRASE_DOCPART_DF_SUM).
-    if use_positions != "never" and index_has_positions(index_dir):
+    if use_positions != "never" and m.get("positions"):
         if docpart == "auto":
             from .dictionary import lookup_term_info
 
             phs = {int(qid): set(tokenize(text)) for qid, text in queries}
             ti = lookup_term_info(
-                spark, index_dir, sorted({t for s in phs.values() for t in s})
+                spark, index_dir, sorted({t for s in phs.values() for t in s}),
+                m,
             )
             heavy = {
                 qid
@@ -1396,24 +1405,22 @@ def phrase_topk(
             }
             parts = []
             if heavy:
-                parts.append(phrase_topk_positional_docpart(
-                    spark, index_dir,
+                parts.append(_phrase_docpart(
+                    spark, index_dir, m,
                     [(q, t) for q, t in queries if int(q) in heavy], k, slop,
                 ))
             light = [(q, t) for q, t in queries if int(q) not in heavy]
             if light or not parts:
                 parts.append(_phrase_topk_positional(
-                    spark, index_dir, light, k, slop
+                    spark, index_dir, m, light, k, slop
                 ))
             out = parts[0]
             for p in parts[1:]:
                 out = out.unionByName(p)
             return out
         if docpart:
-            return phrase_topk_positional_docpart(
-                spark, index_dir, queries, k, slop
-            )
-        return _phrase_topk_positional(spark, index_dir, queries, k, slop)
+            return _phrase_docpart(spark, index_dir, m, queries, k, slop)
+        return _phrase_topk_positional(spark, index_dir, m, queries, k, slop)
     if use_positions == "require":
         raise ValueError(
             "use_positions='require' needs a positional index "
@@ -1442,8 +1449,8 @@ def phrase_topk(
     # for 10^4-phrase batches sharing head terms
     # ('auto' means per-query here: the source-verify guard already refuses
     # head-term phrases, so candidates are few and per-query joins win)
-    gen = bool_topk_docpart if docpart is True else bool_topk
-    cands = gen(spark, index_dir, bool_queries, k=2**31 - 1)
+    gen = _bool_topk_docpart if docpart is True else _bool_topk
+    cands = gen(spark, index_dir, m, bool_queries, 2**31 - 1)
     # bound before pinning: the count also materializes the cache both
     # verify joins reuse (one candidate job, not two)
     cands = cands.persist()
@@ -1468,7 +1475,7 @@ def phrase_topk(
     # BOTH joins (docmap and source stream, never exchange).
     from ..sources.catalog import committed_gen_paths
 
-    docmap = spark.read.parquet(*committed_gen_paths(index_dir, "docmap"))
+    docmap = spark.read.parquet(*committed_gen_paths(index_dir, "docmap", m))
     cd = pin(cands).join(docmap.select("doc_id", "url"), "doc_id")
     joined = (
         pin(cd)

@@ -10,15 +10,27 @@ Pipeline (phases are individually checkpointed in the manifest — T8 resume):
   postings   route (P1) -> ONE fused Arrow pass per input partition
              (docID assign + byte-exact html->text + tokenize + per-doc
              combine) -> doc-grouped FORWARD table
-             fwd(doc_id, dl, terms[], tfs[]); docmap; dictionary (term_id by
-             df-desc dense rank over the JVM-exploded posting view); stats
-  segments   explode fwd JVM-side -> ⋈ broadcast dictionary -> RANGE-salt
-             head terms over disjoint docID intervals -> groupBy(term_id,
-             salt) collect_list+sort_array (all JVM) -> mapInArrow encodes
-             each group to delta-gap varbyte blocks with per-block
-             (max_tf, min_dl) -> segments parquet range-partitioned by
-             term_id
+             fwd(doc_id, dl, terms[], tfs[]); docmap; stats
+             (``materialize_forward``: one kernel for every input)
+  segments   local SPIMI inversion of fwd partitions (mapInArrow) -> ⋈
+             dictionary (term_id by df-desc dense rank) -> groupBy(term_id,
+             salt) collect_list of sub-segment blobs (JVM) -> mapInArrow
+             merges each group into delta-gap varbyte blocks with per-block
+             (max_tf, min_dl) -> segments parquet, term_id-sorted
+             (``write_segments``, shared with the incremental and
+             compaction writers)
   commit     counters + cursor into the manifest
+
+docIDs come from per-partition offsets, so the count pass, the fused pass
+and the docmap projection must see the same rows in the same partitions.
+A narrow lineage over a file scan does; any other input (a queue batch's
+join, a persisted, in-memory or stream frame, a ``where`` on the clock) is
+first written once to a staging dir and the same kernel runs over that
+file scan. Such inputs thus stage their html where a second, staging
+variant of the fused pass would stage token lists (a few % of the input):
+the price of keeping one forward kernel. In this engine they are queue
+and stream micro-batches, bounded by the reference's BATCH_SIZE (10,000
+rows), and test frames.
 
 Skew handling (north_rule "skew handled explicitly"): a head term like 'the'
 has df ~ N and would put one reducer group at corpus scale. Each term gets
@@ -222,128 +234,39 @@ def input_split_bytes(spark, docs: DataFrame) -> int | None:
     return max(1 << 22, min(128 << 20, total // max(3 * cores, 1)))
 
 
-# staged forward rows: the ONE heavy scan's output, keyed by (partition,
-# position) — doc ids are assigned afterwards by a deterministic projection
-FWD_STAGE_SCHEMA = (
-    "url string, warc_ts timestamp, dl bigint, "
-    "terms array<string>, tfs array<bigint>, pid int, pos bigint"
-)
-
-# positional variant (build_index(positions=True)): ``poss`` is the doc's
-# token positions FLAT in term-major order — for each entry of ``terms`` in
-# order, that term's ascending positions; run lengths are exactly ``tfs``
-# (sum == dl), so no extra offsets column is needed downstream
-FWD_STAGE_SCHEMA_POS = FWD_STAGE_SCHEMA + ", poss array<bigint>"
-
-def _fused_stage_pass(positions: bool = False, keyword_cols: tuple = ()):
-    """mapInArrow body over input partitions of (url, warc_ts, html, __pid):
-    byte-exact extraction + tokenization + per-doc combine in ONE python
-    pass, emitting doc-GROUPED rows keyed by (pid, pos). EVERY row is
-    emitted (zero-token docs with dl=0 and empty lists) so positions are
-    dense — the id projection later is offset[pid] + pos.
-
-    ``positions=True`` additionally emits each term's token positions
-    (term-major flat, ascending within term — FWD_STAGE_SCHEMA_POS); the
-    per-doc dict pass already visits every token, so this costs one list
-    append per token, only when enabled.
-
-    ``keyword_cols``: declared docmap carry-through columns — keyword
-    (string, the scores.json country_code/ruleset_id analog) AND numeric
-    doc-value (double, the total_score/pp sort-field analog) columns
-    alike; pure Arrow pass-through, zero Python work per row."""
-    from ..functions.textprep import extract_text, tokenize
-
-    def run(batches):
-        local = 0
-        for batch in batches:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            pid = int(batch.column("__pid")[0].as_py())
-            pos = local + np.arange(n, dtype=np.int64)
-            local += n
-            htmls = batch.column("html")
-            dls: list[int] = []
-            term_offsets = [0]
-            pos_offsets = [0]
-            flat_terms: list[str] = []
-            flat_tfs: list[int] = []
-            flat_poss: list[int] = []
-            for i in range(n):
-                toks = tokenize(extract_text(htmls[i].as_py()))
-                dls.append(
-                    _combine_doc(toks, positions, flat_terms, flat_tfs, flat_poss)
-                )
-                term_offsets.append(len(flat_terms))
-                pos_offsets.append(len(flat_poss))
-            arrays = [
-                batch.column("url"),
-                batch.column("warc_ts"),
-                pa.array(dls, pa.int64()),
-                pa.ListArray.from_arrays(
-                    pa.array(term_offsets, pa.int32()),
-                    pa.array(flat_terms, pa.string()),
-                ),
-                pa.ListArray.from_arrays(
-                    pa.array(term_offsets, pa.int32()),
-                    pa.array(flat_tfs, pa.int64()),
-                ),
-                pa.array(np.full(n, pid, dtype=np.int32), pa.int32()),
-                pa.array(pos, pa.int64()),
-            ]
-            fields = [
-                ("url", batch.schema.field("url").type),
-                ("warc_ts", batch.schema.field("warc_ts").type),
-                ("dl", pa.int64()),
-                ("terms", pa.list_(pa.string())),
-                ("tfs", pa.list_(pa.int64())),
-                ("pid", pa.int32()),
-                ("pos", pa.int64()),
-            ]
-            if positions:
-                arrays.append(
-                    pa.ListArray.from_arrays(
-                        pa.array(pos_offsets, pa.int32()),
-                        pa.array(flat_poss, pa.int64()),
-                    )
-                )
-                fields.append(("poss", pa.list_(pa.int64())))
-            for kc in keyword_cols:
-                arrays.append(batch.column(kc))
-                fields.append((kc, batch.schema.field(kc).type))
-            yield pa.RecordBatch.from_arrays(
-                arrays, schema=pa.schema(fields)
-            )
-
-    return run
-
-
 def _plan_is_deterministic_scan(df: DataFrame) -> bool:
-    """True when ``df`` is a narrow (map-only) lineage over a plain file
-    scan: its partitioning and per-partition row order are then
-    reproducible across jobs within one session (same split conf, same
-    file listing), which is exactly the invariant the direct id-projection
-    fast path of ``materialize_forward`` needs. Conservative by design:
-    any operator that can resample, reorder or regroup rows between jobs
-    (shuffle/sort/sample/limit/rand/python-eval/cache) forces the staged
-    path — a false negative only costs the staging round-trip."""
+    """True when ``df`` reads the same partitions, rows and row order in
+    every job of a session — the invariant ``materialize_forward``'s
+    count / fwd / docmap jobs share docIDs through. A whitelist over the
+    analyzed plan (with cached fragments substituted): only Project and
+    Filter nodes over one file relation, every expression deterministic,
+    and no current-time function — the optimizer folds current_timestamp(),
+    now(), current_date() and their kin into a fresh literal for each job,
+    so a ``where`` on the clock can select different rows per job. Anything
+    else (joins, shuffles, caches, in-memory or Python-built frames,
+    streams) is staged; a false "no" costs one staging write."""
+    from py4j.protocol import Py4JError
+
     try:
-        if not df.inputFiles():
+        plan = df._jdf.queryExecution().withCachedData()
+        patterns = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees
+        if not plan.deterministic() or plan.containsPattern(
+            patterns.TreePattern.CURRENT_LIKE()
+        ):
             return False
-        plan = df._jdf.queryExecution().optimizedPlan().toString()
-    except Exception:
+        node = plan
+        while node.getClass().getSimpleName() in ("Project", "Filter"):
+            node = node.child()
+        return (
+            node.getClass().getSimpleName() == "LogicalRelation"
+            and node.relation().getClass().getSimpleName() == "HadoopFsRelation"
+        )
+    except (AttributeError, Py4JError):  # no JVM plan to inspect: stage
         return False
-    bad = (
-        "Repartition", "Sort", "Aggregate", "Join", "Window", "Deduplicate",
-        "Sample", "Limit", "Offset", "Generate", "rand(", "randn(",
-        "shuffle", "Exchange", "InMemoryRelation", "MapIn", "EvalPython",
-        "FlatMap", "MapGroups", "MapElements", "MapPartitions",
-    )
-    return not any(b in plan for b in bad)
 
 
 def _combine_doc(toks, positions, flat_terms, flat_tfs, flat_poss):
-    """Per-doc combine shared by the fused passes: append the doc's unique
+    """The fused pass's per-doc combine: append the doc's unique
     terms (first-appearance order), counts, and (optionally) term-major
     ascending positions onto the flat output lists. Returns dl."""
     if positions:
@@ -364,17 +287,15 @@ def _combine_doc(toks, positions, flat_terms, flat_tfs, flat_poss):
 
 
 def _fused_fwd_pass(positions: bool, bundle_b):
-    """mapInArrow body over (html, __pid) partitions for the DIRECT path:
-    the same byte-exact extract+tokenize+per-doc combine as
-    ``_fused_stage_pass``, but docIDs are assigned IN-PASS from the
-    pre-counted per-partition offsets (offset[pid] + local row position)
-    and dl==0 rows are dropped here (the forward table never stores them)
-    — the output IS the fwd table, no staging round-trip, and url/warc_ts
-    never cross the Python boundary. ``bundle_b``: broadcast of
-    (offsets, counts) from the cheap JVM count pass; a row-count mismatch
-    against ``counts`` aborts the job loudly (the determinism invariant
-    ``_plan_is_deterministic_scan`` guards can then never corrupt ids
-    silently)."""
+    """mapInArrow body over (html, __pid) partitions: byte-exact
+    extract + tokenize + per-doc combine in ONE python pass, docIDs
+    assigned IN-PASS from the pre-counted per-partition offsets
+    (offset[pid] + local row position), dl==0 rows dropped (the forward
+    table never stores them, their ids still advance). The output IS the
+    fwd table; url/warc_ts never cross the Python boundary. ``bundle_b``:
+    broadcast of (offsets, counts) from the cheap JVM count pass; a
+    row-count mismatch against ``counts`` aborts the job loudly, so a scan
+    that is not reproducible across jobs can never corrupt ids silently."""
     from ..functions.textprep import extract_text, tokenize
 
     def run(batches):
@@ -443,125 +364,12 @@ def _fused_fwd_pass(positions: bool, bundle_b):
         if pid is not None and local != int(counts.get(pid, -1)):
             raise RuntimeError(
                 f"fused fwd pass of partition {pid} saw {local} rows but the "
-                f"count pass saw {counts.get(pid)} — scan partitioning was "
-                "not reproducible; rebuild with the staged path"
+                f"count pass saw {counts.get(pid)}: the input scan was not "
+                "reproducible across jobs (were its files rewritten "
+                "mid-build?); nothing was committed"
             )
 
     return run
-
-
-def _materialize_forward_direct(
-    spark: SparkSession,
-    adds: DataFrame,
-    fwd_dir: str,
-    docmap_dir: str,
-    start_id: int,
-    positions: bool,
-    keyword_cols: tuple,
-    numeric_cols: tuple,
-) -> dict:
-    """Direct (no-staging) forward materialization for deterministic file
-    scans: one cheap JVM-only count pass fixes the per-partition docID
-    offsets, then the heavy fused pass writes the fwd table directly
-    (ids assigned in-pass) while a JVM-only projection writes the docmap
-    concurrently from the same scan (doc_id = offset[pid] + partition-local
-    row number via monotonically_increasing_id). Replaces: staging write +
-    three staging scans + a second parquet encode of the token lists.
-    Output tables and ids are identical to the staged path."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    from pyspark.sql import Observation
-    from pyspark.util import inheritable_thread_target
-
-    # ---- pass 0 (cheap, JVM): rows per scan partition — lang/text columns
-    # only, the html blobs are never decoded here
-    counts = dict(
-        (int(r["pid"]), int(r["n"]))
-        for r in adds.groupBy(F.spark_partition_id().alias("pid"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    offsets: dict[int, int] = {}
-    acc = start_id
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    bundle_b = spark.sparkContext.broadcast((offsets, counts))
-
-    fwd_schema = FWD_SCHEMA + (", poss array<bigint>" if positions else "")
-    obs = Observation(f"fwd_stats_{start_id}")
-    fwd_out = (
-        adds.select("html")
-        .withColumn("__pid", F.spark_partition_id())
-        .mapInArrow(_fused_fwd_pass(positions, bundle_b), fwd_schema)
-        .observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.sum("dl"), F.lit(0)).alias("sum_dl"),
-            F.min("dl").alias("dl_min"),
-            F.coalesce(F.sum(F.size("terms")), F.lit(0)).alias("postings"),
-        )
-    )
-
-    kw_sel = [F.col(c).cast("string").alias(c) for c in keyword_cols]
-    num_sel = [F.col(c).cast("double").alias(c) for c in numeric_cols]
-    if offsets:
-        off_df = driver_frame(
-            spark, sorted(offsets.items()), "pid int, off bigint"
-        )
-        dm = (
-            adds.select("url", "warc_ts", *kw_sel, *num_sel)
-            .withColumn("pid", F.spark_partition_id())
-            .withColumn(
-                "pos",
-                F.monotonically_increasing_id().bitwiseAND(
-                    F.lit((1 << 33) - 1)
-                ),
-            )
-            .join(F.broadcast(off_df), "pid")
-            .select(
-                "url", "warc_ts", *keyword_cols, *numeric_cols,
-                (F.col("off") + F.col("pos")).alias("doc_id"),
-            )
-        )
-    else:
-        dm = adds.select(
-            "url", "warc_ts", *kw_sel, *num_sel,
-            F.lit(start_id).cast("bigint").alias("doc_id"),
-        )
-    dm_obs = Observation(f"dm_stats_{start_id}")
-    dm = dm.observe(
-        dm_obs,
-        F.count(F.lit(1)).alias("n"),
-        F.max("warc_ts").alias("cursor"),
-    )
-
-    # overlap the two independent writes (guide §2.6): the docmap job is
-    # JVM-only and back-fills cores the python-heavy fwd job leaves idle;
-    # it inherits this thread's job group and description
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        fut = pool.submit(
-            inheritable_thread_target(spark)(
-                lambda: dm.write.mode("overwrite").parquet(docmap_dir)
-            )
-        )
-        fwd_out.write.mode("overwrite").option(
-            "parquet.block.size", str(FWD_ROW_GROUP_BYTES)
-        ).parquet(fwd_dir)
-        fut.result()
-    dmg = dict(dm_obs.get)
-    if int(dmg["n"] or 0) != acc - start_id:
-        raise RuntimeError(
-            f"direct docmap write saw {dmg['n']} rows but the count pass saw "
-            f"{acc - start_id} — scan was not reproducible across jobs, so "
-            "docmap and fwd doc_ids may disagree; rebuild with the staged path"
-        )
-    return {
-        "n_rows": acc - start_id,
-        "fwd": dict(obs.get),
-        "docmap_rows": int(dmg["n"] or 0),
-        "cursor": dmg["cursor"],
-    }
 
 
 def materialize_forward(
@@ -575,103 +383,142 @@ def materialize_forward(
     keyword_cols: tuple = (),
     numeric_cols: tuple = (),
 ) -> dict:
-    """ONE scan of the heavy input -> staged forward rows keyed by
-    (pid, pos) -> dense docIDs assigned by a file-based projection.
+    """The adds -> the fwd and docmap tables with dense docIDs from
+    ``start_id`` in scan order: ONE fused Arrow pass per input partition.
 
-    The two-job zipWithIndex pattern (count per partition, then map with
-    offsets) silently DOUBLE-ASSIGNS ids when the input's partitioning is
-    not bit-stable across jobs — a repartitionByRange upstream re-SAMPLES
-    per job, so the count job's boundaries need not match the map job's.
-    Staging decouples that: the single fused pass is internally consistent
-    whatever the partitioning, and the offsets + id projection derive from
-    the STAGED FILES (deterministic). Bonus: the input html is scanned once,
-    not three times (count + fwd + docmap passes); the staging table is
-    ~a few % of the input size (compressed token lists, no html).
+    Three jobs over one scan of the input. A cheap JVM-only count pass
+    fixes each partition's docID offset; the fused pass
+    (``_fused_fwd_pass``) writes the fwd table with ids assigned in-pass;
+    a JVM-only projection writes the docmap concurrently (doc_id =
+    offset[pid] + partition-local row number). That is only sound when
+    the three jobs see the same partitions with the same rows in the same
+    order. A narrow lineage over a plain file scan
+    (``_plan_is_deterministic_scan``) does; an input that can regroup or
+    re-sample its rows per job (a queue batch's join, a persisted or
+    in-memory frame, a stream micro-batch, a ``where`` reading the clock)
+    need not. Such an input is written once to ``staging_dir`` (url,
+    warc_ts, html and the carried columns: about the input's own size) and
+    the same three jobs run over that file scan, so its docIDs follow the
+    staged files' scan order; the dir is removed afterwards. Both
+    row-count checks (per partition in the fused pass, in total for the
+    docmap) raise instead of committing ids that disagree.
 
-    Returns {"n_rows": staged rows (== docmap rows written, known from the
-    per-partition offset counts), "fwd": {n, sum_dl, dl_min, postings},
-    "docmap_rows": rows written to the docmap, "cursor": max(warc_ts)} —
-    the forward-table stats ride the fwd write itself as a CollectMetrics
-    observation (and the docmap stats its write), so callers never need
-    follow-up count()/agg() jobs over the generation they just wrote.
-
-    Fast path: when ``adds`` is a narrow lineage over a plain file scan
-    (``_plan_is_deterministic_scan``) the staging round-trip is skipped
-    entirely — see ``_materialize_forward_direct``. The staged path below
-    remains the general-input fallback (shuffled/cached/in-memory inputs).
+    Returns {"n_rows": docmap rows (the per-partition counts' sum), "fwd":
+    {n, sum_dl, dl_min, postings}, "docmap_rows", "cursor": max(warc_ts),
+    "input_staged": whether the input went through ``staging_dir``} — the
+    fwd and docmap stats ride their writes as CollectMetrics observations,
+    so callers need no follow-up count()/agg() over the tables written.
     """
     import shutil
+    from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql import Observation
+    from pyspark.util import inheritable_thread_target
 
     keyword_cols = tuple(keyword_cols)
     numeric_cols = tuple(numeric_cols)
-    if _plan_is_deterministic_scan(adds):
-        return _materialize_forward_direct(
-            spark, adds, fwd_dir, docmap_dir, start_id,
-            positions, keyword_cols, numeric_cols,
+    staged = not _plan_is_deterministic_scan(adds)
+    if staged:
+        rows = adds.select("url", "warc_ts", "html", *keyword_cols, *numeric_cols)
+        rows.write.mode("overwrite").parquet(staging_dir)
+        # the pinned schema spares the read a footer-inference job
+        adds = spark.read.schema(rows.schema).parquet(staging_dir)
+    try:
+        # ---- pass 0 (cheap, JVM): rows per scan partition — the html
+        # blobs are never decoded here
+        counts = dict(
+            (int(r["pid"]), int(r["n"]))
+            for r in adds.groupBy(F.spark_partition_id().alias("pid"))
+            .agg(F.count(F.lit(1)).alias("n"))
+            .collect()
         )
-    carry_cols = keyword_cols + numeric_cols
-    # keyword/numeric columns (scores.json keyword- and numeric-field
-    # analogs) ride the staging pass untouched — cast driver-side (string /
-    # double) so the docmap's stored type is pinned regardless of the input
-    # column's type (numeric = the ES doc_values sort/range fields)
-    kw_sel = [F.col(c).cast("string").alias(c) for c in keyword_cols]
-    num_sel = [F.col(c).cast("double").alias(c) for c in numeric_cols]
-    part = adds.select("url", "warc_ts", "html", *kw_sel, *num_sel).withColumn(
-        "__pid", F.spark_partition_id()
-    )
-    stage_schema = (
-        (FWD_STAGE_SCHEMA_POS if positions else FWD_STAGE_SCHEMA)
-        + "".join(f", {c} string" for c in keyword_cols)
-        + "".join(f", {c} double" for c in numeric_cols)
-    )
-    part.select("url", "warc_ts", "html", *carry_cols, "__pid").mapInArrow(
-        _fused_stage_pass(positions, carry_cols), stage_schema
-    ).write.mode("overwrite").parquet(staging_dir)
-    stage = spark.read.parquet(staging_dir)
-    counts = dict(
-        (int(r["pid"]), int(r["count"]))
-        for r in stage.groupBy("pid").count().collect()
-    )
-    offsets = []
-    acc = start_id
-    for pid in sorted(counts):
-        offsets.append((pid, acc))
-        acc += counts[pid]
-    if offsets:
-        off_df = driver_frame(spark, offsets, "pid int, off bigint")
-        with_ids = stage.join(F.broadcast(off_df), "pid").withColumn(
-            "doc_id", F.col("off") + F.col("pos")
-        )
-    else:
-        with_ids = stage.withColumn("doc_id", F.col("pos"))
-    from pyspark.sql import Observation
+        offsets: dict[int, int] = {}
+        acc = start_id
+        for pid in sorted(counts):
+            offsets[pid] = acc
+            acc += counts[pid]
+        bundle_b = spark.sparkContext.broadcast((offsets, counts))
 
-    obs = Observation(f"fwd_stats_{start_id}")
-    fwd_cols = ["doc_id", "dl", "terms", "tfs"] + (
-        ["poss"] if positions else []
-    )
-    with_ids.filter(F.col("dl") > 0).select(*fwd_cols).observe(
-        obs,
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.sum("dl"), F.lit(0)).alias("sum_dl"),
-        F.min("dl").alias("dl_min"),
-        F.coalesce(F.sum(F.size("terms")), F.lit(0)).alias("postings"),
-    ).write.mode("overwrite").option(
-        "parquet.block.size", str(FWD_ROW_GROUP_BYTES)
-    ).parquet(fwd_dir)
-    dm_obs = Observation(f"dm_stats_{start_id}")
-    with_ids.select("url", "warc_ts", *carry_cols, "doc_id").observe(
-        dm_obs,
-        F.count(F.lit(1)).alias("n"),
-        F.max("warc_ts").alias("cursor"),
-    ).write.mode("overwrite").parquet(docmap_dir)
-    shutil.rmtree(staging_dir, ignore_errors=True)
+        fwd_schema = FWD_SCHEMA + (", poss array<bigint>" if positions else "")
+        obs = Observation(f"fwd_stats_{start_id}")
+        fwd_out = (
+            adds.select("html")
+            .withColumn("__pid", F.spark_partition_id())
+            .mapInArrow(_fused_fwd_pass(positions, bundle_b), fwd_schema)
+            .observe(
+                obs,
+                F.count(F.lit(1)).alias("n"),
+                F.coalesce(F.sum("dl"), F.lit(0)).alias("sum_dl"),
+                F.min("dl").alias("dl_min"),
+                F.coalesce(F.sum(F.size("terms")), F.lit(0)).alias("postings"),
+            )
+        )
+
+        # keyword / numeric carry columns are cast here so the docmap's
+        # stored types are pinned whatever the input column's type
+        kw_sel = [F.col(c).cast("string").alias(c) for c in keyword_cols]
+        num_sel = [F.col(c).cast("double").alias(c) for c in numeric_cols]
+        if offsets:
+            off_df = driver_frame(
+                spark, sorted(offsets.items()), "pid int, off bigint"
+            )
+            dm = (
+                adds.select("url", "warc_ts", *kw_sel, *num_sel)
+                .withColumn("pid", F.spark_partition_id())
+                .withColumn(
+                    "pos",
+                    F.monotonically_increasing_id().bitwiseAND(
+                        F.lit((1 << 33) - 1)
+                    ),
+                )
+                .join(F.broadcast(off_df), "pid")
+                .select(
+                    "url", "warc_ts", *keyword_cols, *numeric_cols,
+                    (F.col("off") + F.col("pos")).alias("doc_id"),
+                )
+            )
+        else:
+            dm = adds.select(
+                "url", "warc_ts", *kw_sel, *num_sel,
+                F.lit(start_id).cast("bigint").alias("doc_id"),
+            )
+        dm_obs = Observation(f"dm_stats_{start_id}")
+        dm = dm.observe(
+            dm_obs,
+            F.count(F.lit(1)).alias("n"),
+            F.max("warc_ts").alias("cursor"),
+        )
+
+        # overlap the two independent writes (guide §2.6): the docmap job is
+        # JVM-only and back-fills cores the python-heavy fwd job leaves
+        # idle; it inherits this thread's job group and description
+        with ThreadPoolExecutor(max_workers=1) as pool:
+            fut = pool.submit(
+                inheritable_thread_target(spark)(
+                    lambda: dm.write.mode("overwrite").parquet(docmap_dir)
+                )
+            )
+            fwd_out.write.mode("overwrite").option(
+                "parquet.block.size", str(FWD_ROW_GROUP_BYTES)
+            ).parquet(fwd_dir)
+            fut.result()
+    finally:
+        if staged:
+            shutil.rmtree(staging_dir, ignore_errors=True)
     dmg = dict(dm_obs.get)
+    if int(dmg["n"] or 0) != acc - start_id:
+        raise RuntimeError(
+            f"docmap write saw {dmg['n']} rows but the count pass saw "
+            f"{acc - start_id}: the input scan was not reproducible across "
+            "jobs (were its files rewritten mid-build?), so docmap and fwd "
+            "doc_ids may disagree; nothing was committed"
+        )
     return {
         "n_rows": acc - start_id,
         "fwd": dict(obs.get),
         "docmap_rows": int(dmg["n"] or 0),
         "cursor": dmg["cursor"],
+        "input_staged": staged,
     }
 
 
@@ -715,40 +562,6 @@ _SUBSEG_PA_SCHEMA = pa.schema(
 _SUBSEG_PA_SCHEMA_POS = _SUBSEG_PA_SCHEMA.append(
     pa.field("pos_blob", pa.binary())
 )
-
-
-def _gather_runs(
-    flat: np.ndarray, run_starts: np.ndarray, run_lens: np.ndarray
-) -> np.ndarray:
-    """Gather variable-length runs out of ``flat`` in a NEW run order:
-    run i of the output is flat[run_starts[i] : run_starts[i]+run_lens[i]].
-    One np.repeat + one arange — the vectorized per-posting permutation
-    both positional passes (invert sort, merge sort) need."""
-    total = int(run_lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=flat.dtype)
-    new_prefix = np.zeros(run_lens.size, dtype=np.int64)
-    np.cumsum(run_lens[:-1], out=new_prefix[1:])
-    idx = np.repeat(run_starts, run_lens) + (
-        np.arange(total, dtype=np.int64) - np.repeat(new_prefix, run_lens)
-    )
-    return flat[idx]
-
-
-def _posting_delta_gaps(
-    values: np.ndarray, run_starts: np.ndarray
-) -> np.ndarray:
-    """Within-run delta gaps with a +1 restart at every run start — the
-    encode_positions layout, computed in one diff + one scatter."""
-    n = values.size
-    gaps = np.empty(n, dtype=np.uint64)
-    if n == 0:
-        return gaps
-    gaps[0] = np.uint64(values[0] + 1)
-    if n > 1:
-        gaps[1:] = np.diff(values).astype(np.uint64)
-    gaps[run_starts] = (values[run_starts] + 1).astype(np.uint64)
-    return gaps
 
 
 def _local_invert_pass(id_span: int, grid_salts: int, positions: bool = False):
@@ -830,13 +643,8 @@ def _local_invert_pass(id_span: int, grid_salts: int, positions: bool = False):
         starts = np.concatenate(([0], bounds))
         ends = np.concatenate((bounds, [key.size]))
         n = key.size
-        # delta gaps with a reset at every group start (doc_id+1 stored) —
-        # the same one-pass trick as codec.encode_postings
-        gaps = np.empty(n, dtype=np.uint64)
-        gaps[0] = np.uint64(g_docs[0] + 1)
-        if n > 1:
-            gaps[1:] = np.diff(g_docs).astype(np.uint64)
-        gaps[starts] = (g_docs[starts] + 1).astype(np.uint64)
+        # delta gaps with a reset at every group start (doc_id+1 stored)
+        gaps = codec.run_delta_gaps(g_docs, starts)
         tfs_u = g_tfs.astype(np.uint64)
         # ONE varbyte encode per column for the whole partition; per-group
         # blobs are offset slices of the shared buffer (groups are
@@ -871,10 +679,10 @@ def _local_invert_pass(id_span: int, grid_salts: int, positions: bool = False):
             # index prefix
             old_pstarts = np.zeros(n, dtype=np.int64)
             np.cumsum(tfs[:-1], out=old_pstarts[1:])
-            g_poss = _gather_runs(poss_flat, old_pstarts[order], g_tfs)
+            g_poss = codec.gather_runs(poss_flat, old_pstarts[order], g_tfs)
             vprefix = np.zeros(n + 1, dtype=np.int64)
             np.cumsum(g_tfs, out=vprefix[1:])
-            pgaps = _posting_delta_gaps(g_poss, vprefix[:-1])
+            pgaps = codec.run_delta_gaps(g_poss, vprefix[:-1])
             arrays.append(blob_column(pgaps, vprefix[group_bounds]))
         yield pa.RecordBatch.from_arrays(
             arrays,
@@ -996,10 +804,10 @@ def _merge_subsegments_arrow(
             if positions:
                 # permute per-posting position runs into the merged order,
                 # re-delta with per-posting restarts
-                g_poss = _gather_runs(poss_abs, pv_starts[order], tfs)
+                g_poss = codec.gather_runs(poss_abs, pv_starts[order], tfs)
                 vprefix = np.zeros(total + 1, dtype=np.int64)
                 np.cumsum(tfs, out=vprefix[1:])
-                pgaps_out = _posting_delta_gaps(g_poss, vprefix[:-1])
+                pgaps_out = codec.run_delta_gaps(g_poss, vprefix[:-1])
 
             # ---- block grid (identical to codec.encode_postings) ---------
             n_blocks = (row_sizes + B - 1) // B
@@ -1011,15 +819,10 @@ def _merge_subsegments_arrow(
             bstart = row_starts[block_row] + intra * B
             bend = np.minimum(bstart + B, row_ends[block_row])
 
-            # block-local delta gaps: plain diff, then every block's first
-            # entry reset to doc_id+1 (this also overwrites the wrapped
-            # negative diffs at row boundaries — every row start IS a
-            # block start)
-            out_gaps = np.empty(total, dtype=np.uint64)
-            out_gaps[0] = np.uint64(docs[0] + 1)
-            if total > 1:
-                out_gaps[1:] = np.diff(docs).astype(np.uint64)
-            out_gaps[bstart] = (docs[bstart] + 1).astype(np.uint64)
+            # block-local delta gaps (the restarts also overwrite the
+            # wrapped negative diffs at row boundaries — every row start
+            # IS a block start)
+            out_gaps = codec.run_delta_gaps(docs, bstart)
             tfs_u = tfs.astype(np.uint64)
 
             # ---- one encode per column; per-row blobs are buffer slices --
@@ -1227,6 +1030,41 @@ def build_segments_spimi(
     return segments, dictionary, sub
 
 
+def write_segments(
+    spark: SparkSession, segs: DataFrame, path: str, positions: bool
+) -> dict:
+    """Write segment rows to ``path`` the one way every writer does (full
+    build, incremental generation, compaction): group-sized Arrow batches
+    for the merge pass, rows sorted by (term_id, salt) within the merge's
+    hash partitions and small parquet row groups — files are then
+    term_id-sorted with narrow per-group [min, max] ranges, so a query's
+    term_id IN (...) prunes row groups in Spark's scan and in the serving
+    tier's footer-indexed seeks, with no second shuffle (a
+    repartitionByRange would range-SAMPLE its child and run the merge
+    twice). -> {rows, postings, bytes}: counters riding the write as a
+    CollectMetrics observation, bytes = the docs/tfs (and pos) blobs."""
+    from pyspark.sql import Observation
+
+    obs = Observation()
+    blob_bytes = F.length("docs_blob") + F.length("tfs_blob")
+    if positions:
+        blob_bytes = blob_bytes + F.length("pos_blob")
+    with arrow_batch_rows(spark, GROUP_BATCH_ROWS):
+        (
+            segs.observe(
+                obs,
+                F.count(F.lit(1)).alias("rows"),
+                F.coalesce(F.sum("n_docs"), F.lit(0)).alias("postings"),
+                F.coalesce(F.sum(blob_bytes), F.lit(0)).alias("bytes"),
+            )
+            .sortWithinPartitions("term_id", "salt")
+            .write.mode("overwrite")
+            .option("parquet.block.size", str(SEGMENT_ROW_GROUP_BYTES))
+            .parquet(path)
+        )
+    return {k: int(v) for k, v in obs.get.items()}
+
+
 def build_index(
     spark: SparkSession,
     docs: DataFrame,
@@ -1340,10 +1178,10 @@ def build_index(
             scan_split_bytes(spark, in_split) if in_split else nullcontext()
         )
         with split_ctx:
-            # ONE heavy scan; docIDs in input order (reference-faithful:
-            # scores.id is arrival order) via the staged projection —
-            # generation-0 subdirs: incremental generations append sibling
-            # gen=N dirs and COMMIT via the manifest pointer (atomicity —
+            # ONE fused pass; docIDs in input order (reference-faithful:
+            # scores.id is arrival order) — generation-0 subdirs:
+            # incremental generations append sibling gen=N dirs and COMMIT
+            # via the manifest pointer (atomicity —
             # sources/catalog.committed_gen_paths)
             staged = materialize_forward(
                 spark, adds,
@@ -1371,6 +1209,7 @@ def build_index(
             postings=total_postings, n_docs=n_docs,
             docs=n_docs, docmap_rows=int(staged["docmap_rows"]),
             cursor=str(cursor) if cursor is not None else None,
+            input_staged=staged["input_staged"],
         )
 
     # ---- phase 2: segments + dictionary -------------------------------------
@@ -1439,40 +1278,10 @@ def build_index(
                 max_workers=1, thread_name_prefix="build-dictionary"
             )
             dict_future = dict_pool.submit(_write_dictionary)
-            # sort within the merge's hash partitions by term_id: each output
-            # file then has narrow per-row-group term_id ranges, so query-time
-            # term_id IN (...) filters prune row groups (the Lucene
-            # term-dictionary seek analog) WITHOUT a second shuffle — a
-            # repartitionByRange here would range-SAMPLE its child and run
-            # the whole merge pipeline twice
-            # segment counters ride the write itself (CollectMetrics) —
-            # the old follow-up agg re-read every blob byte just written
-            from pyspark.sql import Observation
-
-            seg_obs = Observation("seg_counters")
-            blob_bytes = F.length("docs_blob") + F.length("tfs_blob")
-            if positions:
-                blob_bytes = blob_bytes + F.length("pos_blob")
             try:
-                with arrow_batch_rows(spark, GROUP_BATCH_ROWS):
-                    (
-                        segments.observe(
-                            seg_obs,
-                            F.count(F.lit(1)).alias("rows"),
-                            F.coalesce(F.sum("n_docs"), F.lit(0)).alias("postings"),
-                            F.coalesce(F.sum(blob_bytes), F.lit(0)).alias("bytes"),
-                        )
-                        .sortWithinPartitions("term_id", "salt")
-                        .write.mode("overwrite")
-                        # small row groups: files are term_id-sorted, so narrow
-                        # per-group [min,max] ranges turn a query's term_id IN
-                        # filter into real row-group pruning — both in Spark's
-                        # scan and the serving tier's footer-indexed seeks
-                        # (one 128 MB group per file spans the whole vocabulary
-                        # and prunes nothing)
-                        .option("parquet.block.size", str(SEGMENT_ROW_GROUP_BYTES))
-                        .parquet(f"{seg_path}/gen=0")
-                    )
+                counters = write_segments(
+                    spark, segments, f"{seg_path}/gen=0", positions
+                )
             finally:
                 # reap the dictionary writer on every path: a failed
                 # segments write must not leave it running past the build
@@ -1485,12 +1294,11 @@ def build_index(
         )
         dictionary.unpersist()
         sub.unpersist()
-        counters = dict(seg_obs.get)
         cat.mark_phase(
             schema_version, "segments", "done",
-            segment_rows=int(counters["rows"]),
-            postings=int(counters["postings"]),
-            bytes=int(counters["bytes"]),
+            segment_rows=counters["rows"],
+            postings=counters["postings"],
+            bytes=counters["bytes"],
         )
 
     # ---- phase 3: commit ----------------------------------------------------

@@ -670,11 +670,17 @@ def wand_topk(
     snapshot read here, at call time. Queries whose terms are all absent
     produce no rows (empty result — matches the oracle).
     """
-    from .boolquery import _searcher_batch, _snapshot
+    from .boolquery import _snapshot
 
     # closed-index parity: a closed ES index rejects searches too
     # (CloseIndexCommand.cs) — _snapshot refuses before planning anything
-    m = _snapshot(index_dir)
+    return _wand_topk(spark, index_dir, _snapshot(index_dir), queries, k)
+
+
+def _wand_topk(spark, index_dir: str, m: dict, queries, k: int) -> DataFrame:
+    """``wand_topk`` on the snapshot ``m`` the caller read."""
+    from .boolquery import _searcher_batch
+
     items = [(qid, text) for qid, text in queries if tokenize(text)]
     return _searcher_batch(spark, index_dir, m, "search", items, k)
 
@@ -706,12 +712,15 @@ def wand_topk_with_urls(
     spark: SparkSession, index_dir: str, queries: list[tuple[int, str]], k: int = 10
 ) -> DataFrame:
     """Results joined back to the docmap for urls (the reference returns the
-    document key; _source stays in the input table — scores.json:3-5)."""
+    document key; _source stays in the input table — scores.json:3-5).
+    The results and the docmap come from one manifest read."""
     from ..sources.catalog import committed_gen_paths
+    from .boolquery import _snapshot
 
-    res = wand_topk(spark, index_dir, queries, k)
+    m = _snapshot(index_dir)
+    res = _wand_topk(spark, index_dir, m, queries, k)
     docmap = spark.read.parquet(
-        *committed_gen_paths(index_dir, "docmap")
+        *committed_gen_paths(index_dir, "docmap", m)
     ).select("doc_id", "url")
     return res.join(docmap, "doc_id").select(
         "query_id", "rank", "doc_id", "url", "score"

@@ -84,21 +84,20 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.build import (
+    FWD_ROW_GROUP_BYTES,
     FWD_SCHEMA,
-    GROUP_BATCH_ROWS,
-    SEGMENT_ROW_GROUP_BYTES,
     _write_stats_table,
-    arrow_batch_rows,
     build_segments_spimi,
     exploded_postings,
     fwd_split_bytes,
     materialize_forward,
     scan_split_bytes,
     write_dict_by_term,
+    write_segments,
 )
 from ..operators.docmap import assign_dense_ids
 from ..operators.routing import should_index_expr, with_should_index
@@ -321,8 +320,8 @@ def _apply_batch(
         adds = batch.filter(F.col("should_index")).select(*carried)
     else:
         # cursor batches: the adds lineage is built straight off ``docs``
-        # (filter + select only) so materialize_forward's direct no-staging
-        # path applies when docs is a plain file scan; the tombstone job
+        # (filter + select only), so when docs is a plain file scan
+        # materialize_forward reads it without staging; the tombstone job
         # reads just (url, warc_ts) of the same rows
         batch = docs.filter(
             F.col("warc_ts") > F.lit(m["cursor"]).cast("timestamp")
@@ -366,12 +365,12 @@ def _apply_batch(
     dm_gen_dir = f"{resolve_table_dir(idx, 'docmap')}/gen={gen}"
     with phases("forward"):
         start_id = _next_doc_id(m, docmap)
-        # the new generation's fwd/docmap are STAGED into their
-        # (uncommitted) gen dirs right away: one heavy scan,
-        # file-deterministic id projection (operators/build.
-        # materialize_forward); a no-op batch leaves them as orphans for
-        # clean_orphan_generations. n_add comes from the staging offsets
-        # and the forward-table stats ride the fwd write.
+        # the new generation's fwd/docmap are written into their
+        # (uncommitted) gen dirs right away by the build's forward kernel
+        # (operators/build.materialize_forward; a queue batch is a join,
+        # so it is staged to a file scan first); a no-op batch leaves
+        # them as orphans for clean_orphan_generations. n_add comes from
+        # the per-partition counts and the fwd stats ride the fwd write.
         staged = materialize_forward(
             spark, adds, fwd_gen_dir, dm_gen_dir,
             os.path.join(idx, "_fwd_stage"), start_id=start_id,
@@ -556,23 +555,11 @@ def _apply_batch(
                 fwd_gen_dir, norms_ver, generation=gen, dictionary=dict_delta,
                 n_terms=int(n_batch_terms), positions=positions,
             )
-            # blob-bytes counter rides the write job itself (CollectMetrics
-            # on the plan) instead of a follow-up re-scan of the generation
-            obs = Observation(f"seg_bytes_gen{gen}")
-            blob_bytes = F.length("docs_blob") + F.length("tfs_blob")
-            if positions:
-                blob_bytes = blob_bytes + F.length("pos_blob")
-            with arrow_batch_rows(spark, GROUP_BATCH_ROWS):
-                segs.observe(
-                    obs,
-                    F.coalesce(F.sum(blob_bytes), F.lit(0)).alias("b"),
-                ).sortWithinPartitions("term_id", "salt").write.mode(
-                    "overwrite"
-                ).option(
-                    "parquet.block.size", str(SEGMENT_ROW_GROUP_BYTES)
-                ).parquet(f"{resolve_table_dir(idx, 'segments')}/gen={gen}")
+            seg_bytes_added = write_segments(
+                spark, segs, f"{resolve_table_dir(idx, 'segments')}/gen={gen}",
+                positions,
+            )["bytes"]
             sub.unpersist()
-            seg_bytes_added = int(obs.get["b"])
     # dictionary DELTAS append as gen=K (batch vocabulary only), committed
     # by the same generations bump as segments/docmap — no versioned-table
     # rewrite of the corpus vocabulary per batch. Driver-held delta rows
@@ -635,7 +622,7 @@ def _apply_batch(
     cat.mark_phase(
         schema_version, f"incremental_gen{gen}", "done",
         adds=int(n_add), deletes=int(n_del), terms=int(n_terms2),
-        batch_terms=int(n_batch_terms),
+        batch_terms=int(n_batch_terms), input_staged=staged["input_staged"],
         **{f"{k}_s": round(v, 3) for k, v in phases.seconds.items()},
     )
     # U2 per-batch tagged metric event (the DogStatsd stream analog)
@@ -773,22 +760,12 @@ def compact_index(
                 generation=0, dictionary=dictionary,
                 positions=bool(m.get("positions")),
             )
-            # bytes counter rides the write (the only place it can shrink:
-            # dead postings are gone after the rewrite)
-            obs = Observation(f"compact_bytes_v{ver}")
-            cblob = F.length("docs_blob") + F.length("tfs_blob")
-            if m.get("positions"):
-                cblob = cblob + F.length("pos_blob")
-            with arrow_batch_rows(spark, GROUP_BATCH_ROWS):
-                segs.observe(
-                    obs,
-                    F.coalesce(F.sum(cblob), F.lit(0)).alias("b"),
-                ).sortWithinPartitions("term_id", "salt").write.mode(
-                    "overwrite"
-                ).option(
-                    "parquet.block.size", str(SEGMENT_ROW_GROUP_BYTES)
-                ).parquet(os.path.join(idx, names["segments"], "gen=0"))
-            new_bytes = int(obs.get["b"])
+            # the bytes counter can only shrink here: dead postings are
+            # gone after the rewrite
+            new_bytes = write_segments(
+                spark, segs, os.path.join(idx, names["segments"], "gen=0"),
+                bool(m.get("positions")),
+            )["bytes"]
         # the fwd/docmap/dictionary rewrites scan the SAME old fwd/derived
         # tables, so their (lazy) writes must execute inside this split-size
         # context too — outside it they'd run with the session default
@@ -798,8 +775,6 @@ def compact_index(
             w = df_.write.mode("overwrite")
             if table == "fwd":
                 # keep the rewritten fwd splittable for the next inversion
-                from ..operators.build import FWD_ROW_GROUP_BYTES
-
                 w = w.option("parquet.block.size", str(FWD_ROW_GROUP_BYTES))
             w.parquet(os.path.join(idx, names[table], "gen=0"))
         names["dictionary"] = f"dictionary_v{ver}"

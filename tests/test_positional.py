@@ -348,17 +348,17 @@ def test_phrase_auto_routes_head_terms_to_docpart(
 
     idx = pos_index.index_dir("v1")
     calls = {"docpart": [], "perq": []}
-    real_dp, real_pq = bq.phrase_topk_positional_docpart, bq._phrase_topk_positional
+    real_dp, real_pq = bq._phrase_docpart, bq._phrase_topk_positional
 
-    def spy_dp(spark_, idx_, queries, k, slop):
+    def spy_dp(spark_, idx_, m, queries, k, slop):
         calls["docpart"] += [q for q, _t in queries]
-        return real_dp(spark_, idx_, queries, k, slop)
+        return real_dp(spark_, idx_, m, queries, k, slop)
 
-    def spy_pq(spark_, idx_, queries, k, slop):
+    def spy_pq(spark_, idx_, m, queries, k, slop):
         calls["perq"] += [q for q, _t in queries]
-        return real_pq(spark_, idx_, queries, k, slop)
+        return real_pq(spark_, idx_, m, queries, k, slop)
 
-    monkeypatch.setattr(bq, "phrase_topk_positional_docpart", spy_dp)
+    monkeypatch.setattr(bq, "_phrase_docpart", spy_dp)
     monkeypatch.setattr(bq, "_phrase_topk_positional", spy_pq)
     # fixture corpus: 'the and' dfs sum well above 400; 'w00100 w00200' far
     # below — pin the threshold between them instead of relying on scale

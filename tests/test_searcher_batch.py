@@ -11,7 +11,7 @@ import pyarrow.parquet as pq
 import pytest
 
 from osu_elastic_indexer_spark import oracle
-from osu_elastic_indexer_spark.functions.textprep import extract_text
+from osu_elastic_indexer_spark.functions.textprep import extract_text, tokenize
 from osu_elastic_indexer_spark.operators import boolquery as bq
 from osu_elastic_indexer_spark.operators import dictionary as dict_mod
 from osu_elastic_indexer_spark.operators import serve
@@ -42,7 +42,7 @@ class _World:
     """A 300-doc all-langs index plus the corpus its snapshot holds;
     ``commit`` applies one evolved delta as an incremental generation."""
 
-    def __init__(self, spark, root: str):
+    def __init__(self, spark, root: str, positions: bool = False):
         self.spark, self.root = spark, root
         self.corpus = generate_documents(300)
         self.cat = Catalog(root)
@@ -50,7 +50,7 @@ class _World:
         self.n = 0
         build_index(
             spark, spark.read.parquet(self._write()), self.cat, "v1",
-            include_all_langs=True,
+            include_all_langs=True, positions=positions,
         )
 
     def _write(self) -> str:
@@ -70,6 +70,10 @@ class _World:
     def oracle(self) -> oracle.OracleIndex:
         """The oracle over the live docs of the committed snapshot, in the
         engine's docID space."""
+        return oracle.build_index(list(self.texts().items()))
+
+    def texts(self) -> dict:
+        """{doc_id: extracted text} of the committed snapshot's live docs."""
         dead = set()
         for p in committed_gen_paths(self.idx, "tombstones"):
             dead |= set(pq.read_table(p).column("doc_id").to_pylist())
@@ -81,18 +85,26 @@ class _World:
             ):
                 if d not in dead:
                     live[u] = d
-        return oracle.build_index([
-            (live[u], extract_text(h) or "")
+        return {
+            live[u]: extract_text(h) or ""
             for u, h in zip(
                 self.corpus["url"].to_pylist(), self.corpus["html"].to_pylist()
             )
             if u in live
-        ])
+        }
 
 
 @pytest.fixture(scope="module")
 def world(spark, tmp_path_factory):
     return _World(spark, str(tmp_path_factory.mktemp("searcher_batch")))
+
+
+@pytest.fixture(scope="module")
+def pos_world(spark, tmp_path_factory):
+    return _World(
+        spark, str(tmp_path_factory.mktemp("searcher_batch_pos")),
+        positions=True,
+    )
 
 
 def _by_query(rows) -> dict:
@@ -160,6 +172,49 @@ def test_docpart_batch_plans_from_one_snapshot(spark, world, monkeypatch):
         )
         for qid, q in queries:
             assert got.get(qid, []) == search(orc, q, 10), (run.__name__, q)
+
+
+def test_phrase_call_plans_from_one_snapshot(spark, pos_world, monkeypatch):
+    """A commit that lands inside ``phrase_topk``'s 'auto' router (its df
+    lookup) must not leak into the call: the route, the df split and both
+    halves of the batch — heavy phrases on the docpart shape, light ones
+    on the per-query shape — answer from the snapshot the call started
+    on, so every answer equals the pre-commit oracle."""
+    w = pos_world
+    texts = w.texts()
+    orc = oracle.build_index(list(texts.items()))
+    # two-token windows of live docs, so the phrases match
+    phrases = []
+    for d in sorted(texts)[:40:5]:
+        toks = tokenize(texts[d])
+        if len(toks) > 12:
+            phrases.append(" ".join(toks[10:12]))
+    queries = list(enumerate(phrases))
+    df_sum = {
+        qid: sum(len(orc.postings[t]) for t in set(tokenize(q)))
+        for qid, q in queries
+    }
+    split = sorted(df_sum.values())[len(df_sum) // 2]
+    assert min(df_sum.values()) <= split < max(df_sum.values())
+    monkeypatch.setattr(bq, "PHRASE_DOCPART_DF_SUM", split)
+    want = {
+        qid: oracle.search_phrase(orc, texts, q, 10) for qid, q in queries
+    }
+    assert all(want.values())
+    seq = read_index_manifest(w.idx)["commit_seq"]
+    committed = _commit_inside_term_lookup(w, monkeypatch)
+    got = _by_query(
+        r.asDict()
+        for r in bq.phrase_topk(spark, w.idx, None, queries, 10).collect()
+    )
+    monkeypatch.undo()
+    assert read_index_manifest(w.idx)["commit_seq"] > seq
+    before, after = committed
+    assert any(before[t][1] != after[t][1] for t in before), (
+        "the commit must change a queried term's df for the test to bite"
+    )
+    for qid, q in queries:
+        assert got.get(qid, []) == want[qid], (qid, q)
 
 
 def test_per_query_batch_answers_from_planned_snapshot(spark, world):
