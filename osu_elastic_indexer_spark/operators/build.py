@@ -26,11 +26,13 @@ and the docmap projection must see the same rows in the same partitions.
 A narrow lineage over a file scan does; any other input (a queue batch's
 join, a persisted, in-memory or stream frame, a ``where`` on the clock) is
 first written once to a staging dir and the same kernel runs over that
-file scan. Such inputs thus stage their html where a second, staging
-variant of the fused pass would stage token lists (a few % of the input):
-the price of keeping one forward kernel. In this engine they are queue
-and stream micro-batches, bounded by the reference's BATCH_SIZE (10,000
-rows), and test frames.
+file scan. The price of keeping one forward kernel: such an input costs
+one extra write and read of its html, where a second, staging variant of
+the fused pass would stage its token lists instead (on the fixture corpus
+~0.4x the html's bytes without positions, ~0.9x with them). Nothing bounds
+that input's size: a queue batch is as large as its url list, and
+``watch``'s first micro-batch on a fresh index builds over the whole
+pending backlog.
 
 Skew handling (north_rule "skew handled explicitly"): a head term like 'the'
 has df ~ N and would put one reducer group at corpus scale. Each term gets
@@ -397,9 +399,10 @@ def materialize_forward(
     re-sample its rows per job (a queue batch's join, a persisted or
     in-memory frame, a stream micro-batch, a ``where`` reading the clock)
     need not. Such an input is written once to ``staging_dir`` (url,
-    warc_ts, html and the carried columns: about the input's own size) and
-    the same three jobs run over that file scan, so its docIDs follow the
-    staged files' scan order; the dir is removed afterwards. Both
+    warc_ts, html and the carried columns: one extra write and read of
+    about the input's own size, whatever that size is) and the same three
+    jobs run over that file scan, so its docIDs follow the staged files'
+    scan order; the dir is removed afterwards. Both
     row-count checks (per partition in the fused pass, in total for the
     docmap) raise instead of committing ids that disagree.
 
@@ -1178,15 +1181,16 @@ def build_index(
             scan_split_bytes(spark, in_split) if in_split else nullcontext()
         )
         with split_ctx:
-            # ONE fused pass; docIDs in input order (reference-faithful:
-            # scores.id is arrival order) — generation-0 subdirs:
+            # ONE fused pass; docIDs follow the scan order of the input's
+            # files, or of the staged files for an input that is staged
+            # (materialize_forward) — generation-0 subdirs:
             # incremental generations append sibling gen=N dirs and COMMIT
             # via the manifest pointer (atomicity —
             # sources/catalog.committed_gen_paths)
             staged = materialize_forward(
                 spark, adds,
                 f"{fwd_path}/gen=0", f"{docmap_path}/gen=0",
-                f"{cat.index_dir(schema_version)}/_fwd_stage",
+                f"{cat.index_dir(schema_version)}/fwd_stage",
                 positions=positions, keyword_cols=keyword_fields,
                 numeric_cols=numeric_fields,
             )

@@ -373,7 +373,7 @@ def _apply_batch(
         # the per-partition counts and the fwd stats ride the fwd write.
         staged = materialize_forward(
             spark, adds, fwd_gen_dir, dm_gen_dir,
-            os.path.join(idx, "_fwd_stage"), start_id=start_id,
+            os.path.join(idx, "fwd_stage"), start_id=start_id,
             positions=positions, keyword_cols=keyword_fields,
             numeric_cols=numeric_fields,
         )

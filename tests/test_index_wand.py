@@ -19,7 +19,9 @@ from util import assert_rank_identical
 def oracle_index(corpus_path, built_index, spark):
     """Oracle over the same docs in the ENGINE's id space (docmap url->id):
     the oracle defines scoring truth, the engine defines the id assignment
-    (reference parity: scores.id is an arrival-order surrogate)."""
+    (reference parity: scores.id is an arrival-order surrogate; this
+    fixture is a file-scan build, whose ids follow the file's row order —
+    a staged input's ids follow the staged files' scan order instead)."""
     cat, _ = built_index
     id_by_url = {
         r.url: r.doc_id
