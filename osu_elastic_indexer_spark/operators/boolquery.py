@@ -87,6 +87,7 @@ from pyspark.sql import functions as F
 
 from ..functions import codec
 from ..functions.textprep import tokenize
+from ..session import driver_frame
 from . import wand
 from .wand import (
     _MUST,
@@ -1451,23 +1452,27 @@ def phrase_topk(
     # head-term phrases, so candidates are few and per-query joins win)
     gen = _bool_topk_docpart if docpart is True else _bool_topk
     cands = gen(spark, index_dir, m, bool_queries, 2**31 - 1)
-    # bound before pinning: the count also materializes the cache both
-    # verify joins reuse (one candidate job, not two)
-    cands = cands.persist()
-    n_cands = cands.count()
-    if n_cands > max_candidates:
+    # bound before pinning: candidates within the bound are collected once
+    # and shipped back as a driver-held table both verify joins reuse (one
+    # candidate job, and nothing left cached in the session)
+    rows = cands.select("query_id", "doc_id", "score").limit(
+        max_candidates + 1
+    ).collect()
+    if len(rows) > max_candidates:
         if on_overflow == "error":
-            cands.unpersist()
             raise ValueError(
-                f"phrase verify would check {n_cands} candidate docs "
-                f"(> max_candidates={max_candidates}): the phrase's terms "
-                "are too frequent for a positions-free match-then-verify "
-                "(ES rewrite-guard analog). Raise max_candidates, pass "
-                "on_overflow='scan' to accept a full corpus-scan join, or "
-                "index positions"
+                f"phrase verify would check more than {max_candidates} "
+                f"candidate docs (max_candidates={max_candidates}): the "
+                "phrase's terms are too frequent for a positions-free "
+                "match-then-verify (ES rewrite-guard analog). Raise "
+                "max_candidates, pass on_overflow='scan' to accept a full "
+                "corpus-scan join, or index positions"
             )
         pin = lambda df: df  # documented corpus-scan mode: no broadcast pin
     else:
+        cands = driver_frame(
+            spark, rows, "query_id bigint, doc_id bigint, score double"
+        )
         pin = F.broadcast
 
     # phase 2: verify adjacency against the source text. candidates ->

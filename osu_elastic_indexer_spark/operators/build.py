@@ -17,9 +17,21 @@ Pipeline (phases are individually checkpointed in the manifest — T8 resume):
              salt) collect_list of sub-segment blobs (JVM) -> mapInArrow
              merges each group into delta-gap varbyte blocks with per-block
              (max_tf, min_dl) -> segments parquet, term_id-sorted
-             (``write_segments``, shared with the incremental and
-             compaction writers)
+             (``write_segments``, shared with compaction and the
+             incremental Spark route)
   commit     counters + cursor into the manifest
+
+One set of kernels, two drivers. ``_fused_fwd_pass``, ``_local_invert_pass``
+and ``_merge_subsegments_arrow`` are generator functions over Arrow
+batches. A build, a compaction and an incremental batch over the driver
+bound run them as Spark ``mapInArrow`` stages (``materialize_forward``,
+``build_segments_spimi``), the JVM grouping sub-segments by (term_id, salt)
+between the last two. An incremental batch of at most
+``config.DEFAULT.batch_size`` rows (streaming/incremental.py) runs them in
+the driver process instead (``forward_local``, ``segments_local``): a plain
+(offsets, counts) bundle in place of the broadcast, and an Arrow sort and
+group in place of the JVM ``groupBy … collect_list``. Both drivers write the
+same rows.
 
 docIDs come from per-partition offsets, so the count pass, the fused pass
 and the docmap projection must see the same rows in the same partitions.
@@ -30,9 +42,9 @@ file scan. The price of keeping one forward kernel: such an input costs
 one extra write and read of its html, where a second, staging variant of
 the fused pass would stage its token lists instead (on the fixture corpus
 ~0.4x the html's bytes without positions, ~0.9x with them). Nothing bounds
-that input's size: a queue batch is as large as its url list, and
-``watch``'s first micro-batch on a fresh index builds over the whole
-pending backlog.
+that input's size: a queue batch over the driver bound is as large as its
+url list, and ``watch``'s first micro-batch on a fresh index builds over
+the whole pending backlog.
 
 Skew handling (north_rule "skew handled explicitly"): a head term like 'the'
 has df ~ N and would put one reducer group at corpus scale. Each term gets
@@ -53,12 +65,16 @@ from __future__ import annotations
 import os
 from contextlib import contextmanager
 
+from functools import partial
+
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions import codec
+from . import state
 from ..session import driver_frame
 from ..sources.catalog import Catalog
 
@@ -141,6 +157,19 @@ def _write_stats_table(
 # forward index: one row per doc, terms deduped with counts (the per-doc
 # combine); doc_id-ordered within partitions by construction
 FWD_SCHEMA = "doc_id bigint, dl bigint, terms array<string>, tfs array<bigint>"
+
+_FWD_PA_SCHEMA = pa.schema(
+    [
+        ("doc_id", pa.int64()),
+        ("dl", pa.int64()),
+        ("terms", pa.list_(pa.string())),
+        ("tfs", pa.list_(pa.int64())),
+    ]
+)
+
+_FWD_PA_SCHEMA_POS = _FWD_PA_SCHEMA.append(
+    pa.field("poss", pa.list_(pa.int64()))
+)
 
 @contextmanager
 def arrow_batch_rows(spark, n: int):
@@ -288,14 +317,15 @@ def _combine_doc(toks, positions, flat_terms, flat_tfs, flat_poss):
     return len(toks)
 
 
-def _fused_fwd_pass(positions: bool, bundle_b):
+def _fused_fwd_pass(positions: bool, bundle):
     """mapInArrow body over (html, __pid) partitions: byte-exact
     extract + tokenize + per-doc combine in ONE python pass, docIDs
     assigned IN-PASS from the pre-counted per-partition offsets
     (offset[pid] + local row position), dl==0 rows dropped (the forward
     table never stores them, their ids still advance). The output IS the
-    fwd table; url/warc_ts never cross the Python boundary. ``bundle_b``:
-    broadcast of (offsets, counts) from the cheap JVM count pass; a
+    fwd table; url/warc_ts never cross the Python boundary. ``bundle``:
+    (offsets, counts) — from the cheap JVM count pass as a broadcast, or
+    a plain tuple when the driver runs the pass (``forward_local``); a
     row-count mismatch against ``counts`` aborts the job loudly, so a scan
     that is not reproducible across jobs can never corrupt ids silently."""
     from ..functions.textprep import extract_text, tokenize
@@ -303,7 +333,7 @@ def _fused_fwd_pass(positions: bool, bundle_b):
     def run(batches):
         local = 0
         pid = None
-        offsets, counts = bundle_b.value
+        offsets, counts = getattr(bundle, "value", bundle)
         for batch in batches:
             n = batch.num_rows
             if n == 0:
@@ -348,12 +378,6 @@ def _fused_fwd_pass(positions: bool, bundle_b):
                     pa.array(flat_tfs, pa.int64()),
                 ),
             ]
-            fields = [
-                ("doc_id", pa.int64()),
-                ("dl", pa.int64()),
-                ("terms", pa.list_(pa.string())),
-                ("tfs", pa.list_(pa.int64())),
-            ]
             if positions:
                 arrays.append(
                     pa.ListArray.from_arrays(
@@ -361,8 +385,10 @@ def _fused_fwd_pass(positions: bool, bundle_b):
                         pa.array(flat_poss, pa.int64()),
                     )
                 )
-                fields.append(("poss", pa.list_(pa.int64())))
-            yield pa.RecordBatch.from_arrays(arrays, schema=pa.schema(fields))
+            yield pa.RecordBatch.from_arrays(
+                arrays,
+                schema=_FWD_PA_SCHEMA_POS if positions else _FWD_PA_SCHEMA,
+            )
         if pid is not None and local != int(counts.get(pid, -1)):
             raise RuntimeError(
                 f"fused fwd pass of partition {pid} saw {local} rows but the "
@@ -593,8 +619,6 @@ def _local_invert_pass(id_span: int, grid_salts: int, positions: bool = False):
     dominated the whole segments phase."""
 
     def run(batches):
-        import pyarrow.compute as pc
-
         doc_parts, term_parts, tf_parts, pos_parts = [], [], [], []
         for batch in batches:
             if batch.num_rows == 0:
@@ -706,18 +730,16 @@ def _binary_flat(arr) -> tuple[np.ndarray, np.ndarray]:
     return data, offs - offs[0]
 
 
-def _merge_subsegments_arrow(
-    generation: int,
-    norms_path: str,
-    norms_version: int,
-    positions: bool = False,
-):
+def _merge_subsegments_arrow(generation: int, norms, positions: bool = False):
     """mapInArrow body over grouped sub-segments (term_id, salt,
     subs: list<struct<docs_blob, tfs_blob>>): decode every sub-list,
     merge-sort each group by docID, re-encode as the final block-addressed
-    posting list. block_min_dl metadata comes from the doc-indexed norms
-    array (operators/state.load_norms over ``norms_path``'s (doc_id, dl)
-    columns) — dl never rides the merge shuffle.
+    posting list. block_min_dl metadata comes from the merged docs' lengths
+    — dl never rides the merge shuffle. ``norms()`` -> ``(first_id, dl)``,
+    ``dl[i]`` the length of doc ``first_id + i``: sized by the docs being
+    merged, not by the docID space (a Spark merge task loads it with
+    operators/state.load_doc_lengths; ``segments_local`` hands over the
+    fwd table it holds). Called once, at the first non-empty batch.
 
     Fully vectorized across the WHOLE arrow batch (same discipline as the
     invert pass): the sub blobs decode in ONE varbyte pass over the
@@ -731,16 +753,13 @@ def _merge_subsegments_arrow(
     segments phase in the round-3 scaling measurement."""
 
     def run(batches):
-        # absolute import: this body executes on executors (shipped zip)
-        from osu_elastic_indexer_spark.operators.state import load_norms
-
-        norms = None
+        dls = None
         B = codec.BLOCK
         for batch in batches:
             if batch.num_rows == 0:
                 continue
-            if norms is None:
-                norms = load_norms(norms_path, norms_version)
+            if dls is None:
+                first_id, dls = norms()
             nrows = batch.num_rows
             tids = batch.column("term_id").to_numpy()
             salts = batch.column("salt").to_numpy()
@@ -883,7 +902,7 @@ def _merge_subsegments_arrow(
                 blk_list(docs[bstart]),
                 blk_list(docs[bend - 1]),
                 blk_list(np.maximum.reduceat(tfs, bstart)),
-                blk_list(np.minimum.reduceat(norms[docs], bstart)),
+                blk_list(np.minimum.reduceat(dls[docs - first_id], bstart)),
             ]
             if positions:
                 # pos blob + block byte-offsets: posting indices map to
@@ -998,7 +1017,7 @@ def build_segments_spimi(
     exactly one disjoint interval — each group's decoded size is bounded by
     the docs in one cell (skew bound == memory bound), and a term's final
     segment rows are disjoint ascending ranges (the WAND reader contract)."""
-    grid_salts = max(1, min(max_salts, -(-id_span // max(salt_group_cap, 1))))
+    grid_salts = _grid_salts(id_span, salt_group_cap, max_salts)
     # sub-segments are ~index-sized (compressed blobs) — persist so the
     # dictionary derivation and the merge share one inversion pass
     sub = fwd.mapInArrow(
@@ -1026,18 +1045,100 @@ def build_segments_spimi(
     )
     segments = grouped.mapInArrow(
         _merge_subsegments_arrow(
-            generation, norms_path, norms_version, positions
+            generation,
+            partial(state.load_doc_lengths, norms_path, norms_version),
+            positions,
         ),
         SEGMENT_SCHEMA_POS if positions else SEGMENT_SCHEMA,
     )
     return segments, dictionary, sub
 
 
+def _grid_salts(id_span: int, salt_group_cap: int, max_salts: int) -> int:
+    """Cells of the fixed docID salt grid: ceil(id_span / cap), at most
+    ``max_salts`` — the same grid on both drivers of the segments kernels."""
+    return max(1, min(max_salts, -(-id_span // max(salt_group_cap, 1))))
+
+
+def forward_local(html, start_id: int, positions: bool = False) -> pa.Table:
+    """The driver's run of ``_fused_fwd_pass``: ``html`` (a batch's adds,
+    in docID order) -> their fwd table, ids from ``start_id``. The kernel
+    sees the whole batch as partition 0 of a plain (offsets, counts)
+    bundle, so ids, dl==0 drops and row checks are the Spark route's."""
+    n = len(html)
+    rows = pa.table({"html": html, "__pid": np.zeros(n, dtype=np.int32)})
+    out = _fused_fwd_pass(positions, ({0: start_id}, {0: n}))(rows.to_batches())
+    return pa.Table.from_batches(
+        list(out), schema=_FWD_PA_SCHEMA_POS if positions else _FWD_PA_SCHEMA
+    )
+
+
+def segments_local(
+    fwd: pa.Table,
+    term_ids: pa.Table,
+    id_span: int,
+    salt_group_cap: int,
+    generation: int,
+    positions: bool = False,
+    max_salts: int = 1024,
+) -> pa.Table:
+    """The driver's run of the segments kernels over a batch's fwd table:
+    ``_local_invert_pass`` over all of it, then the step the Spark route
+    runs in the JVM — sub-segments ⋈ ``term_ids`` (term, term_id) and the
+    (term_id, salt) group into ``subs`` lists — as an Arrow sort, then
+    ``_merge_subsegments_arrow`` with norms from ``fwd`` itself (no file
+    read, nothing cached). -> segment rows sorted by (term_id, salt), the
+    order ``write_segments`` leaves within its files."""
+    blob_cols = ["docs_blob", "tfs_blob"] + (["pos_blob"] if positions else [])
+    seg_schema = _SEGMENT_PA_SCHEMA_POS if positions else _SEGMENT_PA_SCHEMA
+    grid_salts = _grid_salts(id_span, salt_group_cap, max_salts)
+    subs = list(
+        _local_invert_pass(id_span, grid_salts, positions)(fwd.to_batches())
+    )
+    if not subs:
+        return seg_schema.empty_table()
+    sub = pa.Table.from_batches(subs)
+    at = pc.index_in(sub["term"], value_set=term_ids["term"].combine_chunks())
+    if at.null_count:
+        raise ValueError("segments_local: a fwd term has no term_id")
+    keyed = pa.table(
+        {
+            "term_id": term_ids["term_id"].combine_chunks().take(at),
+            "salt": sub["salt"],
+            **{c: sub[c] for c in blob_cols},
+        }
+    ).sort_by([("term_id", "ascending"), ("salt", "ascending")])
+    tids = keyed["term_id"].to_numpy()
+    salts = keyed["salt"].to_numpy()
+    starts = np.flatnonzero(
+        np.concatenate(([True], (np.diff(tids) != 0) | (np.diff(salts) != 0)))
+    )
+    blobs = pa.StructArray.from_arrays(
+        [keyed[c].combine_chunks() for c in blob_cols], names=blob_cols
+    )
+    grouped = pa.RecordBatch.from_arrays(
+        [
+            pa.array(tids[starts], pa.int64()),
+            pa.array(salts[starts], pa.int32()),
+            pa.ListArray.from_arrays(
+                pa.array(np.append(starts, len(tids)), pa.int32()), blobs
+            ),
+        ],
+        names=["term_id", "salt", "subs"],
+    )
+    merge = _merge_subsegments_arrow(
+        generation, lambda: state.doc_lengths(fwd), positions
+    )
+    return pa.Table.from_batches(list(merge([grouped])), schema=seg_schema)
+
+
 def write_segments(
     spark: SparkSession, segs: DataFrame, path: str, positions: bool
 ) -> dict:
-    """Write segment rows to ``path`` the one way every writer does (full
-    build, incremental generation, compaction): group-sized Arrow batches
+    """Write segment rows to ``path`` the one way every Spark writer does
+    (full build, compaction, an incremental generation over the driver
+    bound; a driver-route generation is one pyarrow file with the same
+    row order): group-sized Arrow batches
     for the merge pass, rows sorted by (term_id, salt) within the merge's
     hash partitions and small parquet row groups — files are then
     term_id-sorted with narrow per-group [min, max] ranges, so a query's

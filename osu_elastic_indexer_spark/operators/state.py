@@ -161,6 +161,36 @@ def load_norms(paths, version: int) -> np.ndarray:
     return _cached("norms", paths, version, load)
 
 
+def load_doc_lengths(paths, version: int) -> tuple[int, np.ndarray]:
+    """``(first_id, dl)`` over fwd-table dirs: ``dl[i]`` is doc
+    ``first_id + i``'s length, spanning the dirs' [min, max] doc_id only —
+    the segment merge's norms, sized by the docs being merged (an
+    incremental generation's fwd holds one batch, high in the id space)."""
+    paths = _as_tuple(paths)
+
+    def load() -> tuple[int, np.ndarray]:
+        import pyarrow.dataset as ds
+
+        files = _parquet_files(paths)
+        if not files:
+            return 0, np.zeros(1, dtype=np.int64)
+        t = ds.dataset(files).to_table(columns=["doc_id", "dl"])
+        return doc_lengths(t)
+
+    return _cached("doclens", paths, version, load)
+
+
+def doc_lengths(fwd) -> tuple[int, np.ndarray]:
+    """``(first_id, dl)`` of an Arrow table with (doc_id, dl) columns."""
+    ids = fwd.column("doc_id").to_numpy()
+    if ids.size == 0:
+        return 0, np.zeros(1, dtype=np.int64)
+    first = int(ids.min())
+    arr = np.zeros(int(ids.max()) - first + 1, dtype=np.int64)
+    arr[ids - first] = fwd.column("dl").to_numpy()
+    return first, arr
+
+
 def load_tombstones(paths, version: int) -> np.ndarray | None:
     """Sorted deleted-docID array; None when the index has no tombstones."""
     paths = _as_tuple(paths)

@@ -17,32 +17,51 @@ Reference semantics being reproduced (SURVEY.md §2.8):
        urls missing from the source -> delete (IndexQueueProcessor.cs:41-60,
        ElasticModel.cs:63-65)
 
-One commit, phase by phase (each phase names its Spark jobs with
-``setJobDescription`` and its seconds land in the manifest's
-``incremental_genN`` phase as ``<phase>_s``):
+One commit, two routes, phase by phase. Each phase names its Spark jobs
+with ``setJobDescription``; its seconds land in the manifest's
+``incremental_genN`` phase as ``<phase>_s``, next to ``route``,
+``collected_rows``, ``collected_html_bytes`` and ``input_staged``.
+  route       ONE Arrow collect (``toArrow``) of at most
+              ``config.DEFAULT.batch_size`` + 1 rows of the batch (url,
+              warc_ts, the add flag, html of the adds only). The bound is
+              the reference's BATCH_SIZE (env ``BATCH_SIZE``, 10,000 by
+              default): one queue batch, adds and deletes alike. A batch
+              within it commits on the DRIVER: the build's own kernels
+              (operators/build.py) run in this process over the collected
+              rows and every generation file is written with pyarrow, so a
+              commit runs two Spark jobs (this collect and the tombstone
+              lookup) and no Python worker. A larger batch takes the SPARK
+              route: the same kernels as Spark stages, as a build runs them.
   tombstones  deletes are POINT deletes by key, so their cost follows the
               batch: ONE job resolves the batch's tombstones to the driver
               (committed docmap ⋉ changed urls ▷ old tombstones -> sorted
-              doc_ids), and the batch cursor max(warc_ts) rides that job as
-              one more row. The tombstoned docs' forward rows are then
-              read ONCE, driver-side, from the doc_id-clustered fwd table
-              (footer statistics prune row groups): they give the deleted
-              docs' stats (n, sum_dl, postings) and the per-term df
-              decrements. The tombstone generation is written from the
-              driver-held ids with pyarrow.
+              doc_ids). Driver route: the docmap scan filtered by the
+              collected urls as an IN list, the old tombstones subtracted
+              with pyarrow. Spark route: a join, the batch cursor
+              max(warc_ts) riding the job as one more row. The tombstoned
+              docs' forward rows are then read ONCE, driver-side, from the
+              doc_id-clustered fwd table (footer statistics prune row
+              groups): they give the deleted docs' stats (n, sum_dl,
+              postings) and the per-term df decrements. The tombstone
+              generation is written from the driver-held ids with pyarrow.
   forward     fresh docIDs start at the manifest's ``next_doc_id`` counter
               (written by build_index and every commit, carried over by
-              compaction — dead ids are never reused); the adds' fwd and
-              docmap generations are written by one scan
-              (operators/build.materialize_forward), their stats riding
-              the writes.
-  dictionary  the adds' per-term counts (one job) fold with the decrements
-              into the batch's (term, df-delta) rows; known term ids are
-              point lookups in the term-sorted dictionary, fresh ids extend
-              the ``max_term_id`` counter; the delta gen is written with
+              compaction — dead ids are never reused). Driver route: the
+              collected adds in scan order through ``build.forward_local``
+              (a cursor batch off a file scan gets the ids the Spark route
+              would give it). Spark route: one scan
+              (``build.materialize_forward``; a queue batch is staged to a
+              file scan first), the stats riding the writes.
+  dictionary  the adds' per-term counts (off the driver's fwd table, or one
+              job on the Spark route) fold with the decrements into the
+              batch's (term, df-delta) rows; known term ids are point
+              lookups in the term-sorted dictionary, fresh ids extend the
+              ``max_term_id`` counter; the delta gen is written with
               pyarrow. A batch vocabulary wider than KNOWN_ID_IN_MAX takes
               the distributed semi-join instead.
-  segments    the new generation's fwd is inverted into segment rows.
+  segments    the new generation's fwd is inverted into segment rows
+              (``build.segments_local`` on the driver,
+              ``build.build_segments_spimi`` on the Spark route).
 
 Atomic commit protocol (generation pointers, the Iceberg-snapshot shape):
   * append tables (segments, docmap, fwd, tombstones) grow by whole
@@ -86,16 +105,21 @@ import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
+from .. import config
 from ..operators.build import (
     FWD_ROW_GROUP_BYTES,
     FWD_SCHEMA,
+    SEGMENT_ROW_GROUP_BYTES,
     _write_stats_table,
     build_segments_spimi,
     exploded_postings,
+    forward_local,
     fwd_split_bytes,
     materialize_forward,
     scan_split_bytes,
+    segments_local,
     write_dict_by_term,
     write_segments,
 )
@@ -158,6 +182,85 @@ def _write_gen_file(path: str, table: pa.Table, **kw) -> None:
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path)
     pq.write_table(table, os.path.join(path, "part-00000.parquet"), **kw)
+
+
+def _rows_per_group(table: pa.Table, target_bytes: int) -> int:
+    """Parquet rows per row group for groups of about ``target_bytes`` —
+    the byte target the Spark writers set with ``parquet.block.size``."""
+    return max(1, table.num_rows * target_bytes // max(table.nbytes, 1))
+
+
+def _spark_timestamps(spark: SparkSession) -> dict:
+    """pyarrow write options that store timestamps the way this session's
+    Spark parquet writer does (``spark.sql.parquet.outputTimestampType``):
+    Spark reads both back as a UTC-adjusted TIMESTAMP, and every docmap
+    generation keeps one physical type whichever route wrote it."""
+    kind = spark.conf.get("spark.sql.parquet.outputTimestampType")
+    if kind == "INT96":
+        return {"use_deprecated_int96_timestamps": True}
+    return {"coerce_timestamps": "ms" if kind == "TIMESTAMP_MILLIS" else "us"}
+
+
+def _collect_batch(
+    batch: DataFrame,
+    is_add,
+    keyword_fields: tuple,
+    numeric_fields: tuple,
+    bound: int,
+) -> pa.Table:
+    """At most ``bound + 1`` rows of the batch in ONE Arrow collect: url,
+    warc_ts, ``__add`` (routed to add), html for the adds only, the
+    declared keyword/numeric columns cast as the docmap stores them, and
+    ``__pos`` (monotonically_increasing_id: partition index, then row
+    position), which restores the scan order the Spark route numbers docs
+    in. More than ``bound`` rows sends the batch down the Spark route."""
+    return (
+        batch.select(
+            "url",
+            "warc_ts",
+            is_add.alias("__add"),
+            F.when(is_add, F.col("html")).alias("html"),
+            *[F.col(c).cast("string").alias(c) for c in keyword_fields],
+            *[F.col(c).cast("double").alias(c) for c in numeric_fields],
+            F.monotonically_increasing_id().alias("__pos"),
+        )
+        .limit(bound + 1)
+        .toArrow()
+    )
+
+
+def _live_ids_of(
+    spark: SparkSession, idx: str, docmap: DataFrame, urls
+) -> np.ndarray:
+    """Sorted docIDs of the committed, not yet tombstoned docs among
+    ``urls`` — the driver route's tombstone resolution. ONE Spark job: the
+    committed docmap scan filtered by the urls as an IN list of hex
+    literals (no url needs escaping), which the optimizer folds into a
+    hash-set probe; a join would plan a broadcast or a shuffle, each a job
+    of its own. The old tombstones are subtracted driver-side, read with
+    pyarrow and pruned to the matched ids."""
+    import pyarrow.dataset as ds
+
+    urls = pc.unique(urls).drop_null().to_pylist()
+    if not urls:
+        return np.zeros(0, dtype=np.int64)
+    probe = ", ".join(f"CAST(X'{u.encode().hex()}' AS STRING)" for u in urls)
+    ids = (
+        docmap.filter(F.expr(f"url IN ({probe})"))
+        .select("doc_id")
+        .toArrow()
+        .column("doc_id")
+        .combine_chunks()
+    )
+    files = _parquet_files(tuple(committed_gen_paths(idx, "tombstones")))
+    if files and len(ids):
+        old = ds.dataset(files).to_table(
+            columns=["doc_id"], filter=pc.field("doc_id").isin(ids)
+        )
+        ids = ids.filter(
+            pc.invert(pc.is_in(ids, value_set=old["doc_id"].combine_chunks()))
+        )
+    return np.sort(ids.to_numpy())
 
 
 def _deleted_forward(fwd_paths: list[str], dead: np.ndarray) -> dict:
@@ -288,7 +391,7 @@ def _apply_batch(
     m = cat.read_manifest(schema_version)
     idx = cat.index_dir(schema_version)
     # positional (v2) indexes: every generation carries the pos sidecar —
-    # materialize_forward/build_segments_spimi thread the flag below, so
+    # both forward/segments drivers thread the flag below, so
     # multi-generation positional phrase queries stay correct
     positions = bool(m.get("positions"))
     # declared docmap keyword columns (build_index(keyword_fields=...)) —
@@ -317,7 +420,8 @@ def _apply_batch(
             ),
             include_all_langs,
         ).persist()
-        adds = batch.filter(F.col("should_index")).select(*carried)
+        # a queued url the source no longer has resolves to nulls: delete
+        is_add = F.coalesce(F.col("should_index"), F.lit(False))
     else:
         # cursor batches: the adds lineage is built straight off ``docs``
         # (filter + select only), so when docs is a plain file scan
@@ -326,59 +430,116 @@ def _apply_batch(
         batch = docs.filter(
             F.col("warc_ts") > F.lit(m["cursor"]).cast("timestamp")
         )
-        adds = batch.filter(should_index_expr(include_all_langs)).select(
-            *carried
-        )
+        is_add = should_index_expr(include_all_langs)
+    adds = batch.filter(is_add).select(*carried)
 
-    # ---- tombstones: ONE job, driver-held sorted ids -----------------------
-    # every changed url that is currently live gets its old docID tombstoned
-    # (update -> delete+add with fresh id; delete -> tombstone only). The
-    # batch cursor (max ignores the nulls a queue-resolve leaves) is one
-    # more row of the same job: a global aggregate always yields its row,
-    # where an Observation on the batch is dropped whenever adaptive
-    # execution prunes an empty join side.
-    with phases("tombstones"):
-        docmap = _read_committed(
-            spark, idx, "docmap", "url string, doc_id bigint", pinned=True
+    # ---- route: a batch within config.batch_size rows commits on the
+    # driver — ONE collect, then the build's own kernels in this process;
+    # a larger one keeps the distributed route below
+    bound = config.DEFAULT.batch_size
+    with phases("forward"):
+        local = _collect_batch(
+            batch, is_add, keyword_fields, numeric_fields, bound
         )
-        old_tombs = _read_committed(
-            spark, idx, "tombstones", TOMB_SCHEMA, pinned=True
-        )
-        live_changed = (
-            docmap.join(batch.select("url"), "url", "left_semi")
-            .join(old_tombs, "doc_id", "left_anti")
-            .select("doc_id", F.lit(None).cast("timestamp").alias("cursor"))
-        )
-        cursor = batch.agg(
-            F.lit(None).cast("bigint").alias("doc_id"),
-            F.max("warc_ts").alias("cursor"),
-        )
-        rows = live_changed.unionByName(cursor).collect()
-    new_cursor = next(r.cursor for r in rows if r.doc_id is None)
-    dead_ids = np.sort(
-        np.array([r.doc_id for r in rows if r.doc_id is not None], np.int64)
+    route = "driver" if local.num_rows <= bound else "spark"
+    collected = {
+        "route": route,
+        "collected_rows": local.num_rows,
+        "collected_html_bytes": int(
+            pc.sum(pc.binary_length(local["html"])).as_py() or 0
+        ),
+    }
+    docmap = _read_committed(
+        spark, idx, "docmap", "url string, doc_id bigint", pinned=True
     )
+
+    # ---- tombstones: every changed url that is currently live gets its old
+    # docID tombstoned (update -> delete+add with fresh id; delete ->
+    # tombstone only); ONE job either way, driver-held sorted ids --------
+    if route == "driver":
+        local = local.take(pc.sort_indices(local["__pos"]))  # scan order
+        with phases("tombstones"):
+            dead_ids = _live_ids_of(spark, idx, docmap, local["url"])
+        # the batch cursor, converted as a collected Row's timestamp is
+        ts = pc.max(local["warc_ts"].cast(pa.int64())).as_py()
+        new_cursor = None if ts is None else TimestampType().fromInternal(ts)
+    else:
+        # the batch cursor (max ignores the nulls a queue-resolve leaves)
+        # is one more row of the same job: a global aggregate always
+        # yields its row, where an Observation on the batch is dropped
+        # whenever adaptive execution prunes an empty join side.
+        with phases("tombstones"):
+            old_tombs = _read_committed(
+                spark, idx, "tombstones", TOMB_SCHEMA, pinned=True
+            )
+            live_changed = (
+                docmap.join(batch.select("url"), "url", "left_semi")
+                .join(old_tombs, "doc_id", "left_anti")
+                .select(
+                    "doc_id", F.lit(None).cast("timestamp").alias("cursor")
+                )
+            )
+            cursor = batch.agg(
+                F.lit(None).cast("bigint").alias("doc_id"),
+                F.max("warc_ts").alias("cursor"),
+            )
+            rows = live_changed.unionByName(cursor).collect()
+        local = None  # the over-bound sample has served its purpose
+        new_cursor = next(r.cursor for r in rows if r.doc_id is None)
+        dead_ids = np.sort(
+            np.array([r.doc_id for r in rows if r.doc_id is not None], np.int64)
+        )
     n_del = int(dead_ids.size)
 
     # ---- forward: fresh docIDs extend the space from the counter ----------
+    # the new generation's fwd/docmap are written into their (uncommitted)
+    # gen dirs right away; a no-op batch leaves them as orphans for
+    # clean_orphan_generations
     fwd_gen_dir = f"{resolve_table_dir(idx, 'fwd')}/gen={gen}"
     dm_gen_dir = f"{resolve_table_dir(idx, 'docmap')}/gen={gen}"
     with phases("forward"):
         start_id = _next_doc_id(m, docmap)
-        # the new generation's fwd/docmap are written into their
-        # (uncommitted) gen dirs right away by the build's forward kernel
-        # (operators/build.materialize_forward; a queue batch is a join,
-        # so it is staged to a file scan first); a no-op batch leaves
-        # them as orphans for clean_orphan_generations. n_add comes from
-        # the per-partition counts and the fwd stats ride the fwd write.
-        staged = materialize_forward(
-            spark, adds, fwd_gen_dir, dm_gen_dir,
-            os.path.join(idx, "fwd_stage"), start_id=start_id,
-            positions=positions, keyword_cols=keyword_fields,
-            numeric_cols=numeric_fields,
-        )
-    n_add = int(staged["n_rows"])
-    add_stats = staged["fwd"]  # {n, sum_dl, dl_min, postings}
+        if route == "driver":
+            local_adds = local.filter(local["__add"])
+            n_add = local_adds.num_rows
+            fwd = forward_local(local_adds["html"], start_id, positions)
+            add_stats = {
+                "n": fwd.num_rows,
+                "sum_dl": int(pc.sum(fwd["dl"]).as_py() or 0),
+                "dl_min": pc.min(fwd["dl"]).as_py(),
+                "postings": int(
+                    pc.sum(pc.list_value_length(fwd["terms"])).as_py() or 0
+                ),
+            }
+            _write_gen_file(
+                fwd_gen_dir, fwd,
+                row_group_size=_rows_per_group(fwd, FWD_ROW_GROUP_BYTES),
+            )
+            _write_gen_file(
+                dm_gen_dir,
+                local_adds.select(
+                    ["url", "warc_ts", *keyword_fields, *numeric_fields]
+                ).append_column(
+                    "doc_id",
+                    pa.array(np.arange(start_id, start_id + n_add), pa.int64()),
+                ),
+                **_spark_timestamps(spark),
+            )
+            input_staged = False
+        else:
+            # the build's forward kernel over a scan (operators/build.
+            # materialize_forward; a queue batch is a join, so it is
+            # staged to a file scan first). n_add comes from the
+            # per-partition counts and the fwd stats ride the fwd write.
+            staged = materialize_forward(
+                spark, adds, fwd_gen_dir, dm_gen_dir,
+                os.path.join(idx, "fwd_stage"), start_id=start_id,
+                positions=positions, keyword_cols=keyword_fields,
+                numeric_cols=numeric_fields,
+            )
+            n_add = int(staged["n_rows"])
+            add_stats = staged["fwd"]  # {n, sum_dl, dl_min, postings}
+            input_staged = staged["input_staged"]
 
     if n_add == 0 and n_del == 0:
         # still advance the cursor past a batch of purely non-indexable rows
@@ -432,18 +593,27 @@ def _apply_batch(
             ).collect()[0]
             max_tid = int(magg.mt) if magg.mt is not None else -1
             n_terms_old = int(magg.n)
-        # the adds' per-term counts: one job (none for a delete-only batch),
-        # probed against the driver-resolved bound; the deleted docs'
-        # decrements fold in driver-side
-        add_df = exploded_postings(fwd_reader.parquet(fwd_gen_dir)).groupBy(
-            "term"
-        ).agg(F.count("*").alias("adds"))
-        add_rows = (
-            add_df.limit(KNOWN_ID_IN_MAX + 1).collect()
-            if int(add_stats["postings"]) > 0
-            else []
-        )
-        delta = {r.term: int(r.adds) for r in add_rows}
+        # the adds' per-term counts — off the driver's fwd table, or one
+        # job (none for a delete-only batch) probed against the
+        # driver-resolved bound; the deleted docs' decrements fold in
+        # driver-side
+        if route == "driver":
+            vc = pc.value_counts(pc.list_flatten(fwd["terms"]))
+            add_counts = list(
+                zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist())
+            )
+            delta = dict(add_counts)
+            add_df = None  # a Spark frame only if the wide branch needs one
+        else:
+            add_df = exploded_postings(
+                fwd_reader.parquet(fwd_gen_dir)
+            ).groupBy("term").agg(F.count("*").alias("adds"))
+            add_rows = (
+                add_df.limit(KNOWN_ID_IN_MAX + 1).collect()
+                if int(add_stats["postings"]) > 0
+                else []
+            )
+            delta = {r.term: int(r.adds) for r in add_rows}
         for t, c in deleted["df"].items():
             delta[t] = delta.get(t, 0) - int(c)
         n_batch_terms = len(delta)
@@ -472,13 +642,25 @@ def _apply_batch(
                 (int(max_tid) + 1 + i, t, delta[t])
                 for i, t in enumerate(fresh)
             ]
-            dict_delta = driver_frame(
-                spark, dict_rows, "term_id bigint, term string, df bigint"
+            dt = pa.table(
+                {
+                    "term_id": pa.array([r[0] for r in dict_rows], pa.int64()),
+                    "term": pa.array([r[1] for r in dict_rows], pa.string()),
+                    "df": pa.array([r[2] for r in dict_rows], pa.int64()),
+                }
             )
+            if route == "spark":
+                dict_delta = driver_frame(
+                    spark, dict_rows, "term_id bigint, term string, df bigint"
+                )
         else:
             # degenerate giant-vocab batch (approaching rebuild volume): a
             # probe this wide costs more than the scan it prunes — fall
             # back to the distributed semi-join + dense-rank assignment
+            if add_df is None:
+                add_df = driver_frame(
+                    spark, add_counts, "term string, adds bigint"
+                )
             dels = driver_frame(
                 spark, sorted(deleted["df"].items()), "term string, dels bigint"
             )
@@ -524,42 +706,64 @@ def _apply_batch(
 
     # ---- segments (ALL writes land in uncommitted dirs) --------------------
     seg_bytes_added = 0
+    seg_gen_dir = f"{resolve_table_dir(idx, 'segments')}/gen={gen}"
     if int(add_stats["postings"]) > 0:
         id_span = start_id + n_add
         cap = salt_group_cap or max(50_000, max(n_add, 1) // 8)
-        # norms version must be UNIQUE PER ATTEMPT, not per generation: a
-        # crash-and-replay of the same gen re-stages fwd_gen_dir with
-        # possibly different (doc_id -> dl) packing, and reused python
-        # workers would serve the crashed attempt's cached norms for the
-        # same (path, version) key. mark_phase bumps the manifest's
-        # monotonic commit_seq, so reading it here gives each attempt a
-        # fresh cache version (and a staging wall-time record).
+        # the generation phase's wall time starts here (and mark_phase
+        # bumps the manifest's monotonic commit_seq, read below)
         cat.mark_phase(schema_version, f"incremental_gen{gen}", "running")
-        norms_ver = int(
-            (cat.read_manifest(schema_version) or {}).get("commit_seq", 0)
-        )
-        # the merge loads the NEW docs' norms executor-side from the staged
-        # fwd gen dir (they are not in the committed fwd snapshot yet)
-        # the batch-scoped delta dictionary covers every term in the gen's
-        # fwd (adds are a subset of the delta vocabulary) — the spimi join
-        # only needs ids for the batch's own terms, never the whole
-        # vocabulary. Split the gen's fwd fine (it may be as few files as
-        # the delta input had partitions — often ONE) so the CPU-bound
-        # inversion parallelizes; fwd row groups are written small for
-        # exactly this.
-        with phases("segments"), scan_split_bytes(
-            spark, fwd_split_bytes(spark, fwd_gen_dir)
-        ):
-            segs, _d, sub = build_segments_spimi(
-                spark, fwd_reader.parquet(fwd_gen_dir), id_span, cap,
-                fwd_gen_dir, norms_ver, generation=gen, dictionary=dict_delta,
-                n_terms=int(n_batch_terms), positions=positions,
+        if route == "driver":
+            # the batch-scoped delta dictionary covers every term in the
+            # gen's fwd (adds are a subset of the delta vocabulary)
+            with phases("segments"):
+                term_ids = (
+                    dt.select(["term", "term_id"]) if dict_rows is not None
+                    else dict_delta.select("term", "term_id").toArrow()
+                )
+                segs = segments_local(
+                    fwd, term_ids, id_span, cap, gen, positions
+                )
+                _write_gen_file(
+                    seg_gen_dir, segs,
+                    row_group_size=_rows_per_group(segs, SEGMENT_ROW_GROUP_BYTES),
+                )
+                seg_bytes_added = sum(
+                    int(pc.sum(pc.binary_length(segs[c])).as_py() or 0)
+                    for c in ("docs_blob", "tfs_blob")
+                    + (("pos_blob",) if positions else ())
+                )
+        else:
+            # the merge loads the NEW docs' norms executor-side from the
+            # staged fwd gen dir (they are not in the committed fwd
+            # snapshot yet). The batch-scoped delta dictionary covers every
+            # term in the gen's fwd — the spimi join only needs ids for the
+            # batch's own terms, never the whole vocabulary. Split the
+            # gen's fwd fine (it may be as few files as the delta input had
+            # partitions — often ONE) so the CPU-bound inversion
+            # parallelizes; fwd row groups are written small for exactly
+            # this. The norms version must be UNIQUE PER ATTEMPT, not per
+            # generation: a crash-and-replay of the same gen re-stages
+            # fwd_gen_dir with possibly different (doc_id -> dl) packing,
+            # and reused python workers would serve the crashed attempt's
+            # cached norms for the same (path, version) key; commit_seq
+            # gives each attempt a fresh cache version.
+            norms_ver = int(
+                (cat.read_manifest(schema_version) or {}).get("commit_seq", 0)
             )
-            seg_bytes_added = write_segments(
-                spark, segs, f"{resolve_table_dir(idx, 'segments')}/gen={gen}",
-                positions,
-            )["bytes"]
-            sub.unpersist()
+            with phases("segments"), scan_split_bytes(
+                spark, fwd_split_bytes(spark, fwd_gen_dir)
+            ):
+                segs, _d, sub = build_segments_spimi(
+                    spark, fwd_reader.parquet(fwd_gen_dir), id_span, cap,
+                    fwd_gen_dir, norms_ver, generation=gen,
+                    dictionary=dict_delta, n_terms=int(n_batch_terms),
+                    positions=positions,
+                )
+                seg_bytes_added = write_segments(
+                    spark, segs, seg_gen_dir, positions
+                )["bytes"]
+                sub.unpersist()
     # dictionary DELTAS append as gen=K (batch vocabulary only), committed
     # by the same generations bump as segments/docmap — no versioned-table
     # rewrite of the corpus vocabulary per batch. Driver-held delta rows
@@ -569,13 +773,6 @@ def _apply_batch(
     bt_gen_dir = f"{resolve_table_dir(idx, 'dict_by_term')}/gen={gen}"
     with phases("dictionary"):
         if dict_rows is not None:
-            dt = pa.table(
-                {
-                    "term_id": pa.array([r[0] for r in dict_rows], pa.int64()),
-                    "term": pa.array([r[1] for r in dict_rows], pa.string()),
-                    "df": pa.array([r[2] for r in dict_rows], pa.int64()),
-                }
-            )
             _write_gen_file(dict_gen_dir, dt, row_group_size=50_000)
             # term-SORTED projection with small row groups (the same
             # term-seek layout write_dict_by_term produces)
@@ -622,7 +819,8 @@ def _apply_batch(
     cat.mark_phase(
         schema_version, f"incremental_gen{gen}", "done",
         adds=int(n_add), deletes=int(n_del), terms=int(n_terms2),
-        batch_terms=int(n_batch_terms), input_staged=staged["input_staged"],
+        batch_terms=int(n_batch_terms), input_staged=input_staged,
+        **collected,
         **{f"{k}_s": round(v, 3) for k, v in phases.seconds.items()},
     )
     # U2 per-batch tagged metric event (the DogStatsd stream analog)

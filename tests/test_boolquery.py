@@ -404,6 +404,24 @@ def test_phrase_candidate_guard(spark, bq_index, bq_oracle, corpus_path):
         )
 
 
+def test_phrase_verify_leaves_nothing_cached(
+    spark, bq_index, bq_oracle, corpus_path
+):
+    """A successful positions-free phrase_topk call collects its bounded
+    candidates once and ships them back as a driver-held table, so it
+    leaves no persisted RDD behind in the session."""
+    _idx, texts = bq_oracle
+    source = spark.read.parquet(corpus_path)
+    phrase = " ".join(tokenize(texts[min(texts)])[2:4])
+    cached = spark.sparkContext._jsc.getPersistentRDDs
+    before = set(cached().keySet())
+    rows = phrase_topk(
+        spark, bq_index.index_dir("v1"), source, [(0, phrase)], k=10
+    ).collect()
+    assert rows
+    assert set(cached().keySet()) == before
+
+
 def test_docpart_accumulators_are_cell_sized(spark, corpus_path, tmp_path):
     """Docpart memory honesty (VERDICT r4 #6): score_cell's per-query
     dense accumulators are allocated at exactly ``_cell_bounds(...)[1]``

@@ -115,14 +115,17 @@ def _answers(spark, idx_dir: str, queries) -> dict:
     return out
 
 
-def test_forward_route_follows_input_shape(spark, tmp_path):
+def test_forward_route_follows_input_shape(spark, tmp_path, monkeypatch):
     """materialize_forward stages exactly the inputs a re-scan may not
     reproduce, and records the route as ``input_staged``: a file scan and
     the cdc cursor batch (filters and a projection over the scan) are read
     directly; a queue batch (a join), a persisted frame, an in-memory
     frame and a ``where`` on the clock are staged. The clock build indexes
     the same rows as the plain build: same counters, and both answer like
-    the oracle over their own snapshot."""
+    the oracle over their own snapshot. The two commits run with a driver
+    bound of 0 rows, so they take the Spark route, the one that calls
+    materialize_forward; a queue batch on the driver route stages
+    nothing."""
     base = generate_documents(300)
     final = evolve_corpus(base, n_new=40, n_update=10, n_flip=5, seed=7)
     base_p, final_p = str(tmp_path / "base.parquet"), str(tmp_path / "final.parquet")
@@ -158,14 +161,28 @@ def test_forward_route_follows_input_shape(spark, tmp_path):
         persisted.unpersist()
     assert build("memory", spark.createDataFrame(base.to_pandas()))[2] is True
 
-    m = incremental_update(spark, spark.read.parquet(final_p), cat, "v1")
-    assert m["phases"]["incremental_gen1"]["input_staged"] is False
+    import dataclasses
+
+    from osu_elastic_indexer_spark import config
+
+    spark_route = dataclasses.replace(config.DEFAULT, batch_size=0)
     urls = [(u,) for u in final["url"].to_pylist()[-20:]]
+    with monkeypatch.context() as mp:
+        mp.setattr(config, "DEFAULT", spark_route)
+        m = incremental_update(spark, spark.read.parquet(final_p), cat, "v1")
+        assert m["phases"]["incremental_gen1"]["input_staged"] is False
+        m = incremental_update(
+            spark, spark.read.parquet(final_p), cat, "v1",
+            queue_urls=driver_frame(spark, urls, "url string"),
+        )
+        ph = m["phases"]["incremental_gen2"]
+        assert ph["route"] == "spark" and ph["input_staged"] is True
     m = incremental_update(
         spark, spark.read.parquet(final_p), cat, "v1",
-        queue_urls=driver_frame(spark, urls, "url string"),
+        queue_urls=driver_frame(spark, urls[:10], "url string"),
     )
-    assert m["phases"]["incremental_gen2"]["input_staged"] is True
+    ph = m["phases"]["incremental_gen3"]
+    assert ph["route"] == "driver" and ph["input_staged"] is False
     orc = _snapshot_oracle(cat.index_dir("v1"), final)
     got = _answers(spark, cat.index_dir("v1"), queries)
     for qid, q in queries:

@@ -147,7 +147,10 @@ def test_vectorized_merge_bit_identical_to_encode_postings(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from functools import partial
+
     from osu_elastic_indexer_spark.functions import codec
+    from osu_elastic_indexer_spark.operators import state
     from osu_elastic_indexer_spark.operators.build import (
         _merge_subsegments_arrow,
     )
@@ -197,7 +200,9 @@ def test_vectorized_merge_bit_identical_to_encode_postings(tmp_path):
         ],
         names=["term_id", "salt", "subs"],
     )
-    run = _merge_subsegments_arrow(3, str(norms_dir), 12345)
+    run = _merge_subsegments_arrow(
+        3, partial(state.load_doc_lengths, str(norms_dir), 12345)
+    )
     out = list(run([batch]))
     assert len(out) == 1
     got = out[0].to_pylist()

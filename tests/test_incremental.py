@@ -97,13 +97,15 @@ def _check_all_queries(spark, idx_dir, oracle_idx, oracle_urls, tag):
 def test_crash_mid_generation_replays_cleanly(
     spark, evolved, incr_index, tmp_path_factory, monkeypatch
 ):
-    """Atomicity (T7): kill the update mid-generation twice — right after
-    the tombstone generation is written (before any segment), then AT the
-    commit point (every table dir is already written but the manifest swap
-    never happens). After each crash the index must keep serving the OLD
-    state, and a replay (the foreachBatch retry path) must clean the orphan
-    generation and land on the same final state as a crash-free run: no
-    double-appended docID ranges, no lost delete deltas, no stats drift."""
+    """Atomicity (T7): kill the update mid-generation — right after the
+    driver route's fwd/docmap write, right after the tombstone generation
+    is written (before any segment), right after its segments write, then
+    AT the commit point (every table dir is already written but the
+    manifest swap never happens). After each crash the index must keep
+    serving the OLD state, and a replay (the foreachBatch retry path) must
+    clean the orphan generation and land on the same final state as a
+    crash-free run: no double-appended docID ranges, no lost delete deltas,
+    no stats drift."""
     import os
 
     import osu_elastic_indexer_spark.streaming.incremental as inc
@@ -118,10 +120,13 @@ def test_crash_mid_generation_replays_cleanly(
 
     real_gen_file = inc._write_gen_file
 
-    def crash_after_tombstones(path, table, **kw):
-        real_gen_file(path, table, **kw)
-        if os.path.basename(os.path.dirname(path)).startswith("tombstones"):
-            raise RuntimeError("injected crash after the tombstone write")
+    def crash_after(table):
+        def fake(path, tbl, **kw):
+            real_gen_file(path, tbl, **kw)
+            if os.path.basename(os.path.dirname(path)).startswith(table):
+                raise RuntimeError(f"injected crash after the {table} write")
+
+        return fake
 
     real_write = Catalog.write_manifest
 
@@ -130,20 +135,24 @@ def test_crash_mid_generation_replays_cleanly(
             raise RuntimeError("injected crash at commit")
         return real_write(self, schema, manifest)
 
-    for target, name, fake in (
-        (inc, "_write_gen_file", crash_after_tombstones),
-        (Catalog, "write_manifest", crash_at_commit),
+    def gen_dir(table):
+        return os.path.join(cat.table_path("v1", table), f"gen={gen}")
+
+    # (fake, tables written before the crash, the table written next)
+    for target, name, fake, written, unwritten in (
+        (inc, "_write_gen_file", crash_after("docmap"), ("fwd", "docmap"), "tombstones"),
+        (inc, "_write_gen_file", crash_after("tombstones"), ("tombstones",), "segments"),
+        (inc, "_write_gen_file", crash_after("segments"), ("segments",), "dictionary"),
+        (Catalog, "write_manifest", crash_at_commit, (), None),
     ):
         with monkeypatch.context() as mp:
             mp.setattr(target, name, fake)
             with pytest.raises(RuntimeError, match="injected crash"):
                 incremental_update(spark, spark.read.parquet(final_p), cat, "v1")
-        if fake is crash_after_tombstones:
-            # the crash hit between the tombstone write and the segments
-            tomb_gen = os.path.join(cat.table_path("v1", "tombstones"), f"gen={gen}")
-            seg_gen = os.path.join(cat.table_path("v1", "segments"), f"gen={gen}")
-            assert pq.read_table(tomb_gen).num_rows > 0
-            assert not os.path.exists(seg_gen)
+        for table in written:
+            assert pq.read_table(gen_dir(table)).num_rows > 0, table
+        if unwritten:
+            assert not os.path.exists(gen_dir(unwritten)), unwritten
 
         # uncommitted generation is invisible: queries still serve the base state
         m_crashed = cat.read_manifest("v1")
@@ -164,7 +173,9 @@ def test_crash_mid_generation_replays_cleanly(
     assert abs(st2.avgdl - oidx.avgdl) < 1e-9
     # the crash-free run of the same batch: same counters and stats
     cat_ok, m_ok = incr_index
-    assert m2["counters"] == m_ok["counters"]
+    assert m2["phases"][f"incremental_gen{gen}"]["route"] == "driver"
+    assert m2["counters"] == m_ok["counters"]  # next_doc_id included
+    assert m2["cursor"] == m_ok["cursor"]
     st_ok = spark.read.parquet(cat_ok.table_path("v1", "stats")).collect()[0]
     assert st2.asDict() == st_ok.asDict()
     _check_all_queries(spark, cat.index_dir("v1"), oidx, ourls, "replayed")
@@ -846,14 +857,18 @@ def test_legacy_manifest_and_cursor_edge_cases(spark, evolved, tmp_path_factory)
     assert _gen_rows(cat, "tombstones", gen) == [(ids[url],)]
 
 
-def test_commit_jobs_named_by_phase(spark, evolved, tmp_path_factory):
-    """Every Spark job of a commit carries a job description naming its
-    phase, the manifest's generation phase records per-phase seconds next
-    to wall_sec, and the caller's job description is restored."""
+def test_commit_jobs_named_by_phase(
+    spark, evolved, tmp_path_factory, monkeypatch
+):
+    """Every Spark job of a commit on the Spark route (the batch is over
+    the driver bound) carries a job description naming its phase, the
+    manifest's generation phase records per-phase seconds next to
+    wall_sec, and the caller's job description is restored."""
     base_p, final_p, _b, _f = evolved
     root = str(tmp_path_factory.mktemp("idx_phases"))
     cat = Catalog(root)
     build_index(spark, spark.read.parquet(base_p), cat, "v1")
+    _driver_bound(monkeypatch, 0)
     sc = spark.sparkContext
     docs = spark.read.parquet(final_p)
     tracker = sc.statusTracker()
@@ -877,6 +892,7 @@ def test_commit_jobs_named_by_phase(spark, evolved, tmp_path_factory):
     ), names
     assert {d.split(": ", 1)[1] for d in names.values()} == phases
     rec = m["phases"]["incremental_gen1"]
+    assert rec["route"] == "spark"
     assert rec["wall_sec"] >= 0
     for p in phases:
         assert rec[f"{p}_s"] >= 0
@@ -903,3 +919,151 @@ def test_driver_tables_run_no_python_tasks(spark, tmp_path):
     assert driver_frame(spark, [], "pid int, off bigint").count() == 0
     for d in (df, empty):
         assert "PythonRDD" not in lineage(d), lineage(d)
+
+
+def _driver_bound(monkeypatch, rows: int) -> None:
+    """Set the driver route's row bound (``config.DEFAULT.batch_size``) for
+    one test: a batch of more rows takes the Spark route."""
+    import dataclasses
+
+    from osu_elastic_indexer_spark import config
+
+    monkeypatch.setattr(
+        config, "DEFAULT", dataclasses.replace(config.DEFAULT, batch_size=rows)
+    )
+
+
+def _with_rank(tbl):
+    """The fixture corpus plus an integer column to declare numeric."""
+    ranks = [len(u) % 7 for u in tbl["url"].to_pylist()]
+    return tbl.append_column("rank", pa.array(ranks, pa.int64()))
+
+
+@pytest.mark.parametrize("positions", [False, True], ids=["v1", "v2"])
+def test_driver_and_spark_routes_commit_identical_generations(
+    spark, tmp_path, monkeypatch, positions
+):
+    """One cursor batch (off a file scan) committed through the driver
+    route and through the Spark route writes the same generation rows —
+    fwd, docmap, segments (blobs, block metadata, positions), tombstones,
+    dictionary, dict_by_term — the same stats row and the same manifest
+    counters and cursor. The driver's pyarrow files read back through
+    Spark's pinned schemas (warc_ts a UTC-adjusted timestamp) and through
+    ``LocalSearcher``. The Spark side's bound is one row short of the
+    batch, so the bound itself is what picks the route."""
+    import os
+    import shutil
+
+    from pyspark.sql.types import TimestampType
+
+    from osu_elastic_indexer_spark.operators.build import (
+        FWD_SCHEMA,
+        SEGMENT_SCHEMA,
+        SEGMENT_SCHEMA_POS,
+    )
+    from osu_elastic_indexer_spark.operators.serve import LocalSearcher
+    from osu_elastic_indexer_spark.streaming.incremental import DOCMAP_SCHEMA
+
+    base = _with_rank(generate_documents(300))
+    final = _with_rank(
+        evolve_corpus(base.drop(["rank"]), n_new=40, n_update=10, n_flip=5, seed=3)
+    )
+    base_p, final_p = str(tmp_path / "base.parquet"), str(tmp_path / "final.parquet")
+    pq.write_table(base, base_p)
+    pq.write_table(final, final_p)
+    build_index(
+        spark, spark.read.parquet(base_p), Catalog(str(tmp_path / "driver")), "v1",
+        keyword_fields=["lang"], numeric_fields=["rank"], positions=positions,
+    )
+    shutil.copytree(str(tmp_path / "driver"), str(tmp_path / "spark"))
+    cats = {r: Catalog(str(tmp_path / r)) for r in ("driver", "spark")}
+    n_batch = 40 + 10 + 5
+    ms = {"driver": incremental_update(spark, spark.read.parquet(final_p), cats["driver"], "v1")}
+    with monkeypatch.context() as mp:
+        _driver_bound(mp, n_batch - 1)
+        ms["spark"] = incremental_update(
+            spark, spark.read.parquet(final_p), cats["spark"], "v1"
+        )
+    for route, m in ms.items():
+        ph = m["phases"]["incremental_gen1"]
+        assert ph["route"] == route and ph["collected_rows"] == n_batch
+        assert ph["collected_html_bytes"] > 0 and ph["input_staged"] is False
+        assert ph["adds"] > 0 and ph["deletes"] > 0
+    assert ms["driver"]["counters"] == ms["spark"]["counters"]
+    assert ms["driver"]["cursor"] == ms["spark"]["cursor"]
+
+    d, s = cats["driver"], cats["spark"]
+    for table in ("fwd", "docmap", "segments", "tombstones", "dictionary", "dict_by_term"):
+        assert _gen_rows(d, table, 1) == _gen_rows(s, table, 1), table
+    stats = [
+        pq.read_table(c.table_path("v1", "stats")).to_pylist() for c in (d, s)
+    ]
+    assert stats[0] == stats[1]
+
+    # the pyarrow-written generation through Spark's pinned schemas
+    pinned = {
+        "fwd": FWD_SCHEMA + (", poss array<bigint>" if positions else ""),
+        "docmap": DOCMAP_SCHEMA + ", lang string, rank double",
+        "segments": SEGMENT_SCHEMA_POS if positions else SEGMENT_SCHEMA,
+    }
+    for table, schema in pinned.items():
+        rows = [
+            sorted(
+                spark.read.schema(schema)
+                .parquet(f"{c.table_path('v1', table)}/gen=1")
+                .collect()
+            )
+            for c in (d, s)
+        ]
+        assert rows[0] == rows[1] and rows[0], table
+    dm = spark.read.parquet(f"{d.table_path('v1', 'docmap')}/gen=1")
+    assert dm.schema["warc_ts"].dataType == TimestampType()
+
+    searchers = [LocalSearcher(c.index_dir("v1")) for c in (d, s)]
+    answered = 0
+    for _qid, q, _k in reference_queries():
+        got = [sr.search(q, 10) for sr in searchers]
+        assert got[0] == got[1], q
+        answered += bool(got[0])
+        spec = {"should": q.split(), "filter_term": {"lang": ["en"]}}
+        assert searchers[0].search_bool(spec, 10) == searchers[1].search_bool(spec, 10)
+        if positions:
+            assert searchers[0].search_phrase(q, None, 10) == searchers[1].search_phrase(q, None, 10)
+    assert answered > len(reference_queries()) // 2
+    for field in ("warc_ts", "rank"):
+        got = [sr.search_sort(field, 20) for sr in searchers]
+        assert got[0] == got[1] and got[0], field
+    if not positions:
+        oidx, ourls = _oracle_for(final)
+        _check_all_queries(spark, d.index_dir("v1"), oidx, ourls, "driver route")
+
+
+def test_driver_route_commit_runs_two_jobs_no_python(spark, evolved, tmp_path):
+    """A commit on the driver route runs at most two Spark jobs — the
+    batch collect and the tombstone resolution — each named by its phase,
+    and neither runs a Python worker: the build's kernels run in the
+    driver process."""
+    base_p, final_p, _b, _f = evolved
+    cat = Catalog(str(tmp_path / "idx"))
+    build_index(spark, spark.read.parquet(base_p), cat, "v1")
+    docs = spark.read.parquet(final_p)  # its schema read is not the commit's
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    m = incremental_update(spark, docs, cat, "v1")
+    jobs = set(tracker.getJobIdsForGroup(None)) - before
+    assert m["phases"]["incremental_gen1"]["route"] == "driver"
+    assert 0 < len(jobs) <= 2, jobs
+    store = sc._jsc.sc().statusStore()
+    names = {store.job(j).description().get() for j in jobs}
+    assert names <= {"incremental gen=1: forward", "incremental gen=1: tombstones"}
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if any(e.jobs().contains(j) for j in jobs)
+    ]
+    assert plans
+    for plan in plans:
+        for node in ("Python", "MapInArrow", "MapInPandas", "ArrowEval"):
+            assert node not in plan, plan

@@ -227,7 +227,16 @@ def test_phrase_verify_joins_are_broadcast_pinned(spark, tmp_path):
     SOURCE) must broadcast the candidate side of BOTH joins — a sort-merge
     fallback would shuffle the full (url, html) corpus at scale. For a
     normal phrase the executed plan must show two BroadcastHashJoins and
-    no SortMergeJoin / Exchange on the source scan side."""
+    no SortMergeJoin / Exchange on the source scan side. The candidates
+    ship back as a driver-held table, so a phrase with none (a needle that
+    never meets "the" in this corpus) plans no join and no source scan at
+    all."""
+    import pyarrow.parquet as pq
+
+    from osu_elastic_indexer_spark.functions.textprep import (
+        extract_text,
+        tokenize,
+    )
     from osu_elastic_indexer_spark.operators.boolquery import phrase_topk
     from osu_elastic_indexer_spark.operators.build import build_index
     from osu_elastic_indexer_spark.sources.catalog import Catalog
@@ -237,9 +246,18 @@ def test_phrase_verify_joins_are_broadcast_pinned(spark, tmp_path):
     cat = Catalog(str(tmp_path / "idx"))
     source = spark.read.parquet(p)
     build_index(spark, source, cat, "v1")
-    df = phrase_topk(
+    empty = _plan(phrase_topk(
         spark, cat.index_dir("v1"), source, [(0, "needleunique the")], k=5
+    ))
+    assert "Join" not in empty and "FileScan" not in empty, empty
+    tbl = pq.read_table(p, columns=["html", "lang"])
+    html = next(
+        h for h, lang in zip(tbl["html"].to_pylist(), tbl["lang"].to_pylist())
+        if lang == "en"
     )
+    phrase = " ".join(tokenize(extract_text(html))[2:4])
+    df = phrase_topk(spark, cat.index_dir("v1"), source, [(0, phrase)], k=5)
+    assert df.collect()
     plan = _plan(df)
     # both verify joins broadcast with the CANDIDATE side as build
     # (BuildLeft: pin(cands)⋈docmap, pin(cands⋈docmap)⋈source); a

@@ -5,19 +5,23 @@ searchers), document-partitioned cells (``*_docpart``) and the no-Spark
 ``LocalSearcher`` are drivers around one scoring kernel, so on random specs
 they must agree with each other and with the pure-python oracle EXACTLY —
 same docs, same order, same float scores — over a multi-generation index
-with tombstones (positional for the phrase and match_phrase_prefix fuzz).
+with tombstones (positional for the phrase and match_phrase_prefix fuzz),
+whose generations were committed through both commit routes.
 
 Each drawn example is a BATCH of queries: every Spark driver runs once per
 batch, which keeps the Spark job count (and the file's runtime) small."""
 
+import dataclasses
 import os
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from osu_elastic_indexer_spark import oracle
+from osu_elastic_indexer_spark import config, oracle
 from osu_elastic_indexer_spark.functions.textprep import extract_text, tokenize
 from osu_elastic_indexer_spark.operators.boolquery import (
     bool_topk,
@@ -31,6 +35,7 @@ from osu_elastic_indexer_spark.operators.wand import (
     wand_topk,
     wand_topk_docpart,
 )
+from osu_elastic_indexer_spark.session import driver_frame
 from osu_elastic_indexer_spark.sources.catalog import (
     Catalog,
     committed_gen_paths,
@@ -51,22 +56,43 @@ FUZZ = settings(
 )
 
 
-def _build_world(spark, root: str, **build_kw) -> dict:
-    """Base build + one incremental generation (adds, re-crawl updates and
-    lang flips, i.e. tombstones) over an all-langs index; the oracle is
-    built over the LIVE docs in the engine's docID space."""
+def _build_world(spark, root: str, queue_route: str, **build_kw) -> dict:
+    """Base build + two incremental generations over an all-langs index:
+    a cursor batch (adds, re-crawl updates and lang flips, i.e.
+    tombstones) and a queue batch (re-queued live urls and urls gone from
+    the source), the queue batch on ``queue_route`` ('driver' or 'spark')
+    and the cursor batch on the other. The oracle is built over the LIVE
+    docs in the engine's docID space."""
     base = generate_documents(500)
     final = evolve_corpus(base, n_new=80, n_update=20, n_flip=10)
+    gone = final["url"].to_pylist()[::50]
     bp, fp = os.path.join(root, "b.parquet"), os.path.join(root, "f.parquet")
+    rp = os.path.join(root, "r.parquet")
     pq.write_table(base, bp)
     pq.write_table(final, fp)
+    pq.write_table(
+        final.filter(pc.invert(pc.is_in(final["url"], pa.array(gone)))), rp
+    )
     cat = Catalog(root)
     build_index(
         spark, spark.read.parquet(bp), cat, "v1", include_all_langs=True,
         **build_kw,
     )
-    m = incremental_update(spark, spark.read.parquet(fp), cat, "v1")
-    assert m["generations"] == 2 and m["counters"]["deletes_total"] > 0
+    spark_route = dataclasses.replace(config.DEFAULT, batch_size=0)
+    queue = [(u,) for u in final["url"].to_pylist()[7::40]] + [(u,) for u in gone]
+    for route, kw in (
+        ("spark" if queue_route == "driver" else "driver", {}),
+        (queue_route, {"queue_urls": driver_frame(spark, queue, "url string")}),
+    ):
+        with pytest.MonkeyPatch.context() as mp:
+            if route == "spark":
+                mp.setattr(config, "DEFAULT", spark_route)
+            m = incremental_update(
+                spark, spark.read.parquet(rp if kw else fp), cat, "v1", **kw
+            )
+        ph = m["phases"][f"incremental_gen{m['generations'] - 1}"]
+        assert ph["route"] == route and ph["deletes"] > 0
+    assert m["generations"] == 3
     idx_dir = cat.index_dir("v1")
 
     dead = set()
@@ -107,14 +133,16 @@ def _build_world(spark, root: str, **build_kw) -> dict:
 
 @pytest.fixture(scope="module")
 def world(spark, tmp_path_factory):
-    return _build_world(spark, str(tmp_path_factory.mktemp("equiv")))
+    return _build_world(spark, str(tmp_path_factory.mktemp("equiv")), "driver")
 
 
 @pytest.fixture(scope="module")
 def pos_world(spark, tmp_path_factory):
-    """The same two-generation index with tombstones, built positional."""
+    """The same three-generation index with tombstones, built positional,
+    its queue batch on the Spark route."""
     return _build_world(
-        spark, str(tmp_path_factory.mktemp("equiv_pos")), positions=True
+        spark, str(tmp_path_factory.mktemp("equiv_pos")), "spark",
+        positions=True,
     )
 
 

@@ -168,3 +168,15 @@ def test_queue_depth_decodes_percent_encoded_source_log(tmp_path):
     )
     d = queue_depth(str(qdir), str(ckpt))
     assert d["files_pending"] == 0 and d["rows_pending"] == 0
+
+
+def test_doc_lengths_span_the_batch_not_the_id_space(tmp_path):
+    """The segment merge's norms cover the merged docs' [min, max] doc_id,
+    so a generation high in the id space holds no array of the whole
+    space."""
+    g = str(tmp_path / "idx" / "fwd" / "gen=3")
+    _write_fwd(g, [1_000_000, 1_000_002])
+    state._CACHE.clear()
+    first, dl = state.load_doc_lengths((g,), 1)
+    assert first == 1_000_000 and dl.tolist() == [7, 0, 7]
+    state._CACHE.clear()
