@@ -1087,8 +1087,10 @@ def segments_local(
     runs in the JVM — sub-segments ⋈ ``term_ids`` (term, term_id) and the
     (term_id, salt) group into ``subs`` lists — as an Arrow sort, then
     ``_merge_subsegments_arrow`` with norms from ``fwd`` itself (no file
-    read, nothing cached). -> segment rows sorted by (term_id, salt), the
-    order ``write_segments`` leaves within its files."""
+    read, nothing cached). One invert pass over the whole batch emits each
+    (term, salt) cell once, so every group is a one-sub list. -> segment
+    rows sorted by (term_id, salt), the order ``write_segments`` leaves
+    within its files."""
     blob_cols = ["docs_blob", "tfs_blob"] + (["pos_blob"] if positions else [])
     seg_schema = _SEGMENT_PA_SCHEMA_POS if positions else _SEGMENT_PA_SCHEMA
     grid_salts = _grid_salts(id_span, salt_group_cap, max_salts)
@@ -1108,20 +1110,15 @@ def segments_local(
             **{c: sub[c] for c in blob_cols},
         }
     ).sort_by([("term_id", "ascending"), ("salt", "ascending")])
-    tids = keyed["term_id"].to_numpy()
-    salts = keyed["salt"].to_numpy()
-    starts = np.flatnonzero(
-        np.concatenate(([True], (np.diff(tids) != 0) | (np.diff(salts) != 0)))
-    )
     blobs = pa.StructArray.from_arrays(
         [keyed[c].combine_chunks() for c in blob_cols], names=blob_cols
     )
     grouped = pa.RecordBatch.from_arrays(
         [
-            pa.array(tids[starts], pa.int64()),
-            pa.array(salts[starts], pa.int32()),
+            keyed["term_id"].combine_chunks(),
+            keyed["salt"].combine_chunks(),
             pa.ListArray.from_arrays(
-                pa.array(np.append(starts, len(tids)), pa.int32()), blobs
+                pa.array(np.arange(len(blobs) + 1), pa.int32()), blobs
             ),
         ],
         names=["term_id", "salt", "subs"],

@@ -460,7 +460,7 @@ def _apply_batch(
         local = local.take(pc.sort_indices(local["__pos"]))  # scan order
         with phases("tombstones"):
             dead_ids = _live_ids_of(spark, idx, docmap, local["url"])
-        # the batch cursor, converted as a collected Row's timestamp is
+        # the batch cursor as the Spark route's collected Row carries it
         ts = pc.max(local["warc_ts"].cast(pa.int64())).as_py()
         new_cursor = None if ts is None else TimestampType().fromInternal(ts)
     else:
