@@ -710,8 +710,9 @@ def _apply_batch(
     if int(add_stats["postings"]) > 0:
         id_span = start_id + n_add
         cap = salt_group_cap or max(50_000, max(n_add, 1) // 8)
-        # the generation phase's wall time starts here (and mark_phase
-        # bumps the manifest's monotonic commit_seq, read below)
+        # the generation phase's wall time starts here; mark_phase also
+        # bumps the manifest's monotonic commit_seq (the Spark route's
+        # norms cache version, below)
         cat.mark_phase(schema_version, f"incremental_gen{gen}", "running")
         if route == "driver":
             # the batch-scoped delta dictionary covers every term in the
