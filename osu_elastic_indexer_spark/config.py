@@ -25,9 +25,9 @@ class Settings:
     schema: str = field(default_factory=lambda: os.environ.get("SCHEMA", "1"))
     prefix: str = field(default_factory=lambda: os.environ.get("ES_INDEX_PREFIX", ""))
     alias: str = field(default_factory=lambda: os.environ.get("ES_INDEX_ALIAS", "documents"))
-    # AppSettings.cs:39 — items per queue batch; here: the most rows an
-    # incremental batch may have and still commit on the driver
-    # (streaming/incremental.py); a larger batch takes the Spark route.
+    # AppSettings.cs:39 — items per bulk request; here: informational only
+    # (the driver commit route's row bound is the module constant
+    # streaming/incremental.DRIVER_BATCH_ROWS, of the same value).
     batch_size: int = field(default_factory=lambda: _env_int("BATCH_SIZE", 10_000))
     # AppSettings.cs:34 — in-flight batches; here: informational only (Spark
     # bounds in-flight work by task slots).

@@ -87,7 +87,6 @@ from pyspark.sql import functions as F
 
 from ..functions import codec
 from ..functions.textprep import tokenize
-from ..session import driver_frame
 from . import wand
 from .wand import (
     _MUST,
@@ -1452,13 +1451,14 @@ def phrase_topk(
     # head-term phrases, so candidates are few and per-query joins win)
     gen = _bool_topk_docpart if docpart is True else _bool_topk
     cands = gen(spark, index_dir, m, bool_queries, 2**31 - 1)
-    # bound before pinning: candidates within the bound are collected once
-    # and shipped back as a driver-held table both verify joins reuse (one
-    # candidate job, and nothing left cached in the session)
-    rows = cands.select("query_id", "doc_id", "score").limit(
+    # bound before pinning: candidates within the bound are collected once,
+    # as Arrow (at most max_candidates + 1 rows of three 8-byte columns),
+    # and shipped back as a local relation both verify joins read — one
+    # candidate job, and nothing left cached in the session
+    got = cands.select("query_id", "doc_id", "score").limit(
         max_candidates + 1
-    ).collect()
-    if len(rows) > max_candidates:
+    ).toArrow()
+    if got.num_rows > max_candidates:
         if on_overflow == "error":
             raise ValueError(
                 f"phrase verify would check more than {max_candidates} "
@@ -1470,8 +1470,8 @@ def phrase_topk(
             )
         pin = lambda df: df  # documented corpus-scan mode: no broadcast pin
     else:
-        cands = driver_frame(
-            spark, rows, "query_id bigint, doc_id bigint, score double"
+        cands = spark.createDataFrame(
+            got, "query_id bigint, doc_id bigint, score double"
         )
         pin = F.broadcast
 

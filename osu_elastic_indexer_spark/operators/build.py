@@ -26,12 +26,12 @@ and ``_merge_subsegments_arrow`` are generator functions over Arrow
 batches. A build, a compaction and an incremental batch over the driver
 bound run them as Spark ``mapInArrow`` stages (``materialize_forward``,
 ``build_segments_spimi``), the JVM grouping sub-segments by (term_id, salt)
-between the last two. An incremental batch of at most
-``config.DEFAULT.batch_size`` rows (streaming/incremental.py) runs them in
-the driver process instead (``forward_local``, ``segments_local``): a plain
-(offsets, counts) bundle in place of the broadcast, and an Arrow sort and
-group in place of the JVM ``groupBy … collect_list``. Both drivers write the
-same rows.
+between the last two. An incremental batch within the driver bounds
+(``DRIVER_BATCH_ROWS`` rows and ``DRIVER_BATCH_HTML_BYTES`` of html, in
+streaming/incremental.py) runs them in the driver process instead
+(``forward_local``, ``segments_local``): a plain (offsets, counts) bundle
+in place of the broadcast, and an Arrow sort and group in place of the JVM
+``groupBy … collect_list``. Both drivers write the same rows.
 
 docIDs come from per-partition offsets, so the count pass, the fused pass
 and the docmap projection must see the same rows in the same partitions.

@@ -22,26 +22,35 @@ with ``setJobDescription``; its seconds land in the manifest's
 ``incremental_genN`` phase as ``<phase>_s``, next to ``route``,
 ``collected_rows``, ``collected_html_bytes`` and ``input_staged``.
   route       ONE Arrow collect (``toArrow``) of at most
-              ``config.DEFAULT.batch_size`` + 1 rows of the batch (url,
-              warc_ts, the add flag, html of the adds only). The bound is
-              the reference's BATCH_SIZE (env ``BATCH_SIZE``, 10,000 by
-              default): one queue batch, adds and deletes alike. A batch
-              within it commits on the DRIVER: the build's own kernels
-              (operators/build.py) run in this process over the collected
-              rows and every generation file is written with pyarrow, so a
-              commit runs two Spark jobs (this collect and the tombstone
-              lookup) and no Python worker. A larger batch takes the SPARK
-              route: the same kernels as Spark stages, as a build runs them.
+              DRIVER_BATCH_ROWS + 1 rows of the batch, without html: url,
+              warc_ts and each add's html byte length. A batch of at most
+              DRIVER_BATCH_ROWS rows (10,000: the reference's queue batch,
+              adds and deletes alike) whose adds carry at most
+              DRIVER_BATCH_HTML_BYTES of html commits on the DRIVER: one
+              more collect brings the adds, html included, together with
+              the tombstone lookup; the build's own kernels
+              (operators/build.py) run in this process and every generation
+              file is written with pyarrow — two Spark jobs and no Python
+              worker in all. Any other batch takes the SPARK route: the
+              same kernels as Spark stages, as a build runs them, after the
+              probe. On a 4-core VM the driver route was the faster one at
+              every size measured: 1k, 5k and 10k fixture rows (~1 KB of
+              html each) in 1.8, 4.1 and 5.9 s a commit against 5.7, 7.8
+              and 9.1 s, and 797 adds of ~65 KB (52 MB of html) in 8.7
+              against 11.9 s, for 20-180 MB more driver RSS. The bounds sit
+              at the largest sizes measured, not at a measured crossover;
+              the driver's kernels run on one core, the Spark route's on
+              all of them.
   tombstones  deletes are POINT deletes by key, so their cost follows the
               batch: ONE job resolves the batch's tombstones to the driver
               (committed docmap ⋉ changed urls ▷ old tombstones -> sorted
               doc_ids). Driver route: the docmap scan filtered by the
-              collected urls as an IN list, the old tombstones subtracted
-              with pyarrow. Spark route: a join, the batch cursor
-              max(warc_ts) riding the job as one more row. The tombstoned
-              docs' forward rows are then read ONCE, driver-side, from the
-              doc_id-clustered fwd table (footer statistics prune row
-              groups): they give the deleted docs' stats (n, sum_dl,
+              probed urls as an IN list, riding the adds' collect; the old
+              tombstones subtracted with pyarrow. Spark route: a join, the
+              batch cursor max(warc_ts) riding the job as one more row. The
+              tombstoned docs' forward rows are then read ONCE, driver-side,
+              from the doc_id-clustered fwd table (footer statistics prune
+              row groups): they give the deleted docs' stats (n, sum_dl,
               postings) and the per-term df decrements. The tombstone
               generation is written from the driver-held ids with pyarrow.
   forward     fresh docIDs start at the manifest's ``next_doc_id`` counter
@@ -107,7 +116,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import TimestampType
 
-from .. import config
 from ..operators.build import (
     FWD_ROW_GROUP_BYTES,
     FWD_SCHEMA,
@@ -144,6 +152,15 @@ TOMB_SCHEMA = "doc_id bigint"
 # distributed semi-join (a pushed IN list that wide costs more than the
 # scan it prunes, and such a batch is approaching rebuild volume anyway)
 KNOWN_ID_IN_MAX = 100_000
+
+# the driver commit route's bounds: a batch of at most DRIVER_BATCH_ROWS rows
+# whose adds carry at most DRIVER_BATCH_HTML_BYTES of html commits in this
+# process; any larger batch takes the Spark route (module docstring, "route",
+# has the measurements). DRIVER_BATCH_ROWS is the reference's queue batch
+# (BATCH_SIZE); the html bound caps what one collect brings to the driver,
+# whatever the pages' size.
+DRIVER_BATCH_ROWS = 10_000
+DRIVER_BATCH_HTML_BYTES = 64 << 20
 
 
 def _read_committed(
@@ -201,57 +218,70 @@ def _spark_timestamps(spark: SparkSession) -> dict:
     return {"coerce_timestamps": "ms" if kind == "TIMESTAMP_MILLIS" else "us"}
 
 
-def _collect_batch(
-    batch: DataFrame,
-    is_add,
-    keyword_fields: tuple,
-    numeric_fields: tuple,
-    bound: int,
-) -> pa.Table:
-    """At most ``bound + 1`` rows of the batch in ONE Arrow collect: url,
-    warc_ts, ``__add`` (routed to add), html for the adds only, the
-    declared keyword/numeric columns cast as the docmap stores them, and
-    ``__pos`` (monotonically_increasing_id: partition index, then row
-    position), which restores the scan order the Spark route numbers docs
-    in. More than ``bound`` rows sends the batch down the Spark route."""
+def _url_in(urls: list[str]):
+    """``url IN (urls)`` as ONE SQL expression of hex string literals (no
+    url needs escaping); the optimizer folds it into a hash-set probe.
+    ``Column.isin`` builds the same filter with a py4j round trip per url:
+    on a 4-core VM, 2.7 s for 1,000 urls and 7-15 s for 10,000, against
+    0.02 s for the SQL text."""
+    return F.expr(
+        "url IN ("
+        + ", ".join(f"CAST(X'{u.encode().hex()}' AS STRING)" for u in urls)
+        + ")"
+    )
+
+
+def _probe_batch(batch: DataFrame, is_add) -> pa.Table:
+    """At most ``DRIVER_BATCH_ROWS + 1`` rows of the batch in ONE Arrow
+    collect, without html: url and warc_ts (the tombstone keys and the
+    cursor) and the html byte length of each add, which pick the route."""
     return (
         batch.select(
             "url",
             "warc_ts",
-            is_add.alias("__add"),
-            F.when(is_add, F.col("html")).alias("html"),
-            *[F.col(c).cast("string").alias(c) for c in keyword_fields],
-            *[F.col(c).cast("double").alias(c) for c in numeric_fields],
-            F.monotonically_increasing_id().alias("__pos"),
+            F.when(is_add, F.octet_length("html")).alias("html_bytes"),
         )
-        .limit(bound + 1)
+        .limit(DRIVER_BATCH_ROWS + 1)
         .toArrow()
     )
 
 
-def _live_ids_of(
-    spark: SparkSession, idx: str, docmap: DataFrame, urls
-) -> np.ndarray:
-    """Sorted docIDs of the committed, not yet tombstoned docs among
-    ``urls`` — the driver route's tombstone resolution. ONE Spark job: the
-    committed docmap scan filtered by the urls as an IN list of hex
-    literals (no url needs escaping), which the optimizer folds into a
-    hash-set probe; a join would plan a broadcast or a shuffle, each a job
-    of its own. The old tombstones are subtracted driver-side, read with
-    pyarrow and pruned to the matched ids."""
+def _collect_driver_batch(
+    idx: str,
+    docmap: DataFrame,
+    urls: list[str],
+    adds: DataFrame,
+    keyword_fields: tuple,
+    numeric_fields: tuple,
+) -> tuple[pa.Table, np.ndarray]:
+    """The driver route's second and last Spark job: ONE Arrow collect of
+    the committed docmap rows of ``urls`` (an exchange-free filtered scan;
+    a join would plan a broadcast or a shuffle, each a job of its own)
+    unioned with the batch's adds (url, warc_ts, html, the declared
+    keyword/numeric columns cast as the docmap stores them). Returns the
+    adds in scan order — ``__pos`` (monotonically_increasing_id: partition
+    index, then row position) restores the order the Spark route numbers
+    docs in — and the sorted docIDs to tombstone: the matched ids less the
+    ones already tombstoned (read with pyarrow, pruned to the matches)."""
     import pyarrow.dataset as ds
 
-    urls = pc.unique(urls).drop_null().to_pylist()
-    if not urls:
-        return np.zeros(0, dtype=np.int64)
-    probe = ", ".join(f"CAST(X'{u.encode().hex()}' AS STRING)" for u in urls)
-    ids = (
-        docmap.filter(F.expr(f"url IN ({probe})"))
-        .select("doc_id")
-        .toArrow()
-        .column("doc_id")
-        .combine_chunks()
+    adds = adds.select(
+        "url",
+        "warc_ts",
+        "html",
+        *[F.col(c).cast("string").alias(c) for c in keyword_fields],
+        *[F.col(c).cast("double").alias(c) for c in numeric_fields],
+        F.monotonically_increasing_id().alias("__pos"),
     )
+    if urls:
+        hits = docmap.filter(_url_in(urls)).select("doc_id")
+        adds = hits.unionByName(adds, allowMissingColumns=True)
+    got = adds.toArrow()
+    if "doc_id" not in got.column_names:
+        return got, np.zeros(0, dtype=np.int64)
+    hit = pc.is_valid(got["doc_id"])
+    ids = got["doc_id"].filter(hit).combine_chunks()
+    local = got.filter(pc.invert(hit)).drop_columns(["doc_id"])
     files = _parquet_files(tuple(committed_gen_paths(idx, "tombstones")))
     if files and len(ids):
         old = ds.dataset(files).to_table(
@@ -260,7 +290,7 @@ def _live_ids_of(
         ids = ids.filter(
             pc.invert(pc.is_in(ids, value_set=old["doc_id"].combine_chunks()))
         )
-    return np.sort(ids.to_numpy())
+    return local.sort_by("__pos"), np.sort(ids.to_numpy())
 
 
 def _deleted_forward(fwd_paths: list[str], dead: np.ndarray) -> dict:
@@ -433,21 +463,22 @@ def _apply_batch(
         is_add = should_index_expr(include_all_langs)
     adds = batch.filter(is_add).select(*carried)
 
-    # ---- route: a batch within config.batch_size rows commits on the
-    # driver — ONE collect, then the build's own kernels in this process;
-    # a larger one keeps the distributed route below
-    bound = config.DEFAULT.batch_size
-    with phases("forward"):
-        local = _collect_batch(
-            batch, is_add, keyword_fields, numeric_fields, bound
-        )
-    route = "driver" if local.num_rows <= bound else "spark"
+    # ---- route: a batch within the driver bounds commits on the driver —
+    # the build's own kernels in this process; a larger one keeps the
+    # distributed route below. The probe carries no html.
+    with phases("tombstones"):
+        probe = _probe_batch(batch, is_add)
+    html_bytes = int(pc.sum(probe["html_bytes"]).as_py() or 0)
+    route = (
+        "driver"
+        if probe.num_rows <= DRIVER_BATCH_ROWS
+        and html_bytes <= DRIVER_BATCH_HTML_BYTES
+        else "spark"
+    )
     collected = {
         "route": route,
-        "collected_rows": local.num_rows,
-        "collected_html_bytes": int(
-            pc.sum(pc.binary_length(local["html"])).as_py() or 0
-        ),
+        "collected_rows": probe.num_rows,
+        "collected_html_bytes": html_bytes if route == "driver" else 0,
     }
     docmap = _read_committed(
         spark, idx, "docmap", "url string, doc_id bigint", pinned=True
@@ -457,11 +488,14 @@ def _apply_batch(
     # docID tombstoned (update -> delete+add with fresh id; delete ->
     # tombstone only); ONE job either way, driver-held sorted ids --------
     if route == "driver":
-        local = local.take(pc.sort_indices(local["__pos"]))  # scan order
-        with phases("tombstones"):
-            dead_ids = _live_ids_of(spark, idx, docmap, local["url"])
+        # the adds and the tombstone lookup share the route's second job
+        with phases("forward"):
+            local, dead_ids = _collect_driver_batch(
+                idx, docmap, pc.unique(probe["url"]).drop_null().to_pylist(),
+                adds, keyword_fields, numeric_fields,
+            )
         # the batch cursor as the Spark route's collected Row carries it
-        ts = pc.max(local["warc_ts"].cast(pa.int64())).as_py()
+        ts = pc.max(probe["warc_ts"].cast(pa.int64())).as_py()
         new_cursor = None if ts is None else TimestampType().fromInternal(ts)
     else:
         # the batch cursor (max ignores the nulls a queue-resolve leaves)
@@ -484,7 +518,6 @@ def _apply_batch(
                 F.max("warc_ts").alias("cursor"),
             )
             rows = live_changed.unionByName(cursor).collect()
-        local = None  # the over-bound sample has served its purpose
         new_cursor = next(r.cursor for r in rows if r.doc_id is None)
         dead_ids = np.sort(
             np.array([r.doc_id for r in rows if r.doc_id is not None], np.int64)
@@ -500,9 +533,8 @@ def _apply_batch(
     with phases("forward"):
         start_id = _next_doc_id(m, docmap)
         if route == "driver":
-            local_adds = local.filter(local["__add"])
-            n_add = local_adds.num_rows
-            fwd = forward_local(local_adds["html"], start_id, positions)
+            n_add = local.num_rows
+            fwd = forward_local(local["html"], start_id, positions)
             add_stats = {
                 "n": fwd.num_rows,
                 "sum_dl": int(pc.sum(fwd["dl"]).as_py() or 0),
@@ -517,7 +549,7 @@ def _apply_batch(
             )
             _write_gen_file(
                 dm_gen_dir,
-                local_adds.select(
+                local.select(
                     ["url", "warc_ts", *keyword_fields, *numeric_fields]
                 ).append_column(
                     "doc_id",

@@ -161,14 +161,11 @@ def test_forward_route_follows_input_shape(spark, tmp_path, monkeypatch):
         persisted.unpersist()
     assert build("memory", spark.createDataFrame(base.to_pandas()))[2] is True
 
-    import dataclasses
+    import osu_elastic_indexer_spark.streaming.incremental as inc
 
-    from osu_elastic_indexer_spark import config
-
-    spark_route = dataclasses.replace(config.DEFAULT, batch_size=0)
     urls = [(u,) for u in final["url"].to_pylist()[-20:]]
     with monkeypatch.context() as mp:
-        mp.setattr(config, "DEFAULT", spark_route)
+        mp.setattr(inc, "DRIVER_BATCH_ROWS", 0)
         m = incremental_update(spark, spark.read.parquet(final_p), cat, "v1")
         assert m["phases"]["incremental_gen1"]["input_staged"] is False
         m = incremental_update(

@@ -922,15 +922,11 @@ def test_driver_tables_run_no_python_tasks(spark, tmp_path):
 
 
 def _driver_bound(monkeypatch, rows: int) -> None:
-    """Set the driver route's row bound (``config.DEFAULT.batch_size``) for
-    one test: a batch of more rows takes the Spark route."""
-    import dataclasses
+    """Set the driver route's row bound (``DRIVER_BATCH_ROWS``) for one
+    test: a batch of more rows takes the Spark route."""
+    import osu_elastic_indexer_spark.streaming.incremental as inc
 
-    from osu_elastic_indexer_spark import config
-
-    monkeypatch.setattr(
-        config, "DEFAULT", dataclasses.replace(config.DEFAULT, batch_size=rows)
-    )
+    monkeypatch.setattr(inc, "DRIVER_BATCH_ROWS", rows)
 
 
 def _with_rank(tbl):
@@ -949,13 +945,14 @@ def test_driver_and_spark_routes_commit_identical_generations(
     dictionary, dict_by_term — the same stats row and the same manifest
     counters and cursor. The driver's pyarrow files read back through
     Spark's pinned schemas (warc_ts a UTC-adjusted timestamp) and through
-    ``LocalSearcher``. The Spark side's bound is one row short of the
-    batch, so the bound itself is what picks the route."""
+    ``LocalSearcher``. The Spark side's bound is one row (v1) or one html
+    byte (v2) short of the batch, so a bound itself picks the route."""
     import os
     import shutil
 
     from pyspark.sql.types import TimestampType
 
+    import osu_elastic_indexer_spark.streaming.incremental as inc
     from osu_elastic_indexer_spark.operators.build import (
         FWD_SCHEMA,
         SEGMENT_SCHEMA,
@@ -979,15 +976,20 @@ def test_driver_and_spark_routes_commit_identical_generations(
     cats = {r: Catalog(str(tmp_path / r)) for r in ("driver", "spark")}
     n_batch = 40 + 10 + 5
     ms = {"driver": incremental_update(spark, spark.read.parquet(final_p), cats["driver"], "v1")}
+    html_bytes = ms["driver"]["phases"]["incremental_gen1"]["collected_html_bytes"]
     with monkeypatch.context() as mp:
-        _driver_bound(mp, n_batch - 1)
+        if positions:
+            mp.setattr(inc, "DRIVER_BATCH_HTML_BYTES", html_bytes - 1)
+        else:
+            _driver_bound(mp, n_batch - 1)
         ms["spark"] = incremental_update(
             spark, spark.read.parquet(final_p), cats["spark"], "v1"
         )
     for route, m in ms.items():
         ph = m["phases"]["incremental_gen1"]
         assert ph["route"] == route and ph["collected_rows"] == n_batch
-        assert ph["collected_html_bytes"] > 0 and ph["input_staged"] is False
+        assert (ph["collected_html_bytes"] > 0) == (route == "driver")
+        assert ph["input_staged"] is False
         assert ph["adds"] > 0 and ph["deletes"] > 0
     assert ms["driver"]["counters"] == ms["spark"]["counters"]
     assert ms["driver"]["cursor"] == ms["spark"]["cursor"]
@@ -1040,9 +1042,9 @@ def test_driver_and_spark_routes_commit_identical_generations(
 
 def test_driver_route_commit_runs_two_jobs_no_python(spark, evolved, tmp_path):
     """A commit on the driver route runs at most two Spark jobs — the
-    batch collect and the tombstone resolution — each named by its phase,
-    and neither runs a Python worker: the build's kernels run in the
-    driver process."""
+    html-free route probe and the adds' collect, which carries the
+    tombstone lookup — each named by its phase, and neither runs a Python
+    worker: the build's kernels run in the driver process."""
     base_p, final_p, _b, _f = evolved
     cat = Catalog(str(tmp_path / "idx"))
     build_index(spark, spark.read.parquet(base_p), cat, "v1")

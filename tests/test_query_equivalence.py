@@ -11,7 +11,6 @@ whose generations were committed through both commit routes.
 Each drawn example is a BATCH of queries: every Spark driver runs once per
 batch, which keeps the Spark job count (and the file's runtime) small."""
 
-import dataclasses
 import os
 
 import pyarrow as pa
@@ -21,7 +20,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from osu_elastic_indexer_spark import config, oracle
+from osu_elastic_indexer_spark import oracle
 from osu_elastic_indexer_spark.functions.textprep import extract_text, tokenize
 from osu_elastic_indexer_spark.operators.boolquery import (
     bool_topk,
@@ -44,6 +43,7 @@ from osu_elastic_indexer_spark.sources.fixtures import (
     evolve_corpus,
     generate_documents,
 )
+from osu_elastic_indexer_spark.streaming import incremental as inc
 from osu_elastic_indexer_spark.streaming.incremental import incremental_update
 
 OOV = "xyzzyabsent"
@@ -78,7 +78,6 @@ def _build_world(spark, root: str, queue_route: str, **build_kw) -> dict:
         spark, spark.read.parquet(bp), cat, "v1", include_all_langs=True,
         **build_kw,
     )
-    spark_route = dataclasses.replace(config.DEFAULT, batch_size=0)
     queue = [(u,) for u in final["url"].to_pylist()[7::40]] + [(u,) for u in gone]
     for route, kw in (
         ("spark" if queue_route == "driver" else "driver", {}),
@@ -86,7 +85,7 @@ def _build_world(spark, root: str, queue_route: str, **build_kw) -> dict:
     ):
         with pytest.MonkeyPatch.context() as mp:
             if route == "spark":
-                mp.setattr(config, "DEFAULT", spark_route)
+                mp.setattr(inc, "DRIVER_BATCH_ROWS", 0)
             m = incremental_update(
                 spark, spark.read.parquet(rp if kw else fp), cat, "v1", **kw
             )
