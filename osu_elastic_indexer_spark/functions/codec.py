@@ -77,12 +77,13 @@ def varbyte_decode(data: bytes | memoryview) -> np.ndarray:
     if not data:
         return np.empty(0, dtype=np.uint64)
     raw = np.frombuffer(data, dtype=np.uint8)
-    if not (raw & 0x80).any():
-        # every value fits one byte (high bit clear) — the common case for
-        # tf blobs and small position/doc gaps: skip the start/end maps and
-        # the per-byte-slot assembly loop entirely (one widening copy)
+    last = raw < 0x80  # high bit clear: a value's final byte
+    if last.all():
+        # every value fits one byte — the common case for tf blobs and
+        # small position/doc gaps: skip the start/end maps and the
+        # per-byte-slot assembly loop entirely (one widening copy)
         return raw.astype(np.uint64)
-    ends = np.flatnonzero((raw & 0x80) == 0)
+    ends = np.flatnonzero(last)
     starts = np.empty_like(ends)
     starts[0] = 0
     starts[1:] = ends[:-1] + 1

@@ -21,8 +21,10 @@ docID window:
   driver planned from. ``wand_topk``, ``prefix_topk``, positional
   ``phrase_topk`` and ``match_phrase_prefix_topk`` run the same way.
 * ``bool_topk_docpart`` — the queries-to-data shape for large batches:
-  blobs shuffle once per (generation, salt) docID cell regardless of the
-  query count; window = the cell span.
+  one ``mapInArrow`` task reads each (generation, salt) docID cell in
+  place and scores every query there, so a term decodes once per cell
+  regardless of the query count; window = the cell span; the per-cell
+  candidates merge on the driver.
 
 Every Spark batch plans from ONE manifest read (``_snapshot``): its
 statistics, dictionary lookups, segment files and worker searchers all
@@ -80,8 +82,9 @@ All paths honor tombstones and closed-index refusal.
 
 from __future__ import annotations
 
+import functools
+
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -94,10 +97,11 @@ from .wand import (
     _SCORED,
     _SHOULD,
     RESULT_SCHEMA,
+    _cell_body,
     _index_state,
-    _segment_rows,
+    _list_cells,
+    _merge_on_driver,
     accumulate,
-    decode_term,
     idf_of,
     score_bool,
 )
@@ -414,70 +418,73 @@ def _bool_plans(m: dict, queries: list[tuple[int, dict]]):
 
 def _plan_batch(
     spark, index_dir: str, m: dict, specs: dict, msms: dict,
-    with_positions: bool = False,
+    term_info: dict | None = None,
 ):
-    """Driver-side setup of a validated docpart batch on the snapshot
-    ``m``: index state + dictionary lookup -> per-query term plans + a
-    segment scan pruned to their terms -> (segs, state, {qid: plan}), or
-    None when no query can match (no dictionary hits / no committed
-    segments).
-
-    ``with_positions=False`` prunes the v2 positional sidecar columns (if
-    the index has them) so positions-free queries never ship position
-    bytes through the scan/shuffle; True keeps them (positional phrase)."""
-    from ..session import ship_package
+    """Driver-side plan of a validated docpart batch on the snapshot
+    ``m``, with no Spark job: term plans from the dictionary (or the
+    caller's ``term_info``, term -> (term_id, df)) and the cells holding
+    their terms -> (state, plans, cells), or None when nothing matches."""
     from ..sources.catalog import committed_gen_paths
-    from .build import V1_SEGMENT_COLS
-    from .dictionary import lookup_term_info
+    from . import dictionary
+    from .state import _parquet_files
 
     n_docs, avgdl, seq = _index_state(index_dir, m)
-    all_terms = sorted(
-        {t for s in specs.values() for c in _CLAUSES for t in s[c]}
-    )
-    term_info = lookup_term_info(spark, index_dir, all_terms, m)
+    if term_info is None:
+        term_info = dictionary.lookup_term_info(
+            spark, index_dir,
+            sorted({t for s in specs.values() for c in _CLAUSES for t in s[c]}),
+            m,
+        )
     plans = {}
     for qid, s in specs.items():
         plan = _plan_terms(s, msms[qid], term_info, n_docs)
         if plan is not None:
             plans[qid] = plan
-    seg_paths = committed_gen_paths(index_dir, "segments", m)
-    if not plans or not seg_paths:
-        return None
-    ship_package(spark)
-    segs = spark.read.parquet(*seg_paths)
-    if not with_positions:
-        segs = segs.select(*V1_SEGMENT_COLS)
     tids = sorted({
         tid for terms, _n, _m in plans.values() for _t, tid, _w, _r in terms
     })
-    state = {
-        "fwd_path": tuple(committed_gen_paths(index_dir, "fwd", m)),
-        "tomb_path": tuple(committed_gen_paths(index_dir, "tombstones", m)),
-        "docmap_path": tuple(committed_gen_paths(index_dir, "docmap", m)),
-        "seq": seq,
-        "avgdl": avgdl,
-        "n_docs": n_docs,
-    }
-    return segs.filter(F.col("term_id").isin(tids)), state, plans
+    paths = {t: tuple(committed_gen_paths(index_dir, t, m)) for t in (
+        "segments", "fwd", "tombstones", "docmap",
+    )}
+    cells = _list_cells(_parquet_files(paths["segments"]), tids)
+    if not cells:
+        return None
+    state = {"tids": tids, "seq": seq, "avgdl": avgdl, **paths}
+    return state, plans, cells
 
 
-def _cells(segs, run, k: int) -> DataFrame:
-    """The docpart shape of a planned batch: segment rows shuffle once per
-    (generation, salt) docID cell, ``run`` scores every query of the batch
-    in each cell, and ``_merge_cells`` finishes the top-k."""
-    return _merge_cells(
-        segs.groupBy("generation", "salt").applyInPandas(run, RESULT_SCHEMA),
-        int(k),
+def _cells(
+    spark, index_dir: str, m: dict, specs: dict, msms: dict, make_score,
+    positions: bool = False, term_info: dict | None = None,
+):
+    """The docpart shape of a validated batch (``_plan_batch``) as a lazy
+    frame of per-cell candidates, or None when no query can match: one
+    ``mapInArrow`` (``_cell_body`` with ``make_score(state, plans)``) over
+    ``spark.range(n_cells)`` in min(n_cells, defaultParallelism)
+    partitions, heaviest cells dealt round-robin — no scan, no exchange."""
+    from ..session import ship_package
+
+    planned = _plan_batch(spark, index_dir, m, specs, msms, term_info)
+    if planned is None:
+        return None
+    state, plans, cells = planned
+    ship_package(spark)
+    par = min(len(cells), max(1, int(spark.sparkContext.defaultParallelism)))
+    heavy = sorted(cells, key=lambda c: (-c[1], c[0]))
+    body = _cell_body(
+        state, [c for j in range(par) for c in heavy[j::par]],
+        make_score(state, plans), positions,
+    )
+    return spark.range(0, len(cells), 1, par).mapInArrow(
+        body, "query_id bigint, doc_id bigint, score double"
     )
 
 
-def _frame(qids, docs, scores) -> pd.DataFrame:
-    """A docpart cell's candidates in RESULT_SCHEMA order, at rank 0 (the
-    final window ranks the union of the cells' candidates)."""
-    return pd.DataFrame({
-        "query_id": qids, "rank": [0] * len(qids), "doc_id": docs,
-        "score": scores,
-    })
+def _union(spark, parts: list) -> DataFrame:
+    """The union of RESULT_SCHEMA frames (an empty frame for none)."""
+    if not parts:
+        return spark.createDataFrame([], RESULT_SCHEMA)
+    return functools.reduce(DataFrame.unionByName, parts)
 
 
 # the per-query shape's worker-side searcher: ONE entry per Python worker
@@ -624,22 +631,23 @@ def bool_topk_docpart(
     queries: list[tuple[int, dict]],
     k: int = 10,
 ) -> DataFrame:
-    """DOCUMENT-partitioned boolean batch top-k: segment rows for the union
-    of the batch's terms shuffle ONCE per (generation, salt) docID cell,
-    independent of the query count (the per-query shape instead decodes
-    each term's whole posting list on every worker whose queries use it);
-    the per-query term plans ride the closure.
+    """DOCUMENT-partitioned boolean batch top-k: one ``mapInArrow`` task
+    reads each (generation, salt) docID cell holding the batch's terms in
+    place and scores every query there (``_cells``), so a term decodes
+    once per cell regardless of the query count; nothing shuffles and the
+    per-cell candidates merge on the driver. The call runs its Spark job
+    at call time and returns a local relation.
 
     Correct per cell by construction: a doc's postings live wholly inside
     one cell (the salted grid partitions the docID space), so the cell-
     local required-count and exclusion masks are COMPLETE for every doc the
     cell owns — a doc eligible in its cell is eligible globally, and the
     union of per-cell top-ks contains the exact global top-k (cells cover
-    disjoint docs; one tiny window finishes). Each cell runs ``score_bool``
-    over its own span, so both paths are bit-identical — including the ES
-    filter context (``filter`` terms, ``filter_range``, zero-score tail):
-    zero-score docs rank below every positive doc globally, so per-cell
-    padding to k keeps the union argument exact.
+    disjoint docs). Each cell runs ``score_bool`` over its own span, so
+    both paths are bit-identical — including the ES filter context
+    (``filter`` terms, ``filter_range``, zero-score tail): zero-score docs
+    rank below every positive doc globally, so per-cell padding to k keeps
+    the union argument exact.
 
     One shape routes to the per-query shape: a spec whose ONLY required
     clauses are filter context (no must/filter term, msm 0). Its ES
@@ -652,6 +660,29 @@ def bool_topk_docpart(
     return _bool_topk_docpart(spark, index_dir, _snapshot(index_dir), queries, k)
 
 
+def _bool_cell(state: dict, plans: dict, structs: dict, k: int):
+    """The bool cell scorer of ``_cell_body``: every query runs
+    ``score_bool`` over the cell span on the cell's decoded terms, with its
+    structured-filter masks sliced to the span (cell-sized accumulators)."""
+
+    def score(dec, _rows_of, lo, span, norms, tomb):
+        out = []
+        for qid, (terms, n_must, n_msm) in plans.items():
+            tl = [(*dec[tid], w, role) for _t, tid, w, role in terms if tid in dec]
+            if tl:
+                st = structs.get(qid)
+                struct = (
+                    _struct_arrays(*st, state["docmap"], state["seq"])
+                    if st else None
+                )
+                out += [(qid, s, d) for s, d in score_bool(
+                    tl, lo, span, int(k), n_must, n_msm, norms, tomb, struct
+                )]
+        return out
+
+    return score
+
+
 def _bool_topk_docpart(
     spark, index_dir: str, m: dict, queries, k: int
 ) -> DataFrame:
@@ -661,77 +692,17 @@ def _bool_topk_docpart(
         qid for qid in structs
         if not (specs[qid]["must"] or specs[qid]["filter"]) and not msms[qid]
     }
-    routed = _searcher_batch(
+    parts = [_searcher_batch(
         spark, index_dir, m, "search_bool",
         [(q, r) for q, r in queries if q in tail], k,
-    ) if tail else None
-    planned = _plan_batch(
-        spark, index_dir, m,
-        {q: s for q, s in specs.items() if q not in tail}, msms,
+    )] if tail else []
+    cands = _cells(
+        spark, index_dir, m, {q: s for q, s in specs.items() if q not in tail},
+        msms, lambda st, plans: _bool_cell(st, plans, structs, k),
     )
-    if planned is None:
-        if routed is not None:
-            return routed
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    segs, state, plans = planned
-    fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
-    docmap_path = state["docmap_path"]
-    seq, avgdl = state["seq"], state["avgdl"]
-    kk = int(k)
-
-    def score_cell(pdf: pd.DataFrame) -> pd.DataFrame:
-        from osu_elastic_indexer_spark.operators.state import (
-            load_norms,
-            load_tombstones,
-        )
-
-        norms = load_norms(fwd_path, seq)
-        tomb = load_tombstones(tomb_path, seq)
-        lo, span = _cell_bounds(pdf["doc_min"], pdf["doc_max"])
-        # decode each term's cell postings ONCE (cell-local docIDs); every
-        # subscribed query scores against the decoded arrays
-        decoded = {}
-        for tid, rows in _segment_rows(pdf, "term_id").items():
-            d, tfn, _parts = decode_term(rows, norms, avgdl)
-            decoded[tid] = (d - lo, tfn)
-        out_q, out_d, out_s = [], [], []
-        for qid, (terms, n_must, n_msm) in plans.items():
-            tl = [
-                (*decoded[tid], w, role)
-                for _t, tid, w, role in terms if tid in decoded
-            ]
-            if not tl:
-                continue
-            st_spec = structs.get(qid)
-            # struct masks are sliced to THIS cell's span — accumulator
-            # memory stays bounded by the cell (docpart contract)
-            struct = (
-                _struct_arrays(*st_spec, docmap_path, seq) if st_spec else None
-            )
-            for s, d in score_bool(
-                tl, lo, span, kk, n_must, n_msm, norms, tomb, struct
-            ):
-                out_q.append(qid)
-                out_d.append(d)
-                out_s.append(s)
-        return _frame(out_q, out_d, out_s)
-
-    cells = _cells(segs, score_cell, k)
-    return routed.unionByName(cells) if routed is not None else cells
-
-
-def _merge_cells(cells: DataFrame, k: int) -> DataFrame:
-    """Exact global top-k from per-cell candidates: cells cover disjoint
-    docs, so the union of per-cell top-ks contains the global top-k; one
-    tiny window (cells x queries x k rows) finishes it."""
-    from pyspark.sql.window import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        cells.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "score")
-    )
+    if cands is not None:
+        parts.append(_merge_on_driver(spark, cands, k))
+    return _union(spark, parts)
 
 
 def prefix_topk(
@@ -858,18 +829,6 @@ def _matches_phrase(tokens: list[str], phrase: list[str], slop: int = 0) -> bool
     return _matches_occ([occ[t] for t in phrase], slop)
 
 
-def _cell_bounds(doc_min, doc_max) -> tuple[int, int]:
-    """(lo, span) of the docID window a group of segment rows covers —
-    the kernel's accumulator size. For a docpart cell the memory contract
-    is that it is bounded by the (generation, salt) cell's docID span,
-    never the corpus docID space. Kept as a module-level helper so the
-    layout test can measure peak accumulator size over a real index
-    through the same code path."""
-    lo = int(min(doc_min))
-    hi = int(max(doc_max))
-    return lo, hi - lo + 1
-
-
 def _decode_positions_selected(
     term_rows: list[tuple], eligible: np.ndarray
 ) -> tuple | None:
@@ -983,44 +942,25 @@ def _positional_topk(
     return out
 
 
-def _positional_cell(state: dict, k: int, plans: dict, slots: dict, slop: int):
-    """applyInPandas body of the docpart positional shape: one (generation,
-    salt) cell's segment rows WITH the position sidecar, every query of
-    the batch over the cell span. Cell-local verification is complete — a
-    doc's postings AND positions for every term live wholly inside its
-    cell — so the union of per-cell top-ks holds the global top-k,
-    bit-identical to the searcher (sorted-term fold, one kernel)."""
-    fwd_path, tomb_path = state["fwd_path"], state["tomb_path"]
-    seq, avgdl = state["seq"], state["avgdl"]
+def _positional_cell(plans: dict, slots: dict, k: int, slop: int):
+    """The positional cell scorer of ``_cell_body``: ``_positional_topk``
+    over the cell span for every query of the batch. Cell-local
+    verification is complete — a doc's postings AND positions for every
+    term live wholly inside its cell — so the union of per-cell top-ks
+    holds the global top-k, bit-identical to the searcher."""
     term_of = {
         tid: t for terms, _n, _m in plans.values() for t, tid, _w, _r in terms
     }
-    kk = int(k)
 
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        from osu_elastic_indexer_spark.operators.state import (
-            load_norms,
-            load_tombstones,
-        )
-
-        norms = load_norms(fwd_path, seq)
-        lo, span = _cell_bounds(pdf["doc_min"], pdf["doc_max"])
-        dec, rows_of = {}, {}
-        for tid, rows in _segment_rows(pdf, "term_id").items():
-            t = term_of[tid]
-            d, tfn, rows_of[t] = decode_term(rows, norms, avgdl)
-            dec[t] = (d - lo, tfn)
+    def score(dec, rows_of, lo, span, _norms, tomb):
         top = _positional_topk(
-            plans, slots, dec, rows_of, lo, span, kk, slop,
-            load_tombstones(tomb_path, seq),
+            plans, slots, {term_of[t]: v for t, v in dec.items()},
+            {term_of[t]: v for t, v in rows_of.items()},
+            lo, span, int(k), slop, tomb,
         )
-        hits = [(q, s, d) for q, pairs in top.items() for s, d in pairs]
-        return _frame(
-            [q for q, _s, _d in hits], [d for _q, _s, d in hits],
-            [s for _q, s, _d in hits],
-        )
+        return [(q, s, d) for q, pairs in top.items() for s, d in pairs]
 
-    return run
+    return score
 
 
 def _keep_mask(eligible: np.ndarray):
@@ -1212,11 +1152,12 @@ def phrase_topk_positional_docpart(
     slop: int = 0,
 ) -> DataFrame:
     """DOCUMENT-partitioned positional phrase batch: the bool_topk_docpart
-    shape — segment rows (WITH the pos sidecar) shuffle once per
-    (generation, salt) docID cell regardless of the query count, and each
-    cell scores + position-verifies its own docs (``_positional_cell``).
-    Bit-identical to the per-query positional path and the source-verify
-    path.
+    shape — each (generation, salt) docID cell is read in place WITH the
+    position sidecar, scores and position-verifies its own docs for every
+    query of the batch (``_positional_cell``), nothing shuffles, and the
+    per-cell candidates merge on the driver. The call runs its Spark job
+    at call time and returns a local relation. Bit-identical to the
+    per-query positional path and the source-verify path.
 
     This is also how head-term slop phrases parallelize: the per-query
     shape verifies one query in one task, while each cell here verifies
@@ -1227,23 +1168,27 @@ def phrase_topk_positional_docpart(
 
 
 def _phrase_docpart(
-    spark, index_dir: str, m: dict, queries, k: int, slop: int
+    spark, index_dir: str, m: dict, queries, k: int, slop: int,
+    term_info: dict | None = None,
 ) -> DataFrame:
-    """``phrase_topk_positional_docpart`` on the snapshot ``m``."""
+    """``phrase_topk_positional_docpart`` on the snapshot ``m``;
+    ``term_info``: the batch's dictionary entries when the caller already
+    looked them up (``_plan_batch``)."""
     # token-less texts can match nothing and are dropped
     compiled = {
         int(qid): _positional_spec(ph)
         for qid, text in queries if (ph := tokenize(text))
     }
-    planned = _plan_batch(
-        spark, index_dir, m, {q: e[0] for q, e in compiled.items()},
-        {q: e[1] for q, e in compiled.items()}, with_positions=True,
-    )
-    if planned is None:
-        return spark.createDataFrame([], RESULT_SCHEMA)
-    segs, state, plans = planned
     slots = {q: e[2] for q, e in compiled.items()}
-    return _cells(segs, _positional_cell(state, k, plans, slots, slop), k)
+    cands = _cells(
+        spark, index_dir, m, {q: e[0] for q, e in compiled.items()},
+        {q: e[1] for q, e in compiled.items()},
+        lambda _st, plans: _positional_cell(plans, slots, k, slop),
+        positions=True, term_info=term_info,
+    )
+    return _union(spark, [] if cands is None else [
+        _merge_on_driver(spark, cands, k)
+    ])
 
 
 def _phrase_topk_positional(
@@ -1408,16 +1353,14 @@ def phrase_topk(
                 parts.append(_phrase_docpart(
                     spark, index_dir, m,
                     [(q, t) for q, t in queries if int(q) in heavy], k, slop,
+                    term_info=ti,
                 ))
             light = [(q, t) for q, t in queries if int(q) not in heavy]
             if light or not parts:
                 parts.append(_phrase_topk_positional(
                     spark, index_dir, m, light, k, slop
                 ))
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
+            return _union(spark, parts)
         if docpart:
             return _phrase_docpart(spark, index_dir, m, queries, k, slop)
         return _phrase_topk_positional(spark, index_dir, m, queries, k, slop)
@@ -1444,13 +1387,22 @@ def phrase_topk(
     if not bool_queries:
         return spark.createDataFrame([], RESULT_SCHEMA)
     # docpart=True routes candidate generation through the queries-to-data
-    # shape (blobs shuffle once per docID cell, independent of the batch
-    # size) — same candidates and scores bit-identically, the right form
-    # for 10^4-phrase batches sharing head terms
+    # shape (each term decodes once per docID cell, independent of the
+    # batch size) — same candidates and scores bit-identically, the right
+    # form for 10^4-phrase batches sharing head terms. With k unbounded a
+    # cell's candidates are all its matches, so the lazy per-cell frame is
+    # the candidate set and needs no merge.
     # ('auto' means per-query here: the source-verify guard already refuses
     # head-term phrases, so candidates are few and per-query joins win)
-    gen = _bool_topk_docpart if docpart is True else _bool_topk
-    cands = gen(spark, index_dir, m, bool_queries, 2**31 - 1)
+    if docpart is True:
+        specs, msms, _structs = _bool_plans(m, bool_queries)
+        cands = _cells(
+            spark, index_dir, m, specs, msms,
+            lambda st, plans: _bool_cell(st, plans, {}, 2**31 - 1),
+        )
+        cands = _union(spark, []) if cands is None else cands
+    else:
+        cands = _bool_topk(spark, index_dir, m, bool_queries, 2**31 - 1)
     # bound before pinning: candidates within the bound are collected once,
     # as Arrow (at most max_candidates + 1 rows of three 8-byte columns),
     # and shipped back as a local relation both verify joins read — one
@@ -1506,7 +1458,12 @@ def phrase_topk(
             if len(out):
                 yield out
 
-    verified = joined.mapInPandas(
-        verify, "query_id bigint, doc_id bigint, score double"
+    from pyspark.sql.window import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    return (
+        joined.mapInPandas(verify, "query_id bigint, doc_id bigint, score double")
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= int(k))
+        .select("query_id", "rank", "doc_id", "score")
     )
-    return _merge_cells(verified, int(k))

@@ -10,8 +10,9 @@ terms — too big to broadcast whole. Strategy:
   * the tokens⋈dictionary join broadcasts only when the dictionary is small
     (toy/test scale), else relies on a shuffle join where AQE's skew-join
     splitting handles head terms;
-  * QUERY-time lookups never scan: query terms are a tiny set, so the
-    dictionary is filtered with term IN (...) — parquet row-group pruning.
+  * QUERY-time lookups never scan: query terms are a tiny set, so
+    ``lookup_term_info`` seeks the term-sorted projection's row groups by
+    their footer statistics (pyarrow, no Spark job).
 
 term_id ordering: df desc, term asc — head terms get the smallest ids, which
 clusters hot posting rows together in the segments table (locality, and a
@@ -64,14 +65,6 @@ def encode_terms(
     n_terms = dict_small.count()
     right = F.broadcast(dict_small) if n_terms <= broadcast_threshold else dict_small
     return tf.join(right, "term").select("term_id", "doc_id", "tf", "dl")
-
-
-def lookup_terms(dictionary: DataFrame, terms: list[str]) -> DataFrame:
-    """Query-time point lookups: (term, term_id, df) for the given terms.
-    IN-list filter -> parquet row-group pruning, no full scan."""
-    if not terms:
-        return dictionary.limit(0)
-    return dictionary.filter(F.col("term").isin(list(set(terms))))
 
 
 # ---------------------------------------------------------------------------

@@ -55,6 +55,7 @@ from ..functions import codec
 from ..functions.textprep import tokenize
 from .wand import (
     TAAT_MAX_POSTINGS,
+    _segment_rows,
     bmw_topk,
     decode_term,
     idf_of,
@@ -325,49 +326,7 @@ class LocalSearcher:
 
         tbl = pa.concat_tables(parts)
         tbl = tbl.filter(pc.is_in(tbl.column("term_id"), value_set=pa.array(tids)))
-        # vectorized arrow -> numpy: each list column flattens ONCE to a
-        # values array + offsets; per-row arrays are then zero-copy slices.
-        # The per-row .as_py() conversion this replaces was the serve-tier
-        # hot spot on head terms (thousands of salted segment rows/term).
-        n = tbl.num_rows
-        tids = tbl.column("term_id").to_numpy()
-        doc_mins = tbl.column("doc_min").to_numpy()
-        n_docs_col = tbl.column("n_docs").to_numpy()
-        blob_cols = ("docs_blob", "tfs_blob") + (
-            ("pos_blob",) if with_positions else ()
-        )
-        blobs = {
-            c: tbl.column(c).to_pylist()  # bytes stay python objects
-            for c in blob_cols
-        }
-        flat = {}
-        for c in (
-            "doc_offs", "tf_offs", "block_first", "block_last",
-            "block_max_tf", "block_min_dl",
-        ) + (("pos_offs",) if with_positions else ()):
-            arr = tbl.column(c).combine_chunks()
-            flat[c] = (
-                arr.values.to_numpy(zero_copy_only=False).astype(
-                    np.int64, copy=False
-                ),
-                arr.offsets.to_numpy(),
-            )
-        rows: dict[int, list[dict]] = {}
-        for i in range(n):
-            enc = {
-                "docs_blob": blobs["docs_blob"][i],
-                "tfs_blob": blobs["tfs_blob"][i],
-                "doc_min": int(doc_mins[i]),
-                "n_docs": int(n_docs_col[i]),
-            }
-            if with_positions:
-                enc["pos_blob"] = blobs["pos_blob"][i]
-            for c, (vals, offs) in flat.items():
-                enc[c] = vals[offs[i] : offs[i + 1]]
-            rows.setdefault(int(tids[i]), []).append(enc)
-        for lst in rows.values():
-            lst.sort(key=lambda e: e["doc_min"])
-        return rows
+        return _segment_rows(tbl)
 
     def _resolve_terms(self, terms: list[str]) -> None:
         """Memoize term -> (term_id, df) for unseen terms via ONE pruned

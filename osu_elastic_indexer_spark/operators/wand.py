@@ -13,8 +13,10 @@ around the pure-numpy kernel in this module:
   zero-score tail, the one bool scorer.
 
 The drivers differ only in where postings come from and how big the window
-is: the docpart cell scorer in boolquery.py (window = the cell span) and
-``LocalSearcher`` in serve.py (window = the corpus), which is also the body
+is: the docpart cell runner (window = the cell span; ``_cell_body``, one
+``mapInArrow`` task per share of the (generation, salt) cells, with the
+bool and positional cell scorers of boolquery.py) and ``LocalSearcher``
+in serve.py (window = the corpus), which is also the body
 of the per-query Spark shape (``boolquery._searcher_batch``). ``taat_topk``
 is the searcher's should-only driver (decode cache, single-term shortcut);
 ``bmw_topk`` the block-max WAND cursor that replaces it above
@@ -39,7 +41,6 @@ import math
 import os
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 from ..config import DEFAULT
@@ -476,7 +477,7 @@ def topk_from_dense(
 # per-query Spark shape (wand_topk): there, as for bool and phrase queries,
 # a query's accumulators span the corpus window (~11 bytes per doc). Large
 # batches belong on the docpart variants, whose accumulators are sized to
-# the (generation, salt) CELL span only (boolquery._cell_bounds; pinned by
+# the (generation, salt) CELL span only (_cell_bounds; pinned by
 # tests/test_boolquery.py::test_docpart_accumulators_are_cell_sized).
 TAAT_MAX_POSTINGS = 10_000_000
 
@@ -584,36 +585,185 @@ def bmw_topk(
 # ---------------------------------------------------------------------------
 
 
-def _row_to_enc(cols: dict, i: int) -> dict:
-    """Row ``i`` of an applyInPandas batch's column arrays -> the codec's
-    encoded-row dict (plus the positional sidecar when the scan kept it)."""
-    enc = {
-        "docs_blob": bytes(cols["docs_blob"][i]),
-        "tfs_blob": bytes(cols["tfs_blob"][i]),
-        "doc_min": int(cols["doc_min"][i]),
-    }
-    for c in ("doc_offs", "tf_offs", "block_first", "block_last",
-              "block_max_tf", "block_min_dl"):
-        enc[c] = np.asarray(cols[c][i], dtype=np.int64)
-    if "pos_blob" in cols:
-        enc["pos_blob"] = bytes(cols["pos_blob"][i])
-        enc["pos_offs"] = np.asarray(cols["pos_offs"][i], dtype=np.int64)
-    return enc
+def _segment_rows(tbl) -> dict:
+    """Segment rows (a pyarrow table holding ``term_id``) grouped by term
+    -> {term_id: encoded rows ordered by doc_min}, the order
+    ``decode_term`` concatenates in. Vectorized Arrow -> numpy: blobs come
+    out as python bytes and each list column flattens ONCE to values +
+    offsets, so a row's arrays are zero-copy slices (no per-row
+    conversion)."""
+    import pyarrow as pa
 
-
-def _segment_rows(pdf: pd.DataFrame, key: str) -> dict:
-    """Group one applyInPandas batch's segment rows by ``key`` (``term`` or
-    ``term_id``) -> {key: encoded rows ordered by doc_min}, the order
-    ``decode_term`` concatenates in. Column-array access, not iterrows
-    (row-at-a-time pandas is the slow path even for small groups)."""
-    cols = {c: pdf[c].to_numpy() for c in pdf.columns}
-    keys = pdf[key].tolist()  # python str/int keys, not numpy scalars
+    scalars, lists = {}, {}
+    for name, col in zip(tbl.column_names, tbl.columns):
+        arr = col.combine_chunks()
+        if pa.types.is_list(arr.type):
+            lists[name] = (
+                arr.values.to_numpy(zero_copy_only=False).astype(
+                    np.int64, copy=False
+                ),
+                arr.offsets.to_numpy(),
+            )
+        else:  # binary blobs and integer columns -> python objects
+            scalars[name] = arr.to_pylist()
     out: dict = {}
-    for i in range(len(pdf)):
-        out.setdefault(keys[i], []).append(_row_to_enc(cols, i))
+    for i in range(tbl.num_rows):
+        enc = {c: v[i] for c, v in scalars.items()}
+        for c, (vals, offs) in lists.items():
+            enc[c] = vals[offs[i] : offs[i + 1]]
+        out.setdefault(enc["term_id"], []).append(enc)
     for encs in out.values():
         encs.sort(key=lambda e: e["doc_min"])
     return out
+
+
+def _list_cells(seg_files: list[str], tids: list[int]) -> list[tuple]:
+    """The (generation, salt) docID cells holding segment rows of the
+    term ids ``tids`` -> ``[((generation, salt), postings, {file: [row
+    group, ...]})]``, from the files' footers and row groups. A row group
+    is skipped only when its term_id statistics exclude every term id;
+    the covering groups' term_id/generation/salt columns then name the
+    cells exactly, so no cell hangs on salt statistics. ``postings`` (the
+    cell's n_docs over the batch's terms) weighs the cells for
+    ``boolquery._cells``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    want = np.asarray(tids, dtype=np.int64)
+    cells: dict[tuple, list] = {}
+    for f in seg_files:
+        pf = pq.ParquetFile(f)
+        md = pf.metadata
+        tcol = md.schema.names.index("term_id")
+        for g in range(md.num_row_groups):
+            st = md.row_group(g).column(tcol).statistics
+            if st is not None and st.has_min_max and not (
+                (want >= st.min) & (want <= st.max)
+            ).any():
+                continue
+            t = pf.read_row_group(
+                g, columns=["term_id", "generation", "salt", "n_docs"]
+            )
+            t = t.filter(pc.is_in(t["term_id"], value_set=pa.array(want)))
+            for key, n in zip(
+                zip(t["generation"].to_pylist(), t["salt"].to_pylist()),
+                t["n_docs"].to_pylist(),
+            ):
+                cell = cells.setdefault(key, [key, 0, {}])
+                cell[1] += n
+                groups = cell[2].setdefault(f, [])
+                if groups[-1:] != [g]:
+                    groups.append(g)
+    return [tuple(c) for _key, c in sorted(cells.items())]
+
+
+# the segment columns the docpart cell runner reads (``decode_term``,
+# ``_cell_bounds``, the cell filter; block_first/block_last
+# pick the position blocks ``boolquery._decode_positions_selected``
+# decodes) — plus the position sidecar for positional queries only
+_CELL_COLS = [
+    "term_id", "generation", "salt", "doc_min", "doc_max", "docs_blob",
+    "tfs_blob", "block_first", "block_last",
+]
+_CELL_POS_COLS = _CELL_COLS + ["pos_blob", "pos_offs"]
+
+
+def _read_cells(cells: list[tuple], tids: list[int], positions: bool):
+    """The rows of the term ids ``tids`` in the row groups ``cells`` list,
+    read in place with pyarrow: ``_CELL_COLS`` only, or
+    ``_CELL_POS_COLS`` for a positional query."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    groups: dict[str, set] = {}
+    for _key, _n, where in cells:
+        for f, gs in where.items():
+            groups.setdefault(f, set()).update(gs)
+    tbl = pa.concat_tables(
+        pq.ParquetFile(f).read_row_groups(
+            sorted(gs), columns=_CELL_POS_COLS if positions else _CELL_COLS
+        )
+        for f, gs in sorted(groups.items())
+    )
+    return tbl.filter(pc.field("term_id").isin(tids))
+
+
+def _cell_bounds(doc_min, doc_max) -> tuple[int, int]:
+    """(lo, span) of the docID window a group of segment rows covers —
+    the kernel's accumulator size. ``_cell_body`` calls it on each cell's
+    rows as read in place (the batch's terms only), so for a docpart cell
+    the memory contract is that it is bounded by the (generation, salt)
+    cell's docID span, never the corpus docID space. Kept as a
+    module-level helper so the layout test can measure peak accumulator
+    size over a real index through the same code path."""
+    lo = int(min(doc_min))
+    hi = int(max(doc_max))
+    return lo, hi - lo + 1
+
+
+def _cell_body(state: dict, cells: list[tuple], score, positions: bool):
+    """``mapInArrow`` body of the docpart shape: a partition's ids (indexes
+    into ``cells``) -> (query_id, doc_id, score) candidates. Per cell,
+    each term decodes ONCE over the cell window [lo, lo+span) and
+    ``score(dec, rows_of, lo, span, norms, tomb)`` -> [(query_id, score,
+    doc_id)] runs the queries (``dec``: term_id -> (docs - lo, tf-norm);
+    ``rows_of``: term_id -> its decoded rows)."""
+
+    def run(batches):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        from osu_elastic_indexer_spark.operators.state import (
+            load_norms,
+            load_tombstones,
+        )
+
+        mine = [cells[i] for b in batches for i in b.column(0).to_pylist()]
+        tbl = _read_cells(mine, state["tids"], positions)
+        norms = load_norms(state["fwd"], state["seq"])
+        tomb = load_tombstones(state["tombstones"], state["seq"])
+        hits = []
+        for (gen, salt), _n, _where in mine:
+            cell = tbl.filter(
+                (pc.field("generation") == gen) & (pc.field("salt") == salt)
+            )
+            lo, span = _cell_bounds(
+                cell["doc_min"].to_numpy(), cell["doc_max"].to_numpy()
+            )
+            dec, rows_of = {}, {}
+            for tid, rows in _segment_rows(cell).items():
+                d, tfn, rows_of[tid] = decode_term(rows, norms, state["avgdl"])
+                dec[tid] = (d - lo, tfn)
+            hits += score(dec, rows_of, lo, span, norms, tomb)
+        q, s, d = zip(*hits) if hits else ((), (), ())
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(q, pa.int64()), pa.array(d, pa.int64()),
+             pa.array(s, pa.float64())],
+            names=["query_id", "doc_id", "score"],
+        )
+
+    return run
+
+
+def _merge_on_driver(spark, cands, k: int) -> DataFrame:
+    """Exact global top-k from per-cell candidates, run now: cells cover
+    disjoint docs, so their top-ks hold each query's global top-k. One
+    Arrow collect (at most cells x queries x k rows), ranked by score
+    desc, doc_id asc and returned as a local relation."""
+    import pyarrow as pa
+
+    t = cands.toArrow().sort_by([
+        ("query_id", "ascending"), ("score", "descending"),
+        ("doc_id", "ascending"),
+    ])
+    q = t["query_id"].to_numpy()
+    rank = np.arange(q.size) - np.searchsorted(q, q) + 1
+    t = t.filter(pa.array(rank <= k)).add_column(
+        1, "rank", pa.array(rank[rank <= k], pa.int32())
+    )
+    return spark.createDataFrame(t, RESULT_SCHEMA)
 
 
 def manifest_commit_seq(index_dir: str) -> int:
@@ -698,9 +848,11 @@ def wand_topk_docpart(
     corpus-wide accumulator — right for serving-sized batches, but a
     10^4-query batch sharing Zipf head terms repeats that decode on every
     worker. This is the scale shape for large batches (the sharded-Lucene
-    form): a should-only ``boolquery.bool_topk_docpart`` — segment rows
-    shuffle ONCE per (generation, salt) docID cell, each cell scores every
-    query, and one tiny window merges the per-cell winners.
+    form): a should-only ``boolquery.bool_topk_docpart`` — each
+    (generation, salt) docID cell is read in place by one task of a single
+    ``mapInArrow`` and scores every query, nothing shuffles, and the
+    per-cell winners merge on the driver. The call runs its Spark job at
+    call time and returns a local relation.
     Rank-identical (bit-identical scores) to wand_topk and the oracle.
     """
     from .boolquery import bool_topk_docpart

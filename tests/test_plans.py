@@ -281,11 +281,65 @@ def _assert_ships_queries(df) -> None:
     assert "FlatMapGroupsInPandas" not in plan, plan
 
 
-def test_bool_query_plan_prunes_and_broadcasts(spark, tmp_path):
+def _docpart_call(spark, monkeypatch, call):
+    """Run one docpart ``call`` -> (its result rows, the physical plans of
+    the SQL executions it ran, the column lists its cell reads requested).
+    The cell body is also run in-process, under a ``read_row_groups``
+    spy, on every cell the driver planned — the same body the job runs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from osu_elastic_indexer_spark.operators import boolquery as bq
+
+    real_body, real_read = bq._cell_body, pq.ParquetFile.read_row_groups
+    requested = []
+
+    def read(self, groups, columns=None, **kw):
+        requested.append(list(columns))
+        return real_read(self, groups, columns=columns, **kw)
+
+    def spy_body(state, cells, score, positions):
+        body = real_body(state, cells, score, positions)
+        with monkeypatch.context() as mp:
+            mp.setattr(pq.ParquetFile, "read_row_groups", read)
+            out = list(body([pa.record_batch(
+                [pa.array(range(len(cells)), pa.int64())], names=["id"]
+            )]))
+        assert out and out[0].num_rows, "the cells must hold candidates"
+        return body
+
+    store = spark._jsparkSession.sharedState().statusStore()
+    n_exec = store.executionsList().size()
+    with monkeypatch.context() as mp:
+        mp.setattr(bq, "_cell_body", spy_body)
+        df = call()
+    execs = store.executionsList()
+    plans = [
+        execs.apply(i).physicalPlanDescription()
+        for i in range(n_exec, execs.size())
+    ]
+    assert "LocalTableScan" in _plan(df)  # merged on the driver
+    return df.collect(), plans, requested
+
+
+def _assert_reads_cells_in_place(plans) -> None:
+    """The docpart shape: ONE job, a Python map-in-Arrow over the cells'
+    Range — no segments FileScan (cells are read by pyarrow in the task),
+    no Exchange and no window (the top-k finishes on the driver)."""
+    assert len(plans) == 1, plans
+    plan = plans[0]
+    assert "MapInArrow" in plan and "Range" in plan, plan
+    for node in ("FileScan", "Exchange", "FlatMapGroupsInPandas", "Window"):
+        assert node not in plan, plan
+
+
+def test_bool_query_plan_prunes_and_broadcasts(spark, tmp_path, monkeypatch):
     """bool_topk runs the per-query shape (``_assert_ships_queries``);
-    bool_topk_docpart keeps the scan discipline: term_id IN pushed to the
-    segments scan (row-group pruning) and per-cell scoring in one
-    FlatMapGroupsInPandas."""
+    bool_topk_docpart reads its cells in place
+    (``_assert_reads_cells_in_place``): every cell read requests the v1
+    cell columns only and keeps only the batch's term ids."""
+    from osu_elastic_indexer_spark.operators import boolquery as bq
+    from osu_elastic_indexer_spark.operators import wand
     from osu_elastic_indexer_spark.operators.boolquery import (
         bool_topk,
         bool_topk_docpart,
@@ -300,19 +354,35 @@ def test_bool_query_plan_prunes_and_broadcasts(spark, tmp_path):
     spec = [(0, {"must": "the", "should": "w00100", "must_not": "w00200"})]
     df = bool_topk(spark, cat.index_dir("v1"), spec, k=5)
     _assert_ships_queries(df)
-    assert df.collect()
-    dfd = bool_topk_docpart(spark, cat.index_dir("v1"), spec, k=5)
-    full = dfd._jdf.queryExecution().toString()
-    assert "PushedFilters" in full and "term_id" in full.split("PushedFilters")[-1]
-    assert "FlatMapGroupsInPandas" in _plan(dfd)
+    want = sorted(tuple(r) for r in df.collect())
+    assert want
+    rows, plans, requested = _docpart_call(
+        spark, monkeypatch,
+        lambda: bool_topk_docpart(spark, cat.index_dir("v1"), spec, k=5),
+    )
+    assert sorted(tuple(r) for r in rows) == want
+    _assert_reads_cells_in_place(plans)
+    assert requested and all(c == wand._CELL_COLS for c in requested), requested
+    # the read keeps the batch's term ids only (row groups are pruned on
+    # term_id statistics before it)
+    m = bq._snapshot(cat.index_dir("v1"))
+    specs, msms, _st = bq._bool_plans(m, spec)
+    state, _plans, cells = bq._plan_batch(
+        spark, cat.index_dir("v1"), m, specs, msms
+    )
+    got = wand._read_cells(cells, state["tids"], False)
+    assert set(got.column("term_id").to_pylist()) == set(state["tids"])
+    assert len(state["tids"]) == 3
 
 
-def test_positional_phrase_plan_prunes_and_broadcasts(spark, tmp_path):
+def test_positional_phrase_plan_prunes_and_broadcasts(
+    spark, tmp_path, monkeypatch
+):
     """The positional phrase keeps the per-query discipline of bool/wand
     (``_assert_ships_queries``, match_phrase_prefix and prefix too); its
-    docpart shape reads the position sidecar in one FlatMapGroupsInPandas,
-    and a positions-FREE docpart query on the same index must NOT read
-    the sidecar (ReadSchema pruning)."""
+    docpart shape reads its cells in place WITH the position sidecar, and
+    a positions-FREE docpart query on the same index must NOT request the
+    sidecar columns."""
     from osu_elastic_indexer_spark.operators.boolquery import (
         match_phrase_prefix_topk,
         phrase_topk,
@@ -338,12 +408,25 @@ def test_positional_phrase_plan_prunes_and_broadcasts(spark, tmp_path):
     ):
         _assert_ships_queries(df)
         assert df.collect()
-    dfd = phrase_topk(spark, idx, None, [(0, "the and")], k=5, docpart=True)
-    pland = _plan(dfd)
-    assert "FlatMapGroupsInPandas" in pland and "pos_blob" in pland
-    # positions-free query on the SAME index: sidecar pruned from the scan
-    wplan = _plan(wand_topk_docpart(spark, idx, [(0, "the and")], 5))
-    assert "FileScan" in wplan and "pos_blob" not in wplan
+    rows, plans, requested = _docpart_call(
+        spark, monkeypatch,
+        lambda: phrase_topk(spark, idx, None, [(0, "the and")], k=5, docpart=True),
+    )
+    assert rows
+    _assert_reads_cells_in_place(plans)
+    assert requested and all(
+        "pos_blob" in c and "pos_offs" in c for c in requested
+    ), requested
+    # positions-free query on the SAME index: sidecar never requested
+    rows, plans, requested = _docpart_call(
+        spark, monkeypatch,
+        lambda: wand_topk_docpart(spark, idx, [(0, "the and")], 5),
+    )
+    assert rows
+    _assert_reads_cells_in_place(plans)
+    assert requested and not any(
+        "pos_blob" in c or "pos_offs" in c for c in requested
+    ), requested
 
 
 def test_terms_agg_plan_partial_agg_single_exchange(spark, tmp_path):

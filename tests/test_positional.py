@@ -342,17 +342,24 @@ def test_phrase_auto_routes_head_terms_to_docpart(
 ):
     """docpart='auto' (the default) routes a head-term phrase to the
     cell-parallel docpart shape and a rare phrase to the per-query runner
-    — decided from a driver-side dictionary df seek, no Spark job — and
-    the mixed batch unions bit-identically to the forced paths."""
+    — decided from ONE driver-side dictionary df seek, no Spark job, whose
+    entries the docpart half plans from — and the mixed batch unions
+    bit-identically to the forced paths."""
     from osu_elastic_indexer_spark.operators import boolquery as bq
+    from osu_elastic_indexer_spark.operators import dictionary as dict_mod
 
     idx = pos_index.index_dir("v1")
     calls = {"docpart": [], "perq": []}
     real_dp, real_pq = bq._phrase_docpart, bq._phrase_topk_positional
+    real_lookup, lookups = dict_mod.lookup_term_info, []
 
-    def spy_dp(spark_, idx_, m, queries, k, slop):
+    def spy_dp(spark_, idx_, m, queries, k, slop, **kw):
         calls["docpart"] += [q for q, _t in queries]
-        return real_dp(spark_, idx_, m, queries, k, slop)
+        return real_dp(spark_, idx_, m, queries, k, slop, **kw)
+
+    def spy_lookup(*args, **kw):
+        lookups.append(args[2])
+        return real_lookup(*args, **kw)
 
     def spy_pq(spark_, idx_, m, queries, k, slop):
         calls["perq"] += [q for q, _t in queries]
@@ -360,6 +367,7 @@ def test_phrase_auto_routes_head_terms_to_docpart(
 
     monkeypatch.setattr(bq, "_phrase_docpart", spy_dp)
     monkeypatch.setattr(bq, "_phrase_topk_positional", spy_pq)
+    monkeypatch.setattr(dict_mod, "lookup_term_info", spy_lookup)
     # fixture corpus: 'the and' dfs sum well above 400; 'w00100 w00200' far
     # below — pin the threshold between them instead of relying on scale
     monkeypatch.setattr(bq, "PHRASE_DOCPART_DF_SUM", 400)
@@ -368,6 +376,7 @@ def test_phrase_auto_routes_head_terms_to_docpart(
         tuple(r) for r in bq.phrase_topk(spark, idx, None, qs, 10, slop=1).collect()
     )
     assert calls == {"docpart": [0], "perq": [1]}
+    assert len(lookups) == 1, lookups
     forced = sorted(
         tuple(r)
         for r in bq.phrase_topk(
