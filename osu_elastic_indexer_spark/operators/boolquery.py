@@ -432,7 +432,8 @@ def _plan_batch(
     if term_info is None:
         term_info = dictionary.lookup_term_info(
             spark, index_dir,
-            sorted({t for s in specs.values() for c in _CLAUSES for t in s[c]}),
+            sorted({t for s in specs.values() for c in _CLAUSES
+                    for t in s[c]}),
             m,
         )
     plans = {}
@@ -668,7 +669,10 @@ def _bool_cell(state: dict, plans: dict, structs: dict, k: int):
     def score(dec, _rows_of, lo, span, norms, tomb):
         out = []
         for qid, (terms, n_must, n_msm) in plans.items():
-            tl = [(*dec[tid], w, role) for _t, tid, w, role in terms if tid in dec]
+            tl = [
+                (*dec[tid], w, role)
+                for _t, tid, w, role in terms if tid in dec
+            ]
             if tl:
                 st = structs.get(qid)
                 struct = (
@@ -1300,10 +1304,12 @@ def phrase_topk(
     INDEX docID (join docmap for urls) and score is BM25 over the phrase's
     unique terms, bit-identical to a plain query on them.
 
-    Plan discipline: candidates are materialized (persist + count) and
-    BROADCAST-pinned into both verify joins, so the docmap and — critically
-    — the SOURCE scan never shuffle: at 100 TB a sort-merge fallback would
-    exchange the full (url, html) corpus to verify a handful of docs. The
+    Plan discipline: candidates are collected once (one Arrow collect of
+    at most ``max_candidates`` + 1 rows) and shipped back as a local
+    relation BROADCAST-pinned into both verify joins, so the docmap and
+    — critically — the SOURCE scan never shuffle: at 100 TB a sort-merge
+    fallback would exchange the full (url, html) corpus to verify a
+    handful of docs. The
     pin is safe because the candidate count is BOUNDED first: a phrase of
     head terms ("the of") has candidates ≈ N, which no positions-free
     verify should attempt — above ``max_candidates`` the call raises
@@ -1460,9 +1466,13 @@ def phrase_topk(
 
     from pyspark.sql.window import Window
 
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("score"), F.asc("doc_id")
+    )
     return (
-        joined.mapInPandas(verify, "query_id bigint, doc_id bigint, score double")
+        joined.mapInPandas(
+            verify, "query_id bigint, doc_id bigint, score double"
+        )
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= int(k))
         .select("query_id", "rank", "doc_id", "score")

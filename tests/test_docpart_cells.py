@@ -212,8 +212,6 @@ def test_docpart_batch_runs_one_job_no_exchange(spark, grid):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     cached_before = set(sc._jsc.getPersistentRDDs().keySet())
-    store = spark._jsparkSession.sharedState().statusStore()
-    n_exec = store.executionsList().size()
     before = set(tracker.getJobIdsForGroup(None))
     df = wand_topk_docpart(spark, grid["idx"], [(0, h[0]), (1, f"{h[2]} {h[8]}")], 5)
     jobs = set(tracker.getJobIdsForGroup(None)) - before
@@ -221,11 +219,12 @@ def test_docpart_batch_runs_one_job_no_exchange(spark, grid):
     assert len(jobs) == 1, jobs
     assert set(tracker.getJobIdsForGroup(None)) - before == jobs
     assert {r.query_id for r in rows} == {0, 1}
-    execs = store.executionsList()
+    # found by job id: the status store keeps a bounded window of executions
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     plans = [
-        execs.apply(i).physicalPlanDescription()
-        for i in range(n_exec, execs.size())
-        if any(execs.apply(i).jobs().contains(j) for j in jobs)
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if any(e.jobs().contains(j) for j in jobs)
     ]
     assert len(plans) == 1, plans
     assert "MapInArrow" in plans[0] and "Range" in plans[0], plans[0]

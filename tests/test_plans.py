@@ -308,18 +308,26 @@ def _docpart_call(spark, monkeypatch, call):
         assert out and out[0].num_rows, "the cells must hold candidates"
         return body
 
-    store = spark._jsparkSession.sharedState().statusStore()
-    n_exec = store.executionsList().size()
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
     with monkeypatch.context() as mp:
         mp.setattr(bq, "_cell_body", spy_body)
         df = call()
-    execs = store.executionsList()
-    plans = [
-        execs.apply(i).physicalPlanDescription()
-        for i in range(n_exec, execs.size())
-    ]
     assert "LocalTableScan" in _plan(df)  # merged on the driver
-    return df.collect(), plans, requested
+    return df.collect(), _job_plans(
+        spark, set(tracker.getJobIdsForGroup(None)) - before
+    ), requested
+
+
+def _job_plans(spark, jobs) -> list:
+    """The physical plans of the SQL executions that ran ``jobs`` (found
+    by job id: the status store keeps a bounded window of executions)."""
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return [
+        e.physicalPlanDescription()
+        for e in (execs.apply(i) for i in range(execs.size()))
+        if any(e.jobs().contains(j) for j in jobs)
+    ]
 
 
 def _assert_reads_cells_in_place(plans) -> None:
