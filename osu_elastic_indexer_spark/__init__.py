@@ -19,4 +19,8 @@ halves with an idiomatic PySpark engine:
   IndexQueueProcessor.cs, Commands/Queue/PumpAllScoresCommand.cs).
 """
 
+from ._zipcache import install as _install_zipcache
+
 __version__ = "0.1.0"
+
+_install_zipcache()

@@ -12,6 +12,42 @@ import os
 from pyspark.sql import SparkSession
 
 _SHIPPED_SESSIONS: set[int] = set()
+_PACKAGE_ZIP: str | None = None
+
+
+def _package_zip() -> str:
+    """This package's ``.py`` files as a zip, written once per process to
+    a fresh ``tempfile`` path (so under ``TMPDIR``) and removed at exit. A
+    fixed per-pid name would let a process on a recycled pid ship another
+    run's leftover zip."""
+    global _PACKAGE_ZIP
+    if _PACKAGE_ZIP is None:
+        import atexit
+        import tempfile
+        import zipfile
+
+        pkg_dir = os.path.dirname(os.path.abspath(__file__))
+        pkg_name = os.path.basename(pkg_dir)
+        fd, path = tempfile.mkstemp(prefix=f"{pkg_name}-", suffix=".zip")
+        atexit.register(_remove_quietly, path)
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w") as zf:
+            for root, _dirs, files in os.walk(pkg_dir):
+                for fn in files:
+                    if fn.endswith(".py"):
+                        full = os.path.join(root, fn)
+                        rel = os.path.join(
+                            pkg_name, os.path.relpath(full, pkg_dir)
+                        )
+                        zf.write(full, rel)
+        _PACKAGE_ZIP = path
+    return _PACKAGE_ZIP
+
+
+def _remove_quietly(path: str) -> None:
+    try:
+        os.remove(path)
+    except OSError:
+        pass
 
 
 def ship_package(spark: SparkSession) -> None:
@@ -22,22 +58,7 @@ def ship_package(spark: SparkSession) -> None:
     key = id(spark)
     if key in _SHIPPED_SESSIONS:
         return
-    import zipfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    pkg_name = os.path.basename(pkg_dir)
-    zip_path = os.path.join("/tmp", f"{pkg_name}-{os.getpid()}.zip")
-    if not os.path.exists(zip_path):
-        with zipfile.ZipFile(zip_path, "w") as zf:
-            for root, _dirs, files in os.walk(pkg_dir):
-                for fn in files:
-                    if fn.endswith(".py"):
-                        full = os.path.join(root, fn)
-                        rel = os.path.join(
-                            pkg_name, os.path.relpath(full, pkg_dir)
-                        )
-                        zf.write(full, rel)
-    spark.sparkContext.addPyFile(zip_path)
+    spark.sparkContext.addPyFile(_package_zip())
     _SHIPPED_SESSIONS.add(key)
 
 
