@@ -456,7 +456,8 @@ def main(argv: list[str] | None = None) -> int:
     b.add_argument("--input", required=True, help="input parquet path")
     b.add_argument("--schema", required=True)
     b.add_argument("--full", action="store_true", default=True)
-    b.add_argument("--resume", action="store_true", help="skip done phases (T8)")
+    b.add_argument("--resume", action="store_true",
+                   help="keep a committed build; rebuild an interrupted one (T8)")
     b.add_argument("--incremental", action="store_true", help="cursor batch (T1/T8)")
     b.add_argument("--switch", action="store_true",
                    help="two-phase cutover: build + catch-up + alias (T9)")

@@ -86,21 +86,10 @@ def extract_text_series(html: pd.Series) -> pd.Series:
     return html.map(extract_text)
 
 
-def tokenize_series(text: pd.Series) -> pd.Series:
-    """pandas-UDF body for text→array<string> tokens."""
-    return text.map(tokenize)
-
-
 def make_extract_text_udf():
     from pyspark.sql.functions import pandas_udf
 
     return pandas_udf(extract_text_series, "string")
-
-
-def make_tokenize_udf():
-    from pyspark.sql.functions import pandas_udf
-
-    return pandas_udf(tokenize_series, "array<string>")
 
 
 def tokens_map_in_pandas(

@@ -5,21 +5,25 @@ The Spark re-expression of the reference's whole write path
 PumpAllScoresCommand.cs:70-110), fused into one declarative pipeline plus the
 part the reference delegates to Lucene: building the inverted index itself.
 
-Pipeline (phases are individually checkpointed in the manifest — T8 resume):
+``build_index`` is the index's first commit: it commits an empty state and
+applies the whole input as one cursor batch through the incremental commit
+(streaming/incremental.py), on its Spark route. One write path, one commit
+protocol: a crashed build leaves nothing visible, and a resumed one is
+rebuilt from its reset. What this module holds is the kernels and the Spark
+stages that run them:
 
-  postings   route (P1) -> ONE fused Arrow pass per input partition
-             (docID assign + byte-exact html->text + tokenize + per-doc
-             combine) -> doc-grouped FORWARD table
-             fwd(doc_id, dl, terms[], tfs[]); docmap; stats
-             (``materialize_forward``: one kernel for every input)
-  segments   local SPIMI inversion of fwd partitions (mapInArrow) -> ⋈
-             dictionary (term_id by df-desc dense rank) -> groupBy(term_id,
-             salt) collect_list of sub-segment blobs (JVM) -> mapInArrow
-             merges each group into delta-gap varbyte blocks with per-block
-             (max_tf, min_dl) -> segments parquet, term_id-sorted
-             (``write_segments``, shared with compaction and the
-             incremental Spark route)
-  commit     counters + cursor into the manifest
+  forward    ONE fused Arrow pass per input partition (docID assign +
+             byte-exact html->text + tokenize + per-doc combine) ->
+             doc-grouped FORWARD table fwd(doc_id, dl, terms[], tfs[]) and
+             docmap, the stats riding the writes (``materialize_forward``:
+             one kernel for every input)
+  segments   local SPIMI inversion of fwd partitions (mapInArrow) -> ⋈ the
+             commit's dictionary (term_id by df-desc dense rank) ->
+             groupBy(term_id, salt) collect_list of sub-segment blobs
+             (JVM) -> mapInArrow merges each group into delta-gap varbyte
+             blocks with per-block (max_tf, min_dl) -> segments parquet,
+             term_id-sorted (``build_segments_spimi``, ``write_segments``;
+             shared with compaction)
 
 One set of kernels, two drivers. ``_fused_fwd_pass``, ``_local_invert_pass``
 and ``_merge_subsegments_arrow`` are generator functions over Arrow
@@ -47,11 +51,13 @@ url list, and ``watch``'s first micro-batch on a fresh index builds over
 the whole pending backlog.
 
 Skew handling (north_rule "skew handled explicitly"): a head term like 'the'
-has df ~ N and would put one reducer group at corpus scale. Each term gets
-n_salts = ceil(df / salt_group_cap) salts; salt = doc_id * n_salts / id_span
-— RANGE-based, so each salted group covers a disjoint, ordered docID
-interval, and the term's global posting list is simply its segment rows
-ordered by doc_min. The cap is also the collect_list group memory bound.
+has df ~ N and would put one reducer group at corpus scale. The docID span
+is cut into a fixed grid of cells of ``salt_cap`` docs (about one per
+shuffle partition, at least 50,000), and a term's postings are salted by
+the cell they fall in — RANGE-based, so each salted group covers a
+disjoint, ordered docID interval, and the term's global posting list is
+simply its segment rows ordered by doc_min. The cap is also the
+collect_list group memory bound.
 
 Bridge discipline (measured on local[32]): the JVM<->Python Arrow bridge
 costs ~0.4us per ROW each way regardless of width, so row-heavy relational
@@ -433,10 +439,10 @@ def materialize_forward(
     docmap) raise instead of committing ids that disagree.
 
     Returns {"n_rows": docmap rows (the per-partition counts' sum), "fwd":
-    {n, sum_dl, dl_min, postings}, "docmap_rows", "cursor": max(warc_ts),
-    "input_staged": whether the input went through ``staging_dir``} — the
-    fwd and docmap stats ride their writes as CollectMetrics observations,
-    so callers need no follow-up count()/agg() over the tables written.
+    {n, sum_dl, dl_min, postings}, "input_staged": whether the input went
+    through ``staging_dir``} — the fwd stats and the docmap row count ride
+    their writes as CollectMetrics observations, so callers need no
+    follow-up count()/agg() over the tables written.
     """
     import shutil
     from concurrent.futures import ThreadPoolExecutor
@@ -512,11 +518,7 @@ def materialize_forward(
                 F.lit(start_id).cast("bigint").alias("doc_id"),
             )
         dm_obs = Observation(f"dm_stats_{start_id}")
-        dm = dm.observe(
-            dm_obs,
-            F.count(F.lit(1)).alias("n"),
-            F.max("warc_ts").alias("cursor"),
-        )
+        dm = dm.observe(dm_obs, F.count(F.lit(1)).alias("n"))
 
         # overlap the two independent writes (guide §2.6): the docmap job is
         # JVM-only and back-fills cores the python-heavy fwd job leaves
@@ -534,10 +536,10 @@ def materialize_forward(
     finally:
         if staged:
             shutil.rmtree(staging_dir, ignore_errors=True)
-    dmg = dict(dm_obs.get)
-    if int(dmg["n"] or 0) != acc - start_id:
+    dm_rows = int(dm_obs.get["n"] or 0)
+    if dm_rows != acc - start_id:
         raise RuntimeError(
-            f"docmap write saw {dmg['n']} rows but the count pass saw "
+            f"docmap write saw {dm_rows} rows but the count pass saw "
             f"{acc - start_id}: the input scan was not reproducible across "
             "jobs (were its files rewritten mid-build?), so docmap and fwd "
             "doc_ids may disagree; nothing was committed"
@@ -545,8 +547,6 @@ def materialize_forward(
     return {
         "n_rows": acc - start_id,
         "fwd": dict(obs.get),
-        "docmap_rows": int(dmg["n"] or 0),
-        "cursor": dmg["cursor"],
         "input_staged": staged,
     }
 
@@ -990,17 +990,16 @@ def build_segments_spimi(
     salt_group_cap: int,
     norms_path: str,
     norms_version: int,
+    dictionary: DataFrame,
     generation: int = 0,
     max_salts: int = 1024,
-    dictionary: DataFrame | None = None,
     n_terms: int | None = None,
     dict_broadcast_max: int = DICT_BROADCAST_MAX,
     positions: bool = False,
-) -> tuple[DataFrame, DataFrame, DataFrame]:
-    """fwd -> (segments, dictionary, sub): local SPIMI inversion,
-    blob-grained salted term merge. If ``dictionary`` is given (incremental
-    generations), term_ids come from it; otherwise the dictionary is derived
-    from the sub-segment stats (df = sum of local n_docs) and returned.
+) -> DataFrame:
+    """fwd -> segments: local SPIMI inversion, blob-grained salted term
+    merge, term_ids from ``dictionary`` (term, term_id), which covers every
+    term of ``fwd``.
 
     ``norms_path`` is a parquet table carrying (doc_id, dl) for every doc in
     ``fwd`` (normally the index's fwd table itself) — the merge reads it
@@ -1018,22 +1017,11 @@ def build_segments_spimi(
     the docs in one cell (skew bound == memory bound), and a term's final
     segment rows are disjoint ascending ranges (the WAND reader contract)."""
     grid_salts = _grid_salts(id_span, salt_group_cap, max_salts)
-    # sub-segments are ~index-sized (compressed blobs) — persist so the
-    # dictionary derivation and the merge share one inversion pass
     sub = fwd.mapInArrow(
         _local_invert_pass(id_span, grid_salts, positions),
         SUBSEG_SCHEMA_POS if positions else SUBSEG_SCHEMA,
-    ).persist()
-    if dictionary is None:
-        df_stats = sub.groupBy("term").agg(F.sum("n_docs").alias("df"))
-        from .docmap import assign_dense_ids
-
-        dictionary = assign_dense_ids(
-            df_stats, [F.desc("df"), F.asc("term")], "term_id"
-        ).select("term_id", "term", F.col("df").cast("bigint").alias("df"))
-        dictionary = dictionary.persist()
-        n_terms = dictionary.count()
-    elif n_terms is None:
+    )
+    if n_terms is None:
         n_terms = dictionary.count()
     dict_ids = dictionary.select("term", "term_id")
     if n_terms <= dict_broadcast_max:
@@ -1043,7 +1031,7 @@ def build_segments_spimi(
     grouped = with_ids.groupBy("term_id", "salt").agg(
         F.collect_list(F.struct(*blob_cols)).alias("subs")
     )
-    segments = grouped.mapInArrow(
+    return grouped.mapInArrow(
         _merge_subsegments_arrow(
             generation,
             partial(state.load_doc_lengths, norms_path, norms_version),
@@ -1051,7 +1039,21 @@ def build_segments_spimi(
         ),
         SEGMENT_SCHEMA_POS if positions else SEGMENT_SCHEMA,
     )
-    return segments, dictionary, sub
+
+
+def salt_cap(
+    spark: SparkSession, n_docs: int, salt_group_cap: int | None = None
+) -> int:
+    """Docs per cell of the salt grid for an inversion over ``n_docs``
+    docIDs (a build's or a compaction's id span, a commit's adds): the
+    heaviest term (df ~ n_docs) spreads over about one cell per shuffle
+    partition, so no single reducer owns a whole head term — the skew fix
+    and the merge group's memory bound at once — and never fewer than
+    50,000 docs a cell. An explicit ``salt_group_cap`` wins."""
+    if salt_group_cap:
+        return int(salt_group_cap)
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(50_000, n_docs // max(parts, 1))
 
 
 def _grid_salts(id_span: int, salt_group_cap: int, max_salts: int) -> int:
@@ -1174,7 +1176,6 @@ def build_index(
     *,
     resume: bool = False,
     salt_group_cap: int | None = None,
-    segment_partitions: int | None = None,
     where: str | None = None,
     include_all_langs: bool = False,
     positions: bool = False,
@@ -1182,6 +1183,13 @@ def build_index(
     numeric_fields=(),
 ) -> dict:
     """Full (backfill) index build — the `queue pump-all` + consume analog.
+
+    The build is the index's FIRST COMMIT: it resets the tables, commits an
+    empty state (no generations, zero counters, an empty stats row and the
+    index-level flags below), then applies the whole input as one cursor
+    batch through the incremental commit (streaming/incremental.
+    ``_apply_batch``) on its Spark route. Every write therefore follows the
+    commit's protocol: nothing is visible until its one manifest swap.
 
     ``positions=True`` builds the v2 POSITIONAL layout
     (docs/positional-postings.md): fwd rows carry per-term token
@@ -1192,9 +1200,12 @@ def build_index(
     pruning never reads the sidecar).
 
     ``docs`` must have (url, warc_ts, html, text, lang); text is ALWAYS
-    re-extracted from html (input_hint byte-identity invariant). Returns the
-    final manifest. With resume=True, phases already marked done in the
-    manifest are skipped (T8: restart filters done partitions).
+    re-extracted from html (input_hint byte-identity invariant). A row is
+    indexed when it passes the P1 predicate (operators/routing.
+    ``should_index_expr``). Returns the final manifest. With resume=True a
+    committed build returns its manifest untouched; an interrupted one
+    (no ``phases.commit``) is rebuilt from its reset, which removes what
+    the crashed attempt left.
 
     ``where``: user-supplied SQL predicate narrowing the backfill (the
     reference's `pump-all --where`, PumpAllScoresCommand.cs:28,75 — pushed
@@ -1214,8 +1225,17 @@ def build_index(
     sort/range fields (total_score / pp / beatmap_id): ``sort_topk``
     sorts on them and bool ``filter_range`` accepts them. Recorded in the
     manifest like keyword_fields.
+
+    The manifest keeps the build's phase entries: ``postings`` (the
+    commit's forward seconds, ``input_staged``), ``segments`` (its
+    dictionary and segments seconds, ``segment_rows``) and ``commit``
+    (the route), next to the commit's own ``incremental_gen0``.
     """
+    import time
+
     from ..session import ship_package
+    from ..sources.catalog import FORMAT_VERSION, emit_metric_event
+    from ..streaming.incremental import _apply_batch, _Phases
 
     ship_package(spark)
     if keyword_fields is None:
@@ -1242,199 +1262,63 @@ def build_index(
     cat = catalog
     cat.find_or_create_index(schema_version)
     cat.assert_writable(schema_version)  # T6 stale-builder guard
-    if not resume:
-        # full rebuild = fresh index life: wipe table dirs + versioned
-        # pointers + generations from any previous (possibly incrementally
-        # grown) life — otherwise bare fwd/docmap reads below discover the
-        # old gen=1+ dirs and the old tombstones poison the new docIDs
-        cat.reset_tables(schema_version)
-
-    docmap_path = cat.table_path(schema_version, "docmap")
-    dict_path = cat.table_path(schema_version, "dictionary")
-    seg_path = cat.table_path(schema_version, "segments")
-    stats_path = cat.table_path(schema_version, "stats")
-    # fwd is the doc-grouped forward index (doc -> terms/tfs/dl): the build
-    # intermediate, the incremental delete-accounting source (clustered by
-    # doc_id by construction), and the compaction input
-    fwd_path = cat.table_path(schema_version, "fwd")
-
-    # ---- phase 1: postings (docmap + fwd + dictionary + stats) -------------
-    if not (resume and cat.phase_done(schema_version, "postings")):
-        cat.mark_phase(schema_version, "postings", "running")
-        # P1 routing, split for cost: the cheap half (lang + null checks —
-        # parquet def-levels, no blob decode) gates id assignment; the
-        # text-emptiness half falls out of the fused pass (dl==0 docs emit
-        # no forward row). docmap may thus carry a rare zero-token url —
-        # harmless: it has no postings and counters use stats.n_docs.
-        pred = F.col("text").isNotNull()
-        if not include_all_langs:
-            pred = (F.col("lang") == "en") & pred
-        adds = docs.filter(pred)
-        if where:
-            adds = adds.filter(F.expr(where))
-        in_split = input_split_bytes(spark, docs)
-        from contextlib import nullcontext
-
-        split_ctx = (
-            scan_split_bytes(spark, in_split) if in_split else nullcontext()
-        )
-        with split_ctx:
-            # ONE fused pass; docIDs follow the scan order of the input's
-            # files, or of the staged files for an input that is staged
-            # (materialize_forward) — generation-0 subdirs:
-            # incremental generations append sibling gen=N dirs and COMMIT
-            # via the manifest pointer (atomicity —
-            # sources/catalog.committed_gen_paths)
-            staged = materialize_forward(
-                spark, adds,
-                f"{fwd_path}/gen=0", f"{docmap_path}/gen=0",
-                f"{cat.index_dir(schema_version)}/fwd_stage",
-                positions=positions, keyword_cols=keyword_fields,
-                numeric_cols=numeric_fields,
-            )
-        # collection stats and the cursor rode the fwd/docmap writes as
-        # CollectMetrics observations — no follow-up agg jobs over the
-        # tables just written (they were 2 full scans of fwd + docmap)
-        st = staged["fwd"]
-        n_docs = int(st["n"] or 0)
-        sum_dl = int(st["sum_dl"] or 0)
-        dl_min = int(st["dl_min"]) if st["dl_min"] is not None else 0
-        total_postings = int(st["postings"] or 0)
-        _write_stats_table(
-            stats_path, n_docs, sum_dl,
-            (float(sum_dl) / n_docs) if n_docs else 0.0,
-            dl_min, total_postings,
-        )
-        cursor = staged["cursor"]
-        cat.mark_phase(
-            schema_version, "postings", "done",
-            postings=total_postings, n_docs=n_docs,
-            docs=n_docs, docmap_rows=int(staged["docmap_rows"]),
-            cursor=str(cursor) if cursor is not None else None,
-            input_staged=staged["input_staged"],
-        )
-
-    # ---- phase 2: segments + dictionary -------------------------------------
-    if not (resume and cat.phase_done(schema_version, "segments")):
-        cat.mark_phase(schema_version, "segments", "running")
-        # split fwd fine enough that the CPU-bound inversion has ~3 tasks
-        # per core (the session default split is tuned for html scans and
-        # under-partitions the compact fwd — measured scaling killer)
-        with scan_split_bytes(spark, fwd_split_bytes(spark, fwd_path)):
-            fwd = spark.read.parquet(fwd_path)
-            # ids are dense from 0 (full build), so the id span IS the
-            # docmap row count phase 1 recorded — no dm.agg(max) job;
-            # resumed legacy manifests without the counter fall back
-            dm_rows = (cat.read_manifest(schema_version) or {}).get(
-                "phases", {}
-            ).get("postings", {}).get("docmap_rows")
-            if dm_rows is not None:
-                id_span = max(int(dm_rows), 1)
-            else:
-                dm = spark.read.parquet(docmap_path)
-                max_doc = dm.agg(F.max("doc_id")).collect()[0][0]
-                id_span = int(max_doc) + 1 if max_doc is not None else 1
-            nparts = segment_partitions or max(
-                2, int(spark.conf.get("spark.sql.shuffle.partitions")) // 2
-            )
-            # adaptive skew cap: the heaviest term (df ~ N) spreads over ~2x
-            # the reduce partitions so no single reducer owns a whole head
-            # term — both the skew fix and the merge-group memory bound
-            cap = salt_group_cap or max(50_000, id_span // (2 * nparts))
-            norms_ver = int(
-                (cat.read_manifest(schema_version) or {}).get("commit_seq", 0)
-            )
-            segments, dictionary, sub = build_segments_spimi(
-                spark, fwd, id_span, cap, fwd_path, norms_ver, generation=0,
-                positions=positions,
-            )
-            # gen=0 like every other append table: incremental generations
-            # append per-BATCH delta rows as sibling gen=N dirs, merged at
-            # read (operators/dictionary.read_dictionary_merged) — the full
-            # per-batch dictionary rewrite was the round-2 scale gap
-            # dictionary writes run CONCURRENTLY with the segments
-            # merge+write below (guide §2.6 back-fill): they only read the
-            # persisted `dictionary`, the segments job only reads the
-            # persisted `sub` + a broadcast of dictionary ids — independent
-            # jobs, so the small dict writes fill executor slots the big
-            # job's stragglers leave idle. The manifest stays
-            # single-writer: the dictionary phase is marked after join(),
-            # before the segments phase mark.
-            from concurrent.futures import ThreadPoolExecutor
-
-            def _write_dictionary() -> int:
-                spark.sparkContext.setJobDescription("build: dictionary writes")
-                dictionary.write.mode("overwrite").parquet(
-                    f"{dict_path}/gen=0"
-                )
-                write_dict_by_term(
-                    dictionary,
-                    f"{cat.table_path(schema_version, 'dict_by_term')}/gen=0",
-                )
-                # build_segments_spimi already counted the dictionary (its
-                # broadcast-threshold probe), and dense ids run 0..n-1, so
-                # both counters are known without another agg job
-                return int(dictionary.count())  # cached — metadata-cheap
-
-            dict_pool = ThreadPoolExecutor(
-                max_workers=1, thread_name_prefix="build-dictionary"
-            )
-            dict_future = dict_pool.submit(_write_dictionary)
-            try:
-                counters = write_segments(
-                    spark, segments, f"{seg_path}/gen=0", positions
-                )
-            finally:
-                # reap the dictionary writer on every path: a failed
-                # segments write must not leave it running past the build
-                dict_pool.shutdown(wait=True)
-        n_terms = dict_future.result()
-        cat.mark_phase(
-            schema_version, "dictionary", "done",
-            terms=int(n_terms),
-            max_term_id=int(n_terms) - 1,
-        )
-        dictionary.unpersist()
-        sub.unpersist()
-        cat.mark_phase(
-            schema_version, "segments", "done",
-            segment_rows=counters["rows"],
-            postings=counters["postings"],
-            bytes=counters["bytes"],
-        )
-
-    # ---- phase 3: commit ----------------------------------------------------
     m = cat.read_manifest(schema_version)
-    m["counters"] = {
-        "docs": m["phases"]["postings"].get("docs"),
-        "postings": m["phases"]["segments"].get("postings"),
-        "bytes": m["phases"]["segments"].get("bytes"),
-        "adds_total": m["phases"]["postings"].get("docs"),
-        "deletes_total": 0,
-        # vocabulary counters: incremental delta commits extend these
-        # WITHOUT scanning the dictionary (terms grow by the batch's fresh
-        # terms; ids are dense so max advances by the same amount)
-        "terms": (m["phases"].get("dictionary") or {}).get("terms"),
-        "max_term_id": (m["phases"].get("dictionary") or {}).get("max_term_id"),
-        # docIDs are dense from 0, so the first unused id is the docmap row
-        # count; incremental commits extend it and compaction keeps it, so
-        # a dead id is never handed out again
-        "next_doc_id": m["phases"]["postings"].get("docmap_rows"),
-    }
-    m["cursor"] = m["phases"]["postings"].get("cursor")
-    m["generations"] = 1
-    m["positions"] = bool(positions)
-    m["keyword_fields"] = list(keyword_fields)
-    m["numeric_fields"] = list(numeric_fields)
-    m["include_all_langs"] = bool(include_all_langs)
+    if resume and m["phases"].get("commit"):
+        return m
+    # full rebuild = fresh index life: wipe table dirs + versioned pointers
+    # + generations from any previous (possibly incrementally grown) life,
+    # and any attempt that crashed before its commit
+    cat.reset_tables(schema_version)
+    _write_stats_table(cat.table_path(schema_version, "stats"), 0, 0, 0.0, 0, 0)
+    m = cat.read_manifest(schema_version)
+    m.update(
+        format=FORMAT_VERSION,
+        # docIDs and term ids are dense from 0; a commit extends both
+        # counters without scanning docmap or dictionary
+        counters={
+            "docs": 0, "postings": 0, "bytes": 0, "adds_total": 0,
+            "deletes_total": 0, "terms": 0, "max_term_id": -1,
+            "next_doc_id": 0,
+        },
+        positions=bool(positions),
+        keyword_fields=list(keyword_fields),
+        numeric_fields=list(numeric_fields),
+        include_all_langs=bool(include_all_langs),
+    )
     cat.write_manifest(schema_version, m)
-    cat.mark_phase(schema_version, "commit", "done")
-    from ..sources.catalog import emit_metric_event
 
+    phases = _Phases(spark, "build")
+    try:
+        m = _apply_batch(
+            spark, docs.filter(F.expr(where)) if where else docs, cat,
+            schema_version, None, salt_group_cap, phases, build=True,
+        )
+    finally:
+        phases.close()
+    # an input without an indexable row commits nothing and leaves no
+    # incremental_gen0 entry: the empty state above is the index
+    gen0 = m["phases"].get("incremental_gen0") or {}
+    sec = phases.seconds
+    now = time.time()
+    for name, info in (
+        ("postings", {
+            "wall_sec": round(sec.get("forward", 0.0), 2),
+            "input_staged": bool(gen0.get("input_staged")),
+        }),
+        ("segments", {
+            "wall_sec": round(
+                sec.get("dictionary", 0.0) + sec.get("segments", 0.0), 2
+            ),
+            "segment_rows": int(gen0.get("segment_rows") or 0),
+        }),
+        ("commit", {"route": gen0.get("route", "spark")}),
+    ):
+        m["phases"][name] = {"status": "done", "ts_utc": now, **info}
+    cat.write_manifest(schema_version, m)
     emit_metric_event(
         cat.index_dir(schema_version), "full_build", schema=schema_version,
-        adds=int(m["counters"]["docs"] or 0),
-        postings=int(m["counters"]["postings"] or 0),
-        bytes=int(m["counters"]["bytes"] or 0),
+        adds=int(m["counters"]["docs"]),
+        postings=int(m["counters"]["postings"]),
+        bytes=int(m["counters"]["bytes"]),
     )
-    return cat.read_manifest(schema_version)
+    return m

@@ -99,11 +99,6 @@ def signature_from_shingles(sh: Column) -> Column:
     )
 
 
-def minhash_signature(text: Column, n_shingle: int = 3) -> Column:
-    """array<bigint> of N_HASHES minhash values for the doc text."""
-    return signature_from_shingles(shingles_expr(tokens_expr(text), n_shingle))
-
-
 SIMHASH_BITS = 64
 SIMHASH_BLOCKS = 8  # 8-bit blocks of the 64-bit signature
 SIMHASH_KEY_BLOCKS = 2  # default band key width: a PAIR of blocks (16 bits)

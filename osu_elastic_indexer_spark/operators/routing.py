@@ -51,20 +51,6 @@ def split_batch(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     )
 
 
-def resolve_queue(queue_ids: DataFrame, docs: DataFrame, key: str = "url") -> DataFrame:
-    """J2: queued keys ⋉ current table. Left join; rows that miss (deleted
-    from source) or fail the predicate route to 'delete', others to 'add' —
-    one pass produces both sets (ElasticModel.cs:63-65 + routing).
-
-    -> docs columns + ``action`` ('add' | 'delete').
-    """
-    joined = queue_ids.select(key).distinct().join(docs, key, "left")
-    return with_should_index(joined).withColumn(
-        "action",
-        F.when(F.col("should_index"), F.lit("add")).otherwise(F.lit("delete")),
-    ).drop("should_index")
-
-
 def dedup_last_write_wins(
     df: DataFrame, key: str = "url", order_col: str = "warc_ts"
 ) -> DataFrame:

@@ -844,22 +844,3 @@ class LocalSearcher:
         ]
         if sum(df for _t, (_tid, df) in infos) <= self._decode_budget():
             self._decoded_for(infos)
-
-
-def searcher_for_catalog(root: str, alias: str = "documents") -> LocalSearcher:
-    """Open the CURRENT index (the alias pointer) for serving.
-
-    Resolves the directory via Catalog naming ({prefix}{alias}_{schema}) so
-    multiple aliases sharing one catalog root open THEIR index, never another
-    alias's index that happens to share the schema version string."""
-    from ..sources.catalog import Catalog
-
-    cat = Catalog(root, alias=alias)
-    current = cat.get_current_schema()
-    assert current, "no current schema (alias not pointed)"
-    idx_dir = cat.index_dir(current)
-    if not os.path.exists(os.path.join(idx_dir, "manifest.json")):
-        raise FileNotFoundError(
-            f"no index dir {idx_dir} for schema {current} under {root}"
-        )
-    return LocalSearcher(idx_dir)

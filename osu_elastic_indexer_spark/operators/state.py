@@ -329,11 +329,3 @@ def tomb_contains(tomb: np.ndarray | None, doc: int) -> bool:
         return False
     i = int(np.searchsorted(tomb, doc))
     return i < tomb.size and int(tomb[i]) == doc
-
-
-def tomb_mask(tomb: np.ndarray | None, docs: np.ndarray) -> np.ndarray | None:
-    """Vectorized keep-mask (True = live) for an array of candidate docIDs;
-    None when there is nothing to filter."""
-    if tomb is None or tomb.size == 0:
-        return None
-    return ~np.isin(docs, tomb)

@@ -11,7 +11,7 @@ set):
     README.md:166-256)
   * index list w/ consistency audit (ListIndicesCommand.cs:25-80)
   * close / open / delete / nuke (Commands/Index/*.cs)
-  * per-partition build checkpoints with lineage + counters (T8; the
+  * per-phase records with counters, and the commit cursor (T8; the
     reference's resume cursor is PumpAllScoresCommand.cs:19-20,52)
 
 Here all control state is JSON documents updated via write-tmp + os.replace
@@ -110,7 +110,7 @@ def committed_gen_paths(
                 k = int(name.split("=", 1)[1])
             except ValueError:
                 continue
-            if k < max(gens, 1):  # during a build, gen=0 is the job's own
+            if k < gens:
                 out.append(os.path.join(root, name))
     if not has_gen_dirs:
         return [root] if any(
@@ -156,7 +156,7 @@ def clean_orphan_generations(index_dir: str) -> list[str]:
                         k = int(sub.split("=", 1)[1])
                     except ValueError:
                         continue
-                    if k >= max(gens, 1):
+                    if k >= gens:
                         shutil.rmtree(os.path.join(p, sub))
                         removed.append(os.path.join(p, sub))
     return removed
@@ -357,11 +357,7 @@ class Catalog:
         m["phases"] = {}
         self.write_manifest(schema, m)
 
-    # -- phase checkpoints (T8 per-partition lineage + metrics) -------------
-    def phase_done(self, schema: str, phase: str) -> bool:
-        m = self.read_manifest(schema) or {}
-        return (m.get("phases", {}).get(phase) or {}).get("status") == "done"
-
+    # -- phase records (per-phase status, wall time and counters) ----------
     def mark_phase(
         self, schema: str, phase: str, status: str, **info: Any
     ) -> None:

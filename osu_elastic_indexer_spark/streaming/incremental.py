@@ -32,15 +32,18 @@ with ``setJobDescription``; its seconds land in the manifest's
               (operators/build.py) run in this process and every generation
               file is written with pyarrow — two Spark jobs and no Python
               worker in all. Any other batch takes the SPARK route: the
-              same kernels as Spark stages, as a build runs them, after the
-              probe. On a 4-core VM the driver route was the faster one at
-              every size measured: 1k, 5k and 10k fixture rows (~1 KB of
-              html each) in 1.8, 4.1 and 5.9 s a commit against 5.7, 7.8
-              and 9.1 s, and 797 adds of ~65 KB (52 MB of html) in 8.7
-              against 11.9 s, for 20-180 MB more driver RSS. The bounds sit
-              at the largest sizes measured, not at a measured crossover;
-              the driver's kernels run on one core, the Spark route's on
-              all of them.
+              same kernels as Spark stages, after the probe. On a 4-core
+              VM the driver route was the faster one at every size
+              measured: 1k, 5k and 10k fixture rows (~1 KB of html each)
+              in 1.8, 4.1 and 5.9 s a commit against 5.7, 7.8 and 9.1 s,
+              and 797 adds of ~65 KB (52 MB of html) in 8.7 against
+              11.9 s, for 20-180 MB more driver RSS. The bounds sit at the
+              largest sizes measured, not at a measured crossover; the
+              driver's kernels run on one core, the Spark route's on all
+              of them. A build (``build_index``: its whole input as the
+              first commit onto an empty state) takes the Spark route
+              whatever its size, unprobed: a build is corpus-sized, and
+              no corpus-sized collect may land on the driver.
   tombstones  deletes are POINT deletes by key, so their cost follows the
               batch: ONE job resolves the batch's tombstones to the driver
               (committed docmap ⋉ changed urls ▷ old tombstones -> sorted
@@ -54,13 +57,15 @@ with ``setJobDescription``; its seconds land in the manifest's
               postings) and the per-term df decrements. The tombstone
               generation is written from the driver-held ids with pyarrow.
   forward     fresh docIDs start at the manifest's ``next_doc_id`` counter
-              (written by build_index and every commit, carried over by
-              compaction — dead ids are never reused). Driver route: the
+              (0 in a build's empty state, extended by every commit,
+              carried over by compaction — dead ids are never reused). An
+              index without a cursor yet reads every row. Driver route: the
               collected adds in scan order through ``build.forward_local``
               (a cursor batch off a file scan gets the ids the Spark route
               would give it). Spark route: one scan
               (``build.materialize_forward``; a queue batch is staged to a
-              file scan first), the stats riding the writes.
+              file scan first) in splits of ``build.input_split_bytes``,
+              the stats riding the writes.
   dictionary  the adds' per-term counts (off the driver's fwd table, or one
               job on the Spark route) fold with the decrements into the
               batch's (term, df-delta) rows; known term ids are point
@@ -106,7 +111,7 @@ from __future__ import annotations
 import os
 import shutil
 import time
-from contextlib import contextmanager
+from contextlib import contextmanager, nullcontext
 
 import numpy as np
 import pyarrow as pa
@@ -125,7 +130,9 @@ from ..operators.build import (
     exploded_postings,
     forward_local,
     fwd_split_bytes,
+    input_split_bytes,
     materialize_forward,
+    salt_cap,
     scan_split_bytes,
     segments_local,
     write_dict_by_term,
@@ -416,8 +423,12 @@ def _apply_batch(
     queue_urls: DataFrame | None,
     salt_group_cap: int | None,
     phases: _Phases,
+    build: bool = False,
 ) -> dict:
-    """The body of ``incremental_update`` on a clean committed state."""
+    """The body of ``incremental_update`` on a clean committed state.
+    ``build``: the batch is ``build_index``'s whole input over its empty
+    committed state — it takes the Spark route unprobed, and the build
+    logs its own ``full_build`` event in place of this commit's."""
     m = cat.read_manifest(schema_version)
     idx = cat.index_dir(schema_version)
     # positional (v2) indexes: every generation carries the pos sidecar —
@@ -456,30 +467,35 @@ def _apply_batch(
         # cursor batches: the adds lineage is built straight off ``docs``
         # (filter + select only), so when docs is a plain file scan
         # materialize_forward reads it without staging; the tombstone job
-        # reads just (url, warc_ts) of the same rows
-        batch = docs.filter(
+        # reads just (url, warc_ts) of the same rows; an index without a
+        # cursor (a build's empty state) has read nothing yet
+        batch = docs if m["cursor"] is None else docs.filter(
             F.col("warc_ts") > F.lit(m["cursor"]).cast("timestamp")
         )
         is_add = should_index_expr(include_all_langs)
     adds = batch.filter(is_add).select(*carried)
 
     # ---- route: a batch within the driver bounds commits on the driver —
-    # the build's own kernels in this process; a larger one keeps the
-    # distributed route below. The probe carries no html.
-    with phases("tombstones"):
-        probe = _probe_batch(batch, is_add)
-    html_bytes = int(pc.sum(probe["html_bytes"]).as_py() or 0)
-    route = (
-        "driver"
-        if probe.num_rows <= DRIVER_BATCH_ROWS
-        and html_bytes <= DRIVER_BATCH_HTML_BYTES
-        else "spark"
-    )
-    collected = {
-        "route": route,
-        "collected_rows": probe.num_rows,
-        "collected_html_bytes": html_bytes if route == "driver" else 0,
-    }
+    # the build's own kernels in this process; a larger one, and a build
+    # whatever its size, keeps the distributed route below. The probe
+    # carries no html.
+    if build:
+        route, collected = "spark", {"route": "spark"}
+    else:
+        with phases("tombstones"):
+            probe = _probe_batch(batch, is_add)
+        html_bytes = int(pc.sum(probe["html_bytes"]).as_py() or 0)
+        route = (
+            "driver"
+            if probe.num_rows <= DRIVER_BATCH_ROWS
+            and html_bytes <= DRIVER_BATCH_HTML_BYTES
+            else "spark"
+        )
+        collected = {
+            "route": route,
+            "collected_rows": probe.num_rows,
+            "collected_html_bytes": html_bytes if route == "driver" else 0,
+        }
     docmap = _read_committed(
         spark, idx, "docmap", "url string, doc_id bigint", pinned=True
     )
@@ -561,14 +577,17 @@ def _apply_batch(
         else:
             # the build's forward kernel over a scan (operators/build.
             # materialize_forward; a queue batch is a join, so it is
-            # staged to a file scan first). n_add comes from the
-            # per-partition counts and the fwd stats ride the fwd write.
-            staged = materialize_forward(
-                spark, adds, fwd_gen_dir, dm_gen_dir,
-                os.path.join(idx, "fwd_stage"), start_id=start_id,
-                positions=positions, keyword_cols=keyword_fields,
-                numeric_cols=numeric_fields,
-            )
+            # staged to a file scan first), its splits sized for ~3
+            # tasks a core. n_add comes from the per-partition counts and
+            # the fwd stats ride the fwd write.
+            in_split = input_split_bytes(spark, adds)
+            with scan_split_bytes(spark, in_split) if in_split else nullcontext():
+                staged = materialize_forward(
+                    spark, adds, fwd_gen_dir, dm_gen_dir,
+                    os.path.join(idx, "fwd_stage"), start_id=start_id,
+                    positions=positions, keyword_cols=keyword_fields,
+                    numeric_cols=numeric_fields,
+                )
             n_add = int(staged["n_rows"])
             add_stats = staged["fwd"]  # {n, sum_dl, dl_min, postings}
             input_staged = staged["input_staged"]
@@ -598,7 +617,10 @@ def _apply_batch(
     sum_dl2 = int(st["sum_dl"]) + int(add_stats["sum_dl"]) - deleted["sum_dl"]
     dl_min2 = int(st["dl_min"])
     if add_stats["dl_min"] is not None:
-        dl_min2 = min(dl_min2, int(add_stats["dl_min"]))
+        # an empty index's dl_min of 0 is no doc's length
+        dl_min2 = int(add_stats["dl_min"]) if int(st["n_docs"]) == 0 else min(
+            dl_min2, int(add_stats["dl_min"])
+        )
     total_postings2 = (
         int(st["total_postings"]) + int(add_stats["postings"])
         - deleted["postings"]
@@ -703,8 +725,9 @@ def _apply_batch(
                     - F.coalesce(F.col("dels"), F.lit(0))
                 ).cast("bigint").alias("df"),
             ).persist()
-            dict_committed = spark.read.parquet(
-                *committed_gen_paths(idx, "dictionary")
+            dict_committed = _read_committed(
+                spark, idx, "dictionary", "term string, term_id bigint",
+                pinned=True,
             )
             known_ids = (
                 dict_committed.join(
@@ -737,11 +760,11 @@ def _apply_batch(
     max_tid2 = int(max_tid) + int(n_fresh)
 
     # ---- segments (ALL writes land in uncommitted dirs) --------------------
-    seg_bytes_added = 0
+    seg_bytes_added = seg_rows = 0
     seg_gen_dir = f"{resolve_table_dir(idx, 'segments')}/gen={gen}"
     if int(add_stats["postings"]) > 0:
         id_span = start_id + n_add
-        cap = salt_group_cap or max(50_000, max(n_add, 1) // 8)
+        cap = salt_cap(spark, n_add, salt_group_cap)
         # the generation phase's wall time starts here; mark_phase also
         # bumps the manifest's monotonic commit_seq (the Spark route's
         # norms cache version, below)
@@ -761,6 +784,7 @@ def _apply_batch(
                     seg_gen_dir, segs,
                     row_group_size=_rows_per_group(segs, SEGMENT_ROW_GROUP_BYTES),
                 )
+                seg_rows = segs.num_rows
                 seg_bytes_added = sum(
                     int(pc.sum(pc.binary_length(segs[c])).as_py() or 0)
                     for c in ("docs_blob", "tfs_blob")
@@ -787,16 +811,13 @@ def _apply_batch(
             with phases("segments"), scan_split_bytes(
                 spark, fwd_split_bytes(spark, fwd_gen_dir)
             ):
-                segs, _d, sub = build_segments_spimi(
+                segs = build_segments_spimi(
                     spark, fwd_reader.parquet(fwd_gen_dir), id_span, cap,
-                    fwd_gen_dir, norms_ver, generation=gen,
-                    dictionary=dict_delta, n_terms=int(n_batch_terms),
-                    positions=positions,
+                    fwd_gen_dir, norms_ver, dict_delta, generation=gen,
+                    n_terms=int(n_batch_terms), positions=positions,
                 )
-                seg_bytes_added = write_segments(
-                    spark, segs, seg_gen_dir, positions
-                )["bytes"]
-                sub.unpersist()
+                written = write_segments(spark, segs, seg_gen_dir, positions)
+                seg_rows, seg_bytes_added = written["rows"], written["bytes"]
     # dictionary DELTAS append as gen=K (batch vocabulary only), committed
     # by the same generations bump as segments/docmap — no versioned-table
     # rewrite of the corpus vocabulary per batch. Driver-held delta rows
@@ -853,16 +874,17 @@ def _apply_batch(
         schema_version, f"incremental_gen{gen}", "done",
         adds=int(n_add), deletes=int(n_del), terms=int(n_terms2),
         batch_terms=int(n_batch_terms), input_staged=input_staged,
-        **collected,
+        segment_rows=int(seg_rows), **collected,
         **{f"{k}_s": round(v, 3) for k, v in phases.seconds.items()},
     )
     # U2 per-batch tagged metric event (the DogStatsd stream analog)
-    emit_metric_event(
-        idx, "incremental_commit", schema=schema_version, generation=gen,
-        adds=int(n_add), deletes=int(n_del), batch_terms=int(n_batch_terms),
-        docs=int(n_docs2), postings=int(total_postings2),
-        bytes_added=int(seg_bytes_added),
-    )
+    if not build:
+        emit_metric_event(
+            idx, "incremental_commit", schema=schema_version, generation=gen,
+            adds=int(n_add), deletes=int(n_del),
+            batch_terms=int(n_batch_terms), docs=int(n_docs2),
+            postings=int(total_postings2), bytes_added=int(seg_bytes_added),
+        )
     # GC superseded versioned dirs (keep one version of history behind the
     # pointer as a reader grace window; compaction clears the rest). Only
     # dirs whose pointer MOVED in this commit are candidates: after a
@@ -976,20 +998,18 @@ def compact_index(
         max_live = docmap.agg(F.max("doc_id")).collect()[0][0]
         names["segments"] = f"segments_v{ver}"
         new_bytes = 0
-        if max_live is None:
-            # fully-deleted index: commit an EMPTY (absent) segments dir —
-            # readers treat a missing/empty table as zero postings
-            sub = None
-        else:
+        # a fully-deleted index (no live doc) writes no segments and
+        # commits an EMPTY (absent) segments dir — readers treat a
+        # missing/empty table as zero postings
+        if max_live is not None:
             id_span = int(max_live) + 1
-            cap = salt_group_cap or max(50_000, id_span // 64)
+            cap = salt_cap(spark, id_span, salt_group_cap)
             # norms from the PRE-compaction fwd snapshot (includes dead docs
             # — harmless, their entries are never indexed by live postings)
-            segs, _d, sub = build_segments_spimi(
+            segs = build_segments_spimi(
                 spark, fwd, id_span, cap,
                 tuple(fwd_old_paths), int(m.get("commit_seq", 0)),
-                generation=0, dictionary=dictionary,
-                positions=bool(m.get("positions")),
+                dictionary, positions=bool(m.get("positions")),
             )
             # the bytes counter can only shrink here: dead postings are
             # gone after the rewrite
@@ -1017,8 +1037,6 @@ def compact_index(
             dictionary, os.path.join(idx, names["dict_by_term"], "gen=0")
         )
         n_terms_live = dictionary.count()
-    if sub is not None:
-        sub.unpersist()
     dictionary.unpersist()
     # repoint tombstones at a fresh EMPTY versioned name (never written —
     # readers of a missing dir see no tombstones); the old dir must outlive

@@ -1,9 +1,7 @@
-"""Build-time invariants checked at run time: a failed segments write reaps
-the concurrent dictionary writer, the forward kernel refuses to commit when
-its docmap and fwd doc_id counts disagree, and it stages exactly the
-inputs a re-scan may not reproduce."""
-
-import threading
+"""Build-time invariants checked at run time: a failed segments write
+commits nothing, the forward kernel refuses to commit when its docmap and
+fwd doc_id counts disagree, and it stages exactly the inputs a re-scan may
+not reproduce."""
 
 import pyarrow.parquet as pq
 import pyspark.sql
@@ -35,25 +33,24 @@ class _FailingWrite:
         raise RuntimeError("injected segments write failure")
 
 
-def test_segments_write_failure_reaps_dictionary_writer(
+def _uncommitted(cat: Catalog) -> bool:
+    m = cat.read_manifest("v1")
+    return "commit" not in m["phases"] and m["generations"] == 0
+
+
+def test_segments_write_failure_commits_nothing(
     spark, corpus_path, tmp_path, monkeypatch
 ):
-    real = build_mod.build_segments_spimi
+    import osu_elastic_indexer_spark.streaming.incremental as inc
 
-    def failing_spimi(*args, **kwargs):
-        _segments, dictionary, sub = real(*args, **kwargs)
-        return _FailingWrite(), dictionary, sub
-
-    monkeypatch.setattr(build_mod, "build_segments_spimi", failing_spimi)
+    monkeypatch.setattr(
+        inc, "build_segments_spimi", lambda *a, **k: _FailingWrite()
+    )
     cat = Catalog(str(tmp_path / "idx"))
     with pytest.raises(RuntimeError, match="injected segments write"):
         build_index(spark, spark.read.parquet(corpus_path), cat, "v1")
-    alive = [
-        t.name for t in threading.enumerate()
-        if t.name.startswith("build-dictionary") and t.is_alive()
-    ]
-    assert alive == []
-    assert not cat.phase_done("v1", "segments")
+    assert _uncommitted(cat)
+    assert committed_gen_paths(cat.index_dir("v1"), "segments") == []
 
 
 def test_direct_docmap_count_mismatch_refuses_commit(
@@ -80,8 +77,7 @@ def test_direct_docmap_count_mismatch_refuses_commit(
         RuntimeError, match="docmap write saw .* rows but the count pass saw"
     ):
         build_index(spark, spark.read.parquet(corpus_path), cat, "v1")
-    assert not cat.phase_done("v1", "postings")
-    assert not cat.phase_done("v1", "commit")
+    assert _uncommitted(cat)
 
 
 def _snapshot_oracle(idx_dir: str, corpus) -> oracle.OracleIndex:

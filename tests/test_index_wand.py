@@ -1,6 +1,6 @@
 """M2-M4 golden tests: full index build (SPIMI -> salted merge -> segments)
 and block-max WAND rank-identity vs the pure-python oracle, including a
-forced-salting build (SURVEY.md §7.4 #3) and phase resume (T8)."""
+forced-salting build (SURVEY.md §7.4 #3) and build resume (T8)."""
 
 import pyarrow.parquet as pq
 import pytest
@@ -203,15 +203,34 @@ def test_wand_salted_rank_identical(spark, built_index_salted, corpus_path):
         )
 
 
-def test_resume_skips_done_phases(spark, corpus_path, built_index):
-    """T8: re-running with resume=True must skip completed phases and leave
-    results identical (idempotence, T7)."""
+def test_resume_reruns_only_an_uncommitted_build(
+    spark, corpus_path, built_index, tmp_path, monkeypatch
+):
+    """T8: resume=True returns a committed build untouched (nothing
+    re-runs), and replays a build that crashed before its commit onto the
+    same counters (idempotence, T7)."""
+    import osu_elastic_indexer_spark.streaming.incremental as inc
+
     cat, m1 = built_index
     docs = spark.read.parquet(corpus_path)
-    before = m1["phases"]["segments"]["ts_utc"]
-    m2 = build_index(spark, docs, cat, "v1", resume=True)
-    assert m2["phases"]["segments"]["ts_utc"] == before  # not re-run
+    before = cat.read_manifest("v1")
+    with monkeypatch.context() as mp:
+        mp.setattr(inc, "_apply_batch", None)  # would raise if called
+        assert build_index(spark, docs, cat, "v1", resume=True) == before
+
+    crashed = Catalog(str(tmp_path / "crashed"))
+
+    def crash(*_a, **_k):
+        raise RuntimeError("injected crash")
+
+    with monkeypatch.context() as mp:
+        mp.setattr(inc, "write_segments", crash)
+        with pytest.raises(RuntimeError, match="injected crash"):
+            build_index(spark, docs, crashed, "v1")
+    assert "commit" not in crashed.read_manifest("v1")["phases"]
+    m2 = build_index(spark, docs, crashed, "v1", resume=True)
     assert m2["counters"] == m1["counters"]
+    assert m2["phases"]["commit"]["status"] == "done"
 
 
 def test_stale_builder_refused(spark, corpus_path, built_index):

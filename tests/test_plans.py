@@ -68,15 +68,17 @@ def test_spimi_dict_join_flips_over_threshold(spark, tmp_path):
     norms_path = str(tmp_path / "fwd_norms")
     fwd.write.parquet(norms_path)
     fwdr = spark.read.parquet(norms_path)
+    dictionary = spark.createDataFrame(
+        [(0, "bb", 2), (1, "aa", 1), (2, "cc", 1)],
+        "term_id bigint, term string, df bigint",
+    )
 
     def join_plan(dict_broadcast_max):
-        segs, _d, sub = build_segments_spimi(
-            spark, fwdr, 2, 10, norms_path, 0,
+        segs = build_segments_spimi(
+            spark, fwdr, 2, 10, norms_path, 0, dictionary,
             dict_broadcast_max=dict_broadcast_max,
         )
-        plan = segs._jdf.queryExecution().executedPlan().toString()
-        sub.unpersist()
-        return plan
+        return segs._jdf.queryExecution().executedPlan().toString()
 
     key = "spark.sql.autoBroadcastJoinThreshold"
     old = spark.conf.get(key)
