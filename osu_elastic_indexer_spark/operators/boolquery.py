@@ -417,7 +417,7 @@ def _bool_plans(m: dict, queries: list[tuple[int, dict]]):
 
 
 def _plan_batch(
-    spark, index_dir: str, m: dict, specs: dict, msms: dict,
+    index_dir: str, m: dict, specs: dict, msms: dict,
     term_info: dict | None = None,
 ):
     """Driver-side plan of a validated docpart batch on the snapshot
@@ -431,7 +431,7 @@ def _plan_batch(
     n_docs, avgdl, seq = _index_state(index_dir, m)
     if term_info is None:
         term_info = dictionary.lookup_term_info(
-            spark, index_dir,
+            index_dir,
             sorted({t for s in specs.values() for c in _CLAUSES
                     for t in s[c]}),
             m,
@@ -465,7 +465,7 @@ def _cells(
     partitions, heaviest cells dealt round-robin — no scan, no exchange."""
     from ..session import ship_package
 
-    planned = _plan_batch(spark, index_dir, m, specs, msms, term_info)
+    planned = _plan_batch(index_dir, m, specs, msms, term_info)
     if planned is None:
         return None
     state, plans, cells = planned
@@ -1344,7 +1344,7 @@ def phrase_topk(
 
             phs = {int(qid): set(tokenize(text)) for qid, text in queries}
             ti = lookup_term_info(
-                spark, index_dir, sorted({t for s in phs.values() for t in s}),
+                index_dir, sorted({t for s in phs.values() for t in s}),
                 m,
             )
             heavy = {

@@ -12,23 +12,11 @@ terms — too big to broadcast whole. Strategy:
     splitting handles head terms;
   * QUERY-time lookups never scan: query terms are a tiny set, so
     ``lookup_term_info`` seeks the term-sorted projection's row groups by
-    their footer statistics (pyarrow, no Spark job).
+    their footer statistics (``state.RowGroupSeek``, no Spark job).
 
 term_id ordering: df desc, term asc — head terms get the smallest ids, which
 clusters hot posting rows together in the segments table (locality, and a
 cheap "is head" test: term_id < n_head).
-
-Filesystem note: ``lookup_term_info`` / ``lookup_terms_by_prefix`` read the
-index parquet with DRIVER-LOCAL pyarrow (footer-stats seeks — the 15 s
-Catalyst-planning fix) when the index directory is visible to the driver as
-a local or shared-filesystem path (NFS/FUSE mount of the object store — the
-deployment shape the serving tier already assumes). For an index reachable
-only through a Hadoop-filesystem URI (hdfs:// / s3a:// ...), both functions
-FALL BACK to a Spark scan automatically — the probe rides a broadcast join
-(never an ``isin`` literal, whose Catalyst planning cost scales with the
-term list), so the fallback stays O(1)-planning at any batch vocabulary.
-The serving tier (no SparkSession by design) raises a clear error on such
-URIs instead.
 """
 
 from __future__ import annotations
@@ -116,214 +104,76 @@ def fold_delta_rows(rows) -> dict[str, tuple[int, int]]:
     return out
 
 
-def _driver_visible(paths) -> bool:
-    """True when every path is a plain local/shared-FS path driver-local
-    pyarrow can open (no scheme, or file://)."""
-    from urllib.parse import urlparse
-
-    return all(urlparse(str(p)).scheme in ("", "file") for p in paths)
+_DICT_COLS = ["term", "term_id", "df"]
 
 
-def _lookup_term_info_spark(
-    spark, paths, want: list[str]
-) -> dict[str, tuple[int, int]]:
-    """Spark-scan lookup for Hadoop-FS-only index locations: the probe
-    list joins as a BROADCAST dataframe (O(1) Catalyst planning at any
-    vocabulary size — the isin-literal form this path originally used
-    planned in O(|terms|), 15 s at a 25k-term batch), delta rows fold
-    through the same fold_delta_rows as the pyarrow seek."""
-    probe = spark.createDataFrame([(t,) for t in want], "term string")
-    rows = (
-        spark.read.parquet(*paths)
-        .join(F.broadcast(probe), "term")
-        .select("term", "term_id", "df")
-        .collect()
+def dict_seek(index_dir: str, manifest: dict | None = None):
+    """The ``RowGroupSeek`` over the term-SORTED ``dict_by_term``
+    generations of the snapshot ``manifest`` (default: the one committed
+    now). Every format-4 writer commits it beside the primary dictionary."""
+    from ..sources.catalog import committed_gen_paths
+    from .state import RowGroupSeek, _parquet_files
+
+    paths = committed_gen_paths(index_dir, "dict_by_term", manifest)
+    return RowGroupSeek(_parquet_files(tuple(paths)), "term")
+
+
+def _fold(tbl) -> dict[str, tuple[int, int]]:
+    return fold_delta_rows(
+        zip(*(tbl.column(c).to_pylist() for c in _DICT_COLS))
     )
-    return fold_delta_rows((r.term, r.term_id, r.df) for r in rows)
+
+
+def seek_term_info(seek, terms) -> dict[str, tuple[int, int]]:
+    """{term: (term_id, df)} for ``terms`` through a dictionary seek
+    (``dict_seek``): only the row groups whose footer [min, max] can hold
+    a probe term are read, and the <= |terms| x gens delta rows fold."""
+    return _fold(seek.read(_DICT_COLS, values=list(terms)))
 
 
 def lookup_term_info(
-    spark, index_dir: str, terms: list[str], manifest: dict | None = None
+    index_dir: str, terms: list[str], manifest: dict | None = None
 ) -> dict[str, tuple[int, int]]:
-    """Driver-side point lookups for a query's terms -> {term: (tid, df)}.
-
-    Pure-pyarrow term seek over the term-SORTED dict_by_term generations:
-    row groups are pruned by their footer (min, max) statistics against the
-    sorted probe list, matched groups are read column-pruned and filtered
-    with one vectorized ``is_in``, and the <= |terms| x gens delta rows
-    fold in python. No Spark job: the previous implementation pushed the
-    probe list as a Spark ``isin`` literal, whose Catalyst planning cost
-    scales with the LIST (a 25k-term incremental batch vocabulary took
-    ~15 s of pure planning at sf0.1 — the scan itself is milliseconds).
-    Falls back to the primary dictionary when the sorted projection is
-    absent (legacy layout; no pruning there, the stats never match), and
-    to a broadcast-probe Spark scan when the index lives on a
-    Hadoop-filesystem URI the driver's pyarrow can't open (module doc).
+    """Driver-side point lookups for a query's terms -> {term: (tid, df)}:
+    one footer-pruned seek (``seek_term_info``) of the snapshot's
+    dict_by_term generations, no Spark job (a Spark ``isin`` literal
+    plans in O(|terms|): 15 s for a 25k-term batch vocabulary).
     ``manifest``: the snapshot to look up in (a query batch passes the one
     it plans from); default the one committed now."""
-    import bisect
+    return seek_term_info(dict_seek(index_dir, manifest), terms) if terms else {}
 
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
 
-    from ..sources.catalog import committed_gen_paths
-    from .state import _parquet_files
-
-    if not terms:
-        return {}
-    paths = committed_gen_paths(
-        index_dir, "dict_by_term", manifest
-    ) or committed_gen_paths(index_dir, "dictionary", manifest)
-    if not paths:
-        return {}
-    want = sorted(set(terms))
-    if not _driver_visible(paths):
-        if spark is None:
-            raise RuntimeError(
-                f"index at {index_dir} is not driver-visible (Hadoop-FS "
-                "URI) and no SparkSession was supplied for the scan "
-                "fallback — mount the index or pass spark"
-            )
-        return _lookup_term_info_spark(spark, paths, want)
-    want_arr = pa.array(want, pa.string())
-
-    def _s(v):  # parquet string stats may surface as bytes
-        return v.decode("utf-8", "replace") if isinstance(v, bytes) else v
-
-    parts = []
-    for f in _parquet_files(tuple(paths)):
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
-        if md.num_rows == 0 or md.num_row_groups == 0:
-            continue
-        tcol = next(
-            i
-            for i in range(md.row_group(0).num_columns)
-            if md.row_group(0).column(i).path_in_schema == "term"
-        )
-        groups = []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(tcol).statistics
-            if st is None or not st.has_min_max:
-                groups.append(g)  # stats-less groups stay candidates
-                continue
-            lo, hi = _s(st.min), _s(st.max)
-            i = bisect.bisect_left(want, lo)
-            if i < len(want) and want[i] <= hi:
-                groups.append(g)
-        if not groups:
-            continue
-        tbl = pf.read_row_groups(groups, columns=["term", "term_id", "df"])
-        tbl = tbl.filter(pc.is_in(tbl.column("term"), value_set=want_arr))
-        if tbl.num_rows:
-            parts.append(tbl)
-    if not parts:
-        return {}
-    t = pa.concat_tables(parts)
-    return fold_delta_rows(
-        zip(
-            t.column("term").to_pylist(),
-            t.column("term_id").to_pylist(),
-            t.column("df").to_pylist(),
-        )
-    )
+def _successor(prefix: str) -> str | None:
+    """The smallest string above every string starting with ``prefix``
+    (None when there is none), so a prefix is the range [prefix,
+    successor). Surrogates are skipped: no stored term holds one."""
+    if not prefix:
+        return None
+    c = ord(prefix[-1]) + 1
+    if c > 0x10FFFF:
+        return _successor(prefix[:-1])
+    return prefix[:-1] + chr(0xE000 if 0xD800 <= c <= 0xDFFF else c)
 
 
 def lookup_terms_by_prefix(
     index_dir: str,
     prefix: str,
     max_expansions: int | None = None,
-    spark=None,
-    files: list[str] | None = None,
+    seek=None,
 ) -> list[str]:
     """ES prefix-query term expansion: LIVE terms starting with ``prefix``,
     term-asc, capped at ``max_expansions`` (the deterministic analog of
-    ES's index-order rewrite cap). Same pyarrow footer-stats seek as
-    ``lookup_term_info``, but with a RANGE predicate: only row groups whose
-    [min, max] intersects [prefix, successor(prefix)) are read. Delta rows
-    fold first, so a fully-deleted term (df summed to 0) never expands.
-    On a non-driver-visible (Hadoop-FS URI) index the expansion falls back
-    to a Spark scan with the same startswith predicate (pushed to parquet)
-    when ``spark`` is supplied, else raises (module doc).
+    ES's index-order rewrite cap). A range probe [prefix, successor) over
+    the dictionary seek; delta rows fold first, so a fully-deleted term
+    (df summed to 0) never expands.
 
-    ``files``: the dictionary parquet files to expand over instead of the
-    index's currently committed ones — a searcher passes the files of the
-    snapshot it pinned at open, so a later commit never leaks in."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from ..sources.catalog import committed_gen_paths
-    from .state import _parquet_files
-
+    ``seek``: the dictionary seek to expand over instead of the index's
+    currently committed one — a searcher passes the one of the snapshot it
+    pinned at open, so a later commit never leaks in."""
     if not prefix:
         return []
-    if files is None:
-        paths = committed_gen_paths(
-            index_dir, "dict_by_term"
-        ) or committed_gen_paths(index_dir, "dictionary")
-        if not paths:
-            return []
-        if not _driver_visible(paths):
-            if spark is None:
-                raise RuntimeError(
-                    f"index at {index_dir} is not driver-visible (Hadoop-FS "
-                    "URI) and no SparkSession was supplied for the scan "
-                    "fallback — mount the index or pass spark"
-                )
-            rows = (
-                spark.read.parquet(*paths)
-                .filter(F.col("term").startswith(prefix))
-                .select("term", "term_id", "df")
-                .collect()
-            )
-            folded = fold_delta_rows((r.term, r.term_id, r.df) for r in rows)
-            live = sorted(t for t, (_tid, df) in folded.items() if df > 0)
-            return live[:max_expansions] if max_expansions is not None else live
-        files = _parquet_files(tuple(paths))
-    # successor string: smallest string greater than every prefix-match
-    hi = prefix[:-1] + chr(ord(prefix[-1]) + 1) if ord(prefix[-1]) < 0x10FFFF else None
-
-    def _s(v):
-        return v.decode("utf-8", "replace") if isinstance(v, bytes) else v
-
-    parts = []
-    for f in files:
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
-        if md.num_rows == 0 or md.num_row_groups == 0:
-            continue
-        tcol = next(
-            i
-            for i in range(md.row_group(0).num_columns)
-            if md.row_group(0).column(i).path_in_schema == "term"
-        )
-        groups = []
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(tcol).statistics
-            if st is None or not st.has_min_max:
-                groups.append(g)
-                continue
-            lo_g, hi_g = _s(st.min), _s(st.max)
-            if hi_g < prefix or (hi is not None and lo_g >= hi):
-                continue
-            groups.append(g)
-        if not groups:
-            continue
-        tbl = pf.read_row_groups(groups, columns=["term", "term_id", "df"])
-        tbl = tbl.filter(pc.starts_with(tbl.column("term"), prefix))
-        if tbl.num_rows:
-            parts.append(tbl)
-    if not parts:
-        return []
-    t = pa.concat_tables(parts)
-    folded = fold_delta_rows(
-        zip(
-            t.column("term").to_pylist(),
-            t.column("term_id").to_pylist(),
-            t.column("df").to_pylist(),
-        )
-    )
+    if seek is None:
+        seek = dict_seek(index_dir)
+    folded = _fold(seek.read(_DICT_COLS, lo=prefix, hi=_successor(prefix)))
     live = sorted(term for term, (_tid, df) in folded.items() if df > 0)
     return live[:max_expansions] if max_expansions is not None else live

@@ -34,16 +34,18 @@ searcher-specific is where postings come from and what stays hot:
   position decode and the verify kernel over them), and prefix expansions
   (``(token, max_expansions)`` -> expanded terms). After one pass over a
   query mix, repeating it reads no parquet at all.
-* **Cold reads** seek by row group: segment files are term_id-sorted, so
-  one footer pass at open maps each group to its term_id range and a term
-  reads only its covering groups (the Lucene term-index seek).
+* **Cold reads** seek by row group (``state.RowGroupSeek``, the Lucene
+  term-index seek): segment files are term_id-sorted and dict_by_term
+  files term-sorted, so one footer pass per table at open maps each row
+  group to its [min, max], and a lookup reads only the groups that can
+  hold its terms — a term's segment rows, or its dictionary delta rows
+  across every generation.
 
 At real scale this is the searcher fleet next to the object store.
 """
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 from collections.abc import MutableMapping
 
@@ -198,7 +200,12 @@ class LocalSearcher:
             read_index_manifest,
             resolve_table_dir,
         )
-        from .state import _parquet_files, load_norms, load_tombstones
+        from .state import (
+            RowGroupSeek,
+            _parquet_files,
+            load_norms,
+            load_tombstones,
+        )
 
         self.index_dir = index_dir
         self._cache_share = float(cache_share)
@@ -228,66 +235,28 @@ class LocalSearcher:
         st = pq.read_table(resolve_table_dir(index_dir, "stats", m)).to_pylist()[0]
         self.n_docs = int(st["n_docs"])
         self.avgdl = float(st["avgdl"])
-        # term -> (term_id, df): lazy row-group-pruned lookups on the
+        # term -> (term_id, df): lazy footer-pruned seeks of the
         # term-SORTED dict_by_term projection's committed generations (the
         # Lucene term-dictionary-seek analog — a searcher never holds 10^8
         # terms in a python dict); per-gen DELTA rows fold at lookup
         # (term_id = max, df = sum — operators/dictionary.py). Resolved
-        # terms are memoized. Indexes without the projection fall back to
-        # one eager merged load of the primary dictionary gens.
+        # terms are memoized.
         self._dict: dict[str, tuple[int, int]] = {}
-        self._dict_files = _parquet_files(gen_paths("dict_by_term"))
-        self._dict_ds = ds.dataset(self._dict_files) if self._dict_files else None
-        if self._dict_ds is None:
-            self._dict_files = _parquet_files(gen_paths("dictionary"))
-            if self._dict_files:
-                from .dictionary import fold_delta_rows
-
-                d = ds.dataset(self._dict_files).to_table(
-                    columns=["term", "term_id", "df"]
-                )
-                self._dict = fold_delta_rows(
-                    zip(
-                        d.column("term").to_pylist(),
-                        d.column("term_id").to_pylist(),
-                        d.column("df").to_pylist(),
-                    )
-                )
+        self._dict_seek = RowGroupSeek(
+            _parquet_files(gen_paths("dict_by_term")), "term"
+        )
         # norms + tombstones via the shared executor-side loaders (sorted
         # int64 arrays; the Lucene live-docs/norms analog a searcher keeps
         # hot), keyed by the snapshot's monotonic commit_seq
         self.norms = load_norms(gen_paths("fwd"), self._seq)
         self.tombstones = load_tombstones(gen_paths("tombstones"), self._seq)
-        # empty-corpus / all-deleted indexes commit with zero segment files
-        # -> serve empty results. For non-empty indexes, build the ROW-GROUP
-        # SEEK INDEX once: files are term_id-sorted with ~1 MB row groups
-        # (build.SEGMENT_ROW_GROUP_BYTES), so one footer pass yields
-        # (term_id_min, term_id_max) per group and a term lookup reads ONLY
-        # its covering groups — the Lucene term-index seek, not a dataset
-        # scan whose stats evaluation re-reads every footer per query.
-        self._seg_pfs: list[pq.ParquetFile] = []
-        rg_mins, rg_maxs, rg_file, rg_idx = [], [], [], []
-        for fi, f in enumerate(_parquet_files(gen_paths("segments"))):
-            pf = pq.ParquetFile(f)
-            self._seg_pfs.append(pf)
-            md = pf.metadata
-            tid_col = next(
-                i for i in range(md.row_group(0).num_columns)
-                if md.row_group(0).column(i).path_in_schema == "term_id"
-            ) if md.num_row_groups else 0
-            for g in range(md.num_row_groups):
-                st = md.row_group(g).column(tid_col).statistics
-                has = st is not None and st.has_min_max
-                # groups without min/max stats must stay candidates for
-                # EVERY term (never silently skipped)
-                rg_mins.append(st.min if has else -(2**62))
-                rg_maxs.append(st.max if has else 2**62)
-                rg_file.append(fi)
-                rg_idx.append(g)
-        self._rg_min = np.asarray(rg_mins, dtype=np.int64)
-        self._rg_max = np.asarray(rg_maxs, dtype=np.int64)
-        self._rg_file = np.asarray(rg_file, dtype=np.int64)
-        self._rg_idx = np.asarray(rg_idx, dtype=np.int64)
+        # segment files are term_id-sorted with ~1 MB row groups
+        # (build.SEGMENT_ROW_GROUP_BYTES): one footer pass here, and a term
+        # reads only its covering groups (empty-corpus / all-deleted
+        # indexes commit no segment file and serve empty results)
+        self._seg_seek = RowGroupSeek(
+            _parquet_files(gen_paths("segments")), "term_id"
+        )
         # the hot caches (module doc): decoded postings (docs, tfn) for
         # match/bool billed per posting, positional segment rows for
         # phrases billed in bytes, prefix expansions billed per term
@@ -298,59 +267,19 @@ class LocalSearcher:
     def _load_term_rows(
         self, term_ids: list[int], with_positions: bool = False
     ) -> dict[int, list[dict]]:
-        if not self._seg_pfs:
-            return {}
-        # row-group seek: only groups whose [min,max] covers a query term
-        tids = np.asarray(sorted(term_ids), dtype=np.int64)
-        covers = np.zeros(self._rg_min.size, dtype=bool)
-        for t in tids:
-            covers |= (self._rg_min <= t) & (t <= self._rg_max)
-        hit = np.flatnonzero(covers)
-        if hit.size == 0:
-            return {}
-        parts = []
-        for fi in np.unique(self._rg_file[hit]):
-            groups = self._rg_idx[hit[self._rg_file[hit] == fi]]
-            cols = (
-                _SEG_COLS + ["pos_blob", "pos_offs"]
-                if with_positions
-                else _SEG_COLS
-            )
-            parts.append(
-                self._seg_pfs[int(fi)].read_row_groups(
-                    [int(g) for g in groups], columns=cols
-                )
-            )
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        tbl = pa.concat_tables(parts)
-        tbl = tbl.filter(pc.is_in(tbl.column("term_id"), value_set=pa.array(tids)))
-        return _segment_rows(tbl)
+        cols = _SEG_COLS + ["pos_blob", "pos_offs"] if with_positions else _SEG_COLS
+        return _segment_rows(self._seg_seek.read(cols, values=term_ids))
 
     def _resolve_terms(self, terms: list[str]) -> None:
-        """Memoize term -> (term_id, df) for unseen terms via ONE pruned
-        read of the term-sorted projection (no-op without it: the fallback
-        eagerly loaded everything). Misses are memoized as absent so a hot
+        """Memoize term -> (term_id, df) for unseen terms via ONE seek of
+        the term-sorted projection. Misses are memoized as absent so a hot
         OOV term never re-reads."""
-        if self._dict_ds is None:
-            return
         miss = [t for t in terms if t not in self._dict]
         if not miss:
             return
-        from .dictionary import fold_delta_rows
+        from .dictionary import seek_term_info
 
-        tbl = self._dict_ds.to_table(
-            columns=["term", "term_id", "df"],
-            filter=ds.field("term").isin(miss),
-        )
-        found = fold_delta_rows(
-            zip(
-                tbl.column("term").to_pylist(),
-                tbl.column("term_id").to_pylist(),
-                tbl.column("df").to_pylist(),
-            )
-        )
+        found = seek_term_info(self._dict_seek, miss)
         for t in miss:
             self._dict[t] = found.get(t)
 
@@ -606,7 +535,7 @@ class LocalSearcher:
     ) -> list[tuple[int, float]]:
         """ES prefix-query serving: expand via the dictionary range seek
         (term-asc, capped — dictionary.lookup_terms_by_prefix) over the
-        snapshot's own dictionary files and score the expansion through the
+        snapshot's own dictionary seek and score the expansion through the
         normal search path, so results equal a plain query on the expanded
         terms. Expansions are memoized per ``(token, max_expansions)``: the
         snapshot never changes under a searcher, so neither do they.
@@ -628,7 +557,7 @@ class LocalSearcher:
     def _expansions(self, token: str, max_expansions: int) -> list[str]:
         """The live dictionary terms starting with ``token`` in this
         snapshot, term-asc and capped (dictionary.lookup_terms_by_prefix
-        over the pinned dictionary files), memoized per
+        over the pinned dictionary seek), memoized per
         ``(token, max_expansions)``."""
         from . import dictionary
 
@@ -636,7 +565,7 @@ class LocalSearcher:
         terms = self._prefix_terms.hit(key)
         if terms is None:
             expanded = dictionary.lookup_terms_by_prefix(
-                self.index_dir, token, max_expansions, files=self._dict_files,
+                self.index_dir, token, max_expansions, seek=self._dict_seek,
             )
             # as search() would tokenize the joined expansion
             terms = sorted(set(tokenize(" ".join(expanded))))

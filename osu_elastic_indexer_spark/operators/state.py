@@ -138,6 +138,165 @@ def _parquet_files(paths: tuple[str, ...]) -> list[str]:
     return sorted(out)
 
 
+class RowGroupSeek:
+    """Footer-pruned reads of one sorted ``column`` over parquet files
+    (the Lucene term-index seek): built once from the footers, it records
+    each row group's (file, group, min, max), and ``read`` reads only the
+    groups whose ``[min, max]`` can hold a wanted value. A group without
+    min/max statistics stays a candidate for every probe; string
+    statistics that surface as ``bytes`` are decoded. pyarrow's dataset
+    ``isin`` filter is no substitute: it keeps every row group of a sorted
+    column (only range filters prune there). This is the one place that
+    reads parquet footer statistics."""
+
+    def __init__(self, files, column: str):
+        import pyarrow.parquet as pq
+
+        self.column = column
+        self.files: list[str] = []
+        self._pfs: list = []
+        self._schema = None  # of the first file, empty ones included
+        fi, gi, has, mins, maxs = [], [], [], [], []
+        for f in files:
+            pf = pq.ParquetFile(f)
+            md = pf.metadata
+            if self._schema is None:
+                self._schema = pf.schema_arrow
+            if md.num_rows == 0 or md.num_row_groups == 0:
+                continue
+            c = next(
+                i for i in range(md.num_columns)
+                if md.schema.column(i).path == column
+            )
+            for g in range(md.num_row_groups):
+                st = md.row_group(g).column(c).statistics
+                ok = st is not None and st.has_min_max
+                fi.append(len(self._pfs))
+                gi.append(g)
+                has.append(ok)
+                mins.append(_stat(st.min) if ok else None)
+                maxs.append(_stat(st.max) if ok else None)
+            self.files.append(f)
+            self._pfs.append(pf)
+        self._file = np.asarray(fi, dtype=np.int64)
+        self._group = np.asarray(gi, dtype=np.int64)
+        self._has = np.asarray(has, dtype=bool)
+        self._min, self._max = _bounds(mins, has), _bounds(maxs, has)
+
+    def _candidates(self, values=None, lo=None, hi=None) -> np.ndarray:
+        """Mask over the indexed row groups that can hold a row whose
+        column is in ``values`` (sorted, unique — ``_probes``) or, without
+        ``values``, inside ``[lo, hi)`` (None = unbounded)."""
+        if values is not None and not values.size:
+            return np.zeros(self._has.size, dtype=bool)
+        ok = np.ones(self._has.size, dtype=bool)
+        if self._has.any():
+            if values is not None:
+                ok = np.searchsorted(values, self._min, "left") < np.searchsorted(
+                    values, self._max, "right"
+                )
+            else:
+                if lo is not None:
+                    ok &= self._max >= lo
+                if hi is not None:
+                    ok &= self._min < hi
+        return ~self._has | ok
+
+    def read(
+        self, columns: list[str], values=None, lo=None, hi=None,
+        tag: bool = False,
+    ):
+        """The rows whose column is in ``values``, or without ``values``
+        inside ``[lo, hi)``: one ``read_row_groups`` per file over its
+        candidate groups, then an exact filter. ``columns`` must hold the
+        seek column. ``tag`` appends ``file`` (index into ``files``) and
+        ``row_group`` columns naming where each row was read."""
+        import pyarrow as pa
+
+        values = None if values is None else _probes(values)
+        hit = np.flatnonzero(self._candidates(values, lo, hi))
+        parts = []
+        for k in np.unique(self._file[hit]):
+            groups = self._group[hit[self._file[hit] == k]].tolist()
+            t = self._pfs[k].read_row_groups(groups, columns=columns)
+            if tag:
+                md = self._pfs[k].metadata
+                sizes = [md.row_group(g).num_rows for g in groups]
+                t = t.append_column(
+                    "file", pa.array(np.full(t.num_rows, k, dtype=np.int64))
+                ).append_column(
+                    "row_group", pa.array(np.repeat(groups, sizes), pa.int64())
+                )
+            parts.append(t)
+        if not parts:
+            # the first file's types; null-typed when there is no file
+            fields = [
+                pa.field(c, pa.null()) if self._schema is None
+                else self._schema.field(c)
+                for c in columns
+            ] + [pa.field(c, pa.int64()) for c in ("file", "row_group") if tag]
+            return pa.schema(fields).empty_table()
+        return _exact(pa.concat_tables(parts), self.column, values, lo, hi)
+
+
+def read_groups(
+    where: dict[str, list[int]], columns: list[str], column: str, values
+):
+    """The rows of the row groups ``where`` (``{file: [group, ...]}``, as
+    a ``RowGroupSeek`` tagged them) whose ``column`` is in ``values``:
+    one ``read_row_groups`` per file, then the seek's exact filter."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tbl = pa.concat_tables(
+        pq.ParquetFile(f).read_row_groups(sorted(gs), columns=columns)
+        for f, gs in sorted(where.items())
+    )
+    return _exact(tbl, column, _probes(values), None, None)
+
+
+def _stat(v):
+    """A footer min/max as a comparable python value (string statistics
+    may surface as bytes)."""
+    return v.decode("utf-8", "replace") if isinstance(v, bytes) else v
+
+
+def _bounds(vals: list, has: list) -> np.ndarray:
+    """Group bounds as one array: numeric columns as a numpy number array,
+    strings as objects (numpy's fixed-width unicode drops trailing NULs).
+    Stats-less slots take a real bound; ``has`` masks them anyway."""
+    fill = next((v for v, ok in zip(vals, has) if ok), 0)
+    out = [v if ok else fill for v, ok in zip(vals, has)]
+    return np.array(out, dtype=object if isinstance(fill, str) else None)
+
+
+def _probes(values) -> np.ndarray:
+    """Probe values sorted and unique, strings as an object array."""
+    arr = np.asarray(values)
+    if arr.dtype.kind in "USO":
+        arr = arr.astype(object)
+    return np.unique(arr)
+
+
+def _exact(tbl, column: str, values, lo, hi):
+    """The rows of ``tbl`` whose ``column`` is in ``values`` (sorted) or,
+    without ``values``, inside ``[lo, hi)``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    col = tbl.column(column)
+    if values is not None:
+        vs = pa.array(values.tolist(), col.type)
+        return tbl.filter(pc.is_in(col, value_set=vs))
+    mask = None
+    if lo is not None:
+        mask = pc.greater_equal(col, pa.scalar(lo, col.type))
+    if hi is not None:
+        m2 = pc.less(col, pa.scalar(hi, col.type))
+        mask = m2 if mask is None else pc.and_(mask, m2)
+    return tbl if mask is None else tbl.filter(mask)
+
+
 def load_norms(paths, version: int) -> np.ndarray:
     """Dense doc_id -> dl array from fwd-table dirs (column-pruned read).
     ``paths``: a directory or the committed generation dirs of the fwd

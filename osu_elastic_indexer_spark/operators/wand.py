@@ -620,41 +620,29 @@ def _segment_rows(tbl) -> dict:
 def _list_cells(seg_files: list[str], tids: list[int]) -> list[tuple]:
     """The (generation, salt) docID cells holding segment rows of the
     term ids ``tids`` -> ``[((generation, salt), postings, {file: [row
-    group, ...]})]``, from the files' footers and row groups. A row group
-    is skipped only when its term_id statistics exclude every term id;
-    the covering groups' term_id/generation/salt columns then name the
-    cells exactly, so no cell hangs on salt statistics. ``postings`` (the
-    cell's n_docs over the batch's terms) weighs the cells for
-    ``boolquery._cells``."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
+    group, ...]})]``: one footer-pruned seek (``state.RowGroupSeek``) of
+    the files' term_id column, whose read names the row group of every
+    row it keeps, so the cells come from the covering groups' term_id,
+    generation and salt columns exactly — never from salt statistics.
+    ``postings`` (the cell's n_docs over the batch's terms) weighs the
+    cells for ``boolquery._cells``."""
+    from .state import RowGroupSeek
 
-    want = np.asarray(tids, dtype=np.int64)
+    seek = RowGroupSeek(seg_files, "term_id")
+    t = seek.read(
+        ["term_id", "generation", "salt", "n_docs"], values=tids, tag=True
+    )
     cells: dict[tuple, list] = {}
-    for f in seg_files:
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
-        tcol = md.schema.names.index("term_id")
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(tcol).statistics
-            if st is not None and st.has_min_max and not (
-                (want >= st.min) & (want <= st.max)
-            ).any():
-                continue
-            t = pf.read_row_group(
-                g, columns=["term_id", "generation", "salt", "n_docs"]
-            )
-            t = t.filter(pc.is_in(t["term_id"], value_set=pa.array(want)))
-            for key, n in zip(
-                zip(t["generation"].to_pylist(), t["salt"].to_pylist()),
-                t["n_docs"].to_pylist(),
-            ):
-                cell = cells.setdefault(key, [key, 0, {}])
-                cell[1] += n
-                groups = cell[2].setdefault(f, [])
-                if groups[-1:] != [g]:
-                    groups.append(g)
+    for key, n, fi, g in zip(
+        zip(t["generation"].to_pylist(), t["salt"].to_pylist()),
+        t["n_docs"].to_pylist(), t["file"].to_pylist(),
+        t["row_group"].to_pylist(),
+    ):
+        cell = cells.setdefault(key, [key, 0, {}])
+        cell[1] += n
+        groups = cell[2].setdefault(seek.files[fi], [])
+        if groups[-1:] != [g]:
+            groups.append(g)
     return [tuple(c) for _key, c in sorted(cells.items())]
 
 
@@ -671,23 +659,17 @@ _CELL_POS_COLS = _CELL_COLS + ["pos_blob", "pos_offs"]
 
 def _read_cells(cells: list[tuple], tids: list[int], positions: bool):
     """The rows of the term ids ``tids`` in the row groups ``cells`` list,
-    read in place with pyarrow: ``_CELL_COLS`` only, or
-    ``_CELL_POS_COLS`` for a positional query."""
-    import pyarrow as pa
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
+    read in place with pyarrow (``state.read_groups``): ``_CELL_COLS``
+    only, or ``_CELL_POS_COLS`` for a positional query."""
+    from .state import read_groups
 
     groups: dict[str, set] = {}
     for _key, _n, where in cells:
         for f, gs in where.items():
             groups.setdefault(f, set()).update(gs)
-    tbl = pa.concat_tables(
-        pq.ParquetFile(f).read_row_groups(
-            sorted(gs), columns=_CELL_POS_COLS if positions else _CELL_COLS
-        )
-        for f, gs in sorted(groups.items())
+    return read_groups(
+        groups, _CELL_POS_COLS if positions else _CELL_COLS, "term_id", tids
     )
-    return tbl.filter(pc.field("term_id").isin(tids))
 
 
 def _cell_bounds(doc_min, doc_max) -> tuple[int, int]:

@@ -328,8 +328,8 @@ class Catalog:
 
     def reset_tables(self, schema: str) -> None:
         """Start a FRESH index life for a full rebuild: remove every table
-        dir (plain names AND the versioned dirs the manifest's table
-        pointers reference) and clear the lifecycle state (pointers,
+        dir (plain names AND every versioned ``{table}_vK`` dir, pointed
+        at or not) and clear the lifecycle state (pointers, version,
         generations, cursor, counters, phases).
 
         Without this, a full rebuild over an index that lived through
@@ -344,13 +344,15 @@ class Catalog:
         m = self.read_manifest(schema)
         if m is None:
             return
-        names = set(TABLES) | set((m.get("tables") or {}).values())
-        for name in names:
-            shutil.rmtree(os.path.join(idx, name), ignore_errors=True)
+        for name in os.listdir(idx):
+            base, _, k = name.rpartition("_v")
+            if name in TABLES or (base in TABLES and k.isdigit()):
+                shutil.rmtree(os.path.join(idx, name), ignore_errors=True)
         for d in m.get("gc_pending") or []:
             shutil.rmtree(d, ignore_errors=True)
         m["gc_pending"] = []
         m["tables"] = {}
+        m["table_ver"] = 0
         m["generations"] = 0
         m["cursor"] = None
         m["counters"] = {}

@@ -49,12 +49,13 @@ with ``setJobDescription``; its seconds land in the manifest's
               (committed docmap ⋉ changed urls ▷ old tombstones -> sorted
               doc_ids). Driver route: the docmap scan filtered by the
               probed urls as an IN list, riding the adds' collect; the old
-              tombstones subtracted with pyarrow. Spark route: a join, the
-              batch cursor max(warc_ts) riding the job as one more row. The
+              tombstones subtracted after a footer-pruned seek of them
+              (``state.RowGroupSeek``). Spark route: a join, the batch
+              cursor max(warc_ts) riding the job as one more row. The
               tombstoned docs' forward rows are then read ONCE, driver-side,
-              from the doc_id-clustered fwd table (footer statistics prune
-              row groups): they give the deleted docs' stats (n, sum_dl,
-              postings) and the per-term df decrements. The tombstone
+              from the doc_id-clustered fwd table by the same seek: they
+              give the deleted docs' stats (n, sum_dl, postings) and the
+              per-term df decrements. The tombstone
               generation is written from the driver-held ids with pyarrow.
   forward     fresh docIDs start at the manifest's ``next_doc_id`` counter
               (0 in a build's empty state, extended by every commit,
@@ -140,7 +141,7 @@ from ..operators.build import (
 )
 from ..operators.docmap import assign_dense_ids
 from ..operators.routing import should_index_expr, with_should_index
-from ..operators.state import _parquet_files
+from ..operators.state import RowGroupSeek, _parquet_files
 from ..session import driver_frame
 from ..sources.catalog import (
     Catalog,
@@ -269,9 +270,7 @@ def _collect_driver_batch(
     adds in scan order — ``__pos`` (monotonically_increasing_id: partition
     index, then row position) restores the order the Spark route numbers
     docs in — and the sorted docIDs to tombstone: the matched ids less the
-    ones already tombstoned (read with pyarrow, pruned to the matches)."""
-    import pyarrow.dataset as ds
-
+    ones already tombstoned (a footer-pruned seek of the tombstones)."""
     adds = adds.select(
         "url",
         "warc_ts",
@@ -291,9 +290,7 @@ def _collect_driver_batch(
     local = got.filter(pc.invert(hit)).drop_columns(["doc_id"])
     files = _parquet_files(tuple(committed_gen_paths(idx, "tombstones")))
     if files and len(ids):
-        old = ds.dataset(files).to_table(
-            columns=["doc_id"], filter=pc.field("doc_id").isin(ids)
-        )
+        old = RowGroupSeek(files, "doc_id").read(["doc_id"], values=ids)
         ids = ids.filter(
             pc.invert(pc.is_in(ids, value_set=old["doc_id"].combine_chunks()))
         )
@@ -301,43 +298,23 @@ def _collect_driver_batch(
 
 
 def _deleted_forward(fwd_paths: list[str], dead: np.ndarray) -> dict:
-    """The tombstoned docs' forward rows, read once driver-side: row groups
-    are pruned by their doc_id footer statistics against the sorted
-    ``dead`` ids (the fwd table is doc_id-clustered, so a point delete
-    reads about one row group), and only doc_id/dl/terms are decoded.
+    """The tombstoned docs' forward rows, read once driver-side with one
+    footer-pruned seek on doc_id (the fwd table is doc_id-clustered, so a
+    point delete reads about one row group); only doc_id/dl/terms are
+    decoded.
 
     -> {"n", "sum_dl", "postings", "df": {term: docs holding it}} — the
     deleted docs' collection stats and per-term df decrements."""
     out = {"n": 0, "sum_dl": 0, "postings": 0, "df": {}}
     if not dead.size:
         return out
-    want = pa.array(dead, pa.int64())
-    terms = []
-    for f in _parquet_files(tuple(fwd_paths)):
-        pf = pq.ParquetFile(f)
-        md = pf.metadata
-        if md.num_rows == 0 or md.num_row_groups == 0:
-            continue
-        col = next(
-            i
-            for i in range(md.row_group(0).num_columns)
-            if md.row_group(0).column(i).path_in_schema == "doc_id"
-        )
-        for g in range(md.num_row_groups):
-            st = md.row_group(g).column(col).statistics
-            if st is not None and st.has_min_max and (
-                np.searchsorted(dead, st.min, "left")
-                == np.searchsorted(dead, st.max, "right")
-            ):
-                continue  # no dead id inside this group's [min, max]
-            t = pf.read_row_group(g, columns=["doc_id", "dl", "terms"])
-            t = t.filter(pc.is_in(t.column("doc_id"), value_set=want))
-            if t.num_rows:
-                out["n"] += t.num_rows
-                out["sum_dl"] += int(pc.sum(t.column("dl")).as_py() or 0)
-                terms.append(pc.list_flatten(t.column("terms")))
-    if terms:
-        flat = pa.chunked_array(terms, pa.string())
+    t = RowGroupSeek(_parquet_files(tuple(fwd_paths)), "doc_id").read(
+        ["doc_id", "dl", "terms"], values=dead
+    )
+    if t.num_rows:
+        out["n"] = t.num_rows
+        out["sum_dl"] = int(pc.sum(t.column("dl")).as_py() or 0)
+        flat = pc.list_flatten(t.column("terms"))
         out["postings"] = len(flat)
         vc = pc.value_counts(flat)
         out["df"] = dict(
@@ -682,7 +659,7 @@ def _apply_batch(
             # assign_dense_ids would use — no join, no dense-rank jobs.
             from ..operators import dictionary as dict_mod
 
-            known_map = dict_mod.lookup_term_info(spark, idx, list(delta))
+            known_map = dict_mod.lookup_term_info(idx, list(delta))
             fresh = sorted(
                 (t for t in delta if t not in known_map),
                 key=lambda t: (-delta[t], t),
@@ -885,21 +862,25 @@ def _apply_batch(
             batch_terms=int(n_batch_terms), docs=int(n_docs2),
             postings=int(total_postings2), bytes_added=int(seg_bytes_added),
         )
-    # GC superseded versioned dirs (keep one version of history behind the
-    # pointer as a reader grace window; compaction clears the rest). Only
-    # dirs whose pointer MOVED in this commit are candidates: after a
-    # compaction, segments/fwd/docmap/tombstones stay pinned at _vK across
-    # incremental commits, so an unconditional suffix<=ver-2 sweep would
-    # rmtree the live data on the second incremental.
-    for table, name in old_tables.items():
-        if m["tables"].get(table) == name:
-            continue  # still current — not superseded
-        _, _, suffix = name.rpartition("_v")
-        if suffix.isdigit() and int(suffix) <= ver - 2:
+    # GC: stats is the one table a commit repoints. Keep the current dir
+    # and the one it superseded (a reader grace window); every stats dir
+    # below the superseded one goes (the build's plain ``stats`` is v0).
+    below = _stats_ver(old_tables.get("stats", "stats"))
+    for name in os.listdir(idx):
+        if _stats_ver(name) < below:
             shutil.rmtree(os.path.join(idx, name), ignore_errors=True)
     for df_ in (batch, *extra_persisted):
         df_.unpersist()
     return cat.read_manifest(schema_version)
+
+
+def _stats_ver(name: str) -> float:
+    """The version of a stats dir name (``stats`` -> 0, ``stats_vK`` ->
+    K); inf for any other name."""
+    if name == "stats":
+        return 0
+    base, _, k = name.rpartition("_v")
+    return int(k) if base == "stats" and k.isdigit() else float("inf")
 
 
 def backfill_with_switch(

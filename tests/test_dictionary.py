@@ -48,47 +48,3 @@ def test_encode_terms_broadcast_vs_shuffle_identical(spark):
     assert "BroadcastHashJoin" not in sh_plan
     assert sorted(map(tuple, bc.collect())) == sorted(map(tuple, sh.collect()))
     assert bc.count() == tf.count()
-
-
-def test_remote_fallback_matches_pyarrow_seek(spark, corpus_path, tmp_path):
-    """ADVICE r4: on a Hadoop-FS-only index location the term lookups must
-    fall back to a Spark scan (broadcast probe) and return EXACTLY what
-    the driver-local pyarrow seek returns; without a session they must
-    refuse with a clear error, and the serving tier's local contract is
-    unchanged. The fallback is exercised directly (same code path the URI
-    dispatch takes) plus via monkeypatched visibility."""
-    import pytest
-
-    from osu_elastic_indexer_spark.operators import dictionary as D
-    from osu_elastic_indexer_spark.operators.build import build_index
-    from osu_elastic_indexer_spark.sources.catalog import (
-        Catalog,
-        committed_gen_paths,
-    )
-
-    cat = Catalog(str(tmp_path / "idx"))
-    build_index(spark, spark.read.parquet(corpus_path), cat, "v1")
-    idx = cat.index_dir("v1")
-    terms = ["the", "w00100", "w00200", "xyzzyabsent"]
-
-    seek = D.lookup_term_info(spark, idx, terms)
-    paths = committed_gen_paths(idx, "dict_by_term")
-    assert D._lookup_term_info_spark(spark, paths, sorted(set(terms))) == seek
-    assert seek and "xyzzyabsent" not in seek
-
-    # URI dispatch: fake a non-visible path scheme
-    assert not D._driver_visible(["hdfs://nn/idx/part.parquet"])
-    assert D._driver_visible([str(tmp_path), "file:///x/y.parquet"])
-    orig = D._driver_visible
-    try:
-        D._driver_visible = lambda _p: False
-        assert D.lookup_term_info(spark, idx, terms) == seek
-        with pytest.raises(RuntimeError, match="driver-visible"):
-            D.lookup_term_info(None, idx, terms)
-        pfx_spark = D.lookup_terms_by_prefix(idx, "w001", 50, spark=spark)
-        with pytest.raises(RuntimeError, match="driver-visible"):
-            D.lookup_terms_by_prefix(idx, "w001", 50)
-    finally:
-        D._driver_visible = orig
-    assert pfx_spark == D.lookup_terms_by_prefix(idx, "w001", 50)
-    assert len(pfx_spark) == 50 and all(t.startswith("w001") for t in pfx_spark)

@@ -116,7 +116,7 @@ def test_grid_spans_salts_and_an_empty_generation(grid):
     m = bq._snapshot(grid["idx"])
     spec = {"should": [grid["head"][0]], "must": [], "must_not": [],
             "filter": [], "boosts": {}}
-    state, _plans, listed = bq._plan_batch(None, grid["idx"], m, {0: spec}, {0: 0})
+    state, _plans, listed = bq._plan_batch(grid["idx"], m, {0: spec}, {0: 0})
     got = {}
     for (gen, salt), postings, _where in listed:
         assert postings > 0
@@ -231,3 +231,39 @@ def test_docpart_batch_runs_one_job_no_exchange(spark, grid):
     for node in ("Exchange", "FileScan", "FlatMapGroupsInPandas", "Window"):
         assert node not in plans[0], plans[0]
     assert set(sc._jsc.getPersistentRDDs().keySet()) == cached_before
+
+
+def test_dictionary_readers_agree(spark, grid):
+    """The three dictionary readers fold the grid's delta generations the
+    same way: the driver lookup, a fresh searcher's seek and the merged
+    Spark read give every term the same (term_id, df), including terms
+    re-touched by a later generation and terms whose df sums to 0; a
+    prefix expansion never returns a df-0 term."""
+    from collections import Counter
+
+    from osu_elastic_indexer_spark.operators import dictionary as D
+    from osu_elastic_indexer_spark.operators.serve import LocalSearcher
+
+    idx = grid["idx"]
+    merged = {
+        r.term: (r.term_id, r.df)
+        for r in D.read_dictionary_merged(spark, idx).collect()
+    }
+    rows = Counter()
+    for p in committed_gen_paths(idx, "dict_by_term"):
+        rows.update(pq.read_table(p, columns=["term"]).column("term").to_pylist())
+    dead = sorted(t for t, (_i, df) in merged.items() if df == 0)
+    assert dead, "the fixture must hold a term whose df sums to 0"
+    assert any(n > 1 for n in rows.values()), "and a term re-touched later"
+    terms = sorted(merged) + ["zzz-absent"]
+    assert D.lookup_term_info(idx, terms) == merged
+    s = LocalSearcher(idx)
+    s._resolve_terms(terms)
+    assert {t: s._dict[t] for t in merged} == merged
+    assert s._dict["zzz-absent"] is None
+    for pre in sorted({t[:2] for t in dead}):
+        live = D.lookup_terms_by_prefix(idx, pre)
+        assert live == sorted(
+            t for t, (_i, df) in merged.items() if t.startswith(pre) and df > 0
+        )
+        assert live == s._expansions(pre, 10**6)

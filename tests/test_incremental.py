@@ -262,8 +262,18 @@ def test_rebuild_over_lived_index_resets_old_life(
     m_lived = cat.read_manifest("v1")
     assert m_lived["generations"] == 2  # precondition: index has a history
 
+    # the one behind the current stats dir is kept as a grace window
+    assert _versioned_dirs(cat.index_dir("v1"))["stats"] == ["stats_v1", "stats_v2"]
+
     m_rebuilt = build_index(spark, spark.read.parquet(final_p), cat, "v1")
     assert m_rebuilt["generations"] == 1
+    # nothing of the old life is left: every table dir is the new build's
+    assert m_rebuilt["table_ver"] == 1
+    assert _versioned_dirs(cat.index_dir("v1")) == {
+        "dict_by_term": ["dict_by_term"], "dictionary": ["dictionary"],
+        "docmap": ["docmap"], "fwd": ["fwd"], "segments": ["segments"],
+        "stats": ["stats", "stats_v1"],
+    }
 
     fresh_root = str(tmp_path_factory.mktemp("idx_fresh"))
     fresh_cat = Catalog(fresh_root)
@@ -471,6 +481,9 @@ def test_dictionary_fold_across_many_generations(spark, tmp_path_factory):
     m = cat.read_manifest("v1")
     assert m["generations"] == 5
     idx = cat.index_dir("v1")
+    # the build and every commit write both dictionary tables in the same
+    # generation (readers seek dict_by_term only)
+    assert _gens(idx, "dictionary") == _gens(idx, "dict_by_term") == list(range(5))
 
     oidx, ourls = _oracle_for(corpus)
     # merged dictionary == oracle df for every live term
@@ -484,7 +497,7 @@ def test_dictionary_fold_across_many_generations(spark, tmp_path_factory):
     assert merged == odf
     # the pruned seek path agrees with the merged read for a probe set
     probe = list(merged)[:25] + ["zzz-absent"]
-    info = lookup_term_info(spark, idx, probe)
+    info = lookup_term_info(idx, probe)
     for t in probe[:25]:
         assert info[t][1] == merged[t], t
     assert "zzz-absent" not in info
@@ -492,7 +505,35 @@ def test_dictionary_fold_across_many_generations(spark, tmp_path_factory):
     _check_all_queries(spark, idx, oidx, ourls, "gen5")
     compact_index(spark, cat, "v1")
     assert cat.read_manifest("v1")["generations"] == 1
+    assert _gens(idx, "dictionary") == _gens(idx, "dict_by_term") == [0]
     _check_all_queries(spark, idx, oidx, ourls, "gen5-compacted")
+
+
+def _gens(idx: str, table: str) -> list[int]:
+    """The committed generation numbers of ``table`` holding parquet."""
+    import os
+
+    from osu_elastic_indexer_spark.operators.state import _parquet_files
+    from osu_elastic_indexer_spark.sources.catalog import committed_gen_paths
+
+    return [
+        int(os.path.basename(p).split("=")[1])
+        for p in committed_gen_paths(idx, table) if _parquet_files((p,))
+    ]
+
+
+def _versioned_dirs(idx: str) -> dict[str, list[str]]:
+    """table -> its ``{table}`` / ``{table}_vK`` dirs on disk."""
+    import os
+
+    from osu_elastic_indexer_spark.sources.catalog import TABLES
+
+    out: dict[str, list[str]] = {}
+    for name in sorted(os.listdir(idx)):
+        base, _, k = name.rpartition("_v")
+        if name in TABLES or (base in TABLES and k.isdigit()):
+            out.setdefault(base if base in TABLES else name, []).append(name)
+    return out
 
 
 def test_writers_refuse_legacy_on_disk_format(spark, evolved, tmp_path_factory):
@@ -676,9 +717,9 @@ def test_incremental_known_id_lookup_is_pruned(
     calls = []
     orig = dict_mod.lookup_term_info
 
-    def spy(spark_, index_dir, terms):
+    def spy(index_dir, terms):
         calls.append(list(terms))
-        return orig(spark_, index_dir, terms)
+        return orig(index_dir, terms)
 
     monkeypatch.setattr(dict_mod, "lookup_term_info", spy)
     m = incremental_update(spark, spark.read.parquet(final_p), cat, "v1")
@@ -730,16 +771,24 @@ def test_docids_never_reused_after_compaction(spark, evolved, tmp_path_factory):
     old_max = max(ids.values())
     top_url = next(u for u, d in ids.items() if d == old_max)
 
+    idx = cat.index_dir("v1")
+    # every commit keeps two stats dirs: the current one and the one it
+    # superseded (the build's own empty state is the plain ``stats``)
+    assert _versioned_dirs(idx)["stats"] == ["stats", "stats_v1"]
     queue = spark.createDataFrame([(top_url,)], "url string")
     m = incremental_update(
         spark, docs.filter(F.col("url") != top_url), cat, "v1", queue_urls=queue
     )
     assert m["counters"]["deletes_total"] == 1
+    assert _versioned_dirs(idx)["stats"] == ["stats_v1", "stats_v2"]
     compact_index(spark, cat, "v1")
     assert top_url not in _committed_docmap(spark, cat)
 
     # the url comes back: its fresh id must not be the compacted-away one
     m = incremental_update(spark, docs, cat, "v1", queue_urls=queue)
+    # compaction took v3 without moving stats: v2 is the superseded dir
+    assert m["tables"]["stats"] == "stats_v4"
+    assert _versioned_dirs(idx)["stats"] == ["stats_v2", "stats_v4"]
     assert _committed_docmap(spark, cat)[top_url] == old_max + 1
     assert m["counters"]["next_doc_id"] == old_max + 2
     oidx, ourls = _oracle_for(base)

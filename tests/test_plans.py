@@ -378,7 +378,7 @@ def test_bool_query_plan_prunes_and_broadcasts(spark, tmp_path, monkeypatch):
     m = bq._snapshot(cat.index_dir("v1"))
     specs, msms, _st = bq._bool_plans(m, spec)
     state, _plans, cells = bq._plan_batch(
-        spark, cat.index_dir("v1"), m, specs, msms
+        cat.index_dir("v1"), m, specs, msms
     )
     got = wand._read_cells(cells, state["tids"], False)
     assert set(got.column("term_id").to_pylist()) == set(state["tids"])

@@ -358,7 +358,7 @@ def test_phrase_auto_routes_head_terms_to_docpart(
         return real_dp(spark_, idx_, m, queries, k, slop, **kw)
 
     def spy_lookup(*args, **kw):
-        lookups.append(args[2])
+        lookups.append(args[1])
         return real_lookup(*args, **kw)
 
     def spy_pq(spark_, idx_, m, queries, k, slop):

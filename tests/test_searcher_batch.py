@@ -125,12 +125,12 @@ def _commit_inside_term_lookup(world, monkeypatch) -> list:
     real = dict_mod.lookup_term_info
     committed = []
 
-    def lookup(spark, index_dir, terms, *args, **kw):
+    def lookup(index_dir, terms, *args, **kw):
         if not committed:
-            committed.append(real(spark, index_dir, terms))
+            committed.append(real(index_dir, terms))
             world.commit()  # its own term lookups delegate straight away
-            committed.append(real(spark, index_dir, terms))
-        return real(spark, index_dir, terms, *args, **kw)
+            committed.append(real(index_dir, terms))
+        return real(index_dir, terms, *args, **kw)
 
     monkeypatch.setattr(dict_mod, "lookup_term_info", lookup)
     return committed
