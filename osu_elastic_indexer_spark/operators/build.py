@@ -6,11 +6,12 @@ PumpAllScoresCommand.cs:70-110), fused into one declarative pipeline plus the
 part the reference delegates to Lucene: building the inverted index itself.
 
 ``build_index`` is the index's first commit: it commits an empty state and
-applies the whole input as one cursor batch through the incremental commit
-(streaming/incremental.py), on its Spark route. One write path, one commit
-protocol: a crashed build leaves nothing visible, and a resumed one is
-rebuilt from its reset. What this module holds is the kernels and the Spark
-stages that run them:
+applies the whole input as one cursor batch through the incremental
+commit's one sequence (streaming/incremental.py ``_apply_batch``), on its
+Spark route; compaction writes its segments through that route's segments
+step. One write path, one commit protocol: a crashed build leaves nothing
+visible, and a resumed one is rebuilt from its reset. What this module
+holds is the kernels and the Spark stages that run them:
 
   forward    ONE fused Arrow pass per input partition (docID assign +
              byte-exact html->text + tokenize + per-doc combine) ->
@@ -22,8 +23,7 @@ stages that run them:
              groupBy(term_id, salt) collect_list of sub-segment blobs
              (JVM) -> mapInArrow merges each group into delta-gap varbyte
              blocks with per-block (max_tf, min_dl) -> segments parquet,
-             term_id-sorted (``build_segments_spimi``, ``write_segments``;
-             shared with compaction)
+             term_id-sorted (``build_segments_spimi``, ``write_segments``)
 
 One set of kernels, two drivers. ``_fused_fwd_pass``, ``_local_invert_pass``
 and ``_merge_subsegments_arrow`` are generator functions over Arrow

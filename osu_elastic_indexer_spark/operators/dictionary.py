@@ -5,11 +5,13 @@ north_star mandates an explicit "termID dictionary via broadcast hash join".
 
 Scale notes (SURVEY.md §7.4 #5): at 10^12 docs the dictionary has ~10^8
 terms — too big to broadcast whole. Strategy:
-  * the dictionary TABLE is built distributed (dense rank via range
-    partition, same pattern as docmap) and stored as parquet;
-  * the tokens⋈dictionary join broadcasts only when the dictionary is small
-    (toy/test scale), else relies on a shuffle join where AQE's skew-join
-    splitting handles head terms;
+  * a commit assigns its batch's fresh term ids (streaming/incremental.py)
+    on the driver, except a Spark-route batch vocabulary over
+    KNOWN_ID_IN_MAX terms: that one by a distributed dense rank
+    (operators/docmap.py);
+  * the segments' tokens⋈dictionary join broadcasts only when the
+    dictionary is small, else relies on a shuffle join where AQE's
+    skew-join splitting handles head terms (build.build_segments_spimi);
   * QUERY-time lookups never scan: query terms are a tiny set, so
     ``lookup_term_info`` seeks the term-sorted projection's row groups by
     their footer statistics (``state.RowGroupSeek``, no Spark job).
@@ -23,37 +25,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .docmap import assign_dense_ids
-
-
-def build_dictionary(tf: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """tf (doc_id, term, tf, dl) -> dictionary (term_id, term, df).
-
-    df counts documents (tf rows are unique per (doc, term), so count(*)
-    avoids a distinct-agg). term_id = dense rank over (df desc, term asc).
-    """
-    stats = tf.groupBy("term").agg(F.count("*").alias("df"))
-    return assign_dense_ids(
-        stats, [F.desc("df"), F.asc("term")], "term_id", num_partitions
-    ).select("term_id", "term", F.col("df").cast("bigint").alias("df"))
-
-
-def encode_terms(
-    tf: DataFrame, dictionary: DataFrame, broadcast_threshold: int = 5_000_000
-) -> DataFrame:
-    """tokens ⋈ dictionary -> (term_id, doc_id, tf, dl).
-
-    Broadcasts the dictionary below `broadcast_threshold` rows; above it the
-    join is a plain equi-join on term — AQE handles skew splitting.
-    """
-    dict_small = dictionary.select("term", "term_id")
-    # cheap cardinality probe: dictionary is the output of an agg we are
-    # about to materialize anyway; count() here is a metadata-cheap job
-    n_terms = dict_small.count()
-    right = F.broadcast(dict_small) if n_terms <= broadcast_threshold else dict_small
-    return tf.join(right, "term").select("term_id", "doc_id", "tf", "dl")
-
 
 # ---------------------------------------------------------------------------
 # generational dictionary (per-batch deltas, merged at read)

@@ -71,14 +71,22 @@ def assign_dense_ids(
 ) -> DataFrame:
     """Add a dense-rank int64 ``id_col`` over the total order ``order_cols``.
 
-    ``start_id`` offsets all ids — incremental builds pass max(existing)+1 so
-    new rows extend the id space (streaming/incremental.py).
+    ``start_id`` offsets all ids, so new rows can extend an id space.
     Requires the order to be a total order over rows (unique composite key).
+    The range-partitioned input stays persisted; a caller that must release
+    it calls ``ranged_with_offsets`` and ``with_dense_ids`` itself (the
+    commit's wide dictionary branch, streaming/incremental.py).
     """
     part, offsets_bc = ranged_with_offsets(df, order_cols, num_partitions, start_id)
+    return with_dense_ids(part, offsets_bc, id_col)
 
+
+def with_dense_ids(part: DataFrame, offsets_bc, id_col: str) -> DataFrame:
+    """``ranged_with_offsets``' frame without ``__pid``, plus ``id_col``:
+    each partition's offset plus the row's position in it."""
+    fields = [f for f in part.schema.fields if f.name != "__pid"]
     out_schema = ", ".join(
-        [f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema.fields]
+        [f"`{f.name}` {f.dataType.simpleString()}" for f in fields]
         + [f"{id_col} bigint"]
     )
 

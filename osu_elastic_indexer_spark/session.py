@@ -139,18 +139,19 @@ def warm_python_workers(spark: SparkSession, n: int | None = None) -> None:
     spark.range(0, n * 4, 1, n).mapInPandas(touch, "id long").count()
 
 
-def driver_frame(spark: SparkSession, rows: list, schema: str):
+def driver_frame(spark: SparkSession, rows, schema: str):
     """A small driver-held table (``rows``: tuples in ``schema``'s DDL
-    column order) as a DataFrame whose rows ship to the JVM as Arrow
-    batches. ``createDataFrame`` of a Python list plans a Python RDD
-    instead, so every scan of it — a broadcast side, or an empty table
-    joined in — runs one Python task per core."""
+    column order, or an Arrow table of its columns) as a DataFrame whose
+    rows ship to the JVM as Arrow batches. ``createDataFrame`` of a Python
+    list plans a Python RDD instead, so every scan of it — a broadcast
+    side, or an empty table joined in — runs one Python task per core."""
     import pyarrow as pa
     from pyspark.sql.types import DataType
 
     struct = DataType.fromDDL(schema)
-    cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
-    table = pa.table(
-        {f.name: pa.array(list(c)) for f, c in zip(struct.fields, cols)}
-    )
-    return spark.createDataFrame(table, struct)
+    if not isinstance(rows, pa.Table):
+        cols = list(zip(*rows)) if rows else [()] * len(struct.fields)
+        rows = pa.table(
+            {f.name: pa.array(list(c)) for f, c in zip(struct.fields, cols)}
+        )
+    return spark.createDataFrame(rows, struct)

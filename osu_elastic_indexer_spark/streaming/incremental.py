@@ -17,66 +17,43 @@ Reference semantics being reproduced (SURVEY.md §2.8):
        urls missing from the source -> delete (IndexQueueProcessor.cs:41-60,
        ElasticModel.cs:63-65)
 
-One commit, two routes, phase by phase. Each phase names its Spark jobs
-with ``setJobDescription``; its seconds land in the manifest's
-``incremental_genN`` phase as ``<phase>_s``, next to ``route``,
+One commit sequence, two routes (``_apply_batch``). The route is decided
+once, by ONE Arrow collect of at most DRIVER_BATCH_ROWS + 1 rows of the
+batch without html (url, warc_ts, each add's html byte length). A batch of
+at most DRIVER_BATCH_ROWS rows (10,000: the reference's queue batch, adds
+and deletes alike) whose adds carry at most DRIVER_BATCH_HTML_BYTES of html
+commits on the DRIVER; any other batch on SPARK. A build (``build_index``:
+its whole input as the first commit onto an empty state) takes the Spark
+route unprobed: no corpus-sized collect may land on the driver. On a 4-core
+VM the driver route was the faster one at every size measured: 1k, 5k and
+10k fixture rows (~1 KB of html each) in 1.8, 4.1 and 5.9 s a commit
+against 5.7, 7.8 and 9.1 s, and 797 adds of ~65 KB (52 MB of html) in 8.7
+against 11.9 s, for 20-180 MB more driver RSS; the bounds sit at the
+largest sizes measured, not at a measured crossover. Both routes run the
+build's own kernels (operators/build.py) and write the same rows. A route
+contributes two steps:
+  forward   the live changed docIDs to tombstone, the batch cursor, the new
+            generation's fwd/docmap (fresh docIDs extend the manifest's
+            ``next_doc_id`` counter; dead ids are never reused), the adds'
+            stats and per-term counts. Driver (``_driver_forward``): one
+            more collect brings the adds, html included, with the
+            tombstone lookup, and pyarrow writes every file — two Spark
+            jobs and no Python worker a commit. Spark (``_spark_forward``):
+            one tombstone job, the forward kernel as Spark stages, one
+            add-count job.
+  segments  the generation's fwd inverted into segment rows
+            (``_driver_segments``; ``_spark_segments``, which compaction
+            shares).
+Every other step is written once: the deleted docs' forward rows (one
+footer-pruned seek of the doc_id-clustered fwd: their stats and df
+decrements) and the tombstone generation; the stats; the term ids (known
+ids by point lookups in the term-sorted dictionary, fresh ids extending
+the ``max_term_id`` counter — a Spark-route vocabulary wider than
+KNOWN_ID_IN_MAX stays on the executors); the dictionary delta and stats
+writes; the manifest swap, the metric event and the stats GC. Each phase
+names its Spark jobs with ``setJobDescription``; its seconds land in the
+manifest's ``incremental_genN`` phase as ``<phase>_s``, next to ``route``,
 ``collected_rows``, ``collected_html_bytes`` and ``input_staged``.
-  route       ONE Arrow collect (``toArrow``) of at most
-              DRIVER_BATCH_ROWS + 1 rows of the batch, without html: url,
-              warc_ts and each add's html byte length. A batch of at most
-              DRIVER_BATCH_ROWS rows (10,000: the reference's queue batch,
-              adds and deletes alike) whose adds carry at most
-              DRIVER_BATCH_HTML_BYTES of html commits on the DRIVER: one
-              more collect brings the adds, html included, together with
-              the tombstone lookup; the build's own kernels
-              (operators/build.py) run in this process and every generation
-              file is written with pyarrow — two Spark jobs and no Python
-              worker in all. Any other batch takes the SPARK route: the
-              same kernels as Spark stages, after the probe. On a 4-core
-              VM the driver route was the faster one at every size
-              measured: 1k, 5k and 10k fixture rows (~1 KB of html each)
-              in 1.8, 4.1 and 5.9 s a commit against 5.7, 7.8 and 9.1 s,
-              and 797 adds of ~65 KB (52 MB of html) in 8.7 against
-              11.9 s, for 20-180 MB more driver RSS. The bounds sit at the
-              largest sizes measured, not at a measured crossover; the
-              driver's kernels run on one core, the Spark route's on all
-              of them. A build (``build_index``: its whole input as the
-              first commit onto an empty state) takes the Spark route
-              whatever its size, unprobed: a build is corpus-sized, and
-              no corpus-sized collect may land on the driver.
-  tombstones  deletes are POINT deletes by key, so their cost follows the
-              batch: ONE job resolves the batch's tombstones to the driver
-              (committed docmap ⋉ changed urls ▷ old tombstones -> sorted
-              doc_ids). Driver route: the docmap scan filtered by the
-              probed urls as an IN list, riding the adds' collect; the old
-              tombstones subtracted after a footer-pruned seek of them
-              (``state.RowGroupSeek``). Spark route: a join, the batch
-              cursor max(warc_ts) riding the job as one more row. The
-              tombstoned docs' forward rows are then read ONCE, driver-side,
-              from the doc_id-clustered fwd table by the same seek: they
-              give the deleted docs' stats (n, sum_dl, postings) and the
-              per-term df decrements. The tombstone
-              generation is written from the driver-held ids with pyarrow.
-  forward     fresh docIDs start at the manifest's ``next_doc_id`` counter
-              (0 in a build's empty state, extended by every commit,
-              carried over by compaction — dead ids are never reused). An
-              index without a cursor yet reads every row. Driver route: the
-              collected adds in scan order through ``build.forward_local``
-              (a cursor batch off a file scan gets the ids the Spark route
-              would give it). Spark route: one scan
-              (``build.materialize_forward``; a queue batch is staged to a
-              file scan first) in splits of ``build.input_split_bytes``,
-              the stats riding the writes.
-  dictionary  the adds' per-term counts (off the driver's fwd table, or one
-              job on the Spark route) fold with the decrements into the
-              batch's (term, df-delta) rows; known term ids are point
-              lookups in the term-sorted dictionary, fresh ids extend the
-              ``max_term_id`` counter; the delta gen is written with
-              pyarrow. A batch vocabulary wider than KNOWN_ID_IN_MAX takes
-              the distributed semi-join instead.
-  segments    the new generation's fwd is inverted into segment rows
-              (``build.segments_local`` on the driver,
-              ``build.build_segments_spimi`` on the Spark route).
 
 Atomic commit protocol (generation pointers, the Iceberg-snapshot shape):
   * append tables (segments, docmap, fwd, tombstones) grow by whole
@@ -113,6 +90,7 @@ import os
 import shutil
 import time
 from contextlib import contextmanager, nullcontext
+from functools import partial
 
 import numpy as np
 import pyarrow as pa
@@ -139,7 +117,7 @@ from ..operators.build import (
     write_dict_by_term,
     write_segments,
 )
-from ..operators.docmap import assign_dense_ids
+from ..operators.docmap import ranged_with_offsets, with_dense_ids
 from ..operators.routing import should_index_expr, with_should_index
 from ..operators.state import RowGroupSeek, _parquet_files
 from ..session import driver_frame
@@ -154,11 +132,13 @@ from ..sources.catalog import (
 DOCMAP_SCHEMA = "url string, warc_ts timestamp, doc_id bigint"
 TOMB_SCHEMA = "doc_id bigint"
 
-# known-id resolution: batches whose vocabulary fits under this bound use a
-# driver-held IN filter against the term-sorted dict_by_term projection
-# (row-group-pruned point lookups); wider batches fall back to the
-# distributed semi-join (a pushed IN list that wide costs more than the
-# scan it prunes, and such a batch is approaching rebuild volume anyway)
+# the Spark route's add-count collect: a batch vocabulary of at most this
+# many terms is collected, and its term ids are assigned on the driver by
+# point lookups in the term-sorted dictionary; a wider one stays on the
+# executors (a semi-join against the committed dictionary and a dense rank),
+# so no vocabulary that approaches the corpus's lands on the driver (SURVEY
+# §7.4 #5). The driver route always assigns on the driver: its fwd table
+# already holds the whole batch vocabulary.
 KNOWN_ID_IN_MAX = 100_000
 
 # the driver commit route's bounds: a batch of at most DRIVER_BATCH_ROWS rows
@@ -353,6 +333,26 @@ class _Phases:
         self.sc.setJobDescription(self.prev)
 
 
+def _enter_writer(
+    spark: SparkSession, cat: Catalog, schema_version: str
+) -> dict:
+    """Every writer's entry (``incremental_update``, ``compact_index``):
+    ship the package to the workers, refuse a closed index (T6), one
+    without a committed base and one of an older on-disk format, then
+    remove what a crashed writer left behind (T7 replay safety) and the
+    dirs a previous compaction superseded. -> the committed manifest."""
+    from ..session import ship_package
+
+    ship_package(spark)
+    cat.assert_writable(schema_version)
+    m = cat.read_manifest(schema_version)
+    assert m is not None and m["phases"].get("commit"), "no base index to update"
+    _assert_format(m, cat.index_name(schema_version))
+    clean_orphan_generations(cat.index_dir(schema_version))
+    _drain_gc_pending(cat, schema_version)
+    return cat.read_manifest(schema_version)
+
+
 def incremental_update(
     spark: SparkSession,
     docs: DataFrame,
@@ -370,508 +370,526 @@ def incremental_update(
     urls, resolved against the source (missing -> delete), mirroring the
     queue-consume path. Returns the updated manifest.
     """
-    from ..session import ship_package
-
-    ship_package(spark)
-    cat = catalog
-    cat.assert_writable(schema_version)
-    m = cat.read_manifest(schema_version)
-    assert m is not None and m["phases"].get("commit"), "no base index to update"
-    _assert_format(m, cat.index_name(schema_version))
-    idx = cat.index_dir(schema_version)
-    # T7 replay safety: remove anything a crashed generation left behind
-    clean_orphan_generations(idx)
-    _drain_gc_pending(cat, schema_version)
+    m = _enter_writer(spark, catalog, schema_version)
     phases = _Phases(spark, f"incremental gen={int(m['generations'])}")
     try:
         return _apply_batch(
-            spark, docs, cat, schema_version, queue_urls, salt_group_cap,
+            spark, docs, catalog, schema_version, queue_urls, salt_group_cap,
             phases,
         )
     finally:
         phases.close()
 
 
+class _Gen:
+    """The generation one commit writes: the committed manifest it starts
+    from, the layout every generation of the index keeps (the v2 pos
+    sidecar, so multi-generation phrase queries stay correct; the declared
+    docmap keyword/numeric columns, so filter_term sees newer docs) and
+    each table's gen=N dir, invisible until the manifest swap."""
+
+    def __init__(self, spark, cat: Catalog, schema_version: str, phases):
+        self.spark, self.cat, self.schema_version = spark, cat, schema_version
+        self.phases = phases
+        self.m = m = cat.read_manifest(schema_version)
+        self.idx = cat.index_dir(schema_version)
+        self.gen = int(m["generations"])
+        self.dirs = {
+            t: f"{resolve_table_dir(self.idx, t, m)}/gen={self.gen}"
+            for t in (
+                "fwd", "docmap", "tombstones", "segments", "dictionary",
+                "dict_by_term",
+            )
+        }
+        self.positions = bool(m.get("positions"))
+        self.fwd_schema = FWD_SCHEMA + (
+            ", poss array<bigint>" if self.positions else ""
+        )
+        self.keyword_fields = tuple(m.get("keyword_fields") or ())
+        self.numeric_fields = tuple(m.get("numeric_fields") or ())
+
+
+def _driver_forward(
+    probe: pa.Table, g: _Gen, docmap: DataFrame, adds: DataFrame, start_id: int
+) -> dict:
+    """The driver route's forward step: ONE more collect brings the adds,
+    html included, with the tombstone lookup (``_collect_driver_batch``);
+    ``build.forward_local`` runs in this process over the adds in scan
+    order and pyarrow writes the fwd and docmap generations. The cursor is
+    the probe's max(warc_ts); the per-term add counts come off the fwd
+    table, which holds the whole batch vocabulary."""
+    with g.phases("forward"):
+        local, dead = _collect_driver_batch(
+            g.idx, docmap, pc.unique(probe["url"]).drop_null().to_pylist(),
+            adds, g.keyword_fields, g.numeric_fields,
+        )
+        fwd = forward_local(local["html"], start_id, g.positions)
+        _write_gen_file(
+            g.dirs["fwd"], fwd,
+            row_group_size=_rows_per_group(fwd, FWD_ROW_GROUP_BYTES),
+        )
+        ids = pa.array(np.arange(start_id, start_id + local.num_rows), pa.int64())
+        _write_gen_file(
+            g.dirs["docmap"],
+            local.select(
+                ["url", "warc_ts", *g.keyword_fields, *g.numeric_fields]
+            ).append_column("doc_id", ids),
+            **_spark_timestamps(g.spark),
+        )
+    with g.phases("dictionary"):
+        vc = pc.value_counts(pc.list_flatten(fwd["terms"]))
+    # the batch cursor as the Spark route's collected Row carries it
+    ts = pc.max(probe["warc_ts"].cast(pa.int64())).as_py()
+    return {
+        "dead": dead,
+        "cursor": None if ts is None else TimestampType().fromInternal(ts),
+        "n_add": local.num_rows,
+        "stats": {
+            "n": fwd.num_rows,
+            "sum_dl": int(pc.sum(fwd["dl"]).as_py() or 0),
+            "dl_min": pc.min(fwd["dl"]).as_py(),
+            "postings": len(pc.list_flatten(fwd["terms"])),
+        },
+        "staged": False,
+        "add_counts": dict(
+            zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist())
+        ),
+        "add_frame": None,
+        "fwd": fwd,
+    }
+
+
+def _spark_forward(
+    batch: DataFrame, g: _Gen, docmap: DataFrame, adds: DataFrame, start_id: int
+) -> dict:
+    """The Spark route's forward step. ONE job resolves the tombstones
+    (committed docmap ⋉ changed urls ▷ old tombstones), the cursor
+    max(warc_ts) riding it as one more row: a global aggregate always
+    yields its row, where an Observation is dropped whenever adaptive
+    execution prunes an empty join side. ``build.materialize_forward``
+    runs over a scan (a queue batch, a join, is staged to a file scan
+    first) in splits sized for ~3 tasks a core, the fwd stats riding the
+    writes. One job counts the adds per term and collects at most
+    KNOWN_ID_IN_MAX + 1 of them; ``add_frame`` keeps them all."""
+    spark = g.spark
+    with g.phases("tombstones"):
+        old_tombs = _read_committed(
+            spark, g.idx, "tombstones", TOMB_SCHEMA, pinned=True
+        )
+        live_changed = (
+            docmap.join(batch.select("url"), "url", "left_semi")
+            .join(old_tombs, "doc_id", "left_anti")
+            .select("doc_id", F.lit(None).cast("timestamp").alias("cursor"))
+        )
+        cursor = batch.agg(
+            F.lit(None).cast("bigint").alias("doc_id"),
+            F.max("warc_ts").alias("cursor"),
+        )
+        rows = live_changed.unionByName(cursor).collect()
+    with g.phases("forward"):
+        in_split = input_split_bytes(spark, adds)
+        with scan_split_bytes(spark, in_split) if in_split else nullcontext():
+            staged = materialize_forward(
+                spark, adds, g.dirs["fwd"], g.dirs["docmap"],
+                os.path.join(g.idx, "fwd_stage"), start_id=start_id,
+                positions=g.positions, keyword_cols=g.keyword_fields,
+                numeric_cols=g.numeric_fields,
+            )
+    with g.phases("dictionary"):
+        add_frame = exploded_postings(
+            spark.read.schema(g.fwd_schema).parquet(g.dirs["fwd"])
+        ).groupBy("term").agg(F.count("*").alias("adds"))
+        add_rows = (
+            add_frame.limit(KNOWN_ID_IN_MAX + 1).collect()
+            if int(staged["fwd"]["postings"]) > 0
+            else []
+        )
+    return {
+        "dead": np.sort(
+            np.array([r.doc_id for r in rows if r.doc_id is not None], np.int64)
+        ),
+        "cursor": next(r.cursor for r in rows if r.doc_id is None),
+        "n_add": int(staged["n_rows"]),
+        "stats": staged["fwd"],  # {n, sum_dl, dl_min, postings}
+        "staged": staged["input_staged"],
+        "add_counts": {r.term: int(r.adds) for r in add_rows},
+        "add_frame": add_frame,
+    }
+
+
+def _driver_segments(
+    g: _Gen, fw: dict, dictionary: pa.Table, n_terms: int, id_span: int, cap: int
+) -> dict:
+    """The driver route's segments step: ``build.segments_local`` in this
+    process over the forward step's fwd table, written with pyarrow."""
+    segs = segments_local(
+        fw["fwd"], dictionary.select(["term", "term_id"]), id_span, cap,
+        g.gen, g.positions,
+    )
+    _write_gen_file(
+        g.dirs["segments"], segs,
+        row_group_size=_rows_per_group(segs, SEGMENT_ROW_GROUP_BYTES),
+    )
+    blobs = ("docs_blob", "tfs_blob") + (("pos_blob",) if g.positions else ())
+    return {
+        "rows": segs.num_rows,
+        "bytes": sum(
+            int(pc.sum(pc.binary_length(segs[c])).as_py() or 0) for c in blobs
+        ),
+    }
+
+
+def _spark_gen_segments(
+    g: _Gen, fw: dict, dictionary, n_terms: int, id_span: int, cap: int
+) -> dict:
+    """``_spark_segments`` over the new generation's fwd dir, which also
+    holds the new docs' norms (the committed fwd snapshot does not yet).
+    The norms cache version must be UNIQUE PER ATTEMPT: a replay of the
+    same gen may re-stage its fwd with another (doc_id -> dl) packing, and
+    reused Python workers would serve the crashed attempt's norms for the
+    same (path, version) key; the manifest's commit_seq, bumped by the
+    generation's ``running`` mark, is fresh for each attempt."""
+    if isinstance(dictionary, pa.Table):
+        dictionary = driver_frame(
+            g.spark, dictionary, "term_id bigint, term string, df bigint"
+        )
+    fwd_dir = g.dirs["fwd"]
+    return _spark_segments(
+        g.spark.read.schema(g.fwd_schema).parquet(fwd_dir), fwd_dir, fwd_dir,
+        int(g.cat.read_manifest(g.schema_version).get("commit_seq", 0)),
+        dictionary, n_terms, id_span, cap, g.gen, g.positions, g.dirs["segments"],
+    )
+
+
+def _spark_segments(
+    fwd: DataFrame, split_dir: str, norms, norms_version: int, dictionary: DataFrame,
+    n_terms: int, id_span: int, cap: int, generation: int, positions: bool, path: str,
+) -> dict:
+    """The Spark route's segments step, shared with compaction:
+    ``build.build_segments_spimi`` over ``fwd`` with term ids from
+    ``dictionary`` (a commit's batch-scoped delta covers every term of its
+    fwd) and norms from the fwd dir(s) ``norms``, written to ``path`` by
+    ``build.write_segments``. Splits give ~3 tasks a core of
+    ``split_dir``'s bytes, so the CPU-bound inversion parallelizes however
+    few files the fwd writer left. -> {rows, postings, bytes}."""
+    spark = fwd.sparkSession
+    with scan_split_bytes(spark, fwd_split_bytes(spark, split_dir)):
+        segs = build_segments_spimi(
+            spark, fwd, id_span, cap, norms, norms_version, dictionary,
+            generation=generation, n_terms=n_terms, positions=positions,
+        )
+        return write_segments(spark, segs, path, positions)
+
+
+def _assign_term_ids(
+    idx: str, delta: dict[str, int], max_tid: int
+) -> tuple[pa.Table, int]:
+    """Term ids for the batch's (term, df-delta) rows, on the driver: known
+    ids are point lookups in the term-sorted dict_by_term generations
+    (footer-pruned, so the dictionary READ is ∝ batch vocab x gens, never
+    the corpus vocabulary); fresh ids extend ``max_tid`` in the (df desc,
+    term asc) order of the build's dense rank.
+    -> the (term_id, term, df) rows, the count of fresh terms."""
+    from ..operators import dictionary as dict_mod
+
+    known = dict_mod.lookup_term_info(idx, list(delta))
+    fresh = sorted((t for t in delta if t not in known), key=lambda t: (-delta[t], t))
+    terms = [t for t in delta if t in known] + fresh
+    ids = [int(known[t][0]) for t in terms[: len(terms) - len(fresh)]]
+    ids += range(max_tid + 1, max_tid + 1 + len(fresh))
+    return pa.table(
+        {
+            "term_id": pa.array(ids, pa.int64()),
+            "term": pa.array(terms, pa.string()),
+            "df": pa.array([delta[t] for t in terms], pa.int64()),
+        }
+    ), len(fresh)
+
+
+def _assign_term_ids_wide(
+    spark: SparkSession, idx: str, add_frame: DataFrame, dels: dict[str, int],
+    max_tid: int, cached: list,
+) -> tuple[DataFrame, int, int]:
+    """Term ids for a Spark-route batch vocabulary wider than
+    KNOWN_ID_IN_MAX, on the executors: the adds' per-term counts fold
+    with the decrements in a full join, known ids come from a semi-join
+    against the committed dictionary, fresh ids by the dense rank of
+    operators/docmap.py in (df desc, term asc) order from ``max_tid`` + 1.
+    The frames it persists go on ``cached``.
+    -> the (term_id, term, df) frame, batch terms, fresh terms."""
+    dels_df = driver_frame(spark, sorted(dels.items()), "term string, dels bigint")
+    deltas = add_frame.join(dels_df, "term", "full").select(
+        "term",
+        (
+            F.coalesce(F.col("adds"), F.lit(0))
+            - F.coalesce(F.col("dels"), F.lit(0))
+        ).cast("bigint").alias("df"),
+    ).persist()
+    cached.append(deltas)
+    known_ids = (
+        _read_committed(
+            spark, idx, "dictionary", "term string, term_id bigint", pinned=True
+        )
+        .join(F.broadcast(deltas.select("term")), "term", "left_semi")
+        .groupBy("term")
+        .agg(F.max("term_id").alias("term_id"))
+    )
+    batch_dict = deltas.join(known_ids, "term", "left").persist()
+    cached.append(batch_dict)
+    part, offsets = ranged_with_offsets(
+        batch_dict.filter(F.col("term_id").isNull()).select("term", "df"),
+        [F.desc("df"), F.asc("term")],
+        start_id=max_tid + 1,
+    )
+    cached.append(part)
+    fresh = with_dense_ids(part, offsets, "term_id")
+    dictionary = (
+        batch_dict.filter(F.col("term_id").isNotNull())
+        .select("term_id", "term", "df")
+        .unionByName(fresh.select("term_id", "term", "df"))
+        .persist()
+    )
+    cached.append(dictionary)
+    n = batch_dict.agg(
+        F.count("*").alias("n"),
+        F.count(F.when(F.col("term_id").isNull(), 1)).alias("fresh"),
+    ).collect()[0]
+    return dictionary, int(n.n), int(n.fresh)
+
+
+def _write_dictionary(dictionary, path: str, by_term_path: str) -> None:
+    """Write dictionary rows (term_id, term, df) and their term-sorted
+    projection, both in small row groups (the term-seek layout): driver-
+    held rows with pyarrow, a frame (the wide branch, compaction) with
+    Spark's writers (``build.write_dict_by_term``)."""
+    if isinstance(dictionary, DataFrame):
+        dictionary.write.mode("overwrite").parquet(path)
+        write_dict_by_term(dictionary, by_term_path)
+    else:
+        _write_gen_file(path, dictionary, row_group_size=50_000)
+        _write_gen_file(
+            by_term_path,
+            dictionary.select(["term", "term_id", "df"]).sort_by("term"),
+            row_group_size=50_000,
+        )
+
+
 def _apply_batch(
-    spark: SparkSession,
-    docs: DataFrame,
-    cat: Catalog,
-    schema_version: str,
-    queue_urls: DataFrame | None,
-    salt_group_cap: int | None,
-    phases: _Phases,
+    spark: SparkSession, docs: DataFrame, cat: Catalog, schema_version: str,
+    queue_urls: DataFrame | None, salt_group_cap: int | None, phases: _Phases,
     build: bool = False,
 ) -> dict:
-    """The body of ``incremental_update`` on a clean committed state.
-    ``build``: the batch is ``build_index``'s whole input over its empty
-    committed state — it takes the Spark route unprobed, and the build
-    logs its own ``full_build`` event in place of this commit's."""
-    m = cat.read_manifest(schema_version)
-    idx = cat.index_dir(schema_version)
-    # positional (v2) indexes: every generation carries the pos sidecar —
-    # both forward/segments drivers thread the flag below, so
-    # multi-generation positional phrase queries stay correct
-    positions = bool(m.get("positions"))
-    # declared docmap keyword columns (build_index(keyword_fields=...)) —
-    # every generation's docmap must carry them or filter_term scans over
-    # multi-generation indexes would silently miss newer docs
-    keyword_fields = tuple(m.get("keyword_fields") or ())
-    numeric_fields = tuple(m.get("numeric_fields") or ())
+    """The body of ``incremental_update`` on a clean committed state: one
+    sequence for both routes. The route is decided once and contributes
+    two steps, forward (``_driver_forward`` / ``_spark_forward``) and
+    segments (``_driver_segments`` / ``_spark_gen_segments``); every
+    other step is written once, here. ``build``: the batch is
+    ``build_index``'s whole input over its empty committed state — it
+    takes the Spark route unprobed, and the build logs its own
+    ``full_build`` event in place of this commit's."""
+    g = _Gen(spark, cat, schema_version, phases)
+    m, idx, gen = g.m, g.idx, g.gen
+    ver = int(m.get("table_ver", 0)) + 1
+    counters = m.get("counters") or {}
     # index-level membership: an all-langs base index keeps accepting all
     # langs incrementally (and never routes a live non-en doc to delete)
     include_all_langs = bool(m.get("include_all_langs"))
-    gen = int(m["generations"])
-    ver = int(m.get("table_ver", 0)) + 1
-    counters = m.get("counters") or {}
+    # frames this commit persists: unpersisted whether or not it lands
+    cached: list[DataFrame] = []
+    try:
+        # ---- select the batch (T8 cursor or explicit queue) ---------------
+        if queue_urls is not None:
+            from ..operators.routing import dedup_last_write_wins
 
-    # ---- select the batch (T8 cursor or explicit queue) -------------------
-    carried = ("url", "warc_ts", "html", *keyword_fields, *numeric_fields)
-    if queue_urls is not None:
-        from ..operators.routing import dedup_last_write_wins
-
-        # J3 within-batch dedup: a url re-queued twice in one batch keeps
-        # only its newest revision (ToDictionary re-key + LWW, T11); the
-        # resolved batch feeds both the tombstones and the adds, so persist
-        batch = with_should_index(
-            dedup_last_write_wins(
-                queue_urls.select("url").distinct().join(docs, "url", "left")
-            ),
-            include_all_langs,
-        ).persist()
-        # a queued url the source no longer has resolves to nulls: delete
-        is_add = F.coalesce(F.col("should_index"), F.lit(False))
-    else:
-        # cursor batches: the adds lineage is built straight off ``docs``
-        # (filter + select only), so when docs is a plain file scan
-        # materialize_forward reads it without staging; the tombstone job
-        # reads just (url, warc_ts) of the same rows; an index without a
-        # cursor (a build's empty state) has read nothing yet
-        batch = docs if m["cursor"] is None else docs.filter(
-            F.col("warc_ts") > F.lit(m["cursor"]).cast("timestamp")
-        )
-        is_add = should_index_expr(include_all_langs)
-    adds = batch.filter(is_add).select(*carried)
-
-    # ---- route: a batch within the driver bounds commits on the driver —
-    # the build's own kernels in this process; a larger one, and a build
-    # whatever its size, keeps the distributed route below. The probe
-    # carries no html.
-    if build:
-        route, collected = "spark", {"route": "spark"}
-    else:
-        with phases("tombstones"):
-            probe = _probe_batch(batch, is_add)
-        html_bytes = int(pc.sum(probe["html_bytes"]).as_py() or 0)
-        route = (
-            "driver"
-            if probe.num_rows <= DRIVER_BATCH_ROWS
-            and html_bytes <= DRIVER_BATCH_HTML_BYTES
-            else "spark"
-        )
-        collected = {
-            "route": route,
-            "collected_rows": probe.num_rows,
-            "collected_html_bytes": html_bytes if route == "driver" else 0,
-        }
-    docmap = _read_committed(
-        spark, idx, "docmap", "url string, doc_id bigint", pinned=True
-    )
-
-    # ---- tombstones: every changed url that is currently live gets its old
-    # docID tombstoned (update -> delete+add with fresh id; delete ->
-    # tombstone only); ONE job either way, driver-held sorted ids --------
-    if route == "driver":
-        # the adds and the tombstone lookup share the route's second job
-        with phases("forward"):
-            local, dead_ids = _collect_driver_batch(
-                idx, docmap, pc.unique(probe["url"]).drop_null().to_pylist(),
-                adds, keyword_fields, numeric_fields,
-            )
-        # the batch cursor as the Spark route's collected Row carries it
-        ts = pc.max(probe["warc_ts"].cast(pa.int64())).as_py()
-        new_cursor = None if ts is None else TimestampType().fromInternal(ts)
-    else:
-        # the batch cursor (max ignores the nulls a queue-resolve leaves)
-        # is one more row of the same job: a global aggregate always
-        # yields its row, where an Observation on the batch is dropped
-        # whenever adaptive execution prunes an empty join side.
-        with phases("tombstones"):
-            old_tombs = _read_committed(
-                spark, idx, "tombstones", TOMB_SCHEMA, pinned=True
-            )
-            live_changed = (
-                docmap.join(batch.select("url"), "url", "left_semi")
-                .join(old_tombs, "doc_id", "left_anti")
-                .select(
-                    "doc_id", F.lit(None).cast("timestamp").alias("cursor")
-                )
-            )
-            cursor = batch.agg(
-                F.lit(None).cast("bigint").alias("doc_id"),
-                F.max("warc_ts").alias("cursor"),
-            )
-            rows = live_changed.unionByName(cursor).collect()
-        new_cursor = next(r.cursor for r in rows if r.doc_id is None)
-        dead_ids = np.sort(
-            np.array([r.doc_id for r in rows if r.doc_id is not None], np.int64)
-        )
-    n_del = int(dead_ids.size)
-
-    # ---- forward: fresh docIDs extend the space from the counter ----------
-    # the new generation's fwd/docmap are written into their (uncommitted)
-    # gen dirs right away; a no-op batch leaves them as orphans for
-    # clean_orphan_generations
-    fwd_gen_dir = f"{resolve_table_dir(idx, 'fwd')}/gen={gen}"
-    dm_gen_dir = f"{resolve_table_dir(idx, 'docmap')}/gen={gen}"
-    with phases("forward"):
-        start_id = _next_doc_id(m, docmap)
-        if route == "driver":
-            n_add = local.num_rows
-            fwd = forward_local(local["html"], start_id, positions)
-            add_stats = {
-                "n": fwd.num_rows,
-                "sum_dl": int(pc.sum(fwd["dl"]).as_py() or 0),
-                "dl_min": pc.min(fwd["dl"]).as_py(),
-                "postings": int(
-                    pc.sum(pc.list_value_length(fwd["terms"])).as_py() or 0
+            # J3 within-batch dedup: a url re-queued twice in one batch
+            # keeps only its newest revision (ToDictionary re-key + LWW,
+            # T11); the resolved batch feeds both the tombstones and the
+            # adds, so persist
+            batch = with_should_index(
+                dedup_last_write_wins(
+                    queue_urls.select("url").distinct().join(docs, "url", "left")
                 ),
-            }
-            _write_gen_file(
-                fwd_gen_dir, fwd,
-                row_group_size=_rows_per_group(fwd, FWD_ROW_GROUP_BYTES),
-            )
-            _write_gen_file(
-                dm_gen_dir,
-                local.select(
-                    ["url", "warc_ts", *keyword_fields, *numeric_fields]
-                ).append_column(
-                    "doc_id",
-                    pa.array(np.arange(start_id, start_id + n_add), pa.int64()),
-                ),
-                **_spark_timestamps(spark),
-            )
-            input_staged = False
+                include_all_langs,
+            ).persist()
+            cached.append(batch)
+            # a queued url the source no longer has resolves to nulls: delete
+            is_add = F.coalesce(F.col("should_index"), F.lit(False))
         else:
-            # the build's forward kernel over a scan (operators/build.
-            # materialize_forward; a queue batch is a join, so it is
-            # staged to a file scan first), its splits sized for ~3
-            # tasks a core. n_add comes from the per-partition counts and
-            # the fwd stats ride the fwd write.
-            in_split = input_split_bytes(spark, adds)
-            with scan_split_bytes(spark, in_split) if in_split else nullcontext():
-                staged = materialize_forward(
-                    spark, adds, fwd_gen_dir, dm_gen_dir,
-                    os.path.join(idx, "fwd_stage"), start_id=start_id,
-                    positions=positions, keyword_cols=keyword_fields,
-                    numeric_cols=numeric_fields,
-                )
-            n_add = int(staged["n_rows"])
-            add_stats = staged["fwd"]  # {n, sum_dl, dl_min, postings}
-            input_staged = staged["input_staged"]
+            # cursor batches: the adds lineage is built straight off
+            # ``docs`` (filter + select only), so when docs is a plain file
+            # scan materialize_forward reads it without staging; an index
+            # without a cursor (a build's empty state) has read nothing yet
+            batch = docs if m["cursor"] is None else docs.filter(
+                F.col("warc_ts") > F.lit(m["cursor"]).cast("timestamp")
+            )
+            is_add = should_index_expr(include_all_langs)
+        adds = batch.filter(is_add).select(
+            "url", "warc_ts", "html", *g.keyword_fields, *g.numeric_fields
+        )
 
-    if n_add == 0 and n_del == 0:
-        # still advance the cursor past a batch of purely non-indexable rows
-        # — otherwise every subsequent cursor batch re-scans them forever
-        if queue_urls is None and new_cursor is not None and (
+        # ---- route, decided once: a batch within the driver bounds commits
+        # on the driver, a larger one — and a build, whatever its size —
+        # on Spark. The probe carries no html.
+        forward, segments = partial(_spark_forward, batch), _spark_gen_segments
+        collected = {"route": "spark"}
+        if not build:
+            with phases("tombstones"):
+                probe = _probe_batch(batch, is_add)
+            html_bytes = int(pc.sum(probe["html_bytes"]).as_py() or 0)
+            on_driver = (
+                probe.num_rows <= DRIVER_BATCH_ROWS
+                and html_bytes <= DRIVER_BATCH_HTML_BYTES
+            )
+            if on_driver:
+                forward, segments = partial(_driver_forward, probe), _driver_segments
+            collected = {
+                "route": "driver" if on_driver else "spark",
+                "collected_rows": probe.num_rows,
+                "collected_html_bytes": html_bytes if on_driver else 0,
+            }
+
+        # ---- forward: an update tombstones the old docID and adds a fresh
+        # one, a delete only tombstones; a no-op batch leaves its fwd/docmap
+        # gen dirs to clean_orphan_generations
+        with phases("forward"):
+            docmap = _read_committed(
+                spark, idx, "docmap", "url string, doc_id bigint", pinned=True
+            )
+            start_id = _next_doc_id(m, docmap)
+        fw = forward(g, docmap, adds, start_id)
+        dead_ids, new_cursor, n_add = fw["dead"], fw["cursor"], fw["n_add"]
+        n_del = int(dead_ids.size)
+        if n_add == 0 and n_del == 0:
+            # still advance the cursor past a batch of purely non-indexable
+            # rows — otherwise every later cursor batch re-scans them forever
+            if queue_urls is None and new_cursor is not None and (
+                m["cursor"] is None or str(new_cursor) > m["cursor"]
+            ):
+                m["cursor"] = str(new_cursor)
+                cat.write_manifest(schema_version, m)
+            return cat.read_manifest(schema_version)
+
+        # ---- deleted docs' forward rows, read once; tombstone generation ---
+        with phases("tombstones"):
+            deleted = _deleted_forward(committed_gen_paths(idx, "fwd"), dead_ids)
+            if n_del:
+                _write_gen_file(
+                    g.dirs["tombstones"],
+                    pa.table({"doc_id": pa.array(dead_ids, pa.int64())}),
+                )
+        # the stats table is ONE row — read it driver-side with pyarrow
+        st = pq.read_table(resolve_table_dir(idx, "stats")).to_pylist()[0]
+        add_stats = fw["stats"]
+        n_docs2 = int(st["n_docs"]) + int(add_stats["n"]) - deleted["n"]
+        sum_dl2 = int(st["sum_dl"]) + int(add_stats["sum_dl"]) - deleted["sum_dl"]
+        dl_min2 = int(st["dl_min"])
+        if add_stats["dl_min"] is not None:
+            # an empty index's dl_min of 0 is no doc's length
+            dl_min2 = int(add_stats["dl_min"]) if int(st["n_docs"]) == 0 else min(
+                dl_min2, int(add_stats["dl_min"])
+            )
+        total_postings2 = (
+            int(st["total_postings"]) + int(add_stats["postings"])
+            - deleted["postings"]
+        )
+
+        # ---- dictionary deltas: BATCH vocabulary only ----------------------
+        # (term, term_id, df-delta) rows for exactly the terms the batch
+        # touched (operators/dictionary.py merges the generations at read)
+        with phases("dictionary"):
+            max_tid = int(counters["max_term_id"])
+            delta = dict(fw["add_counts"])
+            for t, c in deleted["df"].items():
+                delta[t] = delta.get(t, 0) - int(c)
+            if fw["add_frame"] is None or len(delta) <= KNOWN_ID_IN_MAX:
+                dictionary, n_fresh = _assign_term_ids(idx, delta, max_tid)
+                n_batch_terms = len(delta)
+            else:
+                dictionary, n_batch_terms, n_fresh = _assign_term_ids_wide(
+                    spark, idx, fw["add_frame"], deleted["df"], max_tid, cached
+                )
+
+        # ---- segments (ALL writes land in uncommitted dirs) ----------------
+        written = {"rows": 0, "bytes": 0}
+        if int(add_stats["postings"]) > 0:
+            cap = salt_cap(spark, n_add, salt_group_cap)
+            # the generation phase's wall time starts here; mark_phase also
+            # bumps the manifest's monotonic commit_seq (the Spark route's
+            # norms cache version)
+            cat.mark_phase(schema_version, f"incremental_gen{gen}", "running")
+            with phases("segments"):
+                written = segments(
+                    g, fw, dictionary, n_batch_terms, start_id + n_add, cap
+                )
+        # dictionary DELTAS append as gen=K, committed by the same
+        # generations bump as segments/docmap — no versioned-table rewrite
+        # of the corpus vocabulary per batch
+        with phases("dictionary"):
+            _write_dictionary(
+                dictionary, g.dirs["dictionary"], g.dirs["dict_by_term"]
+            )
+        stats_name = f"stats_v{ver}"
+        _write_stats_table(
+            os.path.join(idx, stats_name), n_docs2, sum_dl2,
+            float(sum_dl2) / n_docs2 if n_docs2 else 0.0,
+            dl_min2, total_postings2,
+        )
+
+        # ---- ATOMIC commit: one manifest swap makes the generation visible -
+        m = cat.read_manifest(schema_version)
+        old_tables = dict(m.get("tables") or {})
+        m["generations"] = gen + 1
+        m["table_ver"] = ver
+        m["tables"] = {**old_tables, "stats": stats_name}
+        if new_cursor is not None and (
             m["cursor"] is None or str(new_cursor) > m["cursor"]
         ):
             m["cursor"] = str(new_cursor)
-            cat.write_manifest(schema_version, m)
-        batch.unpersist()
+        m["counters"] = {
+            "docs": n_docs2,
+            "postings": total_postings2,
+            # store size grows by the new generation's blob bytes
+            # (tombstoned postings still occupy their old segments until
+            # compaction — the ES store-size analog, ListIndicesCommand.cs:
+            # 37-51)
+            "bytes": int(counters.get("bytes") or 0) + written["bytes"],
+            # U2-tagged running totals (the DogStatsd add/delete counters,
+            # IndexQueueProcessor.cs:52,57) — surfaced by `index-list`
+            "adds_total": int(counters.get("adds_total") or 0) + int(n_add),
+            "deletes_total": int(counters.get("deletes_total") or 0) + n_del,
+            "terms": int(counters["terms"]) + int(n_fresh),
+            "max_term_id": max_tid + int(n_fresh),
+            "next_doc_id": start_id + n_add,
+        }
+        cat.write_manifest(schema_version, m)
+        cat.mark_phase(
+            schema_version, f"incremental_gen{gen}", "done",
+            adds=int(n_add), deletes=n_del, terms=m["counters"]["terms"],
+            batch_terms=int(n_batch_terms), input_staged=fw["staged"],
+            segment_rows=int(written["rows"]), **collected,
+            **{f"{k}_s": round(v, 3) for k, v in phases.seconds.items()},
+        )
+        # U2 per-batch tagged metric event (the DogStatsd stream analog)
+        if not build:
+            emit_metric_event(
+                idx, "incremental_commit", schema=schema_version,
+                generation=gen, adds=int(n_add), deletes=n_del,
+                batch_terms=int(n_batch_terms), docs=int(n_docs2),
+                postings=int(total_postings2),
+                bytes_added=int(written["bytes"]),
+            )
+        # GC: stats is the one table a commit repoints. Keep the current
+        # dir and the one it superseded (a reader grace window); every
+        # stats dir below the superseded one goes (the build's plain
+        # ``stats`` is v0).
+        below = _stats_ver(old_tables.get("stats", "stats"))
+        for name in os.listdir(idx):
+            if _stats_ver(name) < below:
+                shutil.rmtree(os.path.join(idx, name), ignore_errors=True)
         return cat.read_manifest(schema_version)
-
-    # ---- deleted docs' forward rows, read once; tombstone generation -------
-    with phases("tombstones"):
-        deleted = _deleted_forward(committed_gen_paths(idx, "fwd"), dead_ids)
-        if n_del:
-            _write_gen_file(
-                f"{resolve_table_dir(idx, 'tombstones')}/gen={gen}",
-                pa.table({"doc_id": pa.array(dead_ids, pa.int64())}),
-            )
-    # the stats table is ONE row — read it driver-side with pyarrow
-    st = pq.read_table(resolve_table_dir(idx, "stats")).to_pylist()[0]
-    n_docs2 = int(st["n_docs"]) + int(add_stats["n"]) - deleted["n"]
-    sum_dl2 = int(st["sum_dl"]) + int(add_stats["sum_dl"]) - deleted["sum_dl"]
-    dl_min2 = int(st["dl_min"])
-    if add_stats["dl_min"] is not None:
-        # an empty index's dl_min of 0 is no doc's length
-        dl_min2 = int(add_stats["dl_min"]) if int(st["n_docs"]) == 0 else min(
-            dl_min2, int(add_stats["dl_min"])
-        )
-    total_postings2 = (
-        int(st["total_postings"]) + int(add_stats["postings"])
-        - deleted["postings"]
-    )
-    fwd_reader = spark.read.schema(
-        FWD_SCHEMA + (", poss array<bigint>" if positions else "")
-    )
-
-    # ---- dictionary deltas: BATCH vocabulary only --------------------------
-    # The dictionary is generational (operators/dictionary.py): this commit
-    # appends gen=K delta rows (term, term_id, df-delta) for exactly the
-    # terms the batch touched — write volume ~ batch vocab, never corpus
-    # vocab. Fresh terms extend the dense id space from the manifest's
-    # max_term_id counter (no vocabulary scan at all on the happy path).
-    with phases("dictionary"):
-        max_tid = counters.get("max_term_id")
-        n_terms_old = counters.get("terms")
-        if max_tid is None or n_terms_old is None:
-            # legacy manifest without vocab counters: one recovery scan
-            from ..operators.dictionary import read_dictionary_merged
-
-            magg = read_dictionary_merged(spark, idx).agg(
-                F.max("term_id").alias("mt"), F.count("*").alias("n")
-            ).collect()[0]
-            max_tid = int(magg.mt) if magg.mt is not None else -1
-            n_terms_old = int(magg.n)
-        # the adds' per-term counts — off the driver's fwd table, or one
-        # job (none for a delete-only batch) probed against the
-        # driver-resolved bound; the deleted docs' decrements fold in
-        # driver-side
-        if route == "driver":
-            vc = pc.value_counts(pc.list_flatten(fwd["terms"]))
-            add_counts = list(
-                zip(vc.field("values").to_pylist(), vc.field("counts").to_pylist())
-            )
-            delta = dict(add_counts)
-            add_df = None  # a Spark frame only if the wide branch needs one
-        else:
-            add_df = exploded_postings(
-                fwd_reader.parquet(fwd_gen_dir)
-            ).groupBy("term").agg(F.count("*").alias("adds"))
-            add_rows = (
-                add_df.limit(KNOWN_ID_IN_MAX + 1).collect()
-                if int(add_stats["postings"]) > 0
-                else []
-            )
-            delta = {r.term: int(r.adds) for r in add_rows}
-        for t, c in deleted["df"].items():
-            delta[t] = delta.get(t, 0) - int(c)
-        n_batch_terms = len(delta)
-        dict_rows = None
-        extra_persisted: list[DataFrame] = []
-        if n_batch_terms <= KNOWN_ID_IN_MAX:
-            # known ids: the term-sorted dict_by_term generations with the
-            # batch vocabulary as the probe — parquet row-group pruning
-            # makes the per-batch dictionary READ ∝ batch vocab x gens,
-            # never O(corpus vocabulary). Fresh ids are then assigned
-            # driver-side in the SAME (df desc, term asc) total order
-            # assign_dense_ids would use — no join, no dense-rank jobs.
-            from ..operators import dictionary as dict_mod
-
-            known_map = dict_mod.lookup_term_info(idx, list(delta))
-            fresh = sorted(
-                (t for t in delta if t not in known_map),
-                key=lambda t: (-delta[t], t),
-            )
-            n_fresh = len(fresh)
-            dict_rows = [
-                (int(known_map[t][0]), t, df)
-                for t, df in delta.items()
-                if t in known_map
-            ] + [
-                (int(max_tid) + 1 + i, t, delta[t])
-                for i, t in enumerate(fresh)
-            ]
-            dt = pa.table(
-                {
-                    "term_id": pa.array([r[0] for r in dict_rows], pa.int64()),
-                    "term": pa.array([r[1] for r in dict_rows], pa.string()),
-                    "df": pa.array([r[2] for r in dict_rows], pa.int64()),
-                }
-            )
-            if route == "spark":
-                dict_delta = driver_frame(
-                    spark, dict_rows, "term_id bigint, term string, df bigint"
-                )
-        else:
-            # degenerate giant-vocab batch (approaching rebuild volume): a
-            # probe this wide costs more than the scan it prunes — fall
-            # back to the distributed semi-join + dense-rank assignment
-            if add_df is None:
-                add_df = driver_frame(
-                    spark, add_counts, "term string, adds bigint"
-                )
-            dels = driver_frame(
-                spark, sorted(deleted["df"].items()), "term string, dels bigint"
-            )
-            deltas = add_df.join(dels, "term", "full").select(
-                "term",
-                (
-                    F.coalesce(F.col("adds"), F.lit(0))
-                    - F.coalesce(F.col("dels"), F.lit(0))
-                ).cast("bigint").alias("df"),
-            ).persist()
-            dict_committed = _read_committed(
-                spark, idx, "dictionary", "term string, term_id bigint",
-                pinned=True,
-            )
-            known_ids = (
-                dict_committed.join(
-                    F.broadcast(deltas.select("term")), "term", "left_semi"
-                )
-                .groupBy("term")
-                .agg(F.max("term_id").alias("term_id"))
-            )
-            batch_dict = deltas.join(known_ids, "term", "left").persist()
-            known = batch_dict.filter(F.col("term_id").isNotNull()).select(
-                "term_id", "term", "df"
-            )
-            fresh_df = assign_dense_ids(
-                batch_dict.filter(F.col("term_id").isNull()).select(
-                    "term", "df"
-                ),
-                [F.desc("df"), F.asc("term")],
-                "term_id",
-                start_id=int(max_tid) + 1,
-            ).select("term_id", "term", "df")
-            dict_delta = known.unionByName(fresh_df).persist()
-            extra_persisted += [deltas, batch_dict, dict_delta]
-            bd_agg = batch_dict.agg(
-                F.count("*").alias("n"),
-                F.count(F.when(F.col("term_id").isNull(), 1)).alias("fresh"),
-            ).collect()[0]
-            n_batch_terms = int(bd_agg.n)
-            n_fresh = int(bd_agg.fresh)
-    n_terms2 = int(n_terms_old) + int(n_fresh)
-    max_tid2 = int(max_tid) + int(n_fresh)
-
-    # ---- segments (ALL writes land in uncommitted dirs) --------------------
-    seg_bytes_added = seg_rows = 0
-    seg_gen_dir = f"{resolve_table_dir(idx, 'segments')}/gen={gen}"
-    if int(add_stats["postings"]) > 0:
-        id_span = start_id + n_add
-        cap = salt_cap(spark, n_add, salt_group_cap)
-        # the generation phase's wall time starts here; mark_phase also
-        # bumps the manifest's monotonic commit_seq (the Spark route's
-        # norms cache version, below)
-        cat.mark_phase(schema_version, f"incremental_gen{gen}", "running")
-        if route == "driver":
-            # the batch-scoped delta dictionary covers every term in the
-            # gen's fwd (adds are a subset of the delta vocabulary)
-            with phases("segments"):
-                term_ids = (
-                    dt.select(["term", "term_id"]) if dict_rows is not None
-                    else dict_delta.select("term", "term_id").toArrow()
-                )
-                segs = segments_local(
-                    fwd, term_ids, id_span, cap, gen, positions
-                )
-                _write_gen_file(
-                    seg_gen_dir, segs,
-                    row_group_size=_rows_per_group(segs, SEGMENT_ROW_GROUP_BYTES),
-                )
-                seg_rows = segs.num_rows
-                seg_bytes_added = sum(
-                    int(pc.sum(pc.binary_length(segs[c])).as_py() or 0)
-                    for c in ("docs_blob", "tfs_blob")
-                    + (("pos_blob",) if positions else ())
-                )
-        else:
-            # the merge loads the NEW docs' norms executor-side from the
-            # staged fwd gen dir (they are not in the committed fwd
-            # snapshot yet). The batch-scoped delta dictionary covers every
-            # term in the gen's fwd — the spimi join only needs ids for the
-            # batch's own terms, never the whole vocabulary. Split the
-            # gen's fwd fine (it may be as few files as the delta input had
-            # partitions — often ONE) so the CPU-bound inversion
-            # parallelizes; fwd row groups are written small for exactly
-            # this. The norms version must be UNIQUE PER ATTEMPT, not per
-            # generation: a crash-and-replay of the same gen re-stages
-            # fwd_gen_dir with possibly different (doc_id -> dl) packing,
-            # and reused python workers would serve the crashed attempt's
-            # cached norms for the same (path, version) key; commit_seq
-            # gives each attempt a fresh cache version.
-            norms_ver = int(
-                (cat.read_manifest(schema_version) or {}).get("commit_seq", 0)
-            )
-            with phases("segments"), scan_split_bytes(
-                spark, fwd_split_bytes(spark, fwd_gen_dir)
-            ):
-                segs = build_segments_spimi(
-                    spark, fwd_reader.parquet(fwd_gen_dir), id_span, cap,
-                    fwd_gen_dir, norms_ver, dict_delta, generation=gen,
-                    n_terms=int(n_batch_terms), positions=positions,
-                )
-                written = write_segments(spark, segs, seg_gen_dir, positions)
-                seg_rows, seg_bytes_added = written["rows"], written["bytes"]
-    # dictionary DELTAS append as gen=K (batch vocabulary only), committed
-    # by the same generations bump as segments/docmap — no versioned-table
-    # rewrite of the corpus vocabulary per batch. Driver-held delta rows
-    # (fast path) are written directly with pyarrow; wider batches keep the
-    # distributed writes.
-    dict_gen_dir = f"{resolve_table_dir(idx, 'dictionary')}/gen={gen}"
-    bt_gen_dir = f"{resolve_table_dir(idx, 'dict_by_term')}/gen={gen}"
-    with phases("dictionary"):
-        if dict_rows is not None:
-            _write_gen_file(dict_gen_dir, dt, row_group_size=50_000)
-            # term-SORTED projection with small row groups (the same
-            # term-seek layout write_dict_by_term produces)
-            _write_gen_file(
-                bt_gen_dir,
-                dt.select(["term", "term_id", "df"]).sort_by("term"),
-                row_group_size=50_000,
-            )
-        else:
-            dict_delta.write.mode("overwrite").parquet(dict_gen_dir)
-            write_dict_by_term(dict_delta, bt_gen_dir)
-    stats_name = f"stats_v{ver}"
-    _write_stats_table(
-        os.path.join(idx, stats_name), n_docs2, sum_dl2,
-        float(sum_dl2) / n_docs2 if n_docs2 else 0.0,
-        dl_min2, total_postings2,
-    )
-
-    # ---- ATOMIC commit: one manifest swap makes the generation visible -----
-    m = cat.read_manifest(schema_version)
-    old_tables = dict(m.get("tables") or {})
-    m["generations"] = gen + 1
-    m["table_ver"] = ver
-    m["tables"] = {**old_tables, "stats": stats_name}
-    if new_cursor is not None and (m["cursor"] is None or str(new_cursor) > m["cursor"]):
-        m["cursor"] = str(new_cursor)
-    old_counters = m.get("counters") or {}
-    m["counters"] = {
-        "docs": n_docs2,
-        "postings": total_postings2,
-        # store size grows by the new generation's blob bytes (tombstoned
-        # postings still occupy their old segments until compaction — the
-        # ES store-size analog, ListIndicesCommand.cs:37-51)
-        "bytes": int(old_counters.get("bytes") or 0) + seg_bytes_added,
-        # U2-tagged running totals (the DogStatsd add/delete counters,
-        # IndexQueueProcessor.cs:52,57) — surfaced by `index-list`
-        "adds_total": int(old_counters.get("adds_total") or 0) + int(n_add),
-        "deletes_total": int(old_counters.get("deletes_total") or 0) + int(n_del),
-        "terms": int(n_terms2),
-        "max_term_id": int(max_tid2),
-        "next_doc_id": start_id + n_add,
-    }
-    cat.write_manifest(schema_version, m)
-    cat.mark_phase(
-        schema_version, f"incremental_gen{gen}", "done",
-        adds=int(n_add), deletes=int(n_del), terms=int(n_terms2),
-        batch_terms=int(n_batch_terms), input_staged=input_staged,
-        segment_rows=int(seg_rows), **collected,
-        **{f"{k}_s": round(v, 3) for k, v in phases.seconds.items()},
-    )
-    # U2 per-batch tagged metric event (the DogStatsd stream analog)
-    if not build:
-        emit_metric_event(
-            idx, "incremental_commit", schema=schema_version, generation=gen,
-            adds=int(n_add), deletes=int(n_del),
-            batch_terms=int(n_batch_terms), docs=int(n_docs2),
-            postings=int(total_postings2), bytes_added=int(seg_bytes_added),
-        )
-    # GC: stats is the one table a commit repoints. Keep the current dir
-    # and the one it superseded (a reader grace window); every stats dir
-    # below the superseded one goes (the build's plain ``stats`` is v0).
-    below = _stats_ver(old_tables.get("stats", "stats"))
-    for name in os.listdir(idx):
-        if _stats_ver(name) < below:
-            shutil.rmtree(os.path.join(idx, name), ignore_errors=True)
-    for df_ in (batch, *extra_persisted):
-        df_.unpersist()
-    return cat.read_manifest(schema_version)
+    finally:
+        for df_ in cached:
+            df_.unpersist()
 
 
 def _stats_ver(name: str) -> float:
@@ -937,92 +955,92 @@ def _drain_gc_pending(cat: Catalog, schema_version: str) -> None:
 
 
 def compact_index(
-    spark: SparkSession,
-    catalog: Catalog,
-    schema_version: str,
+    spark: SparkSession, catalog: Catalog, schema_version: str,
     salt_group_cap: int | None = None,
 ) -> dict:
     """Segment-merge analog: rewrite segments from live forward rows only,
     clear tombstones, drop dead rows from fwd/docmap. Query results are
     unchanged (stats were already exact). Atomic like the incremental path:
     everything is written to fresh {table}_v{K} dirs and committed by the
-    single manifest swap; the superseded dirs are deleted afterwards."""
+    single manifest swap; the superseded dirs are deleted afterwards. The
+    segments go through the Spark route's segments step
+    (``_spark_segments``) and the dictionary through the commit's frame
+    writer (``_write_dictionary``); every Spark job is named by its phase
+    (``compact: <phase>``), whose seconds land in the manifest's
+    ``compact`` phase as ``<phase>_s``."""
     cat = catalog
-    cat.assert_writable(schema_version)
-    m = cat.read_manifest(schema_version)
-    _assert_format(m or {}, cat.index_name(schema_version))
+    m = _enter_writer(spark, cat, schema_version)
     idx = cat.index_dir(schema_version)
-    clean_orphan_generations(idx)
-    _drain_gc_pending(cat, schema_version)
-    m = cat.read_manifest(schema_version)
     ver = int(m.get("table_ver", 0)) + 1
-
+    # tombstones repoint at a fresh EMPTY versioned name, never written
+    # (readers of a missing dir see no tombstones): the old dir must outlive
+    # the swap for pinned readers, so it cannot simply be deleted here
+    tables = ("segments", "fwd", "docmap", "dictionary", "dict_by_term", "tombstones")
+    names = {t: f"{t}_v{ver}" for t in tables}
+    out = {t: os.path.join(idx, name, "gen=0") for t, name in names.items()}
     tombs = _read_committed(spark, idx, "tombstones", TOMB_SCHEMA, pinned=True)
     fwd_old_paths = committed_gen_paths(idx, "fwd")
-    names = {}
-    with scan_split_bytes(
-        spark, fwd_split_bytes(spark, resolve_table_dir(idx, "fwd"))
-    ):
-        from ..operators.dictionary import read_dictionary_merged
+    fwd_dir = resolve_table_dir(idx, "fwd")
+    phases = _Phases(spark, "compact")
+    cached: list[DataFrame] = []
+    new_bytes = 0
+    try:
+        # the rewrites all scan the old fwd and its derived tables, so
+        # their (lazy) writes run inside the fwd's split size — outside it
+        # they'd run with the session default splits and under-partition
+        # the CPU-bound rewrite pass
+        with scan_split_bytes(spark, fwd_split_bytes(spark, fwd_dir)):
+            with phases("dictionary"):
+                from ..operators.dictionary import read_dictionary_merged
 
-        fwd = spark.read.parquet(*fwd_old_paths).join(tombs, "doc_id", "left_anti")
-        # fold all delta generations into one full snapshot (dropping terms
-        # whose df went to 0) — the dictionary-compaction half of the merge
-        dictionary = read_dictionary_merged(spark, idx).filter(
-            F.col("df") > 0
-        ).persist()
-        docmap_all = _read_committed(spark, idx, "docmap", DOCMAP_SCHEMA)
-        # the docID bound survives the compaction unchanged (never shrunk):
-        # dropping the dead rows must not hand their ids out again
-        next_doc_id = _next_doc_id(m, docmap_all)
-        docmap = docmap_all.join(tombs, "doc_id", "left_anti")
-        max_live = docmap.agg(F.max("doc_id")).collect()[0][0]
-        names["segments"] = f"segments_v{ver}"
-        new_bytes = 0
-        # a fully-deleted index (no live doc) writes no segments and
-        # commits an EMPTY (absent) segments dir — readers treat a
-        # missing/empty table as zero postings
-        if max_live is not None:
-            id_span = int(max_live) + 1
-            cap = salt_cap(spark, id_span, salt_group_cap)
-            # norms from the PRE-compaction fwd snapshot (includes dead docs
-            # — harmless, their entries are never indexed by live postings)
-            segs = build_segments_spimi(
-                spark, fwd, id_span, cap,
-                tuple(fwd_old_paths), int(m.get("commit_seq", 0)),
-                dictionary, positions=bool(m.get("positions")),
-            )
-            # the bytes counter can only shrink here: dead postings are
-            # gone after the rewrite
-            new_bytes = write_segments(
-                spark, segs, os.path.join(idx, names["segments"], "gen=0"),
-                bool(m.get("positions")),
-            )["bytes"]
-        # the fwd/docmap/dictionary rewrites scan the SAME old fwd/derived
-        # tables, so their (lazy) writes must execute inside this split-size
-        # context too — outside it they'd run with the session default
-        # splits and under-partition the CPU-bound rewrite pass
-        for table, df_ in (("fwd", fwd), ("docmap", docmap)):
-            names[table] = f"{table}_v{ver}"
-            w = df_.write.mode("overwrite")
-            if table == "fwd":
+                # fold all delta generations into one full snapshot
+                # (dropping terms whose df went to 0) — the
+                # dictionary-compaction half of the merge
+                dictionary = read_dictionary_merged(spark, idx).filter(
+                    F.col("df") > 0
+                ).persist()
+                cached.append(dictionary)
+                n_terms_live = dictionary.count()
+            with phases("forward"):
+                fwd = spark.read.parquet(*fwd_old_paths).join(
+                    tombs, "doc_id", "left_anti"
+                )
+                docmap_all = _read_committed(spark, idx, "docmap", DOCMAP_SCHEMA)
+                # the docID bound survives the compaction unchanged (never
+                # shrunk): dropping the dead rows must not hand their ids
+                # out again
+                next_doc_id = _next_doc_id(m, docmap_all)
+                docmap = docmap_all.join(tombs, "doc_id", "left_anti")
+                max_live = docmap.agg(F.max("doc_id")).collect()[0][0]
+            # a fully-deleted index (no live doc) writes no segments and
+            # commits an EMPTY (absent) segments dir — readers treat a
+            # missing/empty table as zero postings
+            if max_live is not None:
+                id_span = int(max_live) + 1
+                # norms from the PRE-compaction fwd snapshot (includes dead
+                # docs — harmless, their entries are never indexed by live
+                # postings); the bytes counter can only shrink here
+                with phases("segments"):
+                    new_bytes = _spark_segments(
+                        fwd, fwd_dir, tuple(fwd_old_paths),
+                        int(m.get("commit_seq", 0)), dictionary, n_terms_live,
+                        id_span, salt_cap(spark, id_span, salt_group_cap), 0,
+                        bool(m.get("positions")), out["segments"],
+                    )["bytes"]
+            with phases("forward"):
                 # keep the rewritten fwd splittable for the next inversion
-                w = w.option("parquet.block.size", str(FWD_ROW_GROUP_BYTES))
-            w.parquet(os.path.join(idx, names[table], "gen=0"))
-        names["dictionary"] = f"dictionary_v{ver}"
-        dictionary.write.mode("overwrite").parquet(
-            os.path.join(idx, names["dictionary"], "gen=0")
-        )
-        names["dict_by_term"] = f"dict_by_term_v{ver}"
-        write_dict_by_term(
-            dictionary, os.path.join(idx, names["dict_by_term"], "gen=0")
-        )
-        n_terms_live = dictionary.count()
-    dictionary.unpersist()
-    # repoint tombstones at a fresh EMPTY versioned name (never written —
-    # readers of a missing dir see no tombstones); the old dir must outlive
-    # the swap for pinned readers, so it cannot simply be deleted here
-    names["tombstones"] = f"tombstones_v{ver}"
+                fwd.write.mode("overwrite").option(
+                    "parquet.block.size", str(FWD_ROW_GROUP_BYTES)
+                ).parquet(out["fwd"])
+                docmap.write.mode("overwrite").parquet(out["docmap"])
+            with phases("dictionary"):
+                _write_dictionary(
+                    dictionary, out["dictionary"], out["dict_by_term"]
+                )
+    finally:
+        phases.close()
+        for df_ in cached:
+            df_.unpersist()
 
     # ATOMIC commit; superseded dirs are NOT deleted here — a reader that
     # pinned its snapshot pre-swap (LocalSearcher holds file lists; an
@@ -1031,13 +1049,7 @@ def compact_index(
     # NEXT writer entry (_drain_gc_pending), the same deferred-cleanup
     # contract the incremental path's one-version grace window gives.
     m = cat.read_manifest(schema_version)
-    old_dirs = [
-        resolve_table_dir(idx, t)
-        for t in (
-            "segments", "fwd", "docmap", "dictionary", "dict_by_term",
-            "tombstones",
-        )
-    ]
+    old_dirs = [resolve_table_dir(idx, t) for t in names]
     m["tables"] = {**(m.get("tables") or {}), **names}
     m["generations"] = 1
     m["table_ver"] = ver
@@ -1051,11 +1063,12 @@ def compact_index(
         "terms": int(n_terms_live),
         "next_doc_id": next_doc_id,
     }
-    m["gc_pending"] = sorted(
-        set(m.get("gc_pending") or []) | set(old_dirs)
-    )
+    m["gc_pending"] = sorted(set(m.get("gc_pending") or []) | set(old_dirs))
     cat.write_manifest(schema_version, m)
-    cat.mark_phase(schema_version, "compact", "done")
+    cat.mark_phase(
+        schema_version, "compact", "done",
+        **{f"{k}_s": round(v, 3) for k, v in phases.seconds.items()},
+    )
     emit_metric_event(
         idx, "compact", schema=schema_version, bytes=int(new_bytes),
         terms=int(n_terms_live),

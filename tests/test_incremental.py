@@ -181,6 +181,72 @@ def test_crash_mid_generation_replays_cleanly(
     _check_all_queries(spark, cat.index_dir("v1"), oidx, ourls, "replayed")
 
 
+def test_failed_writers_leave_nothing_cached(
+    spark, evolved, tmp_path_factory, monkeypatch
+):
+    """A commit or a compaction that fails leaves no frame cached in the
+    session, as one that lands: the queue batch, the wide dictionary
+    branch's frames and compaction's merged dictionary are unpersisted on
+    the way out. Crashed here: a driver-route queue batch right after its
+    docmap write, a Spark-route queue batch with a vocabulary over
+    KNOWN_ID_IN_MAX at its manifest swap, and a compaction at its swap."""
+    import os
+
+    import osu_elastic_indexer_spark.streaming.incremental as inc
+
+    base_p, final_p, _base, final = evolved
+    cat = Catalog(str(tmp_path_factory.mktemp("idx_uncache")))
+    build_index(spark, spark.read.parquet(base_p), cat, "v1")
+    docs = spark.read.parquet(final_p)
+    queued = spark.createDataFrame(
+        [(u,) for u in final["url"].to_pylist()[:20]], "url string"
+    )
+    real_gen_file = inc._write_gen_file
+    real_write = Catalog.write_manifest
+
+    def crash_after_docmap(path, tbl, **kw):
+        real_gen_file(path, tbl, **kw)
+        if os.path.basename(os.path.dirname(path)).startswith("docmap"):
+            raise RuntimeError("injected crash after the docmap write")
+
+    def crash_at_swap(self, schema, manifest):
+        if manifest.get("table_ver", 0) > ver:
+            raise RuntimeError("injected crash at the manifest swap")
+        return real_write(self, schema, manifest)
+
+    def commit():
+        incremental_update(spark, docs, cat, "v1", queue_urls=queued)
+
+    cases = {
+        "driver-route queue batch": (
+            commit, [(inc, "_write_gen_file", crash_after_docmap)],
+        ),
+        "wide Spark-route queue batch": (
+            commit,
+            [
+                (Catalog, "write_manifest", crash_at_swap),
+                (inc, "DRIVER_BATCH_ROWS", 0),
+                (inc, "KNOWN_ID_IN_MAX", 5),
+            ],
+        ),
+        "compaction": (
+            lambda: compact_index(spark, cat, "v1"),
+            [(Catalog, "write_manifest", crash_at_swap)],
+        ),
+    }
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    for case, (run, patches) in cases.items():
+        ver = int(cat.read_manifest("v1").get("table_ver", 0))
+        with monkeypatch.context() as mp:
+            for target, attr, value in patches:
+                mp.setattr(target, attr, value)
+            with pytest.raises(RuntimeError, match="injected crash"):
+                run()
+        assert cache.isEmpty(), case
+    assert int(cat.read_manifest("v1")["generations"]) == 1
+
+
 def test_incremental_matches_oracle_on_final_corpus(spark, evolved, incr_index):
     _bp, _fp, _base, final = evolved
     cat, m = incr_index
@@ -798,9 +864,10 @@ def test_docids_never_reused_after_compaction(spark, evolved, tmp_path_factory):
 def test_wide_vocabulary_branch_matches_fast_path(
     spark, evolved, tmp_path_factory, monkeypatch
 ):
-    """A batch vocabulary wider than KNOWN_ID_IN_MAX takes the distributed
-    dictionary branch; it must commit exactly what the driver-resolved
-    branch commits — manifest counters, dictionary generation rows, served
+    """A Spark-route batch vocabulary wider than KNOWN_ID_IN_MAX takes the
+    distributed dictionary branch (the driver route always assigns term ids
+    on the driver); it must commit exactly what the driver-resolved branch
+    commits — manifest counters, dictionary generation rows, served
     answers — on an update+delete batch and on a delete-only batch."""
     import os
     import shutil
@@ -839,11 +906,14 @@ def test_wide_vocabulary_branch_matches_fast_path(
         ]
 
     fast = run(fast_cat)
-    monkeypatch.setattr(inc, "KNOWN_ID_IN_MAX", 5)
-    wide = run(wide_cat)
+    with monkeypatch.context() as mp:
+        _driver_bound(mp, 0)
+        mp.setattr(inc, "KNOWN_ID_IN_MAX", 5)
+        wide = run(wide_cat)
     for gen, (mf, mw) in enumerate(zip(fast, wide), start=1):
         assert mw["counters"] == mf["counters"], gen
         pf, pw = (x["phases"][f"incremental_gen{gen}"] for x in (mf, mw))
+        assert (pf["route"], pw["route"]) == ("driver", "spark")
         assert pw["batch_terms"] == pf["batch_terms"] > 5
         assert (pw["adds"], pw["deletes"]) == (pf["adds"], pf["deletes"])
         for table in ("dictionary", "dict_by_term"):
@@ -910,9 +980,9 @@ def test_commit_jobs_named_by_phase(
     spark, evolved, tmp_path_factory, monkeypatch
 ):
     """Every Spark job of a commit on the Spark route (the batch is over
-    the driver bound) carries a job description naming its phase, the
-    manifest's generation phase records per-phase seconds next to
-    wall_sec, and the caller's job description is restored."""
+    the driver bound), and of a compaction after it, carries a job
+    description naming its phase; the manifest's phase entry records
+    per-phase seconds, and the caller's job description is restored."""
     base_p, final_p, _b, _f = evolved
     root = str(tmp_path_factory.mktemp("idx_phases"))
     cat = Catalog(root)
@@ -921,30 +991,41 @@ def test_commit_jobs_named_by_phase(
     sc = spark.sparkContext
     docs = spark.read.parquet(final_p)
     tracker = sc.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    sc.setJobDescription("caller")
-    try:
-        m = incremental_update(spark, docs, cat, "v1")
-        assert sc.getLocalProperty("spark.job.description") == "caller"
-    finally:
-        sc.setJobDescription(None)
     store = sc._jsc.sc().statusStore()
-    names = {}
-    for j in set(tracker.getJobIdsForGroup(None)) - before:
-        d = store.job(j).description()
-        names[j] = d.get() if d.isDefined() else None
-    phases = {"tombstones", "forward", "dictionary", "segments"}
-    assert names and all(
-        d is not None and d.startswith("incremental gen=1: ")
-        and d.split(": ", 1)[1] in phases
-        for d in names.values()
-    ), names
-    assert {d.split(": ", 1)[1] for d in names.values()} == phases
+    for write, label, entry, phases in (
+        (
+            lambda: incremental_update(spark, docs, cat, "v1"),
+            "incremental gen=1", "incremental_gen1",
+            {"tombstones", "forward", "dictionary", "segments"},
+        ),
+        (
+            lambda: compact_index(spark, cat, "v1"),
+            "compact", "compact", {"forward", "dictionary", "segments"},
+        ),
+    ):
+        before = set(tracker.getJobIdsForGroup(None))
+        sc.setJobDescription("caller")
+        try:
+            m = write()
+            assert sc.getLocalProperty("spark.job.description") == "caller"
+        finally:
+            sc.setJobDescription(None)
+        names = {}
+        for j in set(tracker.getJobIdsForGroup(None)) - before:
+            d = store.job(j).description()
+            names[j] = d.get() if d.isDefined() else None
+        assert names and all(
+            d is not None and d.startswith(f"{label}: ")
+            and d.split(": ", 1)[1] in phases
+            for d in names.values()
+        ), names
+        assert {d.split(": ", 1)[1] for d in names.values()} == phases
+        rec = m["phases"][entry]
+        for p in phases:
+            assert rec[f"{p}_s"] >= 0
     rec = m["phases"]["incremental_gen1"]
     assert rec["route"] == "spark"
     assert rec["wall_sec"] >= 0
-    for p in phases:
-        assert rec[f"{p}_s"] >= 0
 
 
 def test_driver_tables_run_no_python_tasks(spark, tmp_path):
@@ -1089,32 +1170,44 @@ def test_driver_and_spark_routes_commit_identical_generations(
         _check_all_queries(spark, d.index_dir("v1"), oidx, ourls, "driver route")
 
 
-def test_driver_route_commit_runs_two_jobs_no_python(spark, evolved, tmp_path):
+def test_driver_route_commit_runs_two_jobs_no_python(
+    spark, evolved, tmp_path, monkeypatch
+):
     """A commit on the driver route runs at most two Spark jobs — the
     html-free route probe and the adds' collect, which carries the
     tombstone lookup — each named by its phase, and neither runs a Python
-    worker: the build's kernels run in the driver process."""
+    worker: the build's kernels run in the driver process. A batch
+    vocabulary wider than KNOWN_ID_IN_MAX (patched to 5) changes nothing:
+    the driver route assigns its term ids on the driver."""
+    import shutil
+
+    import osu_elastic_indexer_spark.streaming.incremental as inc
+
     base_p, final_p, _b, _f = evolved
-    cat = Catalog(str(tmp_path / "idx"))
-    build_index(spark, spark.read.parquet(base_p), cat, "v1")
+    build_index(spark, spark.read.parquet(base_p), Catalog(str(tmp_path / "idx")), "v1")
+    shutil.copytree(str(tmp_path / "idx"), str(tmp_path / "wide"))
     docs = spark.read.parquet(final_p)  # its schema read is not the commit's
     sc = spark.sparkContext
     tracker = sc.statusTracker()
-    before = set(tracker.getJobIdsForGroup(None))
-    m = incremental_update(spark, docs, cat, "v1")
-    jobs = set(tracker.getJobIdsForGroup(None)) - before
-    assert m["phases"]["incremental_gen1"]["route"] == "driver"
-    assert 0 < len(jobs) <= 2, jobs
     store = sc._jsc.sc().statusStore()
-    names = {store.job(j).description().get() for j in jobs}
-    assert names <= {"incremental gen=1: forward", "incremental gen=1: tombstones"}
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    plans = [
-        e.physicalPlanDescription()
-        for e in (execs.apply(i) for i in range(execs.size()))
-        if any(e.jobs().contains(j) for j in jobs)
-    ]
-    assert plans
-    for plan in plans:
-        for node in ("Python", "MapInArrow", "MapInPandas", "ArrowEval"):
-            assert node not in plan, plan
+    for name, known_id_in_max in (("idx", inc.KNOWN_ID_IN_MAX), ("wide", 5)):
+        before = set(tracker.getJobIdsForGroup(None))
+        with monkeypatch.context() as mp:
+            mp.setattr(inc, "KNOWN_ID_IN_MAX", known_id_in_max)
+            m = incremental_update(spark, docs, Catalog(str(tmp_path / name)), "v1")
+        jobs = set(tracker.getJobIdsForGroup(None)) - before
+        assert m["phases"]["incremental_gen1"]["route"] == "driver"
+        assert m["phases"]["incremental_gen1"]["batch_terms"] > 5
+        assert 0 < len(jobs) <= 2, (name, jobs)
+        names = {store.job(j).description().get() for j in jobs}
+        assert names <= {"incremental gen=1: forward", "incremental gen=1: tombstones"}
+        execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+        plans = [
+            e.physicalPlanDescription()
+            for e in (execs.apply(i) for i in range(execs.size()))
+            if any(e.jobs().contains(j) for j in jobs)
+        ]
+        assert plans
+        for plan in plans:
+            for node in ("Python", "MapInArrow", "MapInPandas", "ArrowEval"):
+                assert node not in plan, (name, plan)
